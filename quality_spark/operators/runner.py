@@ -2,10 +2,13 @@
 nested DQ result column.
 
 Reference behavior: impl/RuleRunner.scala:58-189 (custom codegen’d
-expression); here the same result is declared as a single
-``F.struct``/``F.create_map`` tree over per-rule encoded expressions,
-so Catalyst plans/codegens it like any user query. At scale this is a
-pure narrow map — no shuffle, no UDF, fully pushdown/AQE-friendly.
+expression); here the same result is declared as a
+``named_struct``/``map`` tree over per-rule encoded expressions, so
+Catalyst plans/codegens it like any user query. ``rule_runner`` returns
+that tree as one Column; the ``add_*`` helpers build it in two
+projections (``_add_staged``) so each rule expression appears once. At
+scale this is a pure narrow map — no shuffle, no UDF, fully
+pushdown/AQE-friendly.
 """
 
 from __future__ import annotations
@@ -213,32 +216,25 @@ def add_flat_rule_results(
     return exploded.select(*keep, "f.*")
 
 
-#: above this many rules the single-projection DQ struct outgrows what
-#: Janino will compile into one method and Spark silently falls back to
-#: INTERPRETED projection — measured at sf0.1: 500 rules 6.8 s
-#: (codegen), 1000 rules 92 s (interpreted), a 8x per-rule cliff. The
-#: staged two-projection shape keeps every generated method small at
-#: any suite size.
-_STAGE_RULES_OVER = 256
-
-
 def _add_staged(
     df: DataFrame,
-    suite: RuleSuite,
     enc_sqls: List[List[str]],
     assemble,
 ) -> DataFrame:
-    """Two-projection shape for big suites: project every encoded rule
-    expression into a real INT column (Spark's codegen splits N
-    independent small expressions into many compilable methods), then
-    assemble the DQ struct purely from column REFERENCES. Each rule
-    expression appears ~9x in the one-shot struct SQL (map entry + 3x
-    in each of two fail-folds); staging evaluates it once and shrinks
-    the struct expression to references. CollapseProject leaves the two
-    projections alone because the staged columns are non-cheap and each
-    is referenced 3x."""
+    """The one DataFrame shape of a rule runner: project every encoded
+    rule expression into a real INT column, then assemble the result
+    columns from column REFERENCES. In the one-shot struct each rule's
+    SQL appears ~7x (a boolean rule) to ~49x (a double rule: map entry
+    plus each of two fail-folds, each repeating the encoding's casts),
+    so Catalyst analyses a tree far larger than the suite; staged, each
+    rule expression appears and evaluates once. Codegen also splits N
+    independent small expressions into many compilable methods, where
+    the one-shot struct falls to INTERPRETED projection past ~500 rules
+    (SCALE.md). CollapseProject leaves the two projections alone because
+    the staged columns are non-cheap and each is referenced 3x."""
     flat = [s for ss in enc_sqls for s in ss]
-    used = set(df.columns)
+    # lower-cased: Spark resolves names case-insensitively by default
+    used = {c.lower() for c in df.columns}
     names = []
     for i in range(len(flat)):
         nm = f"__qs_enc{i}"
@@ -260,25 +256,31 @@ def _add_staged(
     for ss in enc_sqls:
         refs.append(names[i : i + len(ss)])
         i += len(ss)
-    return staged.select(*df.columns, *assemble(refs))
+    # "* EXCEPT", not select(*df.columns): input names with dots or
+    # duplicates pass through untouched. One projection, where a
+    # trailing drop() would analyse the whole plan once more (measured
+    # +0.2 s per build at 264 rules)
+    keep = f"* EXCEPT ({', '.join(f'`{nm}`' for nm in names)})" if names else "*"
+    return staged.select(F.expr(keep), *assemble(refs))
+
+
+def _add_dq(
+    df: DataFrame, suite: RuleSuite, enc_sqls: List[List[str]], name: str
+) -> DataFrame:
+    return _add_staged(
+        df, enc_sqls, lambda refs: [_assemble(suite, refs, True).alias(name)]
+    )
 
 
 def add_data_quality(
     df: DataFrame, suite: RuleSuite, name: str = "DQ"
 ) -> DataFrame:
     """``df`` plus the nested DQ result column
-    (reference: impl/util/AddDataFunctionsImports.scala:21-60). Suites
-    past _STAGE_RULES_OVER rules take the staged two-projection shape
-    (same values, codegen-friendly at any size)."""
-    enc_sqls = _encoded_sqls(suite, df)
-    if sum(len(s) for s in enc_sqls) <= _STAGE_RULES_OVER:
-        return df.select(
-            "*", _assemble(suite, enc_sqls, True).alias(name)
-        )
-    return _add_staged(
-        df, suite, enc_sqls,
-        lambda refs: [_assemble(suite, refs, True).alias(name)],
-    )
+    (reference: impl/util/AddDataFunctionsImports.scala:21-60), built in
+    the staged two-projection shape: the same values as
+    ``df.select("*", rule_runner(suite, df))``, from a plan linear in the
+    number of rules."""
+    return _add_dq(df, suite, _encoded_sqls(suite, df), name)
 
 
 def add_overall_results_and_details(
@@ -291,22 +293,19 @@ def add_overall_results_and_details(
     without the suite overall — 30-50% faster post-hoc filtering on
     parquet since the int column predicate pushes down
     (reference: RuleResults.scala:52-57, docs/background/storage_method.md:30)."""
-    enc_sqls = _encoded_sqls(suite, df)
 
-    def build(sqls):
-        flat = [s for set_sqls in sqls for s in set_sqls]
+    def build(refs):
+        flat = [s for set_refs in refs for s in set_refs]
         return [
             F.expr(
                 overall_result_spark_sql(flat, suite.probable_pass)
             ).alias(overall_name),
-            _assemble(suite, sqls, with_suite_overall=False).alias(
+            _assemble(suite, refs, with_suite_overall=False).alias(
                 details_name
             ),
         ]
 
-    if sum(len(s) for s in enc_sqls) <= _STAGE_RULES_OVER:
-        return df.select("*", *build(enc_sqls))
-    return _add_staged(df, suite, enc_sqls, build)
+    return _add_staged(df, _encoded_sqls(suite, df), build)
 
 
 def add_data_quality_f(suite: RuleSuite, name: str = "DQ"):

@@ -9,10 +9,14 @@ Spark SQL), so the nearest idiom is compiling the suite ONCE against a
 declared schema and evaluating incoming batches through a reusable
 local plan:
 
-* the suite compiles to encoded per-rule SQL a single time
-  (``RowProcessor.__init__``), not per batch;
-* ``process`` ships a batch through Arrow into a local-relation plan —
-  no shuffle, no job scheduling beyond one collect;
+* the suite is type-probed and compiles to encoded per-rule SQL a
+  single time (``RowProcessor.__init__``), not per batch;
+* ``process`` ships a batch into a local-relation plan and selects the
+  staged runner over it (``operators/runner.py:_add_staged``) — no
+  shuffle, no job scheduling beyond one collect. Spark still analyses
+  and optimizes that plan on every call, but the plan is linear in the
+  number of rules (a 200-row call takes about 0.6-0.9 s at 30 rules
+  and 2 s at 150 rules on 4 cores);
 * throughput intent mirrors the reference's MutableProjection path:
   amortize compile, stream rows.
 
@@ -26,11 +30,10 @@ from __future__ import annotations
 from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .model import RuleSuite
-from .operators.runner import rule_runner
+from .operators.runner import _add_dq, _encoded_sqls
 
 __all__ = ["RowProcessor", "DuckDBProcessor", "dq_factory"]
 
@@ -93,13 +96,14 @@ class RowProcessor:
             T._parse_datatype_string(schema) if isinstance(schema, str) else schema
         )
         self.name = name
+        self.suite = suite
         probe = spark.createDataFrame([], self.schema)
-        # compile once; rule_runner's type probing happens here, not per batch
-        self._runner = rule_runner(suite, probe)
+        # probe and encode once, not per batch
+        self._enc_sqls = _encoded_sqls(suite, probe)
 
     def process(self, rows: Iterable[Union[Mapping, Sequence]]) -> List[Row]:
         batch = self.spark.createDataFrame(list(rows), self.schema)
-        return batch.select("*", self._runner.alias(self.name)).collect()
+        return _add_dq(batch, self.suite, self._enc_sqls, self.name).collect()
 
     def process_one(self, row: Union[Mapping, Sequence]) -> Row:
         return self.process([row])[0]
@@ -134,8 +138,13 @@ class DuckDBProcessor:
     10k batch but 0.059 ms/row on a 600k batch, vs the reference
     MutableProjection's published 0.1 ms/row —
     ProcessorThroughputBenchmark.scala:26; numbers in SCALE.md).
-    Per-call overhead (register + view + parse) is ~1 ms, negligible
-    beyond ~10k rows.
+    Per-call overhead (register, parse, bind and plan the scoring
+    SELECT) grows with the suite: a one-row call takes about 0.15 s at
+    150 rules and 0.35 s at 264 rules (4 cores). It would take 1.1-2.3 s
+    with DuckDB's ``in_clause`` optimizer on, which turns every IN-list
+    of more than a few values into a hash join against a constant
+    table, one join per such list in every call's plan; the
+    processor's connection disables it (SCALE.md has the numbers).
     """
 
     def __init__(
@@ -157,6 +166,7 @@ class DuckDBProcessor:
 
         self.suite = suite
         self._con = duckdb.connect()
+        self._con.execute("SET disabled_optimizers = 'in_clause'")
         # our macro expansion emits Spark typed numeric literals
         # (0.0D / 42L); strip the suffix for DuckDB — it only follows a
         # numeric literal, never an identifier (those can't start with
@@ -201,7 +211,7 @@ class DuckDBProcessor:
                 "timestamp_ntz": "TIMESTAMP", "binary": "BLOB",
             }
             fields = []
-            self._declared_casts = []
+            declared_casts = []
             # self-contained scalar-DDL parse — pyspark's
             # _parse_datatype_string needs an ACTIVE SparkContext in
             # Spark 4, which would silently break the whole point of
@@ -216,14 +226,14 @@ class DuckDBProcessor:
                         f"sparkless scope (scalar types only)"
                     )
                 fields.append(f'CAST(NULL AS {duck_t}) AS "{name}"')
-                self._declared_casts.append((name, duck_t))
+                declared_casts.append((name, duck_t))
             self._con.execute(
                 f"CREATE VIEW __qs_probe AS SELECT {', '.join(fields)} WHERE 1=0"
             )
         else:
             import pandas as pd
 
-            self._declared_casts = None
+            declared_casts = None
             nulls = [k for k, v in sample_row.items() if v is None]
             if nulls:
                 raise ValueError(
@@ -265,7 +275,7 @@ class DuckDBProcessor:
         # (and each enc already repeats the raw rule ~4x in its CASE
         # arms). Aliases are QUOTED: pack_id is signed, so a negative
         # set id would otherwise emit `AS s_-N` — a parser error.
-        self._inner_select = ", ".join(
+        inner_select = ", ".join(
             f"({enc}) AS __qs_r_{i}" for i, (_, _, enc) in enumerate(self._rules)
         )
         outer = [f"__qs_r_{i} AS r_{i}" for i in range(len(self._rules))]
@@ -278,35 +288,39 @@ class DuckDBProcessor:
             " AS overall"
         )
         self._set_ids = list(per_set)
-        self._select = ", ".join(outer)
+        # in schema mode the DECLARED types also govern execution: the
+        # batch is cast column-by-column before the rules run, so an
+        # all-null (object-dtype) pandas column cannot make DuckDB
+        # re-infer a different type than the one the rules compiled
+        # against
+        batch = "__qs_batch_raw"
+        if declared_casts is not None:
+            casts = ", ".join(
+                f'CAST("{c}" AS {t}) AS "{c}"' for c, t in declared_casts
+            )
+            batch = f"(SELECT {casts} FROM __qs_batch_raw)"
+        self._sql = (
+            f"SELECT {', '.join(outer)} FROM "
+            f"(SELECT *, {inner_select} FROM {batch})"
+        )
 
     def process_pandas(self, pdf) -> "object":
         """Score a pandas batch → pandas frame of flat int columns
         (``r_<i>``, ``s_<setId>``, ``overall``), row-aligned with the
-        input. The heavy path: one vectorized DuckDB projection.
+        input. The heavy path: one vectorized DuckDB projection, bound
+        once per call.
 
-        In schema mode the DECLARED types also govern execution: the
-        batch relation is cast column-by-column before the rules run,
-        so an all-null (object-dtype) pandas column cannot make DuckDB
-        re-infer a different type than the one the rules compiled
-        against."""
+        A frame with pandas extension dtypes goes in as an Arrow table:
+        DuckDB's pandas scan reads a NULL in a masked ``Float64`` column
+        as 0.0."""
+        import pandas as pd
+
+        if any(pd.api.types.is_extension_array_dtype(t) for t in pdf.dtypes):
+            import pyarrow as pa
+
+            pdf = pa.Table.from_pandas(pdf, preserve_index=False)
         self._con.register("__qs_batch_raw", pdf)
-        if self._declared_casts is not None:
-            casts = ", ".join(
-                f'CAST("{c}" AS {t}) AS "{c}"' for c, t in self._declared_casts
-            )
-            self._con.execute(
-                "CREATE OR REPLACE VIEW __qs_batch AS "
-                f"SELECT {casts} FROM __qs_batch_raw"
-            )
-        else:
-            self._con.execute(
-                "CREATE OR REPLACE VIEW __qs_batch AS SELECT * FROM __qs_batch_raw"
-            )
-        return self._con.sql(
-            f"SELECT {self._select} FROM "
-            f"(SELECT *, {self._inner_select} FROM __qs_batch)"
-        ).fetchdf()
+        return self._con.execute(self._sql).fetchdf()
 
     def process(self, rows: Iterable[Mapping]) -> List[Dict]:
         """Score dict rows → nested RuleSuiteResult dicts (same shape

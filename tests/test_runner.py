@@ -216,50 +216,109 @@ def test_nan_rule_result_fails(spark):
     assert got[0.0] == 0  # NaN -> Failed, never INT_MAX-pass
 
 
-def test_staged_big_suite_matches_unstaged(lineitem):
-    """The >256-rule staged two-projection shape (round 7: the one-shot
-    struct falls to INTERPRETED projection past ~500 rules — 8x
-    per-rule cliff at 1000) must produce value-identical DQ structs to
-    the one-shot shape, including soft-fail and null encodings."""
-    from quality_spark import rule_suite
-    from quality_spark.operators import runner as runner_mod
-    from quality_spark.operators.runner import (
-        add_data_quality,
-        add_overall_results_and_details,
+def _assert_matches_reference(spark, df, suite):
+    """add_data_quality, add_overall_results_and_details and
+    RowProcessor.process must give the rows of the one-shot
+    ``rule_runner`` Column, with no staging column leaking out."""
+    from quality_spark import rule_runner_details
+    from quality_spark.sparkless import RowProcessor
+
+    def rows(frame):
+        return sorted(map(str, frame.collect()))
+
+    ref = rule_runner(suite, df)
+    dq = add_data_quality(df, suite)
+    assert dq.columns == df.columns + ["DQ"]
+    want = rows(df.select("*", ref.alias("DQ")))
+    assert rows(dq) == want
+
+    so = add_overall_results_and_details(df, suite)
+    assert so.columns == df.columns + ["DQ_overallResult", "DQ_Details"]
+    assert rows(so) == rows(
+        df.select(
+            "*",
+            ref["overallResult"].alias("DQ_overallResult"),
+            rule_runner_details(suite, df).alias("DQ_Details"),
+        )
     )
+
+    proc = RowProcessor(spark, suite, df.schema)
+    assert sorted(map(str, proc.process(df.collect()))) == want
+
+
+def test_staged_big_suite_matches_unstaged(spark, lineitem):
+    """The staged two-projection shape, the only one the add_* helpers
+    build, must give the reference rule_runner's values for a big suite
+    (where the one-shot struct falls to INTERPRETED projection) and a
+    small one, including soft-fail, null, probability, int and disabled
+    encodings."""
+    from quality_spark import rule_suite
+
+    # fixed rows, so every frame below scores the same input
+    df = spark.createDataFrame(lineitem.limit(200).collect(), lineitem.schema)
 
     cols = ["l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"]
     rules = []
-    for i in range(300):  # > _STAGE_RULES_OVER -> staged path
+    for i in range(300):
         c = cols[i % len(cols)]
         rules.append(((1000 + i, 1), f"({c} % {2 + (i % 5)}) >= 0"))
     rules.append(((2000, 1), "CAST(NULL AS BOOLEAN)"))  # null -> Failed
     rules.append(((2001, 1), "CASE WHEN l_orderkey % 2 = 0 THEN -1 ELSE 1 END"))
-    suite = rule_suite((77, 1), [((1, 1), rules[:150]), ((2, 1), rules[150:])])
-    df = lineitem.limit(200)
+    big = rule_suite((77, 1), [((1, 1), rules[:150]), ((2, 1), rules[150:])])
+    _assert_matches_reference(spark, df, big)
 
-    assert sum(
-        len(rs.rules) for rs in suite.rule_sets
-    ) > runner_mod._STAGE_RULES_OVER
-    staged = add_data_quality(df, suite)
-    # no helper-column leakage: output schema is input + DQ only
-    assert staged.columns == df.columns + ["DQ"]
-    # force the one-shot shape for the same suite
-    orig = runner_mod._STAGE_RULES_OVER
-    runner_mod._STAGE_RULES_OVER = 10**9
-    try:
-        oneshot = add_data_quality(df, suite)
-    finally:
-        runner_mod._STAGE_RULES_OVER = orig
-    a = sorted(map(str, staged.collect()))
-    b = sorted(map(str, oneshot.collect()))
-    assert a == b
+    small_rules = [
+        ((3000 + i, 1), f"l_quantity > {i}") for i in range(30)
+    ] + [
+        ((3100, 1), "soft_fail(l_tax < 0.05)"),
+        ((3101, 1), "CAST(NULL AS BOOLEAN)"),
+        ((3102, 1), "1.0D - l_discount"),  # probability rule
+        ((3103, 1), "disabled_rule()"),
+        ((3104, 1), "l_linenumber IN (1, 2, 3, 4, 5, 6, 7, 8)"),
+        ((3105, 1), "CASE WHEN l_orderkey % 2 = 0 THEN -1 ELSE 1 END"),
+    ]
+    small = rule_suite(
+        (78, 1), [((1, 1), small_rules[:20]), ((2, 1), small_rules[20:])],
+        probable_pass=0.9,
+    )
+    # an input name with a dot must pass through the staged projections
+    _assert_matches_reference(
+        spark, df.withColumnRenamed("l_comment", "l.comment"), small
+    )
 
-    so = add_overall_results_and_details(df, suite)
-    assert so.columns == df.columns + ["DQ_overallResult", "DQ_Details"]
-    runner_mod._STAGE_RULES_OVER = 10**9
-    try:
-        oo = add_overall_results_and_details(df, suite)
-    finally:
-        runner_mod._STAGE_RULES_OVER = orig
-    assert sorted(map(str, so.collect())) == sorted(map(str, oo.collect()))
+
+def _node_names(plan):
+    ch = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(ch.size()) for n in _node_names(ch.apply(i))
+    ]
+
+
+def test_staged_plan_keeps_two_projections(lineitem):
+    """CollapseProject must not re-inline the staged rule columns into
+    the assembly projection: that would rebuild the one-shot struct,
+    with every rule expression repeated in each fold."""
+    suite = rule_suite(
+        (79, 1),
+        [((1, 1), [((100 + i, 1), f"l_quantity > {i}") for i in range(20)])],
+    )
+    for out in (
+        add_data_quality(lineitem, suite),
+        add_overall_results_and_details(lineitem, suite),
+    ):
+        names = _node_names(out._jdf.queryExecution().optimizedPlan())
+        assert names.count("Project") == 2, names
+
+
+def test_staged_keeps_duplicate_and_case_colliding_names(spark):
+    """Input columns pass the staged projections untouched: duplicate
+    names from a join, and a name that equals a staging column's name
+    but for case (Spark resolves names case-insensitively)."""
+    df = spark.createDataFrame([(1, 2)], "a int, c int")
+    j = df.alias("x").join(df.alias("y"), "c").withColumn("__QS_ENC0", F.lit(7))
+    suite = rule_suite((1, 1), [((1, 1), [((1, 1), "c > 0")])])
+    out = add_data_quality(j, suite)
+    assert out.columns == j.columns + ["DQ"]
+    row = out.collect()[0]
+    assert row["__QS_ENC0"] == 7
+    assert row["DQ"]["overallResult"] == PASSED_INT

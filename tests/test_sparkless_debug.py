@@ -250,3 +250,73 @@ def test_duckdb_processor_input_column_named_r_0():
     out = proc.process([{"r_0": 5}, {"r_0": -1}])
     got = [r["ruleSetResults"][sid]["ruleResults"][rid] for r in out]
     assert got == [100000, 0]
+
+
+def test_duckdb_processor_masked_float64_nulls():
+    """A NULL in a pandas masked Float64 column must score as NULL, the
+    same as in the numpy-dtype batch: DuckDB's pandas scan reads it as
+    0.0, which silently passed ``x >= 0``."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from quality_spark.model import ExpressionRule
+    from quality_spark.sparkless import DuckDBProcessor
+
+    suite = RuleSuite(
+        Id(1, 1),
+        (
+            RuleSet(
+                Id(10, 1),
+                (
+                    Rule(Id(100, 1), ExpressionRule("x >= 0")),
+                    Rule(Id(101, 1), ExpressionRule("x IS NULL")),
+                ),
+            ),
+        ),
+    )
+    proc = DuckDBProcessor(suite, schema="x double, s string")
+    t = pa.table({"x": [1.0, None, -2.0, None], "s": ["a", None, "c", "d"]})
+    plain = proc.process_pandas(t.to_pandas())
+    assert plain["r_0"].tolist() == [PASSED_INT, 0, 0, 0]
+    assert plain["r_1"].tolist() == [0, PASSED_INT, 0, PASSED_INT]
+    masked = t.to_pandas(types_mapper={pa.float64(): pd.Float64Dtype()}.get)
+    assert proc.process_pandas(masked).equals(plain)
+    # a sliced frame keeps its nulls too
+    got = proc.process_pandas(masked.iloc[1:])
+    assert got.equals(plain.iloc[1:].reset_index(drop=True))
+
+
+def test_duckdb_processor_keeps_in_lists_out_of_joins():
+    """DuckDB's in_clause optimizer turns every long IN-list into a hash
+    join, planned again on every call; the processor's scoring query
+    must have none."""
+    import pandas as pd
+
+    from quality_spark.model import ExpressionRule
+    from quality_spark.sparkless import DuckDBProcessor
+
+    suite = RuleSuite(
+        Id(1, 1),
+        (
+            RuleSet(
+                Id(10, 1),
+                (
+                    Rule(Id(100, 1), ExpressionRule("k IN (1, 2, 3, 4, 5, 6, 7)")),
+                    Rule(Id(101, 1), ExpressionRule("s IN ('a', 'b', 'c', 'd', 'e', 'f', 'g', 'h')")),
+                    Rule(Id(102, 1), ExpressionRule("k > 0")),
+                ),
+            ),
+        ),
+    )
+    proc = DuckDBProcessor(suite, schema="k int, s string")
+    out = proc.process_pandas(pd.DataFrame({"k": [3, 9], "s": ["h", "z"]}))
+    assert out["overall"].tolist() == [PASSED_INT, 0]
+
+    def hash_joins():
+        plan = proc._con.execute("EXPLAIN " + proc._sql).fetchall()[0][1]
+        return plan.count("HASH_JOIN")
+
+    assert hash_joins() == 0
+    # control: with the optimizer back on, the same query joins per list
+    proc._con.execute("RESET disabled_optimizers")
+    assert hash_joins() == 2
