@@ -140,8 +140,8 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def q_dq_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ruleRunner + flatten_results: per-row, per-rule flat records.
-    Uses the fused flatten_rule_runner (no intermediate maps/HOFs);
-    the generic flatten_results macro path is covered by
+    Uses add_flat_rule_results (no intermediate maps/HOFs); the
+    generic flatten_results macro path is covered by
     tests/test_runner.py on stored structs."""
     from quality_spark.operators.runner import add_flat_rule_results
 

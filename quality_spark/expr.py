@@ -103,6 +103,18 @@ def untokenize(tokens: Sequence[Token]) -> str:
     return "".join(t.text for t in tokens)
 
 
+def drop_line_comments(sql: str) -> str:
+    """``sql`` without its ``--`` comments (the newline that ends one
+    stays). Expansion wraps text in ``(...)``; a line comment kept
+    inside would swallow the closing parenthesis."""
+    if "--" not in sql:
+        return sql
+    return "".join(
+        t.text for t in tokenize(sql)
+        if not (t.kind == "comment" and t.text.startswith("--"))
+    )
+
+
 def _next_code(tokens: Sequence[Token], i: int) -> int:
     """Index of next non-ws/comment token at/after ``i``, or len."""
     n = len(tokens)

@@ -30,7 +30,13 @@ from __future__ import annotations
 import itertools
 from typing import Dict, Iterable, List, Optional, Tuple
 
-from ..expr import is_lambda, parse_lambda, replace_calls, substitute_identifiers
+from ..expr import (
+    drop_line_comments,
+    is_lambda,
+    parse_lambda,
+    replace_calls,
+    substitute_identifiers,
+)
 from ..model import LambdaFunction
 from .macros import expand_builtin
 
@@ -45,7 +51,7 @@ class LambdaRegistry:
         self._fns: Dict[str, Dict[int, Tuple[List[str], str]]] = {}
 
     def register(self, fn: LambdaFunction) -> None:
-        params, body = parse_lambda(fn.rule)
+        params, body = parse_lambda(drop_line_comments(fn.rule))
         self._fns.setdefault(fn.name.lower(), {})[len(params)] = (params, body)
 
     def register_all(self, fns: Iterable[LambdaFunction]) -> "LambdaRegistry":
@@ -63,9 +69,6 @@ class LambdaRegistry:
 
     def has(self, name: str) -> bool:
         return name.lower() in self._fns
-
-    def names(self) -> List[str]:
-        return sorted(self._fns)
 
     def arities(self, name: str) -> List[int]:
         return sorted(self._fns.get(name.lower(), {}))
@@ -135,12 +138,15 @@ def expand_sql(
 ) -> str:
     """Expand builtin quality macros + registered lambdas in rule text.
 
-    Before expansion, encoded-id filter comparisons rewrite into
-    pushdown-able long comparisons (the reference does the same with
-    session-extension Catalyst rules — plans/pushdown.py)."""
+    Before expansion, ``--`` comments are dropped (expansion wraps
+    argument and body text in parentheses, which a line comment would
+    swallow; lambda bodies lose theirs at registration), and encoded-id
+    filter comparisons rewrite into pushdown-able long comparisons (the
+    reference does the same with session-extension Catalyst rules —
+    plans/pushdown.py)."""
     from ..plans.pushdown import rewrite_encoded_filters
 
-    sql = rewrite_encoded_filters(sql)
+    sql = rewrite_encoded_filters(drop_line_comments(sql))
 
     def expander(name: str, args: Tuple[str, ...]) -> Optional[str]:
         if name == "callfun":

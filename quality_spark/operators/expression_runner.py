@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model import RuleSuite, pack_id
+from ..model import RuleSuite
 from ..plans.compiler import expand_rules, RuleCompilationError
 from .aggregates import (
     AggSite,
@@ -71,27 +71,25 @@ def add_expression_runner(
         sites.extend(rule_sites)
         rules.append((rs, r, sql2))
 
-    # classify select-mode vs aggregate-mode by analysis probe
-    def analyzes_select(sqls: List[str]) -> bool:
-        try:
-            # "*" included: a global aggregate would analyze fine alone
-            # but fail alongside the pass-through columns
-            df.select("*", *[F.expr(s).alias(f"_p{i}") for i, s in enumerate(sqls)])
-            return True
-        except Exception:
-            return False
-
     plain_sqls = [s for _, _, s in rules]
     placeholders = {s.placeholder for s in sites}
-    agg_mode = bool(sites) or not analyzes_select(plain_sqls)
 
-    if not agg_mode:
-        dtypes = df.select(
-            [F.expr(s).alias(f"_p{i}") for i, s in enumerate(plain_sqls)]
-        ).schema.fields
-        base, out_cols = df, [F.expr(s) for s in plain_sqls]
-        types = [f.dataType for f in dtypes]
-        return base.select(
+    # select mode vs aggregate mode, by ONE analysis that also yields
+    # the result types. "*" included: a global aggregate would analyze
+    # fine alone but fail alongside the pass-through columns
+    types: Optional[List[T.DataType]] = None
+    if not sites:
+        try:
+            fields = df.select(
+                "*", *[F.expr(s).alias(f"_p{i}") for i, s in enumerate(plain_sqls)]
+            ).schema.fields
+            types = [f.dataType for f in fields[len(fields) - len(plain_sqls):]]
+        except Exception:
+            pass
+
+    if types is not None:
+        out_cols = [F.expr(s) for s in plain_sqls]
+        return df.select(
             "*",
             _assemble_struct(suite, rules, out_cols, types, ddl_type, render).alias(name),
         )

@@ -23,9 +23,7 @@ from ..plans.compiler import expand_rules, probe_types
 from ..results import (
     encode_rule_sql,
     encode_rule_sql_generic,
-    overall_result,
     overall_result_spark_sql,
-    rule_suite_result_type,
 )
 
 __all__ = [
@@ -131,49 +129,19 @@ def rule_runner_details(suite: RuleSuite, df: Optional[DataFrame] = None) -> Col
     return _assemble(suite, enc_sqls, with_suite_overall=False)
 
 
-def flatten_rule_runner(suite: RuleSuite, df: Optional[DataFrame] = None) -> Column:
-    """Fused runner+flatten: ARRAY<STRUCT<ruleSuiteId, ruleSuiteVersion,
-    ruleSuiteResult, ruleSetResult, ruleSetId, ruleSetVersion, ruleId,
-    ruleVersion, ruleResult>> built directly from the per-rule encoded
-    expressions — same rows as ``explode(flatten_results(rule_runner))``
-    but with no intermediate maps and no higher-order functions (HOF
-    lambdas evaluate interpreted; the inline array stays in whole-stage
-    codegen and duplicate rule expressions fall to Catalyst's
-    subexpression elimination).  Use the generic ``flatten_results``
-    macro for DQ structs read back from storage."""
-    enc_sqls = _encoded_sqls(suite, df)
-    encs = [[F.expr(s) for s in set_sqls] for set_sqls in enc_sqls]
-    all_encs = [c for ss in encs for c in ss]
-    suite_overall = overall_result(all_encs, suite.probable_pass).cast("int")
-    structs: List[Column] = []
-    for rs, ss in zip(suite.rule_sets, encs):
-        set_overall = overall_result(list(ss), suite.probable_pass).cast("int")
-        for r, enc in zip(rs.rules, ss):
-            structs.append(
-                F.struct(
-                    F.lit(suite.id.id).cast("int").alias("ruleSuiteId"),
-                    F.lit(suite.id.version).cast("int").alias("ruleSuiteVersion"),
-                    suite_overall.alias("ruleSuiteResult"),
-                    set_overall.alias("ruleSetResult"),
-                    F.lit(rs.id.id).cast("int").alias("ruleSetId"),
-                    F.lit(rs.id.version).cast("int").alias("ruleSetVersion"),
-                    F.lit(r.id.id).cast("int").alias("ruleId"),
-                    F.lit(r.id.version).cast("int").alias("ruleVersion"),
-                    enc.cast("int").alias("ruleResult"),
-                )
-            )
-    return F.array(*structs)
-
-
 def add_flat_rule_results(
     df: DataFrame, suite: RuleSuite, keep: Optional[Sequence[str]] = None
 ) -> DataFrame:
-    """``keep`` columns + one flat row per (input row, rule) — the
-    explode of :func:`flatten_rule_runner`, staged so each rule expression
-    evaluates ONCE into a real column before the struct array is built.
-    Inlining the encoded expressions into all N structs (each of which
-    also embeds the overall folds) makes the generator's child evaluate
-    ~N^2 rule expressions per row; staging keeps it at N."""
+    """``keep`` columns + one flat row per (input row, rule): the rows
+    of ``explode(flatten_results(rule_runner(...)))`` built directly
+    from the per-rule encoded expressions (no intermediate maps, no
+    higher-order functions), staged so each rule expression evaluates
+    ONCE into a real column before the struct array is built. Inlining
+    the encoded expressions into all N structs (each of which also
+    embeds the overall folds) makes the generator's child evaluate
+    ~N^2 rule expressions per row; staging keeps it at N. Use the
+    generic ``flatten_results`` macro for DQ structs read back from
+    storage."""
     keep = list(keep if keep is not None else df.columns)
     enc_sqls = _encoded_sqls(suite, df)
     flat_ids = [

@@ -8,12 +8,15 @@ columns. Catalyst then does analysis, optimisation (subexpression
 elimination across rules included — the reference goes out of its way
 to keep this working, impl/RuleRunner.scala:63-68) and whole-stage
 codegen exactly as it would for hand-written DataFrame code.
+
+``resolve`` is the one place where rule SQL meets Spark's analyser:
+the runners' type probe (``probe_types``) and ``validate`` both go
+through it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,17 +30,8 @@ class RuleCompilationError(ValueError):
     """A rule failed to expand or resolve; carries the rule coordinates."""
 
 
-def registry_for(suite: RuleSuite, extra: Optional[LambdaRegistry] = None) -> LambdaRegistry:
-    reg = LambdaRegistry()
-    if extra is not None:
-        for name in extra.names():
-            for arity in extra.arities(name):
-                params, body = extra.lookup(name, arity)  # type: ignore[misc]
-                from ..model import Id, LambdaFunction
-
-                reg.register(LambdaFunction(name, f"({', '.join(params)}) -> {body}", Id(0, 0)))
-    reg.register_all(suite.lambda_functions)
-    return reg
+def registry_for(suite: RuleSuite) -> LambdaRegistry:
+    return LambdaRegistry().register_all(suite.lambda_functions)
 
 
 def expand_rules(suite: RuleSuite) -> List[Tuple[RuleSet, Rule, str]]:
@@ -55,35 +49,44 @@ def expand_rules(suite: RuleSuite) -> List[Tuple[RuleSet, Rule, str]]:
     return out
 
 
-def probe_types(df: DataFrame, sqls: Sequence[str]) -> List[T.DataType]:
-    """Resolve expression types against ``df`` — driver-side analysis
-    only, no job is run. On failure, re-probes one by one so the error
-    names the offending expression."""
+def _batch(df: DataFrame, sqls: Sequence[str]) -> DataFrame:
+    # one selectExpr call: a thousand-rule suite costs ONE py4j round
+    # trip instead of one F.expr trip per rule (measured at dq1000:
+    # 1.95 s -> 0.36 s for the probe)
+    return df.selectExpr(*[f"({s}) AS _p{i}" for i, s in enumerate(sqls)])
+
+
+def resolve(
+    df: DataFrame, sqls: Sequence[str]
+) -> Tuple[Optional[DataFrame], List[Union[T.DataType, Exception]]]:
+    """Per expression, its type or the exception analysing it raised.
+    All are analysed in one projection, returned with the types; only
+    when it fails is each analysed alone (projection ``None``). Driver
+    side only, no job is run."""
     if not sqls:
-        return []
+        return None, []
     try:
-        # one selectExpr call: a thousand-rule suite costs ONE py4j
-        # round trip instead of one F.expr trip per rule (measured at
-        # dq1000: 1.95 s -> 0.36 s for the probe). Falls back to the
-        # per-Column path for any text the parenthesized AS form cannot
-        # carry (e.g. a trailing line comment swallowing the paren).
-        schema = df.selectExpr(
-            *[f"({s}) AS _p{i}" for i, s in enumerate(sqls)]
-        ).schema
-        return [f.dataType for f in schema.fields]
+        projection = _batch(df, sqls)
+        return projection, [f.dataType for f in projection.schema.fields]
     except Exception:
         pass
-    try:
-        schema = df.select([F.expr(s).alias(f"_p{i}") for i, s in enumerate(sqls)]).schema
-        return [f.dataType for f in schema.fields]
-    except Exception:
-        types: List[T.DataType] = []
-        for i, s in enumerate(sqls):
-            try:
-                types.append(df.select(F.expr(s).alias("_p")).schema.fields[0].dataType)
-            except Exception as e:  # pragma: no cover - error path
-                raise RuleCompilationError(
-                    f"expression {i} failed to resolve against the DataFrame: "
-                    f"{s!r}: {e}"
-                ) from e
-        return types
+    out: List[Union[T.DataType, Exception]] = []
+    for s in sqls:
+        try:
+            out.append(df.select(F.expr(s).alias("_p")).schema.fields[0].dataType)
+        except Exception as e:  # noqa: BLE001 - returned, not raised
+            out.append(e)
+    return None, out
+
+
+def probe_types(df: DataFrame, sqls: Sequence[str]) -> List[T.DataType]:
+    """Resolve expression types against ``df``; raises
+    RuleCompilationError for the first expression that fails."""
+    _, types = resolve(df, sqls)
+    for i, (s, t) in enumerate(zip(sqls, types)):
+        if isinstance(t, Exception):
+            raise RuleCompilationError(
+                f"expression {i} failed to resolve against the DataFrame: "
+                f"{s!r}: {t}"
+            ) from t
+    return types  # type: ignore[return-value]

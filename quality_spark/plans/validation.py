@@ -11,7 +11,6 @@ empty-DataFrame dry-run errors.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from typing import Dict, List, Optional, Sequence, Set, Tuple, Union
 
@@ -22,6 +21,7 @@ from pyspark.sql import types as T
 from ..expr import tokenize, _next_code
 from ..functions.lambdas import expand_sql
 from ..model import RuleSuite
+from .compiler import _batch, resolve
 
 SQL_KEYWORDS = {
     "and", "or", "not", "in", "is", "null", "case", "when", "then", "else",
@@ -65,7 +65,14 @@ def validate(
     dry_run: bool = True,
     check_lookups: bool = True,
 ) -> List[ValidationIssue]:
-    """Full static check of every rule against the target schema."""
+    """Full static check of every rule against the target schema, as
+    ONE batched analysis of all expanded rules (``compiler.resolve``).
+
+    ``dry_run`` collects that projection over ``df.limit(0)``, rule by
+    rule only when the collect raises. It never evaluates a rule: Spark
+    replaces a projection over an empty relation with an empty relation,
+    so ``1/0``, ``raise_error('x')`` or, under ANSI, ``CAST('xx' AS
+    INT)`` give no dryRunError."""
     if isinstance(df_or_schema, DataFrame):
         df = df_or_schema
         spark = df.sparkSession
@@ -95,6 +102,9 @@ def validate(
                     f"lambda {fn.name!r}: {e}",
                 )
             )
+    # one issue slot per rule keeps the issues in rule order
+    slots: List[Optional[ValidationIssue]] = []
+    pending: List[Tuple[int, Tuple, str]] = []  # (slot, coords, expanded)
     for rs in suite.rule_sets:
         for r in rs.rules:
             coords = (
@@ -102,36 +112,45 @@ def validate(
                 (rs.id.id, rs.id.version),
                 (r.id.id, r.id.version),
             )
+            slots.append(None)
             try:
                 expanded = expand_sql(r.expression.rule, reg)
             except RecursionError as e:
-                issues.append(ValidationIssue("lambdaSOE", *coords, str(e)))
+                slots[-1] = ValidationIssue("lambdaSOE", *coords, str(e))
                 continue
             except ValueError as e:
-                issues.append(ValidationIssue("lambdaError", *coords, str(e)))
+                slots[-1] = ValidationIssue("lambdaError", *coords, str(e))
                 continue
             except KeyError as e:
                 # unregistered map/bloom lookups raise at macro expansion
-                issues.append(
-                    ValidationIssue("unknownLookup", *coords, _first_line(str(e).strip('"')))
+                slots[-1] = ValidationIssue(
+                    "unknownLookup", *coords, _first_line(str(e).strip('"'))
                 )
                 continue
-            try:
-                probe = empty.select(F.expr(expanded).alias("_v"))
-                probe.schema  # force analysis
-            except Exception as e:  # noqa: BLE001 — collected, not raised
-                msg = str(e)
-                issues.append(
-                    ValidationIssue(_classify(msg), *coords, _first_line(msg))
-                )
-                continue
-            if dry_run:
+            pending.append((len(slots) - 1, coords, expanded))
+
+    projection, resolved = resolve(empty, [s for _, _, s in pending])
+    clean = []
+    for (slot, coords, sql), res in zip(pending, resolved):
+        if isinstance(res, Exception):
+            msg = str(res)
+            slots[slot] = ValidationIssue(_classify(msg), *coords, _first_line(msg))
+        else:
+            clean.append((slot, coords, sql))
+    if dry_run and clean:
+        try:
+            if projection is None:
+                projection = _batch(empty, [s for _, _, s in clean])
+            projection.collect()
+        except Exception:  # noqa: BLE001 - find the rules that raise
+            for slot, coords, sql in clean:
                 try:
-                    probe.collect()
+                    empty.select(F.expr(sql).alias("_v")).collect()
                 except Exception as e:  # noqa: BLE001
-                    issues.append(
-                        ValidationIssue("dryRunError", *coords, _first_line(str(e)))
+                    slots[slot] = ValidationIssue(
+                        "dryRunError", *coords, _first_line(str(e))
                     )
+    issues.extend(i for i in slots if i is not None)
     if check_lookups:
         issues.extend(validate_lookups(suite))
     return issues

@@ -12,11 +12,8 @@ Reference semantics being reproduced:
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import List, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .model import PASSED_INT
@@ -197,37 +194,13 @@ def encode_rule_sql_generic(rule_sql: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def rule_fails(enc: Column, probable_pass: float) -> Column:
-    """True when this encoded result forces the overall result to Failed:
-    Failed itself, or a probability below the threshold."""
-    threshold = float(probable_pass) * PASSED_INT
-    return (enc == 0) | (
-        ~enc.isin(PASSED_INT, -1, -2) & (enc.cast("double") < F.lit(threshold))
-    )
-
-
-def overall_result(encs: Sequence[Column], probable_pass: float) -> Column:
-    """Fold encoded results into an overall Passed/Failed int."""
-    if not encs:
-        return F.lit(PASSED_INT)
-    # balanced OR tree, not reduce(|): left-deep chains are O(rules)
-    # deep and StackOverflow the JVM's recursive column-node conversion
-    # near 500 rules; balanced is log2(rules).
-    terms = [rule_fails(e, probable_pass) for e in encs]
-    while len(terms) > 1:
-        terms = [
-            (terms[i] | terms[i + 1]) if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return F.when(terms[0], F.lit(0)).otherwise(F.lit(PASSED_INT)).cast("int")
-
-
 def rule_fails_sql(
     enc_sql: str, probable_pass: float, dialect: str = "spark"
 ) -> str:
-    """SQL-text twin of :func:`rule_fails` — THE single definition of
-    the fail condition for both dialects (only the double-literal
-    suffix differs)."""
+    """True when this encoded result forces the overall result to
+    Failed: Failed itself, or a probability below the threshold. THE
+    single definition of the fail condition for both dialects (only
+    the double-literal suffix differs)."""
     threshold = float(probable_pass) * PASSED_INT
     lit = f"{threshold}D" if dialect == "spark" else f"{threshold}"
     e = f"({enc_sql})"
@@ -238,8 +211,8 @@ def rule_fails_sql(
 
 
 def overall_result_spark_sql(enc_sqls: Sequence[str], probable_pass: float) -> str:
-    """SQL-text twin of :func:`overall_result`, shaped as a FLAT
-    ``array_contains(array(fail1..failN), true)``.
+    """Fold encoded results into an overall Passed/Failed int, shaped
+    as a FLAT ``array_contains(array(fail1..failN), true)``.
 
     Shape matters at 1000+ rules: a left-deep OR chain StackOverflows
     the JVM's recursive expression walks near 500 rules, and a BALANCED
@@ -256,7 +229,8 @@ def overall_result_spark_sql(enc_sqls: Sequence[str], probable_pass: float) -> s
 
 
 def overall_result_sql(enc_sqls: Sequence[str], probable_pass: float) -> str:
-    """Same fold as :func:`overall_result` but over SQL text — reused to
+    """Same fold as :func:`overall_result_spark_sql` in the DuckDB
+    dialect, as an OR chain — used by ``DuckDBProcessor`` and to
     generate DuckDB oracle queries in tests. Delegates the fail
     condition to :func:`rule_fails_sql` so the semantics live in one
     place."""

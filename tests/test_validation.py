@@ -75,10 +75,13 @@ def test_lambda_syntax_error_collected(spark):
 
 
 def test_dry_run_error(spark):
-    # analyzes fine, fails at runtime under ANSI (cast of bad literal)
+    # analyzes fine and would fail at runtime under ANSI (cast of a bad
+    # literal), but the dry run never evaluates it: over df.limit(0)
+    # Spark replaces the projection with an empty relation, so [] is
+    # the outcome with ANSI on as well as off
     issues = validate(SCHEMA, _suite("CAST('xx' AS INT) > 0"), spark)
     kinds = [i.kind for i in issues]
-    assert kinds in (["dryRunError"], [])  # non-ANSI sessions return NULL
+    assert kinds in (["dryRunError"], [])
 
 
 def test_expression_attributes():
@@ -173,3 +176,133 @@ def test_backquoted_attributes_visible(spark):
     out2 = process_if_attribute_missing(suite, ["other"])
     text = out2.rule_sets[0].rules[0].expression.rule
     assert "my col" not in text and "0" in text
+
+
+def _per_rule_validate(df, suite, dry_run):
+    """Reference: every rule analysed (and dry-run) on its own, one
+    ``select`` and one ``collect`` per rule."""
+    from pyspark.sql import functions as F
+
+    from quality_spark.functions.lambdas import LambdaRegistry, expand_sql
+    from quality_spark.plans.validation import (
+        ValidationIssue,
+        _classify,
+        _first_line,
+        validate_lookups,
+    )
+
+    empty = df.limit(0)
+    issues = []
+    reg = LambdaRegistry()
+    for fn in suite.lambda_functions:
+        try:
+            reg.register(fn)
+        except ValueError as e:
+            issues.append(ValidationIssue(
+                "lambdaSyntaxError", (suite.id.id, suite.id.version), (0, 0),
+                (fn.id.id, fn.id.version), f"lambda {fn.name!r}: {e}",
+            ))
+    for rs in suite.rule_sets:
+        for r in rs.rules:
+            coords = (
+                (suite.id.id, suite.id.version),
+                (rs.id.id, rs.id.version),
+                (r.id.id, r.id.version),
+            )
+            try:
+                expanded = expand_sql(r.expression.rule, reg)
+            except RecursionError as e:
+                issues.append(ValidationIssue("lambdaSOE", *coords, str(e)))
+                continue
+            except ValueError as e:
+                issues.append(ValidationIssue("lambdaError", *coords, str(e)))
+                continue
+            except KeyError as e:
+                issues.append(ValidationIssue(
+                    "unknownLookup", *coords, _first_line(str(e).strip('"'))
+                ))
+                continue
+            try:
+                probe = empty.select(F.expr(expanded).alias("_v"))
+                probe.schema
+            except Exception as e:
+                msg = str(e)
+                issues.append(ValidationIssue(_classify(msg), *coords, _first_line(msg)))
+                continue
+            if dry_run:
+                try:
+                    probe.collect()
+                except Exception as e:
+                    issues.append(ValidationIssue("dryRunError", *coords, _first_line(str(e))))
+    return issues + validate_lookups(suite)
+
+
+def test_validate_matches_per_rule_reference(spark):
+    df = spark.createDataFrame([(1, 0.5, "x")], SCHEMA)
+    suite = _suite(
+        "a > 0",                                   # clean
+        "nope > 0",                                # missingAttribute
+        "no_such_fn(a)",                           # unknownFunction
+        "a > > 0",                                 # parseError
+        "boom(a)",                                 # lambdaSOE
+        "broken(a) > 0",                           # lambdaSyntaxError def
+        "map_lookup('missing_map', a) is not null",  # unknownLookup/MapId
+        "sum(a) > 0",                              # only valid alone
+        "CAST('xx' AS INT) > 0",                   # never evaluated
+        "b between 0 and 1",                       # clean
+        lambdas=[
+            ("boom", "x -> boom(x) + 1", (5, 1)),
+            ("broken", "no arrow here", (6, 1)),
+        ],
+    )
+    for dry_run in (True, False):
+        want = _per_rule_validate(df, suite, dry_run)
+        assert {i.kind for i in want} >= {
+            "missingAttribute", "unknownFunction", "parseError",
+            "lambdaSOE", "lambdaSyntaxError", "unknownLookup", "unknownMapId",
+        }
+        assert validate(df, suite, dry_run=dry_run) == want
+
+
+def test_validate_is_one_batched_analysis(spark, monkeypatch):
+    df = spark.createDataFrame([(1, 0.5, "x")], SCHEMA)
+    suite = _suite(*[f"a + {i} > b" for i in range(40)])
+    calls = {"collect": 0, "select": 0, "selectExpr": 0}
+    cls = type(df)
+    for name in calls:
+        orig = getattr(cls, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **k):
+            calls[_name] += 1
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, counted)
+    assert validate(df, suite) == []
+    assert calls["collect"] == 1
+    assert calls["select"] + calls["selectExpr"] <= 2
+
+
+def test_line_comments_score_like_uncommented(spark):
+    # a "--" comment at the end of a rule, of a lambda body and inside a
+    # lambda argument must not swallow the parentheses expansion adds
+    from quality_spark import add_data_quality, rule_runner
+    from quality_spark.sparkless import DuckDBProcessor
+
+    rows = [(1, 0.5, "x"), (-1, 0.5, "y"), (None, 0.1, "z")]
+    df = spark.createDataFrame(rows, SCHEMA)
+    commented = _suite(
+        "a > 0 -- positive", "pos(a)", "pos(a -- c\n)",
+        lambdas=[("pos", "x -> x > 0 -- c", (5, 1))],
+    )
+    plain = _suite("a > 0", "pos(a)", "pos(a)", lambdas=[("pos", "x -> x > 0", (5, 1))])
+
+    def scores(suite):
+        duck = DuckDBProcessor(suite, schema="a bigint, b double, txt string")
+        return (
+            add_data_quality(df, suite).select("DQ").collect(),
+            df.select(rule_runner(suite, df).alias("DQ")).collect(),
+            duck.process([dict(zip(("a", "b", "txt"), r)) for r in rows]),
+        )
+
+    assert scores(commented) == scores(plain)
+    assert validate(df, commented) == []
