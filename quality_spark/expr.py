@@ -115,6 +115,17 @@ def drop_line_comments(sql: str) -> str:
     )
 
 
+def strip_number_suffixes(sql: str) -> str:
+    """``sql`` with Spark's typed-literal suffixes (``0.0D``, ``42L``,
+    ``2S``, ``3Y``, ``1.5BD`` ...) dropped from its number tokens: the
+    form DuckDB parses. String literals, identifiers and comments keep
+    their text."""
+    return "".join(
+        t.text.rstrip("bBdDfFlLsSyY") if t.kind == "number" else t.text
+        for t in tokenize(sql)
+    )
+
+
 def _next_code(tokens: Sequence[Token], i: int) -> int:
     """Index of next non-ws/comment token at/after ``i``, or len."""
     n = len(tokens)

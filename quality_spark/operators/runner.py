@@ -17,14 +17,11 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..model import RuleSuite, pack_id
 from ..plans.compiler import expand_rules, probe_types
-from ..results import (
-    encode_rule_sql,
-    encode_rule_sql_generic,
-    overall_result_spark_sql,
-)
+from ..results import encode_rule_sql, overall_result_sql
 
 __all__ = [
     "rule_runner",
@@ -47,7 +44,10 @@ def _encoded_sqls(suite: RuleSuite, df: Optional[DataFrame]) -> List[List[str]]:
         dtypes = probe_types(df, [s for _, _, s in expanded])
         encoded = [encode_rule_sql(s, t) for (_, _, s), t in zip(expanded, dtypes)]
     else:
-        encoded = [encode_rule_sql_generic(s) for _, _, s in expanded]
+        # no frame to probe: route every rule through the double branch,
+        # exact for boolean/double/decimal rules; an integer result
+        # outside {0,1,-1,-2} differs from the reference (which fails it)
+        encoded = [encode_rule_sql(s, T.DoubleType()) for _, _, s in expanded]
     out: List[List[str]] = []
     i = 0
     for rs in suite.rule_sets:
@@ -84,7 +84,7 @@ def _assemble(
             rule_map = f"map({kv})"
         else:
             rule_map = "CAST(map() AS MAP<BIGINT, INT>)"
-        set_overall = overall_result_spark_sql(list(enc_sqls), suite.probable_pass)
+        set_overall = overall_result_sql(list(enc_sqls), suite.probable_pass)
         set_entries.append(
             f"{pack_id(rs.id)}L, named_struct("
             f"'overallResult', {set_overall}, 'ruleResults', {rule_map})"
@@ -104,7 +104,7 @@ def _assemble(
         # (impl/RuleRunner.scala:139-162); a ruleset overall is Passed or
         # Failed only, so folding over all rules directly is equivalent.
         fields.append(
-            f"'overallResult', {overall_result_spark_sql(all_sqls, suite.probable_pass)}"
+            f"'overallResult', {overall_result_sql(all_sqls, suite.probable_pass)}"
         )
     fields.append(f"'ruleSetResults', {sets_map}")
     return F.expr(f"named_struct({', '.join(fields)})")
@@ -155,14 +155,14 @@ def add_flat_rule_results(
     # stage the overalls as columns as well: structs made purely of
     # column references explode at generator speed, while embedding the
     # fold CASEs in all N structs re-evaluates them N times per row
-    suite_overall = overall_result_spark_sql(enc_cols, suite.probable_pass)
+    suite_overall = overall_result_sql(enc_cols, suite.probable_pass)
     set_ov_cols: List[str] = []
     set_ov_exprs: List[Column] = []
     i = 0
     for si, (rs, ss) in enumerate(zip(suite.rule_sets, enc_sqls)):
         cols = enc_cols[i : i + len(ss)]
         set_ov_exprs.append(
-            F.expr(overall_result_spark_sql(cols, suite.probable_pass)).alias(f"__ov{si}")
+            F.expr(overall_result_sql(cols, suite.probable_pass)).alias(f"__ov{si}")
         )
         set_ov_cols.extend([f"__ov{si}"] * len(ss))
         i += len(ss)
@@ -266,7 +266,7 @@ def add_overall_results_and_details(
         flat = [s for set_refs in refs for s in set_refs]
         return [
             F.expr(
-                overall_result_spark_sql(flat, suite.probable_pass)
+                overall_result_sql(flat, suite.probable_pass)
             ).alias(overall_name),
             _assemble(suite, refs, with_suite_overall=False).alias(
                 details_name

@@ -296,7 +296,7 @@ def process_if_attribute_missing(
     the first alternative whose attributes all exist wins; none → NULL
     (or disabled_rule() for the ``_disable`` variant). Pure text/token
     pass on the driver (reference: ReplaceWithIfMissingAttributesExpr)."""
-    from ..expr import replace_calls
+    from ..expr import drop_line_comments, replace_calls
     from ..model import ExpressionRule, Rule, RuleSet
 
     cols = {c.lower() for c in columns}
@@ -316,8 +316,11 @@ def process_if_attribute_missing(
         return "-2" if "disable" in name else "NULL"
 
     def rewrite(rule: Rule) -> Rule:
-        new = replace_calls(rule.expression.rule, expander)
-        if new == rule.expression.rule:
+        # comments go first: a `--` comment left inside the `(alt)` the
+        # expander returns would swallow the closing parenthesis
+        text = drop_line_comments(rule.expression.rule)
+        new = replace_calls(text, expander)
+        if new == text:
             return rule
         return Rule(rule.id, ExpressionRule(new), rule.run_on_pass)
 

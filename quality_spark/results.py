@@ -1,5 +1,11 @@
 """Result model: schemas, int encoding, overall-result folds.
 
+One encoder (:func:`encode_rule_sql`) and one fold
+(:func:`overall_result_sql`) serve both engines: the Spark runners and
+the Spark-free ``DuckDBProcessor``. Each takes a ``dialect``; the
+``"duckdb"`` text drops Spark's ``D`` double-literal suffix, truncates
+before its double→int CAST, and folds with an OR chain.
+
 Reference semantics being reproduced:
 - result ADT stored as one Integer: Passed=100000, Failed=0,
   SoftFailed=-1, DisabledRule=-2, Probability(p)=int(p*100000)
@@ -84,18 +90,12 @@ expression_result_type_yaml = T.StructType(
 # ---------------------------------------------------------------------------
 
 
-def _sat_int(d: str) -> str:
-    """Saturating double→int truncation — reproduces JVM ``Double.toInt``
-    and stays ANSI-mode safe (Spark 4 defaults ANSI on, where a plain
-    overflowing CAST raises)."""
-    return (
-        f"CAST(GREATEST(LEAST({d}, 2147483647.0D), -2147483648.0D) AS INT)"
-    )
-
-
-def encode_rule_sql(rule_sql: str, dtype: T.DataType) -> str:
-    """SQL text converting an evaluated rule expression of known type to
-    the integer result encoding. Null → Failed (matches the reference's
+def encode_rule_sql(
+    rule_sql: str, dtype: T.DataType, dialect: str = "spark"
+) -> str:
+    """SQL text converting an evaluated rule expression of known Spark
+    type to the integer result encoding, in the ``"spark"`` or
+    ``"duckdb"`` dialect. Null → Failed (matches the reference's
     ``case _ => FailedInt`` on a null value)."""
     e = f"({rule_sql})"
     if isinstance(dtype, T.BooleanType):
@@ -106,17 +106,26 @@ def encode_rule_sql(rule_sql: str, dtype: T.DataType) -> str:
             f"WHEN -1 THEN -1 WHEN -2 THEN -2 ELSE 0 END)"
         )
     if isinstance(dtype, (T.DoubleType, T.FloatType, T.DecimalType)):
+        sfx = "D" if dialect == "spark" else ""
         d = f"CAST({e} AS DOUBLE)"
+        # saturating double→int, ANSI-safe (Spark 4 defaults ANSI on,
+        # where a plain overflowing CAST raises). Spark's CAST truncates
+        # like the JVM's Double.toInt; DuckDB's rounds, so it truncates
+        # first — else 2/3 encodes 66667 there and 66666 here, which can
+        # flip a rule at the probable_pass threshold
+        sat = f"GREATEST(LEAST({d} * {PASSED_INT}, 2147483647.0{sfx}), -2147483648.0{sfx})"
+        if dialect != "spark":
+            sat = f"trunc({sat})"
         # isnan BEFORE the saturation: NaN compares false against the
         # sentinel values and NaN-sorts-greatest in LEAST/GREATEST, so
         # without this branch NaN saturates to INT_MAX and silently
         # PASSES — the JVM's (int)NaN is 0, i.e. Failed
         return (
             f"(CASE WHEN {d} IS NULL THEN 0 WHEN isnan({d}) THEN 0 "
-            f"WHEN {d} = 0.0D THEN 0 "
-            f"WHEN {d} = 1.0D THEN {PASSED_INT} WHEN {d} = -1.0D THEN -1 "
-            f"WHEN {d} = -2.0D THEN -2 "
-            f"ELSE {_sat_int(f'{d} * {PASSED_INT}')} END)"
+            f"WHEN {d} = 0.0{sfx} THEN 0 "
+            f"WHEN {d} = 1.0{sfx} THEN {PASSED_INT} WHEN {d} = -1.0{sfx} THEN -1 "
+            f"WHEN {d} = -2.0{sfx} THEN -2 "
+            f"ELSE CAST({sat} AS INT) END)"
         )
     if isinstance(dtype, T.StringType):
         s = f"lower({e})"
@@ -130,65 +139,6 @@ def encode_rule_sql(rule_sql: str, dtype: T.DataType) -> str:
     return "0"
 
 
-def encode_rule_sql_duck(rule_sql: str, duck_type: str) -> str:
-    """DuckDB twin of :func:`encode_rule_sql`, keyed on DuckDB type
-    names (no ``D`` double-literal suffixes, same semantics incl.
-    null→Failed and saturating double→int truncation). Powers the
-    Spark-free sparkless processor."""
-    e = f"({rule_sql})"
-    t = duck_type.upper()
-    if t == "BOOLEAN":
-        return f"(CASE WHEN {e} THEN {PASSED_INT} ELSE 0 END)"
-    if t in ("TINYINT", "SMALLINT", "INTEGER", "BIGINT", "HUGEINT"):
-        return (
-            f"(CASE CAST({e} AS BIGINT) WHEN 0 THEN 0 WHEN 1 THEN {PASSED_INT} "
-            f"WHEN -1 THEN -1 WHEN -2 THEN -2 ELSE 0 END)"
-        )
-    if t in ("FLOAT", "DOUBLE", "REAL") or t.startswith("DECIMAL"):
-        d = f"CAST({e} AS DOUBLE)"
-        # trunc() before the cast: DuckDB ROUNDS on double→int CAST
-        # where Spark (and the JVM) truncate — without it a probability
-        # like 2/3 encodes 66667 here vs 66666 in the Spark runner and
-        # can flip a rule at the probable_pass threshold
-        sat = (
-            f"CAST(trunc(GREATEST(LEAST({d} * {PASSED_INT}, 2147483647.0), "
-            f"-2147483648.0)) AS INT)"
-        )
-        # isnan guard mirrors the Spark/JVM branch: (int)NaN is 0
-        return (
-            f"(CASE WHEN {d} IS NULL THEN 0 WHEN isnan({d}) THEN 0 "
-            f"WHEN {d} = 0.0 THEN 0 "
-            f"WHEN {d} = 1.0 THEN {PASSED_INT} WHEN {d} = -1.0 THEN -1 "
-            f"WHEN {d} = -2.0 THEN -2 ELSE {sat} END)"
-        )
-    if t == "VARCHAR":
-        s = f"lower({e})"
-        return (
-            f"(CASE WHEN {s} IN ('true','passed','pass','yes','1','1.0') THEN {PASSED_INT} "
-            f"WHEN {s} IN ('softfail','maybe') THEN -1 "
-            f"WHEN {s} IN ('disabledrule','disabled') THEN -2 "
-            f"ELSE 0 END)"
-        )
-    return "0"
-
-
-def encode_rule_sql_generic(rule_sql: str) -> str:
-    """Type-agnostic encoding used when no target DataFrame is available
-    to probe expression types: routes through a double cast. Exact for
-    boolean/double/decimal rules; integer results outside {0,1,-1,-2}
-    differ from the reference (which fails them) — probe-typed encoding
-    is used everywhere a DataFrame is in hand."""
-    e = f"({rule_sql})"
-    d = f"CAST({e} AS DOUBLE)"
-    return (
-        f"(CASE WHEN {d} IS NULL THEN 0 WHEN isnan({d}) THEN 0 "
-        f"WHEN {d} = 0.0D THEN 0 "
-        f"WHEN {d} = 1.0D THEN {PASSED_INT} WHEN {d} = -1.0D THEN -1 "
-        f"WHEN {d} = -2.0D THEN -2 "
-        f"ELSE {_sat_int(f'{d} * {PASSED_INT}')} END)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Overall-result folds (reference: impl/OverallResult.scala:21-30)
 # ---------------------------------------------------------------------------
@@ -198,9 +148,7 @@ def rule_fails_sql(
     enc_sql: str, probable_pass: float, dialect: str = "spark"
 ) -> str:
     """True when this encoded result forces the overall result to
-    Failed: Failed itself, or a probability below the threshold. THE
-    single definition of the fail condition for both dialects (only
-    the double-literal suffix differs)."""
+    Failed: Failed itself, or a probability below the threshold."""
     threshold = float(probable_pass) * PASSED_INT
     lit = f"{threshold}D" if dialect == "spark" else f"{threshold}"
     e = f"({enc_sql})"
@@ -210,31 +158,22 @@ def rule_fails_sql(
     )
 
 
-def overall_result_spark_sql(enc_sqls: Sequence[str], probable_pass: float) -> str:
-    """Fold encoded results into an overall Passed/Failed int, shaped
-    as a FLAT ``array_contains(array(fail1..failN), true)``.
+def overall_result_sql(
+    enc_sqls: Sequence[str], probable_pass: float, dialect: str = "spark"
+) -> str:
+    """Fold encoded results into an overall Passed/Failed int.
 
-    Shape matters at 1000+ rules: a left-deep OR chain StackOverflows
-    the JVM's recursive expression walks near 500 rules, and a BALANCED
-    OR tree OOMs the ANTLR parser (nested-paren DFA blowup) — the flat
-    n-ary array is the only shape that both parses and analyzes at any
-    suite size."""
+    Spark gets a FLAT ``array_contains(array(fail1..failN), true)``:
+    at 1000+ rules a left-deep OR chain StackOverflows the JVM's
+    recursive expression walks near 500 rules, and a BALANCED OR tree
+    OOMs the ANTLR parser (nested-paren DFA blowup) — the flat n-ary
+    array is the only shape that both parses and analyzes at any suite
+    size. DuckDB gets the plain OR chain."""
     if not enc_sqls:
         return f"CAST({PASSED_INT} AS INT)"
-    fails = ", ".join(rule_fails_sql(e, probable_pass) for e in enc_sqls)
-    return (
-        f"CAST(CASE WHEN array_contains(array({fails}), true) THEN 0 "
-        f"ELSE {PASSED_INT} END AS INT)"
-    )
-
-
-def overall_result_sql(enc_sqls: Sequence[str], probable_pass: float) -> str:
-    """Same fold as :func:`overall_result_spark_sql` in the DuckDB
-    dialect, as an OR chain — used by ``DuckDBProcessor`` and to
-    generate DuckDB oracle queries in tests. Delegates the fail
-    condition to :func:`rule_fails_sql` so the semantics live in one
-    place."""
-    if not enc_sqls:
-        return str(PASSED_INT)
-    conds = [rule_fails_sql(e, probable_pass, "duckdb") for e in enc_sqls]
-    return f"(CASE WHEN {' OR '.join(conds)} THEN 0 ELSE {PASSED_INT} END)"
+    fails = [rule_fails_sql(e, probable_pass, dialect) for e in enc_sqls]
+    if dialect == "spark":
+        cond = f"array_contains(array({', '.join(fails)}), true)"
+    else:
+        cond = " OR ".join(fails)
+    return f"CAST(CASE WHEN {cond} THEN 0 ELSE {PASSED_INT} END AS INT)"

@@ -19,7 +19,6 @@ impl/util/serializing.scala:49-54).
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, replace
 from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
@@ -27,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..expr import parse_lambda, substitute_identifiers
 from ..model import (
     Id,
     LambdaFunction,
@@ -209,10 +209,13 @@ class MetaRuleSet:
 
     @property
     def _arg_and_body(self) -> Tuple[str, str]:
-        arg, _, body = self.rule_expr.partition("->")
-        if not body:
-            raise ValueError(f"meta rule expr must be 'arg -> expr': {self.rule_expr!r}")
-        return arg.strip(), body.strip()
+        try:
+            (arg,), body = parse_lambda(self.rule_expr)
+        except ValueError:
+            raise ValueError(
+                f"meta rule expr must be 'arg -> expr': {self.rule_expr!r}"
+            ) from None
+        return arg, body
 
     def filter_columns(
         self,
@@ -256,11 +259,12 @@ class MetaRuleSet:
         ``stable_position`` must be stable per column name for rule ids
         to evolve correctly (the reference's stated law)."""
         arg, body = self._arg_and_body
-        pat = re.compile(rf"\b{re.escape(arg)}\b")
+        # the lambda-expansion token pass: string literals, qualified
+        # tails (`s.arg`) and call names keep their text
         rules = tuple(
             Rule(
                 Id(self.id.id + stable_position(c), self.id.version),
-                pat.sub(c, body),
+                substitute_identifiers(body, {arg: c}),
             )
             for c in self.filter_columns(df, transform)
         )

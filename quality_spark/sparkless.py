@@ -37,6 +37,22 @@ from .operators.runner import _add_dq, _encoded_sqls
 
 __all__ = ["RowProcessor", "DuckDBProcessor", "dq_factory"]
 
+# DuckDB type name of a probed rule -> the Spark type whose branch of
+# results.encode_rule_sql encodes it; any other type encodes as Failed
+_SPARK_TYPE_OF_DUCK = {
+    "BOOLEAN": T.BooleanType(),
+    "TINYINT": T.ByteType(),
+    "SMALLINT": T.ShortType(),
+    "INTEGER": T.IntegerType(),
+    "BIGINT": T.LongType(),
+    "HUGEINT": T.LongType(),
+    "FLOAT": T.FloatType(),
+    "REAL": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+    "DECIMAL": T.DecimalType(),
+    "VARCHAR": T.StringType(),
+}
+
 
 def _parse_scalar_ddl(schema: str) -> list:
     """[(name, normalized_type)] from a Spark-style scalar DDL string
@@ -123,8 +139,10 @@ class DuckDBProcessor:
     no JVM, no SparkSession, embeddable in any Python service. This is
     the closest Python analogue of the reference's sparkless
     MutableProjection path (sparkless/Processor.scala:13-42): compile
-    once, stream batches, same integer result encoding and overall
-    folds (results.py mirrors impl/OverallResult.scala:21-30).
+    once, stream batches. Each probed rule type maps to its Spark type
+    and goes through the Spark runner's own encoder and fold
+    (``results.encode_rule_sql`` / ``overall_result_sql``, dialect
+    ``"duckdb"``), so both engines give the same integers.
 
     Scope: the dialect-portable subset of rule SQL (comparisons,
     arithmetic, CASE, IN, string/math functions, expanded lambdas).
@@ -160,37 +178,19 @@ class DuckDBProcessor:
         silently select the wrong result encoding."""
         import duckdb
 
+        from .expr import strip_number_suffixes
         from .plans.compiler import RuleCompilationError, expand_rules
-        from .results import encode_rule_sql_duck, overall_result_sql
+        from .results import encode_rule_sql, overall_result_sql
         from .model import pack_id
 
         self.suite = suite
         self._con = duckdb.connect()
         self._con.execute("SET disabled_optimizers = 'in_clause'")
         # our macro expansion emits Spark typed numeric literals
-        # (0.0D / 42L); strip the suffix for DuckDB — it only follows a
-        # numeric literal, never an identifier (those can't start with
-        # a digit). String literals containing such sequences are out
-        # of sparkless scope (documented).
-        import re
-
-        def _portable(sql: str) -> str:
-            # every Spark typed-literal suffix, case-insensitively:
-            # D/L/F/S/Y plus BD (decimal) — lowercase 0.0d / 42l / 2s /
-            # 3y are legal Spark SQL and must not leak into DuckDB text
-            # (S/Y matches expr._NUM_RE's tokenizer; ADVICE r04 low)
-            suf = r"(?:BD|[DLFSY])"
-            sql = re.sub(
-                rf"\b(\d+(?:\.\d+)?(?:[eE][+-]?\d+)?){suf}\b",
-                r"\1", sql, flags=re.IGNORECASE,
-            )
-            return re.sub(
-                rf"(\d*\.\d+(?:[eE][+-]?\d+)?){suf}\b",
-                r"\1", sql, flags=re.IGNORECASE,
-            )
-
+        # (0.0D / 42L); DuckDB takes them without the suffix
         expanded = [
-            (rs, r, _portable(sql)) for rs, r, sql in expand_rules(suite)
+            (rs, r, strip_number_suffixes(sql))
+            for rs, r, sql in expand_rules(suite)
         ]
 
         # type-probe against a schema-shaped empty relation (LIMIT 0 —
@@ -242,11 +242,12 @@ class DuckDBProcessor:
                 )
             probe_df = pd.DataFrame([sample_row])
             self._con.register("__qs_probe", probe_df)
-        types: List[str] = []
+        types: List[T.DataType] = []
         for rs, r, sql in expanded:
             try:
                 rel = self._con.sql(f"SELECT ({sql}) AS e FROM __qs_probe LIMIT 0")
-                types.append(str(rel.types[0]))
+                duck_t = str(rel.types[0]).split("(")[0]
+                types.append(_SPARK_TYPE_OF_DUCK.get(duck_t, T.NullType()))
             except Exception as e:
                 raise RuleCompilationError(
                     f"rule {r.id} in set {rs.id} is not DuckDB-portable "
@@ -254,7 +255,7 @@ class DuckDBProcessor:
                 ) from e
 
         self._rules = [
-            (pack_id(rs.id), pack_id(r.id), encode_rule_sql_duck(sql, t))
+            (pack_id(rs.id), pack_id(r.id), encode_rule_sql(sql, t, "duckdb"))
             for (rs, r, sql), t in zip(expanded, types)
         ]
         self._suite_id = pack_id(suite.id)
@@ -264,29 +265,23 @@ class DuckDBProcessor:
             per_set.setdefault(sid, []).append(i)
         pp = suite.probable_pass
         # two-level select: the INNER level computes each encoded rule
-        # exactly once under the collision-proof alias __qs_r_<i> (the
-        # inner select is `SELECT *, ...` over the batch, so a bare
-        # r_<i> alias would collide with an input column literally
-        # named r_0 — ADVICE r04 low); the folds reference the aliases
-        # and the OUTER level re-exports them under the documented
-        # r_<i> output names (the outer select carries no input
-        # columns, so no collision there). Inlining
-        # the enc text into every fold repeated each rule's SQL ~7x
-        # (and each enc already repeats the raw rule ~4x in its CASE
+        # exactly once, over the batch columns only, under the alias
+        # __qs_r_<i>; the OUTER level reads only those aliases, folds
+        # them and re-exports them under the documented r_<i> names.
+        # Inlining the enc text into every fold repeated each rule's SQL
+        # ~7x (and each enc already repeats the raw rule ~4x in its CASE
         # arms). Aliases are QUOTED: pack_id is signed, so a negative
         # set id would otherwise emit `AS s_-N` — a parser error.
         inner_select = ", ".join(
             f"({enc}) AS __qs_r_{i}" for i, (_, _, enc) in enumerate(self._rules)
         )
-        outer = [f"__qs_r_{i} AS r_{i}" for i in range(len(self._rules))]
+        refs = [f"__qs_r_{i}" for i in range(len(self._rules))]
+        outer = [f"{ref} AS r_{i}" for i, ref in enumerate(refs)]
         outer += [
-            f'({overall_result_sql([f"__qs_r_{i}" for i in idxs], pp)}) AS "s_{sid}"'
+            f'{overall_result_sql([refs[i] for i in idxs], pp, "duckdb")} AS "s_{sid}"'
             for sid, idxs in per_set.items()
         ]
-        outer.append(
-            f"({overall_result_sql([f'__qs_r_{i}' for i in range(len(self._rules))], pp)})"
-            " AS overall"
-        )
+        outer.append(f"{overall_result_sql(refs, pp, 'duckdb')} AS overall")
         self._set_ids = list(per_set)
         # in schema mode the DECLARED types also govern execution: the
         # batch is cast column-by-column before the rules run, so an
@@ -301,7 +296,7 @@ class DuckDBProcessor:
             batch = f"(SELECT {casts} FROM __qs_batch_raw)"
         self._sql = (
             f"SELECT {', '.join(outer)} FROM "
-            f"(SELECT *, {inner_select} FROM {batch})"
+            f"(SELECT {inner_select} FROM {batch})"
         )
 
     def process_pandas(self, pdf) -> "object":

@@ -134,3 +134,12 @@ def test_soft_fail_macro_shape():
     out = expand_sql("soft_fail(l_tax < 0.05)")
     assert "CAST((l_tax < 0.05) AS DOUBLE)" in out
     assert "-1.0D" in out
+
+
+def test_strip_number_suffixes_touches_numbers_only():
+    from quality_spark.expr import strip_number_suffixes
+
+    sql = "x > 1.5D AND c = '12D' AND y2d < 3L AND z IN (2S, 3y, 1.0BD, 1e3f) -- 4S"
+    assert strip_number_suffixes(sql) == (
+        "x > 1.5 AND c = '12D' AND y2d < 3 AND z IN (2, 3, 1.0, 1e3) -- 4S"
+    )

@@ -216,28 +216,66 @@ print("SPARK_FREE_OK")
     assert "SPARK_FREE_OK" in r.stdout, r.stdout + r.stderr
 
 
-def test_duckdb_processor_small_tiny_literal_suffixes():
+def test_duckdb_processor_small_tiny_literal_suffixes(spark):
     """Spark typed literals 2S (smallint) and 3Y (tinyint) must be
-    stripped for DuckDB like D/L/F/BD (ADVICE r04: expr tokenizes them,
-    so the portable rewrite must too)."""
+    stripped for DuckDB like D/L/F/BD, and only from numbers: the same
+    digits-and-letter text inside a string literal is data and stays as
+    written, so DuckDB scores every rule as the Spark runner does."""
     from quality_spark.model import Id, Rule, RuleSet, RuleSuite, ExpressionRule, pack_id
+    from quality_spark.operators.runner import add_data_quality
     from quality_spark.sparkless import DuckDBProcessor
 
+    rules = (
+        "x > 2S and x < 120Y",
+        "code = '12D'",
+        "code != '5L' AND qty > 1.5D",
+        "concat(code, '-3S') = '12D-3S'",
+    )
     suite = RuleSuite(
         Id(1, 1),
-        (RuleSet(Id(10, 1), (Rule(Id(100, 1), ExpressionRule("x > 2S and x < 120Y")),)),),
+        (
+            RuleSet(
+                Id(10, 1),
+                tuple(
+                    Rule(Id(100 + i, 1), ExpressionRule(r))
+                    for i, r in enumerate(rules)
+                ),
+            ),
+        ),
     )
-    proc = DuckDBProcessor(suite, schema="x int")
-    rid, sid = pack_id(Id(100, 1)), pack_id(Id(10, 1))
-    out = proc.process([{"x": 5}, {"x": 1}, {"x": 500}])
-    got = [r["ruleSetResults"][sid]["ruleResults"][rid] for r in out]
-    assert got == [100000, 0, 0]
+    schema = "x int, code string, qty double"
+    rows = [
+        {"x": 5, "code": "12D", "qty": 2.0},
+        {"x": 1, "code": "5L", "qty": 2.0},
+        {"x": 500, "code": "7", "qty": 1.0},
+    ]
+    proc = DuckDBProcessor(suite, schema=schema)
+    got = proc.process(rows)
+    want = [
+        r["DQ"].asDict(recursive=True)
+        for r in add_data_quality(
+            spark.createDataFrame([tuple(r.values()) for r in rows], schema), suite
+        ).collect()
+    ]
+    assert got == want
+    sid = pack_id(Id(10, 1))
+    per_rule = [
+        [g["ruleSetResults"][sid]["ruleResults"][pack_id(Id(100 + i, 1))] for g in got]
+        for i in range(len(rules))
+    ]
+    assert per_rule == [
+        [PASSED_INT, 0, 0],
+        [PASSED_INT, 0, 0],
+        [PASSED_INT, 0, 0],
+        [PASSED_INT, 0, 0],
+    ]
 
 
 def test_duckdb_processor_input_column_named_r_0():
-    """An input column literally named r_0 must not collide with the
-    internal per-rule aliases (ADVICE r04: inner select is `SELECT *,
-    ...` so bare r_<i> aliases would be ambiguous)."""
+    """Input columns literally named like the output (r_0) or the
+    internal per-rule alias (__qs_r_0) must not reach the results: the
+    inner select projects only the encoded rules, and the outer select
+    reads only their aliases."""
     from quality_spark.model import Id, Rule, RuleSet, RuleSuite, ExpressionRule, pack_id
     from quality_spark.sparkless import DuckDBProcessor
 
@@ -245,11 +283,12 @@ def test_duckdb_processor_input_column_named_r_0():
         Id(1, 1),
         (RuleSet(Id(10, 1), (Rule(Id(100, 1), ExpressionRule("r_0 > 0")),)),),
     )
-    proc = DuckDBProcessor(suite, schema="r_0 int")
+    proc = DuckDBProcessor(suite, schema="r_0 int, __qs_r_0 int")
     rid, sid = pack_id(Id(100, 1)), pack_id(Id(10, 1))
-    out = proc.process([{"r_0": 5}, {"r_0": -1}])
+    out = proc.process([{"r_0": 5, "__qs_r_0": 7}, {"r_0": -1, "__qs_r_0": 7}])
     got = [r["ruleSetResults"][sid]["ruleResults"][rid] for r in out]
     assert got == [100000, 0]
+    assert [r["overallResult"] for r in out] == [100000, 0]
 
 
 def test_duckdb_processor_masked_float64_nulls():

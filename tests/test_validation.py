@@ -117,6 +117,19 @@ def test_if_attribute_missing_untouched_rule_identity():
     assert out.rule_sets[0].rules[0].expression.rule == "a > 0"
 
 
+def test_if_attribute_missing_line_comment_in_alternative(spark):
+    """A `--` comment inside the chosen alternative must not swallow the
+    parenthesis the rewrite wraps it in: the rule scores like `a > 0`."""
+    from quality_spark.operators.runner import add_data_quality
+
+    suite = _suite("coalesce_if_attributes_missing(a -- first\n, b) > 0")
+    out = process_if_attribute_missing(suite, ["a", "b"])
+    assert out.rule_sets[0].rules[0].expression.rule == "(a) > 0"
+    df = spark.createDataFrame([(1, 0.0), (-1, 5.0)], "a long, b double")
+    got = [r["DQ"]["overallResult"] for r in add_data_quality(df, out).collect()]
+    assert got == [100000, 0]
+
+
 def test_lookup_discovery_and_validation(spark, lineitem):
     from quality_spark.model import Id, Rule, RuleSet, RuleSuite
     from quality_spark.plans.validation import discover_lookup_ids, validate

@@ -122,3 +122,16 @@ def test_meta_rule_generated_rules_run(spark, sf_dir):
     suite = integrate_meta_rule_sets(li, base, metas, cols.index)[Id(7, 1)]
     out = li.select(rule_runner(suite).alias("dq")).limit(100).collect()
     assert all(r["dq"]["overallResult"] == PASSED_INT for r in out)
+
+
+def test_meta_rule_template_substitutes_only_the_argument(spark):
+    """The template argument is replaced as an identifier: a string
+    literal and a struct field that happen to spell it keep their text."""
+    from quality_spark.sources.versioning import MetaRuleSet
+
+    df = spark.createDataFrame([], "l_tax double, s struct<x: int>")
+    meta = MetaRuleSet(
+        Id(7, 1), Id(900, 1), "dataType = 'double'", "x -> x <> 'x' AND s.x IS NULL"
+    )
+    (rule,) = meta.generate_rule_set(df, lambda c: 0).rules
+    assert rule.expression.rule == "l_tax <> 'x' AND s.x IS NULL"
