@@ -532,10 +532,10 @@ _STAGE_LOCKS_GUARD = __import__("threading").Lock()
 def _staged(kind: str, sf_dir: str, build):
     """Memoized staging: ``build(root) -> value`` runs once per
     (kind, sf_dir); the root is keyed by sf_dir so two scale factors
-    never clobber each other's files. Thread-safe (round 13): the
-    composite gates build their legs on thread pools, and two legs
-    sharing a staged artifact must not double-build it (the rmtree
-    of a duplicate build would race a concurrent reader) — per-key
+    never clobber each other's files. Thread-safe: ``_run_legs``
+    builds a composite's legs on one pool, and two legs sharing a
+    staged artifact must not double-build it (the rmtree of a
+    duplicate build would race a concurrent reader) — per-key
     double-checked locks serialize exactly the first build."""
     import os
     import shutil
@@ -571,53 +571,126 @@ _SHARED_STREAM_MEMO: dict = {}
 _SHARED_STREAM_LOCK = __import__("threading").Lock()
 
 
-def _pool_width(n_parts: int) -> int:
-    """Concurrent-leg pool width (guide §2.6), scale-aware (VERDICT
-    r13 #3). Width = min(part count, session cores), floored at 2: on
-    local[32] every composite keeps its round-13 all-legs-at-once
-    start (all part counts are <= 16), while an 8-core driver run —
-    or any deployment with fewer cores than parts — submits at most
-    as many concurrent jobs as there are cores to back-fill.
-    ``SPARK_GRAFT_LEG_POOL`` overrides the cap outright: set it to
-    2-3 on a saturated shared cluster, per the guide's "2-3 jobs in
-    flight is plenty". Scheduler assumption, made explicit: these
-    pools rely on Spark's default FIFO job scheduling — an earlier
-    job's straggler tail is back-filled by later jobs' tasks, which
-    is exactly the §2.6 behaviour the composites want; no FAIR
-    scheduler pools are assumed or configured."""
-    import os
+#: Leg names of every composite gate, in union order. A gate hands
+#: ``_run_legs`` one builder per declared leg; ``query_legs()`` derives
+#: the per-leg timing entries from this table alone.
+_GATE_LEGS: dict[str, tuple[str, ...]] = {
+    "media_features": (
+        "text", "bmp", "ppm", "png", "jpeg", "jpeg_rst", "jpeg_prog",
+        "gif", "tiff", "wav", "wav_spec", "y4m", "scene", "sniff",
+        "imghash",
+    ),
+    "sampling_splits": (
+        "hash_split", "stratified", "mix", "temperature", "cap", "hh",
+        "hhg", "wsample", "wsample_g", "budget_plan", "budget_kept",
+        "topfrac", "pctile",
+    ),
+    "dedup_exact": ("groups", "keep_best", "substr", "fuzzy"),
+    "minhash_pipeline": ("sig", "pair", "ingest", "jacc", "jpre"),
+    "rules_roundtrip": ("from_df", "meta", "versioned"),
+    "temporal_joins": ("asof", "range", "interval", "scd2"),
+    "doc_ingest_suite": (
+        "csv", "html", "clf", "zlib", "clf_train", "clf_multi",
+    ),
+    "text_curation2": ("bpe", "enc", "lm", "win", "pdedup", "dsir", "knlm"),
+    "ann_suite": ("topk", "brute", "l2", "quant", "ivf", "kmeans"),
+    "expr_runner_agg": (
+        "er", "profile", "profile_approx", "profile_shard", "suggest",
+        "profile_shard_approx", "approx_shard_q", "psi", "psi_cat",
+        "profile_by", "profile_cat", "suggest_cat", "drift",
+    ),
+    "tfidf_scores": ("tfidf", "bm25", "rrf", "bm25_idx"),
+    "skew_ops": (
+        "salted_agg", "skew_join", "rel", "pagerank", "snapdiff",
+        "joinstats", "hits",
+    ),
+    "embedding_reduce": (
+        "sem", "proj", "pq", "ivfpq", "ivfpq_res", "ivfpq_rr",
+        "ivfpq_idx", "pq_append", "ivfpq_idx_rr", "doctor",
+    ),
+    "stats_suite": (
+        "corr", "assoc", "entropy", "ldiv", "colloc", "reg", "g3",
+        "csample", "mad", "benford", "markov", "vocab", "gcorr", "nullpat",
+    ),
+    "event_suite": ("rollups", "stream_session", "cohort", "funnel", "anom"),
+    "lambda_suite": ("margin", "subq"),
+    "simhash_pipeline": ("sig", "pair"),
+    "streaming_first_seen": ("first_seen", "store"),
+    "corpus_io": ("jsonl", "partitioned", "bucketed", "zorder", "orc"),
+    "bloom_suite": ("semi", "sql_agg", "bigfile"),
+    "windowed_dq": ("batch", "stream"),
+    "digest_documents": ("digest", "xxh3", "winnow"),
+}
 
-    env = os.environ.get("SPARK_GRAFT_LEG_POOL")
-    if env:
-        return max(1, min(int(n_parts), int(env)))
-    try:
-        cores = int(
-            SparkSession.getActiveSession().sparkContext.defaultParallelism
-        )
-    except Exception:
-        cores = os.cpu_count() or 8
-    return max(2, min(int(n_parts), cores))
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel",
+)
 
 
-def _concurrent_union(builders) -> DataFrame:
-    """Build independent composite legs on a thread pool and union in
-    the given order (the expr_runner_agg/stats_suite pattern,
-    generalized in round 13): legs that stage artifacts, collect
-    metadata, or run eager checkpoint loops do that work overlapped
-    instead of serially; the union is bit-identical to the serial
-    build because every leg is a pure operator over its own frames
-    (shared staged artifacts are behind `_staged`'s per-key locks)."""
-    from concurrent.futures import ThreadPoolExecutor
+def _run_legs(gate: str, legs: dict, only=None) -> DataFrame:
+    """Build a composite gate's legs and union them in declared order.
 
-    builders = list(builders)
-    if len(builders) == 1:
-        return builders[0]()
-    with ThreadPoolExecutor(max_workers=_pool_width(len(builders))) as ex:
-        frames = list(ex.map(lambda b: b(), builders))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    ``legs`` maps each name in ``_GATE_LEGS[gate]`` to a zero-argument
+    builder returning a DataFrame, or a list of them when one unit of
+    shared work feeds several union members. ``only`` selects a subset
+    of legs. The selected legs build on one pool as wide as the
+    selection (a single leg builds in the caller's thread), each under
+    the Spark job group ``<gate>.<leg>``, so eager construction-time
+    jobs (checkpoints, collects, staging) overlap. The union equals
+    the serial build's: every leg is a pure operator over its own
+    frames, and shared staged artifacts sit behind ``_staged``'s
+    per-key locks. The first failing leg cancels its siblings' job
+    groups, waits for them to stop, and is re-raised under its name."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+    from functools import reduce
+
+    names = _GATE_LEGS[gate]
+    if tuple(legs) != names:
+        raise ValueError(f"{gate}: legs {tuple(legs)} differ from {names}")
+    unknown = set(only or ()) - set(names)
+    if unknown:
+        raise ValueError(f"{gate}: unknown legs {sorted(unknown)}")
+    selected = [n for n in names if only is None or n in only]
+    session = SparkSession.active()
+    sc = session.sparkContext
+
+    def build(name: str) -> list:
+        # the active session is JVM-thread-local: a pool thread must see
+        # the caller's, or getActiveSession() lookups (UDF registration
+        # at rule-expansion time) find none
+        session._jvm.SparkSession.setActiveSession(session._jsparkSession)
+        prior = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        sc.setJobGroup(f"{gate}.{name}", f"{gate} leg {name}", True)
+        try:
+            out = legs[name]()
+        finally:
+            for k, v in zip(_JOB_GROUP_PROPS, prior):
+                sc.setLocalProperty(k, v)
+        return out if isinstance(out, list) else [out]
+
+    def failed(name: str, exc: BaseException):
+        return RuntimeError(f"{gate}: leg {name!r} failed: {exc}")
+
+    if len(selected) == 1:
+        try:
+            frames = build(selected[0])
+        except Exception as exc:
+            raise failed(selected[0], exc) from exc
+    else:
+        with ThreadPoolExecutor(max_workers=len(selected)) as ex:
+            futures = {ex.submit(build, n): n for n in selected}
+            done, pending = wait(futures, return_when=FIRST_EXCEPTION)
+            bad = next((f for f in futures if f in done and f.exception()), None)
+            if bad is not None:
+                # a sibling may be between jobs when first cancelled,
+                # so cancel again until every sibling has returned
+                while pending:
+                    for f in pending:
+                        sc.cancelJobGroup(f"{gate}.{futures[f]}")
+                    _, pending = wait(pending, timeout=0.2)
+                raise failed(futures[bad], bad.exception()) from bad.exception()
+            frames = [df for f in futures for df in f.result()]
+    return reduce(DataFrame.unionByName, frames)
 
 
 def _shared_streams(spark: SparkSession, sf_dir: str) -> dict:
@@ -881,13 +954,6 @@ def q_bloom_semi_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bloom_semi_filter() -> str:
-    return (
-        "SELECT CAST(count(*) AS BIGINT) AS n_customers_with_orders FROM customer "
-        "WHERE c_custkey IN (SELECT o_custkey FROM orders)"
-    )
-
-
 def q_bloom_sql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """small_bloom/big_bloom called from SQL rule text (reference
     registers them as aggregate functions, impl/bloom/Parquet.scala:84-137;
@@ -946,14 +1012,6 @@ def q_bloom_sql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bloom_sql_agg() -> str:
-    return (
-        "SELECT CAST(count(*) AS BIGINT) AS small_members, "
-        "CAST(count(*) AS BIGINT) AS big_members FROM customer "
-        "WHERE c_custkey IN (SELECT o_custkey FROM orders)"
-    )
-
-
 _XXH3_GATE_N = 150
 
 
@@ -963,7 +1021,9 @@ def _xxh3_gate_inputs() -> list:
     return [(i, "ab" * i + str(i)) for i in range(_XXH3_GATE_N)]
 
 
-def q_digest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_digest_documents(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Digest functions over documents (SURVEY §2.7): md5/sha256 hex —
     the long-decomposition is covered against hashlib in
     tests/test_ids.py — plus an XXH3 leg (round 6: upgraded from
@@ -979,41 +1039,49 @@ def q_digest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_pyhash.py)."""
     from quality_spark.functions.lambdas import expand_sql
 
-    docs = _read(spark, sf_dir, "documents")
     nb = F.lit(-1).cast("bigint")
-    dig = docs.select(
-        F.lit("digest").alias("part"),
-        "doc_id",
-        F.md5(F.col("text")).alias("md5_hex"),
-        F.sha2(F.col("text"), 256).alias("sha256_hex"),
-        nb.alias("xxh3"),
-        nb.alias("xxh3_hi"),
-        nb.alias("siphash24"),
-        nb.alias("adler32"),
-    )
-    s = "concat(repeat('ab', CAST(id AS INT)), CAST(id AS STRING))"
-    arr = expand_sql(f"za_hash_longs_with('XXH3', {s})")
-    xx = spark.range(0, _XXH3_GATE_N, 1, 4).select(
-        F.lit("xxh3").alias("part"),
-        F.col("id").cast("bigint").alias("doc_id"),
-        F.lit("").alias("md5_hex"),
-        F.lit("").alias("sha256_hex"),
-        F.expr(f"element_at({arr}, 1)").alias("xxh3"),
-        F.expr(f"element_at({arr}, 2)").alias("xxh3_hi"),
-        F.expr(expand_sql(f"hash_with('SIPHASH24', {s})")).alias("siphash24"),
-        F.expr(expand_sql(f"hash_with('ADLER32', {s})")).alias("adler32"),
-    )
-    win = q_winnow_leg(spark, sf_dir).select(
-        F.lit("winnow").alias("part"),
-        "doc_id",
-        F.lit("").alias("md5_hex"),
-        F.lit("").alias("sha256_hex"),
-        F.col("fp").alias("xxh3"),
-        nb.alias("xxh3_hi"),
-        nb.alias("siphash24"),
-        nb.alias("adler32"),
-    )
-    return dig.unionByName(xx).unionByName(win)
+
+    def b_digest():
+        return _read(spark, sf_dir, "documents").select(
+            F.lit("digest").alias("part"),
+            "doc_id",
+            F.md5(F.col("text")).alias("md5_hex"),
+            F.sha2(F.col("text"), 256).alias("sha256_hex"),
+            nb.alias("xxh3"),
+            nb.alias("xxh3_hi"),
+            nb.alias("siphash24"),
+            nb.alias("adler32"),
+        )
+
+    def b_xxh3():
+        s = "concat(repeat('ab', CAST(id AS INT)), CAST(id AS STRING))"
+        arr = expand_sql(f"za_hash_longs_with('XXH3', {s})")
+        return spark.range(0, _XXH3_GATE_N, 1, 4).select(
+            F.lit("xxh3").alias("part"),
+            F.col("id").cast("bigint").alias("doc_id"),
+            F.lit("").alias("md5_hex"),
+            F.lit("").alias("sha256_hex"),
+            F.expr(f"element_at({arr}, 1)").alias("xxh3"),
+            F.expr(f"element_at({arr}, 2)").alias("xxh3_hi"),
+            F.expr(expand_sql(f"hash_with('SIPHASH24', {s})")).alias("siphash24"),
+            F.expr(expand_sql(f"hash_with('ADLER32', {s})")).alias("adler32"),
+        )
+
+    def b_winnow():
+        return q_winnow_leg(spark, sf_dir).select(
+            F.lit("winnow").alias("part"),
+            "doc_id",
+            F.lit("").alias("md5_hex"),
+            F.lit("").alias("sha256_hex"),
+            F.col("fp").alias("xxh3"),
+            nb.alias("xxh3_hi"),
+            nb.alias("siphash24"),
+            nb.alias("adler32"),
+        )
+
+    return _run_legs("digest_documents", {
+        "digest": b_digest, "xxh3": b_xxh3, "winnow": b_winnow,
+    }, only)
 
 
 def q_winnow_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1095,14 +1163,6 @@ def _oracle_dedup_exact_groups() -> str:
     )
 
 
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quality_spark.llm.textstats import text_stats_sqls
-
-    docs = _read(spark, sf_dir, "documents")
-    sqls = text_stats_sqls("text", "spark")
-    return docs.select("doc_id", *[F.expr(s).alias(n) for n, s in sqls.items()])
-
-
 def _oracle_text_stats() -> str:
     from quality_spark.llm.textstats import text_stats_sqls
 
@@ -1111,28 +1171,10 @@ def _oracle_text_stats() -> str:
     return f"SELECT doc_id, {cols} FROM documents"
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quality_spark.llm.textstats import lang_id_sql
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", F.expr(lang_id_sql("text", "spark")).alias("lang_pred")
-    )
-
-
 def _oracle_lang_id() -> str:
     from quality_spark.llm.textstats import lang_id_sql
 
     return f"SELECT doc_id, {lang_id_sql('text', 'duckdb')} AS lang_pred FROM documents"
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quality_spark.llm.textstats import fingerprint_sql
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", F.expr(fingerprint_sql("text", "spark")).alias("fingerprint")
-    )
 
 
 def _oracle_fingerprint() -> str:
@@ -1142,13 +1184,6 @@ def _oracle_fingerprint() -> str:
         f"SELECT doc_id, {fingerprint_sql('text', 'duckdb')} AS fingerprint "
         "FROM documents"
     )
-
-
-def q_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quality_spark.llm.textstats import with_token_estimate
-
-    docs = _read(spark, sf_dir, "documents")
-    return with_token_estimate(docs).select("doc_id", "token_estimate")
 
 
 def _oracle_token_estimate() -> str:
@@ -1797,13 +1832,6 @@ _PROFILE_BINS = 8
 _PROFILE_QS = (0.25, 0.5, 0.75, 0.95)
 
 
-#: expr_runner_agg part names, in composite union order
-_ERA_PARTS = (
-    "er", "profile", "profile_approx", "profile_shard", "suggest",
-    "profile_shard_approx", "approx_shard_q", "psi", "psi_cat",
-    "profile_by", "profile_cat", "suggest_cat", "drift",
-)
-
 #: fixed bin count for the approx-shard quantile gate part
 _ASQ_BINS = 16
 
@@ -1815,9 +1843,7 @@ def q_expr_runner_agg(
     flattened to (ruleId, result-string) rows ('er' part), plus the
     profiling / rule-authoring / monitoring surface
     (`operators/profile.py`, `operators/suggest.py`) as the parts in
-    ``_ERA_PARTS``. ``only`` selects a subset for bench.py's per-leg
-    attribution (VERDICT r09 'what's wrong' #2 — the composite's
-    17.6 s had no leg breakdown).
+    ``_GATE_LEGS["expr_runner_agg"]``; ``only`` selects a subset.
 
     Shared-artifact diet (VERDICT r09 next-round #3): the exact
     profile frame, the two parity shard artifacts, and the
@@ -1851,10 +1877,6 @@ def q_expr_runner_agg(
     )
 
     li = _read(spark, sf_dir, "lineitem")
-    want = set(only) if only else set(_ERA_PARTS)
-    unknown = want - set(_ERA_PARTS)
-    if unknown:
-        raise ValueError(f"unknown expr_runner_agg parts: {sorted(unknown)}")
     import threading
 
     memo: dict = {}
@@ -2205,30 +2227,10 @@ def q_expr_runner_agg(
         "suggest_cat": p_suggest_cat,
         "drift": p_drift,
     }
-    # Build the selected parts CONCURRENTLY (round 10 — VERDICT r09
-    # next #3): each part's construction runs its own driver-side
-    # Spark jobs (eager checkpoints, metadata collects), and running
-    # them serially cost ~18 s at sf0.1 for what is ~2 s of critical
-    # path. Spark schedules concurrent jobs from one session safely;
-    # every part's result is independent of scheduling (integer-exact
-    # operators, memoized shared artifacts behind per-key locks), so
-    # the gate output is bit-identical to the serial build.
-    selected = [p for p in _ERA_PARTS if p in want]
-    if len(selected) == 1:
-        return builders[selected[0]]()
-    from concurrent.futures import ThreadPoolExecutor
-
-    # pool width = part count (round 13): with 13 parts and an 8-wide
-    # pool the tail legs ('drift' 2.4 s, 'psi_cat' 2.2 s) queued behind
-    # the first eight; every leg now starts at t=0 and the composite
-    # costs its critical chain, not the queue. Round 14: capped at the
-    # session core count (_pool_width) — identical on local[32].
-    with ThreadPoolExecutor(max_workers=_pool_width(len(selected))) as ex:
-        frames = list(ex.map(lambda p: builders[p](), selected))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    # each part's construction runs its own eager Spark jobs
+    # (eager checkpoints, metadata collects): built serially they cost
+    # ~18 s at sf0.1 for ~2 s of critical path
+    return _run_legs("expr_runner_agg", builders, only)
 
 
 def _oracle_expr_runner_agg() -> str:
@@ -2490,8 +2492,8 @@ WHERE bit_count(xor(a.sim, b.sim)) <= 3
 def q_media_features(
     spark: SparkSession, sf_dir: str, only: tuple | None = None
 ) -> DataFrame:
-    """Multimodal plumbing end-to-end, two branches (``only`` selects a
-    subset of parts — used by bench.py's per-leg attribution):
+    """Multimodal plumbing end-to-end, one tagged part per leg of
+    ``_GATE_LEGS["media_features"]`` (``only`` selects a subset):
 
     - 'text': text bytes wrapped as opaque media, STUB features —
       byte counts and dims are oracle-checked, pinning schema,
@@ -2931,12 +2933,9 @@ def q_media_features(
             F.lit(-1.0).alias("px_max"),
         ),
     }
-    sel = tuple(built) if only is None else tuple(only)
-    # round 14: the 15 parts' PLAN construction (pandas_udf pickling +
-    # py4j chatter; imghash collects its banded pairs eagerly) runs on
-    # the shared leg pool instead of serially — union order unchanged,
-    # so rows and schema are identical.
-    return _concurrent_union([built[p] for p in sel])
+    # the 15 parts' plan construction (pandas_udf pickling, py4j
+    # chatter; imghash collects its banded pairs eagerly) overlaps
+    return _run_legs("media_features", built, only)
 
 
 def _oracle_media_features() -> str:
@@ -3573,24 +3572,6 @@ FROM final
 """
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF block: IVF-Flat ANN search + the deterministic one-step
-    k-means centroid build that feeds IVF lists (gated in r05)."""
-    ivf = q_ivf_flat_leg(spark, sf_dir).select(
-        F.lit("ivf").alias("part"),
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        F.col("rank").cast("bigint").alias("v_long"),
-    )
-    km = q_kmeans_leg(spark, sf_dir).select(
-        F.lit("kmeans").alias("part"),
-        F.col("cid").alias("id_a"),
-        F.col("dim").cast("bigint").alias("id_b"),
-        F.col("comp_scaled").alias("v_long"),
-    )
-    return ivf.unionByName(km)
-
-
 def _oracle_ivf_topk() -> str:
     def nrm(e: str) -> str:
         return (
@@ -4069,13 +4050,6 @@ def q_bigbloom_file_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bigbloom_file_probe() -> str:
-    return (
-        "SELECT CAST(count(*) AS BIGINT) AS n_bb_members FROM customer "
-        "WHERE c_custkey IN (SELECT o_custkey FROM orders)"
-    )
-
-
 def q_streaming_windowed_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly DQ pass/fail counts computed by an ACTUAL Structured
     Streaming query (file source → windowed_rule_stats → memory sink,
@@ -4187,19 +4161,6 @@ FROM customer c
 """
 
 
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition ratios (dup-word / dup-word-char /
-    dup-line fractions) per document — pure codegen'd Column exprs
-    (quality_spark/llm/repetition.py)."""
-    from quality_spark.llm.repetition import with_repetition_stats
-
-    docs = _read(spark, sf_dir, "documents")
-    return with_repetition_stats(docs, "text").select(
-        "doc_id", "word_count", "dup_word_fraction",
-        "dup_word_char_fraction", "dup_line_fraction",
-    )
-
-
 def _oracle_repetition_stats() -> str:
     from quality_spark.llm.repetition import repetition_sqls
 
@@ -4207,16 +4168,6 @@ def _oracle_repetition_stats() -> str:
         f"{sql} AS {name}" for name, sql in repetition_sqls("text", "duckdb").items()
     )
     return f"SELECT doc_id, {cols} FROM documents"
-
-
-def q_top_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most-frequent 2-gram per document + character coverage (the
-    Gopher top-n-gram filter signal) — two-stage argmax aggregation,
-    no window sort."""
-    from quality_spark.llm.repetition import top_ngram_coverage
-
-    docs = _read(spark, sf_dir, "documents")
-    return top_ngram_coverage(docs, n=2)
 
 
 def _oracle_top_ngram() -> str:
@@ -4247,21 +4198,6 @@ _PII_AUGMENT_DUCK = (
     " || ' from 10.' || CAST(doc_id % 200 AS VARCHAR)"
     " || '.' || CAST((doc_id * 7) % 256 AS VARCHAR) || '.25'"
 )
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub: per-doc match counts + redacted text. The corpus has
-    no real PII, so both engines synthesize identical addresses/phones/
-    IPs from doc_id over the real text — the regexes then run on real
-    data (quality_spark/llm/pii.py; patterns in the Java∩RE2 subset)."""
-    from quality_spark.llm.pii import redact_pii, with_pii_stats
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", _pii_augmented_text_spark().alias("text")
-    )
-    return redact_pii(with_pii_stats(docs, "text"), "text", out="redacted").select(
-        "doc_id", "email_count", "ipv4_count", "phone_count", "pii_total", "redacted"
-    )
 
 
 def _oracle_pii_redact() -> str:
@@ -4366,48 +4302,6 @@ FROM lineitem WHERE l_orderkey < 400
 """
 
 
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining chunking: overlapping 32-token windows per document
-    — pure projection + explode, no shuffle
-    (quality_spark/llm/packing.py)."""
-    from quality_spark.llm.packing import chunk_documents
-
-    docs = _read(spark, sf_dir, "documents")
-    return chunk_documents(docs, max_tokens=32, overlap=4)
-
-
-def _oracle_chunk_documents() -> str:
-    from quality_spark.llm.packing import chunk_documents_oracle_sql
-
-    return chunk_documents_oracle_sql(32, 4)
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequential-fill sequence packing into 2048-token bins, sharded
-    16 ways (per-shard windows — no global sort;
-    quality_spark/llm/packing.py)."""
-    from quality_spark.llm.dedup import tokens_sql
-    from quality_spark.llm.packing import pack_sequences
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(f"size({tokens_sql('text', 'spark')})").cast("int").alias("n_tokens"),
-    )
-    return pack_sequences(docs, budget=2048, n_shards=16)
-
-
-def _oracle_pack_sequences() -> str:
-    from quality_spark.llm.packing import pack_sequences_oracle_sql
-
-    from quality_spark.llm.dedup import tokens_sql
-
-    base = (
-        f"SELECT doc_id, CAST(len({tokens_sql('text', 'duckdb')}) AS INT) "
-        "AS n_tokens FROM documents"
-    )
-    return pack_sequences_oracle_sql(2048, 16, table_sql=base)
-
-
 def q_jsonl_round_trip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL corpus I/O (quality_spark/sources/jsonl.py): documents
     write to gzipped JSONL shards and read back schema-first; the
@@ -4495,75 +4389,73 @@ def q_streaming_ingest(
     all three store modes, fresh stores per shared run, 2 micro-batch
     cross-batch semantics intact) runs inside the shared concurrent
     stream window (_shared_streams), alongside compaction."""
-    do_first = only is None or "first_seen" in only
-    do_store = only is None or "store" in only
-    legs = []
-    if do_first:
-        legs.append(
-            q_streaming_first_seen(spark, sf_dir).select(
-                F.lit("first_seen").alias("part"),
-                F.col("emitted"),
-                F.col("distinct_users").alias("distinct_keys"),
-                F.lit(-1).cast("bigint").alias("key_user_sum"),
-            )
+    def b_first():
+        return q_streaming_first_seen(spark, sf_dir).select(
+            F.lit("first_seen").alias("part"),
+            F.col("emitted"),
+            F.col("distinct_users").alias("distinct_keys"),
+            F.lit(-1).cast("bigint").alias("key_user_sum"),
         )
-    if not do_store:
-        return legs[0]
 
-    shared = _shared_streams(spark, sf_dir)
-    root = shared["store_root"]
-    for tag in ("store_hash", "store_exact", "store_bucketed"):
-        out = spark.read.parquet(f"{root}/{tag}/sink")
+    def b_store():
+        shared = _shared_streams(spark, sf_dir)
+        root = shared["store_root"]
+        legs = []
+        for tag in ("store_hash", "store_exact", "store_bucketed"):
+            out = spark.read.parquet(f"{root}/{tag}/sink")
+            legs.append(
+                out.groupBy().agg(
+                    F.lit(tag).alias("part"),
+                    F.count(F.lit(1)).cast("bigint").alias("emitted"),
+                    F.count_distinct("user_id", "event_type")
+                    .cast("bigint").alias("distinct_keys"),
+                    F.sum("user_id").cast("bigint").alias("key_user_sum"),
+                ).select("part", "emitted", "distinct_keys", "key_user_sum")
+            )
+        # compaction part (compacted inside the shared run): the folded
+        # store holds exactly one hash key per distinct (user_id,
+        # event_type) — count AND distinct, so a lost or duplicated key
+        # fails either way
+        store_df = spark.table(shared["btable"])
         legs.append(
-            out.groupBy().agg(
-                F.lit(tag).alias("part"),
+            store_df.groupBy().agg(
+                F.lit("store_compact").alias("part"),
                 F.count(F.lit(1)).cast("bigint").alias("emitted"),
-                F.count_distinct("user_id", "event_type")
+                F.count_distinct("__qs_key_hash")
                 .cast("bigint").alias("distinct_keys"),
-                F.sum("user_id").cast("bigint").alias("key_user_sum"),
+                F.lit(-1).cast("bigint").alias("key_user_sum"),
             ).select("part", "emitted", "distinct_keys", "key_user_sum")
         )
-    # compaction leg (compacted inside the shared run): the folded
-    # store holds exactly one hash key per distinct (user_id,
-    # event_type) — count AND distinct, so a lost or duplicated key
-    # fails either way
-    store_df = spark.table(shared["btable"])
-    legs.append(
-        store_df.groupBy().agg(
-            F.lit("store_compact").alias("part"),
-            F.count(F.lit(1)).cast("bigint").alias("emitted"),
-            F.count_distinct("__qs_key_hash")
-            .cast("bigint").alias("distinct_keys"),
-            F.lit(-1).cast("bigint").alias("key_user_sum"),
-        ).select("part", "emitted", "distinct_keys", "key_user_sum")
-    )
-    # 'doctor_keystore' (round 13, VERDICT r12 next #2/#4 closure):
-    # the key-store health check runs on the gate's own
-    # just-compacted bucketed store — emitted = finding count,
-    # distinct_keys = ok; the oracle pins the healthy expectation
-    # (0 findings, ok), so a leftover stage/old dir, stray sentinel,
-    # or orphaned __compacting table in the staged-swap protocol
-    # fails the gate. With this, all SIX persisted-artifact checks
-    # are driver-gated (the other five ride embedding_reduce).
-    from quality_spark.doctor import check_key_store
+        # 'doctor_keystore': the key-store health check runs on the
+        # gate's own just-compacted bucketed store — emitted = finding
+        # count, distinct_keys = ok; the oracle pins the healthy
+        # expectation (0 findings, ok), so a leftover stage/old dir,
+        # stray sentinel, or orphaned __compacting table in the
+        # staged-swap protocol fails the gate. With this, all SIX
+        # persisted-artifact checks are oracle-gated (the other five
+        # ride embedding_reduce).
+        from quality_spark.doctor import check_key_store
 
-    rep = check_key_store(spark, shared["btable"])
-    legs.append(
-        spark.createDataFrame(
-            [(
-                "doctor_keystore",
-                len(rep["findings"]),
-                1 if rep["ok"] else 0,
-                -1,
-            )],
-            "part string, emitted long, distinct_keys long, "
-            "key_user_sum long",
+        rep = check_key_store(spark, shared["btable"])
+        legs.append(
+            spark.createDataFrame(
+                [(
+                    "doctor_keystore",
+                    len(rep["findings"]),
+                    1 if rep["ok"] else 0,
+                    -1,
+                )],
+                "part string, emitted long, distinct_keys long, "
+                "key_user_sum long",
+            )
         )
-    )
-    res = legs[0]
-    for leg in legs[1:]:
-        res = res.unionByName(leg)
-    return res
+        return legs
+
+    # both legs read the one shared stream run (_shared_streams is
+    # memoized behind its lock), so they start no stream of their own
+    return _run_legs("streaming_first_seen", {
+        "first_seen": b_first, "store": b_store,
+    }, only)
 
 
 def _oracle_streaming_ingest() -> str:
@@ -4593,27 +4485,10 @@ SELECT 'doctor_keystore', CAST(0 AS BIGINT), CAST(1 AS BIGINT),
 """
 
 
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary top-100: explode staged tokens → one partial-
-    aggregated groupBy (Zipf heavy hitters combine map-side) → TakeOrdered
-    top-k, no global sort (quality_spark/llm/vocab.py)."""
-    from quality_spark.llm.vocab import vocab_topk
-
-    return vocab_topk(_read(spark, sf_dir, "documents"), k=100)
-
-
 def _oracle_vocab_topk() -> str:
     from quality_spark.llm.vocab import vocab_topk_oracle_sql
 
     return vocab_topk_oracle_sql(100)
-
-
-def q_vocab_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document frequency per token (IDF weighting input) —
-    per-doc-distinct explode then one count shuffle."""
-    from quality_spark.llm.vocab import vocab_doc_frequency
-
-    return vocab_doc_frequency(_read(spark, sf_dir, "documents"))
 
 
 def _oracle_vocab_doc_frequency() -> str:
@@ -4643,22 +4518,6 @@ def _url_augmented_text_spark() -> "F.Column":
     )
 
 
-def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Web-corpus URL curation (quality_spark/llm/urls.py): URL counts,
-    first domain, blocked-domain flag. The corpus has no URLs, so both
-    engines append identical synthesized URLs to the real text (same
-    convention as pii_redact)."""
-    from quality_spark.llm.urls import flag_blocked_domains, with_url_stats
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", _url_augmented_text_spark().alias("text")
-    )
-    out = flag_blocked_domains(
-        with_url_stats(docs), ["blocked.net"], text_col="text"
-    )
-    return out.select("doc_id", "url_count", "first_domain", "blocked")
-
-
 def _oracle_url_filter() -> str:
     from quality_spark.llm.urls import blocked_oracle_expr, url_stats_oracle_exprs
 
@@ -4682,7 +4541,9 @@ _BM25_QUERIES = [
 ]
 
 
-def q_tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_tfidf_scores(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Lexical scoring block: smoothed TF-IDF per (doc, token)
     (quality_spark/llm/vocab.py) + Okapi BM25 retrieval scores for a
     fixed query set (quality_spark/llm/retrieval.py, round 8), tagged
@@ -4745,7 +4606,7 @@ def q_tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("bigint").alias("n2"),
         F.col("score").alias("v_double"),
     )
-        return bm25, topk
+        return [bm25, topk]
 
     def b_fused():
         return q_rrf_leg(spark, sf_dir).select(
@@ -4772,25 +4633,12 @@ def q_tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("bigint").alias("n2"),
         F.col("score").alias("v_double"),
     )
-    # round 13 (optimization): the four independent units build
-    # concurrently (index staging, scoring checkpoints); union order
-    # unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=_pool_width(4)) as ex:
-        f_tfidf = ex.submit(b_tfidf)
-        f_bm25 = ex.submit(b_bm25_unit)
-        f_fused = ex.submit(b_fused)
-        f_idx = ex.submit(b_idx)
-        tfidf = f_tfidf.result()
-        bm25, topk = f_bm25.result()
-        fused, idx = f_fused.result(), f_idx.result()
-    return (
-        tfidf.unionByName(bm25)
-        .unionByName(topk)
-        .unionByName(fused)
-        .unionByName(idx)
-    )
+    # the 'bm25' leg is one unit: its scoring checkpoint feeds both
+    # the 'bm25' and the 'bm25_topk' parts
+    return _run_legs("tfidf_scores", {
+        "tfidf": b_tfidf, "bm25": b_bm25_unit, "rrf": b_fused,
+        "bm25_idx": b_idx,
+    }, only)
 
 
 def q_bm25_idx_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4828,29 +4676,6 @@ def q_tfidf_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quality_spark.llm.vocab import tfidf_scores
 
     return tfidf_scores(_read(spark, sf_dir, "documents"))
-
-
-def q_bm25_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 full-pairs scoring run (llm/retrieval.py:bm25_scores —
-    broadcast-prefiltered postings, df derived FROM the postings
-    aggregate, <=2 corpus scans plan-pinned)."""
-    from quality_spark.llm.retrieval import bm25_scores
-
-    return bm25_scores(
-        spark, _read(spark, sf_dir, "documents"), _BM25_QUERIES
-    )
-
-
-def q_bm25_topk_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase BM25 top-k with its OWN scoring run (the
-    composite shares one checkpointed scoring run across both bm25
-    parts; this leg times the standalone cost)."""
-    from quality_spark.llm.retrieval import bm25_topk
-
-    return bm25_topk(
-        spark, _read(spark, sf_dir, "documents"), _BM25_QUERIES, k=10,
-        salted=True,
-    )
 
 
 def q_rrf_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5849,14 +5674,14 @@ def q_budget_kept_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_sampling_splits(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Sampling block: hash train/test split + stratified per-language
     sample + weighted corpus mix (r03 gate queries hash_sample_split,
     stratified_sample, weighted_mix) + temperature resampling + the
     round-9 legs (heavy hitters, ES weighted sampling, token-budget
-    waterfilling — see the q_*_leg docstrings; each leg helper is
-    reused verbatim by query_legs for per-leg bench attribution),
-    labeled union. Sentinels (-1) stand in for not-applicable columns
+    waterfilling — see the q_*_leg docstrings), labeled union. Sentinels (-1) stand in for not-applicable columns
     — see packaging rules above."""
     null_n = F.lit(-1).cast("bigint").alias("n")
     def b_hash_split():
@@ -5923,13 +5748,14 @@ def q_sampling_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
         return q_percentile_leg(spark, sf_dir).select(
         F.lit("pctile").alias("part"), "doc_id", "lang", F.col("n")
     )
-    # round 13: legs build concurrently (_concurrent_union) — the
-    # heavy-hitter and budget legs run eager candidate/plan passes
+    # the heavy-hitter and budget legs run eager candidate/plan passes
     # during construction
-    return _concurrent_union(
-        [b_hash_split, b_strat, b_mix, b_temp, b_cap, b_hh, b_hhg,
-         b_ws, b_wsg, b_bplan, b_bkept, b_topf, b_pct]
-    )
+    return _run_legs("sampling_splits", {
+        "hash_split": b_hash_split, "stratified": b_strat, "mix": b_mix,
+        "temperature": b_temp, "cap": b_cap, "hh": b_hh, "hhg": b_hhg,
+        "wsample": b_ws, "wsample_g": b_wsg, "budget_plan": b_bplan,
+        "budget_kept": b_bkept, "topfrac": b_topf, "pctile": b_pct,
+    }, only)
 
 
 def q_percentile_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6062,7 +5888,7 @@ def _ktf_oracle() -> str:
 _SUBSTR_SPAN = " shared span class {cls} alpha beta gamma delta epsilon zeta eta"
 
 
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_dedup_exact(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Exact-dedup block: duplicate groups + keep-best survivor choice
     (r03 gate queries dedup_exact_groups, dedup_keep_best).
 
@@ -6102,13 +5928,14 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dist").cast("bigint").alias("n"),
         F.lit(-1).cast("bigint").alias("keeper"),
     )
-    # round 13: legs build concurrently (_concurrent_union)
-    return _concurrent_union([b_groups, b_best, b_substr, b_fuzzy])
+    return _run_legs("dedup_exact", {
+        "groups": b_groups, "keep_best": b_best, "substr": b_substr,
+        "fuzzy": b_fuzzy,
+    }, only)
 
 
 def q_substr_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 'substr' part's operator run (see q_dedup_exact docstring)
-    — shared with query_legs for per-leg bench attribution."""
+    """The 'substr' part's operator run (see q_dedup_exact docstring)."""
     from quality_spark.llm.dedup import remove_dup_substrings
 
     built = (
@@ -6251,7 +6078,9 @@ FROM (SELECT * FROM vs_index UNION ALL SELECT * FROM within)
 """
 
 
-def q_minhash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_minhash_pipeline(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """MinHash block: the 16-perm signatures AND the banded-LSH
     near-dup pairs they feed (r03 gate queries minhash_signatures,
     minhash_lsh_near_dup) AND the incremental-ingest index probe
@@ -6298,9 +6127,12 @@ def q_minhash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("bigint").alias("v_long"),
         F.col("jaccard").alias("v_double"),
     )
-    # round 13: legs build concurrently (_concurrent_union) — the
-    # ingest leg stages the persisted minhash index during construction
-    return _concurrent_union([b_sigs, b_pairs, b_ingest, b_jacc, b_jpre])
+    # the ingest leg stages the persisted minhash index during
+    # construction
+    return _run_legs("minhash_pipeline", {
+        "sig": b_sigs, "pair": b_pairs, "ingest": b_ingest,
+        "jacc": b_jacc, "jpre": b_jpre,
+    }, only)
 
 
 def _oracle_minhash_pipeline() -> str:
@@ -6323,22 +6155,25 @@ FROM ({_oracle_jaccard_prefix()})
 """
 
 
-def q_simhash_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_simhash_pipeline(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """SimHash block: 32-bit signatures + hamming<=3 near-dup pairs via
     pigeonhole chunk banding (r03 gate queries simhash,
     simhash_near_dup)."""
-    sigs = q_simhash(spark, sf_dir).select(
-        F.lit("sig").alias("part"),
-        F.col("doc_id").alias("id_a"),
-        F.lit(-1).cast("bigint").alias("id_b"),
-        F.col("simhash").cast("bigint").alias("v_long"),
-    )
-    pairs = q_simhash_near_dup(spark, sf_dir).select(
-        F.lit("pair").alias("part"),
-        "id_a", "id_b",
-        F.col("hamming").cast("bigint").alias("v_long"),
-    )
-    return sigs.unionByName(pairs)
+    return _run_legs("simhash_pipeline", {
+        "sig": lambda: q_simhash(spark, sf_dir).select(
+            F.lit("sig").alias("part"),
+            F.col("doc_id").alias("id_a"),
+            F.lit(-1).cast("bigint").alias("id_b"),
+            F.col("simhash").cast("bigint").alias("v_long"),
+        ),
+        "pair": lambda: q_simhash_near_dup(spark, sf_dir).select(
+            F.lit("pair").alias("part"),
+            "id_a", "id_b",
+            F.col("hamming").cast("bigint").alias("v_long"),
+        ),
+    }, only)
 
 
 def _oracle_simhash_pipeline() -> str:
@@ -6350,27 +6185,6 @@ UNION ALL
 SELECT 'pair', id_a, id_b, CAST(hamming AS BIGINT)
 FROM ({_oracle_simhash_near_dup()})
 """
-
-
-def q_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding ANN block: brute-force cosine top-5 (exact baseline)
-    + brute-force near-dup pairs on the 1-in-10 subset (r03 gate
-    queries ann_cosine_topk, embedding_near_dup). The LSH and IVF
-    scale paths keep their own gate queries."""
-    topk = q_ann_cosine_topk(spark, sf_dir).select(
-        F.lit("topk").alias("part"),
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        F.col("rank").cast("int").alias("rank"),
-    )
-    brute = q_embedding_near_dup(spark, sf_dir).select(
-        F.lit("brute").alias("part"),
-        "id_a", "id_b",
-        F.lit(-1).cast("int").alias("rank"),
-    )
-    l2 = q_l2_topk_leg(spark, sf_dir)
-    quant = q_quant_topk_leg(spark, sf_dir)
-    return topk.unionByName(brute).unionByName(l2).unionByName(quant)
 
 
 def q_l2_topk_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6550,7 +6364,9 @@ FROM ({_oracle_id_codecs()})
 """
 
 
-def q_rules_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_rules_roundtrip(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Rule-serialization block: rules-as-data round trip + meta-ruleset
     expansion + latest-<= version resolution (r03 gate queries
     rules_from_df, meta_ruleset, versioned_rules)."""
@@ -6588,10 +6404,10 @@ def q_rules_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ruleExpr").alias("expr"),
         )
 
-    # round 13: the three serialization parts each run driver-side
-    # round-trip work during construction — build them concurrently
-    # (_concurrent_union; union order unchanged)
-    return _concurrent_union([b_fd, b_meta, b_ver])
+    # each part runs eager round-trip work during construction
+    return _run_legs("rules_roundtrip", {
+        "from_df": b_fd, "meta": b_meta, "versioned": b_ver,
+    }, only)
 
 
 def _oracle_rules_roundtrip() -> str:
@@ -6699,18 +6515,15 @@ FROM documents WHERE doc_id < 50
 """
 
 
-def q_skew_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_skew_ops(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Skew-mitigation block: salted two-stage aggregation + replicated
     skew join (r03 gate queries salted_agg_orders, skew_join_lineitem).
 
-    Round 13 (optimization): the seven legs build CONCURRENTLY — the
-    expr_runner_agg/stats_suite pattern. pagerank and hits each run
-    eager fixed-iteration checkpoint loops and the rel/snapdiff legs
-    collect metadata during construction, so the serial build paid
-    ~13 s of independent driver-blocking jobs end to end at sf0.1;
-    each leg is a pure operator over its own frames (no shared session
-    state), so the union is bit-identical to the serial build. The two
-    graph legs additionally share ONE prepare_graph materialization of
+    The legs build concurrently (``_run_legs``): pagerank and hits
+    each run eager fixed-iteration checkpoint loops and the
+    rel/snapdiff legs collect metadata during construction, so a
+    serial build paid ~13 s of independent blocking jobs at
+    sf0.1. The two graph legs share ONE prepare_graph materialization of
     the customer→supplier edge set (the identical deduped frame both
     would build; one distinct + one node scan instead of two of each),
     released once both legs are constructed."""
@@ -6791,18 +6604,15 @@ def q_skew_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("authority").alias("v2"),
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    builders = [b_salted, b_skew, b_rel, b_pr, b_snap, b_js, b_ha]
-    with ThreadPoolExecutor(max_workers=_pool_width(len(builders))) as ex:
-        frames = list(ex.map(lambda b: b(), builders))
+    out = _run_legs("skew_ops", {
+        "salted_agg": b_salted, "skew_join": b_skew, "rel": b_rel,
+        "pagerank": b_pr, "snapdiff": b_snap, "joinstats": b_js,
+        "hits": b_ha,
+    }, only)
     if "p" in prep_box:
         # both graph legs' results depend only on their final iteration
         # checkpoints — the shared graph blocks can go now
         release_graph(prep_box["p"])
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
     return out
 
 
@@ -7206,7 +7016,9 @@ FROM ({rows}) WHERE o_orderkey % 50 = 0
 """
 
 
-def q_temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_temporal_joins(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Temporal-join block: as-of join + banded numeric range join
     (r03 gate queries asof_click_view, range_join_events) + banded
     interval-OVERLAP join (round 8,
@@ -7242,8 +7054,9 @@ def q_temporal_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     def b_scd():
         return q_scd2_leg(spark, sf_dir)
 
-    # round 13: legs build concurrently (_concurrent_union)
-    return _concurrent_union([b_asof, b_rng, b_ivl, b_scd])
+    return _run_legs("temporal_joins", {
+        "asof": b_asof, "range": b_rng, "interval": b_ivl, "scd2": b_scd,
+    }, only)
 
 
 def q_scd2_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7542,59 +7355,71 @@ FROM documents WHERE n_chars % 7 = 0
 """
 
 
-def q_corpus_io(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_corpus_io(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Corpus-I/O block: JSONL round trip + Hive-partitioned store
     round trip with pruned readback + bucketed-table store with
     co-located join (r03 gate queries jsonl_round_trip,
     partitioned_corpus; bucketed store new in r04) + Z-order clustered
     write/readback (gated in r05) + ORC round trip with scan-level
-    filter pushdown (round 7)."""
+    filter pushdown (round 7). Each leg stages its own artifact (its
+    own ``_staged`` kind and catalog table names)."""
     nb = F.lit(-1).cast("bigint")
-    jsonl = q_jsonl_round_trip(spark, sf_dir).select(
-        F.lit("jsonl").alias("part"),
-        "doc_id",
-        F.col("row_md5").alias("s1"),
-        F.lit("").alias("s2"),
-        nb.alias("v1"), nb.alias("v2"), nb.alias("v3"),
-    )
-    store = q_partitioned_corpus(spark, sf_dir).select(
-        F.lit("store").alias("part"),
-        F.lit(-1).cast("bigint").alias("doc_id"),
-        F.col("lang").alias("s1"),
-        F.col("source").alias("s2"),
-        F.col("n_docs").alias("v1"),
-        F.col("sum_chars").alias("v2"),
-        F.col("text_hash_sum").alias("v3"),
-    )
-    bucket = q_bucketed_corpus(spark, sf_dir).select(
-        F.lit("bucket").alias("part"),
-        F.lit(-1).cast("bigint").alias("doc_id"),
-        F.col("lang").alias("s1"),
-        F.lit("").alias("s2"),
-        F.col("n_docs").alias("v1"),
-        F.col("sum_chars").alias("v2"),
-        nb.alias("v3"),
-    )
-    zorder = q_zorder_corpus(spark, sf_dir).select(
-        F.lit("zorder").alias("part"),
-        F.lit(-1).cast("bigint").alias("doc_id"),
-        F.col("leg").alias("s1"),
-        F.lit("").alias("s2"),
-        F.col("n_rows").alias("v1"),
-        F.col("key_sum").alias("v2"),
-        nb.alias("v3"),
-    )
-    orc = q_orc_corpus(spark, sf_dir).select(
-        F.lit("orc").alias("part"),
-        "doc_id",
-        F.col("row_md5").alias("s1"),
-        F.lit("").alias("s2"),
-        nb.alias("v1"), nb.alias("v2"), nb.alias("v3"),
-    )
-    return (
-        jsonl.unionByName(store).unionByName(bucket)
-        .unionByName(zorder).unionByName(orc)
-    )
+
+    def b_jsonl():
+        return q_jsonl_round_trip(spark, sf_dir).select(
+            F.lit("jsonl").alias("part"),
+            "doc_id",
+            F.col("row_md5").alias("s1"),
+            F.lit("").alias("s2"),
+            nb.alias("v1"), nb.alias("v2"), nb.alias("v3"),
+        )
+
+    def b_store():
+        return q_partitioned_corpus(spark, sf_dir).select(
+            F.lit("store").alias("part"),
+            F.lit(-1).cast("bigint").alias("doc_id"),
+            F.col("lang").alias("s1"),
+            F.col("source").alias("s2"),
+            F.col("n_docs").alias("v1"),
+            F.col("sum_chars").alias("v2"),
+            F.col("text_hash_sum").alias("v3"),
+        )
+
+    def b_bucket():
+        return q_bucketed_corpus(spark, sf_dir).select(
+            F.lit("bucket").alias("part"),
+            F.lit(-1).cast("bigint").alias("doc_id"),
+            F.col("lang").alias("s1"),
+            F.lit("").alias("s2"),
+            F.col("n_docs").alias("v1"),
+            F.col("sum_chars").alias("v2"),
+            nb.alias("v3"),
+        )
+
+    def b_zorder():
+        return q_zorder_corpus(spark, sf_dir).select(
+            F.lit("zorder").alias("part"),
+            F.lit(-1).cast("bigint").alias("doc_id"),
+            F.col("leg").alias("s1"),
+            F.lit("").alias("s2"),
+            F.col("n_rows").alias("v1"),
+            F.col("key_sum").alias("v2"),
+            nb.alias("v3"),
+        )
+
+    def b_orc():
+        return q_orc_corpus(spark, sf_dir).select(
+            F.lit("orc").alias("part"),
+            "doc_id",
+            F.col("row_md5").alias("s1"),
+            F.lit("").alias("s2"),
+            nb.alias("v1"), nb.alias("v2"), nb.alias("v3"),
+        )
+
+    return _run_legs("corpus_io", {
+        "jsonl": b_jsonl, "partitioned": b_store, "bucketed": b_bucket,
+        "zorder": b_zorder, "orc": b_orc,
+    }, only)
 
 
 def _oracle_corpus_io() -> str:
@@ -7622,31 +7447,35 @@ FROM ({_oracle_orc_corpus()})
 """
 
 
-def q_bloom_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_bloom_suite(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Bloom block: DataFrame bloom semi-join + small_bloom/big_bloom
     SQL aggregates + big-bloom FILE sink/readback (r03 gate queries
     bloom_semi_filter, bloom_sql_agg, bigbloom_file_probe). The three
     1-row leg results are tagged, unioned, and collected in ONE job
     (round 5 — three sequential .head()s paid a job-submission round
     each; a crossJoin of 1-row local relations was a measured 12 s
-    BroadcastNestedLoopJoin stall), then re-emitted as one row."""
+    BroadcastNestedLoopJoin stall), then re-emitted as one row. With
+    ``only``, the tagged rows of the selected legs are returned as
+    they are. Each leg registers its blooms under its own names."""
     nb = F.lit(-1).cast("bigint")
-    legs = (
-        q_bloom_semi_filter(spark, sf_dir).select(
+    legs = _run_legs("bloom_suite", {
+        "semi": lambda: q_bloom_semi_filter(spark, sf_dir).select(
             F.lit("semi").alias("part"),
             F.col("n_customers_with_orders").alias("v1"), nb.alias("v2"),
-        )
-        .unionByName(q_bloom_sql_agg(spark, sf_dir).select(
+        ),
+        "sql_agg": lambda: q_bloom_sql_agg(spark, sf_dir).select(
             F.lit("agg").alias("part"),
-            F.col("small_members").alias("v1"), F.col("big_members").alias("v2"),
-        ))
-        .unionByName(q_bigbloom_file_probe(spark, sf_dir).select(
+            F.col("small_members").alias("v1"),
+            F.col("big_members").alias("v2"),
+        ),
+        "bigfile": lambda: q_bigbloom_file_probe(spark, sf_dir).select(
             F.lit("file").alias("part"),
             F.col("n_bb_members").alias("v1"), nb.alias("v2"),
-        ))
-    )
-    # ONE job for all three probe legs (three sequential .head()s paid
-    # a job-submission round per leg); rows matched by tag, not order
+        ),
+    }, only)
+    if only is not None:
+        return legs
+    # rows matched by tag, not order
     by = {r["part"]: r for r in legs.collect()}
     a, s = by["semi"]["v1"], by["agg"]["v1"]
     b, c = by["agg"]["v2"], by["file"]["v1"]
@@ -7667,19 +7496,21 @@ def _oracle_bloom_suite() -> str:
     )
 
 
-def q_windowed_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_windowed_dq(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Windowed-DQ block: the batch hourly pass/fail rollup AND the
     same suite executed as a real Structured Streaming query
     (availableNow file stream -> memory sink) — both must match the
     one deterministic oracle (r03 gate queries events_windowed_dq,
     streaming_windowed_dq)."""
-    batch = q_events_windowed_dq(spark, sf_dir).select(
-        F.lit("batch").alias("part"), "hour", "rows", "passed", "failed"
-    )
-    stream = q_streaming_windowed_dq(spark, sf_dir).select(
-        F.lit("stream").alias("part"), "hour", "rows", "passed", "failed"
-    )
-    return batch.unionByName(stream)
+    cols = ("hour", "rows", "passed", "failed")
+    return _run_legs("windowed_dq", {
+        "batch": lambda: q_events_windowed_dq(spark, sf_dir).select(
+            F.lit("batch").alias("part"), *cols
+        ),
+        "stream": lambda: q_streaming_windowed_dq(spark, sf_dir).select(
+            F.lit("stream").alias("part"), *cols
+        ),
+    }, only)
 
 
 def _oracle_windowed_dq() -> str:
@@ -8312,7 +8143,9 @@ def q_clf_multi_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{root}/w")
 
 
-def q_doc_ingest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_doc_ingest_suite(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Ingest/quality block (round 7): CSV quarantine round trip +
     HTML→text extraction + hashed-linear classifier margins + zlib
     compression invariants + trained-classifier weights (round 10,
@@ -8357,12 +8190,12 @@ def q_doc_ingest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("class").alias("s1"),
         F.col("w_nano").alias("v1"), nb.alias("v2"),
     )
-    # round 13: legs build concurrently (_concurrent_union) — the csv
-    # leg stages its quarantine round trip and the training legs run
-    # eager weight passes during construction
-    return _concurrent_union(
-        [b_csv, b_html, b_clf, b_z, b_trained, b_multi]
-    )
+    # the csv leg stages its quarantine round trip and the training
+    # legs run eager weight passes during construction
+    return _run_legs("doc_ingest_suite", {
+        "csv": b_csv, "html": b_html, "clf": b_clf, "zlib": b_z,
+        "clf_train": b_trained, "clf_multi": b_multi,
+    }, only)
 
 
 def _oracle_doc_ingest_suite() -> str:
@@ -8512,7 +8345,9 @@ FROM built b LEFT JOIN rebuilt r ON b.doc_id = r.doc_id
 """
 
 
-def q_text_curation2(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_text_curation2(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Second text-curation block (round 7; +dsir/knlm round 8):
     mojibake repair + BPE tokenize/train + add-k bigram-LM scoring +
     interpolated Kneser-Ney bigram scoring + cross-doc window
@@ -8593,12 +8428,12 @@ def q_text_curation2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sum_cont").cast("bigint").alias("v_long"),
         F.col("sum_fanout").cast("double").alias("v_double"),
     )
-    # round 13: legs build concurrently (see _concurrent_union) —
-    # several of them collect model state (BPE merges, LM counts, DSIR
+    # several legs collect model state (BPE merges, LM counts, DSIR
     # hash stats) eagerly during construction
-    return _concurrent_union(
-        [b_bpe, b_enc, b_lm, b_win, b_pdedup, b_dsir, b_knlm]
-    )
+    return _run_legs("text_curation2", {
+        "bpe": b_bpe, "enc": b_enc, "lm": b_lm, "win": b_win,
+        "pdedup": b_pdedup, "dsir": b_dsir, "knlm": b_knlm,
+    }, only)
 
 
 def _oracle_text_curation2() -> str:
@@ -8665,14 +8500,6 @@ def q_pq_encode_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     books, _ = _pq_books_qs()
     return pq_encode(_read(spark, sf_dir, "embeddings"), books, mode="arrow")
-
-
-def q_pq_adc_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ ADC query distances over the encoded corpus (round 8)."""
-    from quality_spark.llm.pq import pq_adc_scores
-
-    books, qs = _pq_books_qs()
-    return pq_adc_scores(q_pq_encode_leg(spark, sf_dir), books, qs)
 
 
 #: id anchor for the gate's IVF-PQ centroid pool: vec_id < 3200 with
@@ -8869,7 +8696,9 @@ def q_doctor_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embedding_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_embedding_reduce(
+    spark: SparkSession, sf_dir: str, only=None
+) -> DataFrame:
     """Embedding-reduction block (round 7; +PQ round 8; +IVF-PQ round
     9): SemDeDup semantic dedup (is_kept is implied by dup_of = -1, so
     only dup_of is carried) + JL random projection components +
@@ -8897,10 +8726,9 @@ def q_embedding_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("comp_scaled").alias("v1"),
         )
 
-    books, qs = _pq_books_qs()
-
     def b_pq_unit():
-        # one encode pass feeds BOTH the codes and the ADC legs
+        # one encode pass feeds BOTH the codes and the ADC parts
+        books, qs = _pq_books_qs()
         enc = q_pq_encode_leg(spark, sf_dir)
         codes = enc.select(
             F.lit("pq").alias("part"), "vec_id",
@@ -8916,7 +8744,7 @@ def q_embedding_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "v1"
             ),
         )
-        return codes, adc
+        return [codes, adc]
 
     def _ivfpq_parts(tag: str, residual: bool):
         top = q_ivfpq_leg(
@@ -8932,7 +8760,7 @@ def q_embedding_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("query_id").alias("k1"),
             F.expr("CAST(floor(adc * 1000000 + 0.5) AS BIGINT)").alias("v1"),
         )
-        return rank_leg, adc_leg
+        return [rank_leg, adc_leg]
 
     # 'ivfpq_rr' (round 9): the FAISS refine stage — top-20 ADC
     # candidates re-ranked by exact squared L2; rank + scaled l2sq
@@ -8987,36 +8815,20 @@ def q_embedding_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     def b_doctor():
         return q_doctor_leg(spark, sf_dir)
 
-    # round 13 (optimization): the ten independent units build
-    # concurrently (several collect centroids / stage stores eagerly
-    # during construction); union order is unchanged, and the shared
-    # staged stores are behind _staged's per-key locks.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=_pool_width(10)) as ex:
-        f_sem = ex.submit(b_sem)
-        f_proj = ex.submit(b_proj)
-        f_pq = ex.submit(b_pq_unit)
-        f_iv = ex.submit(_ivfpq_parts, "ivfpq", False)
-        f_ivr = ex.submit(_ivfpq_parts, "ivfpq_res", True)
-        f_rr = ex.submit(b_rr)
-        f_idx = ex.submit(b_idx)
-        f_app = ex.submit(b_app)
-        f_idx_rr = ex.submit(b_idx_rr)
-        f_doctor = ex.submit(b_doctor)
-        sem, proj = f_sem.result(), f_proj.result()
-        codes, adc = f_pq.result()
-        ivfpq_rank, ivfpq_adc = f_iv.result()
-        ivfpqr_rank, ivfpqr_adc = f_ivr.result()
-        rr, idx, app = f_rr.result(), f_idx.result(), f_app.result()
-        idx_rr, doctor = f_idx_rr.result(), f_doctor.result()
-    return (
-        sem.unionByName(proj).unionByName(codes).unionByName(adc)
-        .unionByName(ivfpq_rank).unionByName(ivfpq_adc)
-        .unionByName(ivfpqr_rank).unionByName(ivfpqr_adc)
-        .unionByName(rr).unionByName(idx).unionByName(app)
-        .unionByName(idx_rr).unionByName(doctor)
-    )
+    # several units collect centroids or stage stores eagerly during
+    # construction; the shared staged stores sit behind _staged's locks
+    return _run_legs("embedding_reduce", {
+        "sem": b_sem,
+        "proj": b_proj,
+        "pq": b_pq_unit,
+        "ivfpq": lambda: _ivfpq_parts("ivfpq", False),
+        "ivfpq_res": lambda: _ivfpq_parts("ivfpq_res", True),
+        "ivfpq_rr": b_rr,
+        "ivfpq_idx": b_idx,
+        "pq_append": b_app,
+        "ivfpq_idx_rr": b_idx_rr,
+        "doctor": b_doctor,
+    }, only)
 
 
 def _oracle_embedding_reduce() -> str:
@@ -9097,67 +8909,76 @@ FROM (VALUES (0, 0), (1, 0), (2, 0), (3, 1), (4, 0)) AS t(s, nf)
 """
 
 
-def q_event_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_event_suite(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Event-time block (round 7 merge): batch session_window +
     GROUPING SETS rollups (the r03 event_rollups block) + the REAL
     availableNow sessionized stream, tagged per part. All timestamps
     cast to timestamp_ntz so the legs union."""
-    roll = q_event_rollups(spark, sf_dir).select(
-        "part",
-        "key_id",
-        F.col("bucket_start").cast("timestamp_ntz").alias("bucket_start"),
-        F.col("bucket_end").cast("timestamp_ntz").alias("bucket_end"),
-        "n_events",
-        F.col("sum_value").alias("v_double"),
-        F.lit(-1).cast("bigint").alias("v_long"),
-    )
-    sess = q_streaming_sessions(spark, sf_dir).select(
-        F.lit("stream_session").alias("part"),
-        F.col("user_id").cast("bigint").alias("key_id"),
-        F.col("session_start").alias("bucket_start"),
-        F.col("session_end").alias("bucket_end"),
-        F.col("n_events").cast("bigint").alias("n_events"),
-        F.col("max_value").alias("v_double"),
-        F.col("first_event_id").alias("v_long"),
-    )
-    ts_t = dict(roll.dtypes)["bucket_start"]
-    coh = q_cohort_leg(spark, sf_dir).select(
-        F.lit("cohort").alias("part"),
-        F.lit(-1).cast("bigint").alias("key_id"),
-        F.col("cohort_start").cast(ts_t).alias("bucket_start"),
-        F.col("bucket_start").cast(ts_t).alias("bucket_end"),
-        F.col("n_users").alias("n_events"),
-        F.lit(-1.0).alias("v_double"),
-        F.lit(-1).cast("bigint").alias("v_long"),
-    )
-    fun = q_funnel_leg(spark, sf_dir).select(
-        F.concat(F.lit("funnel"), F.col("variant")).alias("part"),
-        F.col("step").cast("bigint").alias("key_id"),
-        F.lit(_EPOCH_TS).cast(ts_t).alias("bucket_start"),
-        F.lit(_EPOCH_TS).cast(ts_t).alias("bucket_end"),
-        F.col("n_users").alias("n_events"),
-        F.lit(-1.0).alias("v_double"),
-        F.lit(-1).cast("bigint").alias("v_long"),
-    )
-    anom = q_anomaly_leg(spark, sf_dir).select(
-        F.lit("anom").alias("part"),
-        # flag: 1 anomalous / 0 calm / -1 insufficient baseline
-        F.when(F.col("flag").isNull(), -1)
-        .otherwise(F.col("flag").cast("int"))
-        .cast("bigint")
-        .alias("key_id"),
-        F.col("bucket_start").cast(ts_t).alias("bucket_start"),
-        F.col("bucket_start").cast(ts_t).alias("bucket_end"),
-        F.col("n").alias("n_events"),
-        F.lit(-1.0).alias("v_double"),
-        F.lit(-1).cast("bigint").alias("v_long"),
-    )
-    return (
-        roll.unionByName(sess)
-        .unionByName(coh)
-        .unionByName(fun)
-        .unionByName(anom)
-    )
+    ts_t = "timestamp_ntz"
+
+    def b_roll():
+        return q_event_rollups(spark, sf_dir).select(
+            "part",
+            "key_id",
+            F.col("bucket_start").cast(ts_t).alias("bucket_start"),
+            F.col("bucket_end").cast(ts_t).alias("bucket_end"),
+            "n_events",
+            F.col("sum_value").alias("v_double"),
+            F.lit(-1).cast("bigint").alias("v_long"),
+        )
+
+    def b_sess():
+        return q_streaming_sessions(spark, sf_dir).select(
+            F.lit("stream_session").alias("part"),
+            F.col("user_id").cast("bigint").alias("key_id"),
+            F.col("session_start").alias("bucket_start"),
+            F.col("session_end").alias("bucket_end"),
+            F.col("n_events").cast("bigint").alias("n_events"),
+            F.col("max_value").alias("v_double"),
+            F.col("first_event_id").alias("v_long"),
+        )
+
+    def b_coh():
+        return q_cohort_leg(spark, sf_dir).select(
+            F.lit("cohort").alias("part"),
+            F.lit(-1).cast("bigint").alias("key_id"),
+            F.col("cohort_start").cast(ts_t).alias("bucket_start"),
+            F.col("bucket_start").cast(ts_t).alias("bucket_end"),
+            F.col("n_users").alias("n_events"),
+            F.lit(-1.0).alias("v_double"),
+            F.lit(-1).cast("bigint").alias("v_long"),
+        )
+
+    def b_fun():
+        return q_funnel_leg(spark, sf_dir).select(
+            F.concat(F.lit("funnel"), F.col("variant")).alias("part"),
+            F.col("step").cast("bigint").alias("key_id"),
+            F.lit(_EPOCH_TS).cast(ts_t).alias("bucket_start"),
+            F.lit(_EPOCH_TS).cast(ts_t).alias("bucket_end"),
+            F.col("n_users").alias("n_events"),
+            F.lit(-1.0).alias("v_double"),
+            F.lit(-1).cast("bigint").alias("v_long"),
+        )
+
+    def b_anom():
+        return q_anomaly_leg(spark, sf_dir).select(
+            F.lit("anom").alias("part"),
+            # flag: 1 anomalous / 0 calm / -1 insufficient baseline
+            F.when(F.col("flag").isNull(), -1)
+            .otherwise(F.col("flag").cast("int"))
+            .cast("bigint")
+            .alias("key_id"),
+            F.col("bucket_start").cast(ts_t).alias("bucket_start"),
+            F.col("bucket_start").cast(ts_t).alias("bucket_end"),
+            F.col("n").alias("n_events"),
+            F.lit(-1.0).alias("v_double"),
+            F.lit(-1).cast("bigint").alias("v_long"),
+        )
+
+    return _run_legs("event_suite", {
+        "rollups": b_roll, "stream_session": b_sess, "cohort": b_coh,
+        "funnel": b_fun, "anom": b_anom,
+    }, only)
 
 
 def q_anomaly_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9257,23 +9078,57 @@ SELECT 'anom',
 FROM ({_anom_oracle()})"""
 
 
-def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN block (round 7 merge): brute-force cosine/L2/quantized
-    top-k + brute near-dup pairs (the r03 embedding_ann block) + the
-    IVF-Flat scale path with its k-means centroid leg, tagged per
-    part."""
-    def b_ann():
-        return q_embedding_ann(spark, sf_dir).select(
-            "part", "id_a", "id_b",
+def q_ann_suite(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
+    """ANN block, tagged per part: brute-force cosine top-5 (the exact
+    baseline), brute near-dup pairs on the 1-in-10 subset, L2 and
+    int8-quantized top-3, then the IVF-Flat scale path and the
+    deterministic one-step k-means centroid build that feeds IVF lists
+    (the k-means leg collects its centroids eagerly)."""
+
+    def ranked(df: DataFrame) -> DataFrame:
+        return df.select(
+            "part", "id_a", "id_b", F.col("rank").cast("bigint").alias("v_long")
+        )
+
+    def b_topk():
+        return q_ann_cosine_topk(spark, sf_dir).select(
+            F.lit("topk").alias("part"),
+            F.col("query_id").alias("id_a"),
+            F.col("neighbor_id").alias("id_b"),
             F.col("rank").cast("bigint").alias("v_long"),
         )
 
-    def b_ivf():
-        return q_ivf_topk(spark, sf_dir)
+    def b_brute():
+        return q_embedding_near_dup(spark, sf_dir).select(
+            F.lit("brute").alias("part"),
+            "id_a", "id_b",
+            F.lit(-1).cast("bigint").alias("v_long"),
+        )
 
-    # round 13: the two sub-blocks build concurrently (the k-means/IVF
-    # side collects centroids eagerly during construction)
-    return _concurrent_union([b_ann, b_ivf])
+    def b_ivf():
+        return q_ivf_flat_leg(spark, sf_dir).select(
+            F.lit("ivf").alias("part"),
+            F.col("query_id").alias("id_a"),
+            F.col("neighbor_id").alias("id_b"),
+            F.col("rank").cast("bigint").alias("v_long"),
+        )
+
+    def b_kmeans():
+        return q_kmeans_leg(spark, sf_dir).select(
+            F.lit("kmeans").alias("part"),
+            F.col("cid").alias("id_a"),
+            F.col("dim").cast("bigint").alias("id_b"),
+            F.col("comp_scaled").alias("v_long"),
+        )
+
+    return _run_legs("ann_suite", {
+        "topk": b_topk,
+        "brute": b_brute,
+        "l2": lambda: ranked(q_l2_topk_leg(spark, sf_dir)),
+        "quant": lambda: ranked(q_quant_topk_leg(spark, sf_dir)),
+        "ivf": b_ivf,
+        "kmeans": b_kmeans,
+    }, only)
 
 
 def _oracle_ann_suite() -> str:
@@ -9285,20 +9140,21 @@ SELECT part, id_a, id_b, v_long FROM ({_oracle_ivf_block()})
 """
 
 
-def q_lambda_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_lambda_suite(spark: SparkSession, sf_dir: str, only=None) -> DataFrame:
     """Lambda block (round 7 merge): the registered-margin rule
     aggregation + the scalar-subquery-in-lambda decorrelation gate."""
-    margin = q_lambda_margin(spark, sf_dir).select(
-        F.lit("margin").alias("part"),
-        F.col("l_returnflag").alias("k"),
-        F.col("n_margin_over_1000").alias("v_long"),
-    )
-    subq = q_lambda_subquery(spark, sf_dir).select(
-        F.lit("subq").alias("part"),
-        F.col("c_custkey").cast("string").alias("k"),
-        F.col("frequent_buyer").cast("bigint").alias("v_long"),
-    )
-    return margin.unionByName(subq)
+    return _run_legs("lambda_suite", {
+        "margin": lambda: q_lambda_margin(spark, sf_dir).select(
+            F.lit("margin").alias("part"),
+            F.col("l_returnflag").alias("k"),
+            F.col("n_margin_over_1000").alias("v_long"),
+        ),
+        "subq": lambda: q_lambda_subquery(spark, sf_dir).select(
+            F.lit("subq").alias("part"),
+            F.col("c_custkey").cast("string").alias("k"),
+            F.col("frequent_buyer").cast("bigint").alias("v_long"),
+        ),
+    }, only)
 
 
 def _oracle_lambda_suite() -> str:
@@ -9318,10 +9174,6 @@ _CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 _ENTROPY_LI = ["l_returnflag", "l_linestatus"]
 _ENTROPY_DOC = ["lang", "source"]
 _LDIV_QI = ["o_orderstatus", "o_orderpriority"]
-_STATS_PARTS = (
-    "corr", "assoc", "entropy", "ldiv", "colloc", "reg", "g3", "csample",
-    "mad", "benford", "markov", "vocab", "gcorr", "nullpat",
-)
 _GCORR_COLS = ["l_quantity", "l_extendedprice", "l_discount"]
 _NULLPAT_COLS = [
     "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority",
@@ -9493,7 +9345,7 @@ def q_nullpat_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stats_suite(
-    spark: SparkSession, sf_dir: str, only: tuple = _STATS_PARTS
+    spark: SparkSession, sf_dir: str, only=None
 ) -> DataFrame:
     """Cross-column statistics block (round 10): exact Pearson
     correlations ('corr') + per-group matrices ('gcorr'),
@@ -9509,11 +9361,10 @@ def q_stats_suite(
     ascending-key fold — see the operator docstrings for the replay
     contracts.
 
-    Parts build CONCURRENTLY (the expr_runner_agg pattern): mad's
-    compact-table stages and csample's centroid collect run eager
-    driver-side jobs during CONSTRUCTION, and a serial build paid
-    them on the critical path; each part is an independent pure
-    operator, so the union is bit-identical to the serial build."""
+    Parts build concurrently (``_run_legs``): mad's compact-table
+    stages and csample's centroid collect run eager Spark jobs
+    during construction, which a serial build paid on the critical
+    path."""
 
     def b_corr():
         return [
@@ -9768,27 +9619,7 @@ def q_stats_suite(
         "gcorr": b_gcorr,
         "nullpat": b_nullpat,
     }
-    selected = [p for p in _STATS_PARTS if p in only]
-    if len(selected) == 1:
-        frames = builders[selected[0]]()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # pool width = part count (round 13): 14 parts on an 8-wide
-        # pool queued the tail legs behind the heavy first eight.
-        # Round 14: capped at session cores (_pool_width) — identical
-        # on local[32].
-        with ThreadPoolExecutor(max_workers=_pool_width(len(selected))) as ex:
-            frames = [
-                f
-                for fs in ex.map(lambda p: builders[p](), selected)
-                for f in fs
-            ]
-    out = frames[0]
-    for leg in frames[1:]:
-        out = out.unionByName(leg)
-    return out
-
+    return _run_legs("stats_suite", builders, only)
 
 
 def _oracle_stats_suite() -> str:
@@ -9995,181 +9826,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def query_legs() -> dict:
-    """Per-leg decomposition of the composite gate queries, for
-    bench.py's per-leg timing attribution (VERDICT r05 'what's wrong'
-    #1: composite totals hid which leg moved — ivf_topk's +1.45 s and
-    media_features' +0.58 s took git archaeology to attribute to new
-    coverage legs). Keys match queries(); each leg is a
-    (spark, sf_dir) -> DataFrame callable reusing the SAME functions
-    the composite unions, so leg timings sum (approximately — shared
-    session warmup aside) to the composite's time."""
+    """Per-leg decomposition of the composite gates, for bench.py's
+    per-leg timing: ``{gate: {leg: (spark, sf_dir) -> DataFrame}}``,
+    derived from ``_GATE_LEGS``. Each leg runs its gate with
+    ``only=(leg,)``, so it times exactly the unit the gate unions."""
+    from functools import partial
 
-    def media(part):
-        return lambda spark, sf: q_media_features(spark, sf, only=(part,))
-
+    qs = queries()
     return {
-        "media_features": {
-            p: media(p)
-            for p in ("text", "bmp", "ppm", "png", "jpeg", "jpeg_rst",
-                      "jpeg_prog", "gif", "tiff", "wav", "wav_spec",
-                      "y4m", "scene", "sniff", "imghash")
-        },
-        "ann_suite": {
-            "topk": q_ann_cosine_topk,
-            "brute": q_embedding_near_dup,
-            "l2": q_l2_topk_leg,
-            "quant": q_quant_topk_leg,
-            "ivf": q_ivf_flat_leg,
-            "kmeans": q_kmeans_leg,
-        },
-        "minhash_pipeline": {
-            "sig": q_minhash_signatures,
-            "pair": q_minhash_lsh_near_dup,
-            "ingest": q_minhash_index_ingest,
-            "jacc": q_ngram_jaccard,
-            "jpre": q_jaccard_prefix,
-        },
-        "doc_ingest_suite": {
-            "csv": q_csv_ingest,
-            "html": q_html_extract,
-            "clf": q_classifier_score,
-            "zlib": q_compression_signal,
-            "clf_train": q_clf_train_leg,
-            "clf_multi": q_clf_multi_leg,
-        },
-        "text_curation2": {
-            "bpe": q_bpe_tokenize,
-            "enc": q_encoding_repair,
-            "lm": q_lm_score,
-            "win": q_window_dup,
-            "pdedup": q_paragraph_dedup,
-            "dsir": q_dsir_weights,
-            "knlm": q_knlm_score,
-        },
-        "embedding_reduce": {
-            "sem": q_semantic_dedup,
-            "proj": q_embedding_projection,
-            "pq": q_pq_encode_leg,
-            "pq_adc": q_pq_adc_leg,
-            "ivfpq": q_ivfpq_leg,
-            "ivfpq_res": lambda spark, sf: q_ivfpq_leg(
-                spark, sf, residual=True
-            ),
-            "ivfpq_rr": lambda spark, sf: q_ivfpq_leg(
-                spark, sf, rerank=20
-            ),
-            "ivfpq_idx": q_ivfpq_idx_leg,
-            "pq_append": q_pq_append_leg,
-            "ivfpq_idx_rr": q_ivfpq_idx_rr_leg,
-            "doctor": q_doctor_leg,
-        },
-        "tfidf_scores": {
-            "tfidf": q_tfidf_leg,
-            "bm25": q_bm25_leg,
-            "bm25_topk": q_bm25_topk_leg,
-            "rrf": q_rrf_leg,
-            "bm25_idx": q_bm25_idx_leg,
-        },
-        "digest_documents": {
-            "winnow": q_winnow_leg,
-        },
-        "expr_runner_agg": {
-            p: (lambda part: lambda spark, sf: q_expr_runner_agg(
-                spark, sf, only=(part,)
-            ))(p)
-            for p in _ERA_PARTS
-        },
-        "event_suite": {
-            "rollups": q_event_rollups,
-            "stream_session": q_streaming_sessions,
-            "cohort": q_cohort_leg,
-            "funnel": q_funnel_leg,
-            "anom": q_anomaly_leg,
-        },
-        "stats_suite": {
-            "corr": q_corr_leg,
-            "assoc": q_assoc_leg,
-            "entropy": q_entropy_leg,
-            "ldiv": q_ldiv_leg,
-            "colloc": q_colloc_leg,
-            "reg": q_reg_leg,
-            "g3": q_g3_leg,
-            "csample": q_csample_leg,
-            "mad": q_mad_leg,
-            "benford": q_benford_leg,
-            "markov": q_markov_leg,
-            "vocab": q_vocab_stats,
-            "gcorr": q_gcorr_leg,
-            "nullpat": q_nullpat_leg,
-        },
-        "lambda_suite": {
-            "margin": q_lambda_margin,
-            "subq": q_lambda_subquery,
-        },
-        "simhash_pipeline": {"sig": q_simhash, "pair": q_simhash_near_dup},
-        "streaming_first_seen": {
-            "first_seen": lambda spark, sf: q_streaming_ingest(
-                spark, sf, only=("first_seen",)
-            ),
-            "store": lambda spark, sf: q_streaming_ingest(
-                spark, sf, only=("store",)
-            ),
-        },
-        "corpus_io": {
-            "jsonl": q_jsonl_round_trip,
-            "partitioned": q_partitioned_corpus,
-            "bucketed": q_bucketed_corpus,
-            "zorder": q_zorder_corpus,
-        },
-        "bloom_suite": {
-            "semi": q_bloom_semi_filter,
-            "sql_agg": q_bloom_sql_agg,
-            "bigfile": q_bigbloom_file_probe,
-        },
-        "windowed_dq": {
-            "batch": q_events_windowed_dq,
-            "stream": q_streaming_windowed_dq,
-        },
-        "dedup_exact": {
-            "groups": q_dedup_exact_groups,
-            "keep_best": q_dedup_keep_best,
-            "substr": q_substr_leg,
-            "fuzzy": q_fuzzy_edit_leg,
-        },
-        "sampling_splits": {
-            "hash_split": q_hash_sample_split,
-            "stratified": q_stratified_sample,
-            "mix": q_weighted_mix,
-            "temperature": q_temperature_leg,
-            "cap": q_cap_leg,
-            "hh": q_hh_leg,
-            "hhg": q_hhg_leg,
-            "wsample": q_wsample_leg,
-            "wsample_g": q_wsample_g_leg,
-            "budget_plan": q_budget_plan_leg,
-            "budget_kept": q_budget_kept_leg,
-            "topfrac": q_top_fraction_leg,
-            "pctile": q_percentile_leg,
-        },
-        "event_rollups": {
-            "rollup": q_time_rollup_events,
-            "sessionize": q_sessionize_events,
-        },
-        "temporal_joins": {
-            "asof": q_asof_click_view,
-            "range": q_range_join_events,
-            "interval": q_interval_overlap,
-            "scd2": q_scd2_leg,
-        },
-        "skew_ops": {
-            "salted_agg": q_salted_agg_orders,
-            "skew_join": q_skew_join_lineitem,
-            "rel": q_rel_profile_leg,
-            "pagerank": q_pagerank_leg,
-            "snapdiff": q_snapshot_diff_leg,
-            "joinstats": q_join_stats_leg,
-            "hits": q_hits_leg,
-        },
+        gate: {leg: partial(qs[gate], only=(leg,)) for leg in legs}
+        for gate, legs in _GATE_LEGS.items()
     }
 
 

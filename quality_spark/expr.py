@@ -254,6 +254,14 @@ def replace_calls(
     )
 
 
+def quote_identifier(name: str) -> str:
+    """``name`` as SQL identifier text: unchanged when it is a plain
+    identifier, else backquoted with inner backquotes doubled."""
+    if _IDENT_RE.fullmatch(name):
+        return name
+    return "`" + name.replace("`", "``") + "`"
+
+
 def substitute_identifiers(sql: str, mapping: Dict[str, str]) -> str:
     """Replace bare identifiers by SQL text (used for lambda parameter
     substitution). Case-insensitive; skips qualified tails (``x.a``

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..expr import quote_identifier
 from ..model import RuleSuite, pack_id
 from ..plans.compiler import expand_rules, probe_types
 from ..results import encode_rule_sql, overall_result_sql
@@ -129,6 +130,21 @@ def rule_runner_details(suite: RuleSuite, df: Optional[DataFrame] = None) -> Col
     return _assemble(suite, enc_sqls, with_suite_overall=False)
 
 
+def _fresh_names(taken: Sequence[str], wanted: Sequence[str]) -> List[str]:
+    """Staging column names: each ``wanted`` name, suffixed with ``_``
+    until it collides with no name in ``taken`` and no earlier pick.
+    Compared lower-cased: Spark resolves names case-insensitively by
+    default."""
+    used = {c.lower() for c in taken}
+    out = []
+    for nm in wanted:
+        while nm.lower() in used:
+            nm += "_"
+        used.add(nm.lower())
+        out.append(nm)
+    return out
+
+
 def add_flat_rule_results(
     df: DataFrame, suite: RuleSuite, keep: Optional[Sequence[str]] = None
 ) -> DataFrame:
@@ -141,17 +157,27 @@ def add_flat_rule_results(
     embeds the overall folds) makes the generator's child evaluate
     ~N^2 rule expressions per row; staging keeps it at N. Use the
     generic ``flatten_results`` macro for DQ structs read back from
-    storage."""
-    keep = list(keep if keep is not None else df.columns)
+    storage. ``keep`` names are literal top-level column names."""
+    keep_cols = [
+        F.col(quote_identifier(c)) for c in (keep if keep is not None else df.columns)
+    ]
     enc_sqls = _encoded_sqls(suite, df)
     flat_ids = [
         (rs, r) for rs, ss in zip(suite.rule_sets, enc_sqls) for r in rs.rules
     ]
     flat_sqls = [s for ss in enc_sqls for s in ss]
-    staged = df.select(
-        *keep, *[F.expr(s).cast("int").alias(f"__e{i}") for i, s in enumerate(flat_sqls)]
+    n = len(flat_sqls)
+    names = _fresh_names(
+        df.columns,
+        [f"__qs_enc{i}" for i in range(n)]
+        + ["__qs_ovs", "__qs_flat"]
+        + [f"__qs_ov{si}" for si in range(len(suite.rule_sets))],
     )
-    enc_cols = [f"__e{i}" for i in range(len(flat_sqls))]
+    enc_cols, ovs, flat_col, set_ovs = names[:n], names[n], names[n + 1], names[n + 2 :]
+    staged = df.select(
+        *keep_cols,
+        *[F.expr(s).cast("int").alias(nm) for s, nm in zip(flat_sqls, enc_cols)],
+    )
     # stage the overalls as columns as well: structs made purely of
     # column references explode at generator speed, while embedding the
     # fold CASEs in all N structs re-evaluates them N times per row
@@ -159,29 +185,29 @@ def add_flat_rule_results(
     set_ov_cols: List[str] = []
     set_ov_exprs: List[Column] = []
     i = 0
-    for si, (rs, ss) in enumerate(zip(suite.rule_sets, enc_sqls)):
+    for ss, so in zip(enc_sqls, set_ovs):
         cols = enc_cols[i : i + len(ss)]
         set_ov_exprs.append(
-            F.expr(overall_result_sql(cols, suite.probable_pass)).alias(f"__ov{si}")
+            F.expr(overall_result_sql(cols, suite.probable_pass)).alias(so)
         )
-        set_ov_cols.extend([f"__ov{si}"] * len(ss))
+        set_ov_cols.extend([so] * len(ss))
         i += len(ss)
     staged = staged.select(
-        "*", F.expr(suite_overall).alias("__ovs"), *set_ov_exprs
+        "*", F.expr(suite_overall).alias(ovs), *set_ov_exprs
     )
     structs = []
     for (rs, r), enc_col, so_col in zip(flat_ids, enc_cols, set_ov_cols):
         structs.append(
             "named_struct("
             f"'ruleSuiteId', {suite.id.id}, 'ruleSuiteVersion', {suite.id.version}, "
-            f"'ruleSuiteResult', __ovs, 'ruleSetResult', {so_col}, "
+            f"'ruleSuiteResult', {ovs}, 'ruleSetResult', {so_col}, "
             f"'ruleSetId', {rs.id.id}, 'ruleSetVersion', {rs.id.version}, "
             f"'ruleId', {r.id.id}, 'ruleVersion', {r.id.version}, "
             f"'ruleResult', {enc_col})"
         )
     arr = "array(" + ", ".join(structs) + ")"
-    exploded = staged.select(*keep, F.explode(F.expr(arr)).alias("f"))
-    return exploded.select(*keep, "f.*")
+    exploded = staged.select(*keep_cols, F.explode(F.expr(arr)).alias(flat_col))
+    return exploded.select(*keep_cols, f"{flat_col}.*")
 
 
 def _add_staged(
@@ -201,15 +227,7 @@ def _add_staged(
     (SCALE.md). CollapseProject leaves the two projections alone because
     the staged columns are non-cheap and each is referenced 3x."""
     flat = [s for ss in enc_sqls for s in ss]
-    # lower-cased: Spark resolves names case-insensitively by default
-    used = {c.lower() for c in df.columns}
-    names = []
-    for i in range(len(flat)):
-        nm = f"__qs_enc{i}"
-        while nm in used:
-            nm += "_"
-        used.add(nm)
-        names.append(nm)
+    names = _fresh_names(df.columns, [f"__qs_enc{i}" for i in range(len(flat))])
     # ONE selectExpr call instead of a py4j F.expr/cast/alias round
     # trip per rule — at 1000 rules that is ~3000 saved JVM calls
     # (measured: the staging projection built 3x faster, identical

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..expr import parse_lambda, substitute_identifiers
+from ..expr import parse_lambda, quote_identifier, substitute_identifiers
 from ..model import (
     Id,
     LambdaFunction,
@@ -260,11 +260,12 @@ class MetaRuleSet:
         to evolve correctly (the reference's stated law)."""
         arg, body = self._arg_and_body
         # the lambda-expansion token pass: string literals, qualified
-        # tails (`s.arg`) and call names keep their text
+        # tails (`s.arg`) and call names keep their text; a column name
+        # that is not a plain identifier goes in backquoted
         rules = tuple(
             Rule(
                 Id(self.id.id + stable_position(c), self.id.version),
-                substitute_identifiers(body, {arg: c}),
+                substitute_identifiers(body, {arg: quote_identifier(c)}),
             )
             for c in self.filter_columns(df, transform)
         )

@@ -908,3 +908,38 @@ def test_categorical_psi_semantics_oracle_and_guard(spark, sf_dir):
     assert s["psi_micro"] > 250_000
     with pytest.raises(ValueError, match="max_card"):
         categorical_psi(a, b, ["l_orderkey"], max_card=10)
+
+
+def test_profiles_from_shard_groups_equals_per_group_profiles(spark):
+    """The one-job multi-group path equals profiling each group on its
+    own, on an integer, a decimal and a NULL-bearing double column —
+    including a group whose double column is all NULL and a shard
+    shared by two groups."""
+    from quality_spark.operators.profile import (
+        profile_from_shards,
+        profile_shard,
+        profiles_from_shard_groups,
+    )
+
+    rows = [
+        (i, f"{(i * 37) % 1000 - 500}.{i % 100:02d}",
+         None if i % 3 == 0 or i >= 30 else i / 7)
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "i int, d string, x double").selectExpr(
+        "i", "CAST(d AS DECIMAL(10, 2)) AS d", "x"
+    )
+    cols = ["i", "d", "x"]
+    shards = [
+        profile_shard(df.filter(f"i >= {lo} AND i < {hi}"), cols)
+        for lo, hi in ((0, 10), (10, 20), (20, 30), (30, 40))
+    ]
+    groups = [[shards[0], shards[1]], [shards[3]], [shards[2], shards[1]]]
+    got = profiles_from_shard_groups(groups, cols)
+    want = [profile_from_shards(g, cols, bins=0) for g in groups]
+    assert len(got) == len(groups)
+    for g, w in zip(got, want):
+        assert g.dtypes == w.dtypes
+        assert sorted(g.collect()) == sorted(w.collect())
+    by = _as_map(got[1].collect())
+    assert by[("x", "n")] == 0 and by[("x", "n_null")] == 10

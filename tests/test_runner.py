@@ -322,3 +322,26 @@ def test_staged_keeps_duplicate_and_case_colliding_names(spark):
     row = out.collect()[0]
     assert row["__QS_ENC0"] == 7
     assert row["DQ"]["overallResult"] == PASSED_INT
+
+
+@pytest.mark.parametrize("name", ["__e0", "__ovs", "__ov0", "l.comment", "f"])
+def test_flat_rule_results_input_names_pass_through(lineitem, name):
+    """Input columns named like add_flat_rule_results' staging columns,
+    its exploded struct, or with a dot, pass through by default ``keep``;
+    the rows equal exploding ``flatten_results`` of ``rule_runner``."""
+    from quality_spark.operators.runner import add_flat_rule_results
+
+    df = lineitem.limit(50).select(
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+        F.col("l_orderkey").alias(name),
+    )
+    got = add_flat_rule_results(df, SUITE)
+    keep = [F.col(f"`{c}`") for c in df.columns]
+    want = (
+        df.select(*keep, rule_runner(SUITE, df).alias("__dq"))
+        .select(*keep, F.explode(Q.flatten_results(F.col("__dq"))).alias("__x"))
+        .select(*keep, "__x.*")
+    )
+    assert got.columns == want.columns
+    assert got.count() == 50 * 6
+    assert sorted(got.collect()) == sorted(want.collect())

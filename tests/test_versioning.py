@@ -7,7 +7,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from quality_spark.model import Id, LambdaFunction, RuleSuite, RuleSuiteMap
+from pyspark.sql import functions as F
+
+from quality_spark.model import Id, LambdaFunction, RuleSuite, RuleSuiteMap, pack_id
 from quality_spark.sources.serializing import RULES_SCHEMA, LAMBDAS_SCHEMA
 from quality_spark.sources.versioning import (
     META_RULE_SETS_SCHEMA,
@@ -135,3 +137,32 @@ def test_meta_rule_template_substitutes_only_the_argument(spark):
     )
     (rule,) = meta.generate_rule_set(df, lambda c: 0).rules
     assert rule.expression.rule == "l_tax <> 'x' AND s.x IS NULL"
+
+
+def test_meta_rule_backquotes_names_that_are_not_identifiers(spark):
+    """A column name with a space or a backquote is substituted
+    backquoted (inner backquotes doubled), so the generated rule parses
+    and scores: NULL and negative values fail, the rest pass."""
+    from quality_spark import add_data_quality
+    from quality_spark.model import PASSED_INT, RuleSet
+    from quality_spark.sources.versioning import MetaRuleSet
+
+    df = spark.createDataFrame(
+        [(1.0, 2.0, 0), (-1.0, 3.0, 1), (4.0, -5.0, 2), (None, 1.0, 3)],
+        "`my col` double, `a``b` double, k int",
+    )
+    meta = MetaRuleSet(Id(7, 1), Id(900, 1), "dataType = 'double'", "x -> x >= 0")
+    pos = {"my col": 1, "a`b": 2}
+    rules = meta.generate_rule_set(df, pos.__getitem__).rules
+    assert [r.expression.rule for r in rules] == ["`my col` >= 0", "`a``b` >= 0"]
+    suite = RuleSuite(Id(7, 1), (RuleSet(Id(900, 1), rules),))
+    out = add_data_quality(df, suite).select(
+        "k", F.col("DQ.ruleSetResults")[pack_id(Id(900, 1))]["ruleResults"].alias("r")
+    )
+    got = {
+        row["k"]: (row["r"][pack_id(Id(901, 1))], row["r"][pack_id(Id(902, 1))])
+        for row in out.collect()
+    }
+    # NULL >= 0 is NULL, which encodes as Failed (0)
+    p = PASSED_INT
+    assert got == {0: (p, p), 1: (0, p), 2: (p, 0), 3: (0, p)}

@@ -41,7 +41,7 @@ def main() -> None:
     from bench import gen_wide_suite, make_spark
 
     from quality_spark import add_data_quality
-    from quality_spark.operators.runner import _add_staged, _encoded_sqls
+    from quality_spark.operators.runner import _encoded_sqls
 
     spark = make_spark()
     spark.sparkContext.setLogLevel("ERROR")
