@@ -13,6 +13,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -651,14 +652,10 @@ def _run_legs(gate: str, legs: dict, only=None) -> DataFrame:
     if unknown:
         raise ValueError(f"{gate}: unknown legs {sorted(unknown)}")
     selected = [n for n in names if only is None or n in only]
-    session = SparkSession.active()
-    sc = session.sparkContext
+    # job groups live on the one process-wide SparkContext
+    sc = SparkContext.getOrCreate()
 
     def build(name: str) -> list:
-        # the active session is JVM-thread-local: a pool thread must see
-        # the caller's, or getActiveSession() lookups (UDF registration
-        # at rule-expansion time) find none
-        session._jvm.SparkSession.setActiveSession(session._jsparkSession)
         prior = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
         sc.setJobGroup(f"{gate}.{name}", f"{gate} leg {name}", True)
         try:

@@ -255,10 +255,9 @@ def replace_calls(
 
 
 def quote_identifier(name: str) -> str:
-    """``name`` as SQL identifier text: unchanged when it is a plain
-    identifier, else backquoted with inner backquotes doubled."""
-    if _IDENT_RE.fullmatch(name):
-        return name
+    """``name`` as SQL identifier text: always backquoted, inner
+    backquotes doubled. A plain identifier is quoted too, since it may
+    be a keyword or a literal (``case``, ``null``) to the parser."""
     return "`" + name.replace("`", "``") + "`"
 
 

@@ -675,9 +675,9 @@ def ensure_python_hashes(spark=None) -> None:
     Called at macro-expansion time (the compiler runs on the driver with
     an active session); registration is once per SparkSession."""
     if spark is None:
-        from pyspark.sql import SparkSession
+        from ..sources.fsio import _active_spark
 
-        spark = SparkSession.getActiveSession()
+        spark = _active_spark()
     if spark is None:
         raise RuntimeError(
             "MURMUR3_128 hashing needs an active SparkSession at rule "

@@ -1179,9 +1179,9 @@ def register_python_rng(spark) -> None:
 
 def ensure_python_rng(spark=None) -> None:
     if spark is None:
-        from pyspark.sql import SparkSession
+        from ..sources.fsio import _active_spark
 
-        spark = SparkSession.getActiveSession()
+        spark = _active_spark()
     if spark is None:
         raise RuntimeError(
             "seeded rng('ALGO', …) needs an active SparkSession at rule "

@@ -333,9 +333,9 @@ def ensure_yaml_udfs(spark=None) -> None:
     active session (called at macro-expansion time, like
     pyhash.ensure_python_hashes)."""
     if spark is None:
-        from pyspark.sql import SparkSession
+        from ..sources.fsio import _active_spark
 
-        spark = SparkSession.getActiveSession()
+        spark = _active_spark()
     if spark is None:
         raise RuntimeError(
             "to_yaml/from_yaml in rule text need an active SparkSession "

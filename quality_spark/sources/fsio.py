@@ -50,6 +50,8 @@ def _alive(s) -> bool:
 
 
 def _active_spark():
+    """The thread's active session, else the process default; also the
+    resolver of the UDF registrars called at rule-compile time."""
     try:
         from pyspark.sql import SparkSession
 

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .fsio import _active_spark
+
 # ---------------------------------------------------------------------------
 # Map lookups
 # ---------------------------------------------------------------------------
@@ -109,7 +111,7 @@ def register_map_lookup(
 ) -> None:
     mapping = dict(mapping)
     if len(mapping) > MAP_LITERAL_MAX:
-        spark = spark or SparkSession.getActiveSession()
+        spark = spark or _active_spark()
         if spark is None:
             raise ValueError(
                 f"map {name!r} has {len(mapping)} entries (> {MAP_LITERAL_MAX}); "

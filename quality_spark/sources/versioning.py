@@ -260,8 +260,9 @@ class MetaRuleSet:
         to evolve correctly (the reference's stated law)."""
         arg, body = self._arg_and_body
         # the lambda-expansion token pass: string literals, qualified
-        # tails (`s.arg`) and call names keep their text; a column name
-        # that is not a plain identifier goes in backquoted
+        # tails (`s.arg`) and call names keep their text; the column name
+        # goes in backquoted, so spaces, keywords and literals (`null`)
+        # stay a column reference
         rules = tuple(
             Rule(
                 Id(self.id.id + stable_position(c), self.id.version),

@@ -253,6 +253,40 @@ def test_fsio_resolves_from_fresh_thread(spark, tmp_path):
     assert os.path.exists(f"{tmp_path}/threaded.json")
 
 
+def test_udf_registrars_resolve_from_fresh_thread(spark):
+    """The rule-compile-time UDF registrars find the process-wide
+    session on a thread that has no active one (a caller's own pool),
+    as fsio does, instead of raising 'needs an active SparkSession'."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from quality_spark.functions.pyhash import ensure_python_hashes
+    from quality_spark.functions.pyrng import ensure_python_rng
+    from quality_spark.functions.yamlenc import ensure_yaml_udfs
+    from quality_spark.sources.lookups import MAP_LITERAL_MAX, register_map_lookup
+
+    seen, errs = [], []
+
+    def work():
+        seen.append(SparkSession.getActiveSession())
+        try:
+            ensure_python_hashes()
+            ensure_python_rng()
+            ensure_yaml_udfs()
+            register_map_lookup(
+                "fresh_thread_map", {i: i for i in range(MAP_LITERAL_MAX + 1)}
+            )
+        except Exception as ex:  # noqa: BLE001
+            errs.append(ex)
+
+    t = threading.Thread(target=work)
+    t.start()
+    t.join()
+    assert seen == [None]
+    assert not errs, errs
+
+
 def test_fsio_create_new_is_atomic_primitive(spark, tmp_path):
     """create_new: first caller wins, second reads False — on both a
     plain path and a file:// URI."""

@@ -103,7 +103,7 @@ def test_meta_rule_sets_generate_per_column(spark, sf_dir):
     (gen,) = out[Id(7, 1)].rule_sets
     assert gen.id == Id(900, 1)
     got = {r.expression.rule for r in gen.rules}
-    assert got == {f"{c} >= 0" for c in cols}
+    assert got == {f"`{c}` >= 0" for c in cols}
     # stable ids: ruleSetId + position
     assert sorted(r.id.id for r in gen.rules) == [900 + i for i in range(len(cols))]
 
@@ -136,33 +136,43 @@ def test_meta_rule_template_substitutes_only_the_argument(spark):
         Id(7, 1), Id(900, 1), "dataType = 'double'", "x -> x <> 'x' AND s.x IS NULL"
     )
     (rule,) = meta.generate_rule_set(df, lambda c: 0).rules
-    assert rule.expression.rule == "l_tax <> 'x' AND s.x IS NULL"
+    assert rule.expression.rule == "`l_tax` <> 'x' AND s.x IS NULL"
 
 
 def test_meta_rule_backquotes_names_that_are_not_identifiers(spark):
-    """A column name with a space or a backquote is substituted
-    backquoted (inner backquotes doubled), so the generated rule parses
-    and scores: NULL and negative values fail, the rest pass."""
+    """Every column name is substituted backquoted (inner backquotes
+    doubled): a name with a space or a backquote, a literal word
+    (``NULL``) and a keyword (``case``) all give a rule that parses and
+    scores on the column. NULL and negative values fail, the rest pass."""
     from quality_spark import add_data_quality
     from quality_spark.model import PASSED_INT, RuleSet
     from quality_spark.sources.versioning import MetaRuleSet
 
     df = spark.createDataFrame(
-        [(1.0, 2.0, 0), (-1.0, 3.0, 1), (4.0, -5.0, 2), (None, 1.0, 3)],
-        "`my col` double, `a``b` double, k int",
+        [
+            (1.0, 2.0, 3.0, 4.0, 0),
+            (-1.0, 3.0, 1.0, 1.0, 1),
+            (4.0, -5.0, -1.0, 1.0, 2),
+            (None, 1.0, 1.0, -2.0, 3),
+        ],
+        "`my col` double, `a``b` double, `NULL` double, `case` double, k int",
     )
     meta = MetaRuleSet(Id(7, 1), Id(900, 1), "dataType = 'double'", "x -> x >= 0")
-    pos = {"my col": 1, "a`b": 2}
+    pos = {"my col": 1, "a`b": 2, "null": 3, "case": 4}
     rules = meta.generate_rule_set(df, pos.__getitem__).rules
-    assert [r.expression.rule for r in rules] == ["`my col` >= 0", "`a``b` >= 0"]
+    assert [r.expression.rule for r in rules] == [
+        "`my col` >= 0", "`a``b` >= 0", "`null` >= 0", "`case` >= 0"
+    ]
     suite = RuleSuite(Id(7, 1), (RuleSet(Id(900, 1), rules),))
     out = add_data_quality(df, suite).select(
         "k", F.col("DQ.ruleSetResults")[pack_id(Id(900, 1))]["ruleResults"].alias("r")
     )
     got = {
-        row["k"]: (row["r"][pack_id(Id(901, 1))], row["r"][pack_id(Id(902, 1))])
+        row["k"]: tuple(row["r"][pack_id(Id(900 + i, 1))] for i in range(1, 5))
         for row in out.collect()
     }
     # NULL >= 0 is NULL, which encodes as Failed (0)
     p = PASSED_INT
-    assert got == {0: (p, p), 1: (0, p), 2: (p, 0), 3: (0, p)}
+    assert got == {
+        0: (p, p, p, p), 1: (0, p, p, p), 2: (p, 0, 0, p), 3: (0, p, p, 0)
+    }
