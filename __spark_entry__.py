@@ -510,51 +510,67 @@ def _oracle_map_lookup_nation() -> str:
 # Built blooms memoized per (kind, sf_dir): a 100 TB deployment builds
 # a bloom ONCE and probes it from many queries — the memo models that
 # build-once/probe-many split (VERDICT r03 "What's wrong" #2).
-# Measurement note: under bench.py's stall-retry guard the FIRST run
-# (which pays the real distributed build) exceeds RETRY_OVER, so the
-# min-of-2 that lands in BENCH is the memo-hit run — i.e. the benched
-# bloom number deliberately measures steady-state PROBE cost with the
-# build amortized away, exactly the build-once split above. The build
-# itself is still exercised every bench session (first run) and
+# Measurement note: bench.py times every key as the median of clocked
+# passes that follow one unclocked warm pass, so the benched bloom
+# number is a memo-hit run: it measures steady-state PROBE cost with
+# the build amortized away, exactly the build-once split above. The
+# build itself still runs in every bench session (warm pass) and is
 # correctness-gated.
 _BLOOM_MEMO: dict = {}
 
 # Staged corpus artifacts (JSONL shards, partitioned store, bucketed
-# tables) memoized per (kind, sf_dir) with sf_dir-keyed paths — the
-# same build-once/probe-many split as the blooms: a corpus is staged
-# once and read by many queries, so the benched steady-state number
-# measures the READ path; the write path still runs every session
-# (first call) and its output is what the oracle hash checks.
+# tables) memoized per (kind, sf_dir) — the same build-once/probe-many
+# split as the blooms: a corpus is staged once and read by many
+# queries, so the benched steady-state number measures the READ path;
+# the write path still runs every session (first call) and its output
+# is what the oracle hash checks.
 _STAGE_MEMO: dict = {}
 _STAGE_LOCKS: dict = {}
 _STAGE_LOCKS_GUARD = __import__("threading").Lock()
+_GATE_TMP = None
+
+
+def _sf_tag(sf_dir: str) -> str:
+    """A short name for a scale-factor dir, unique per absolute path."""
+    import hashlib
+    import os
+
+    return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
+
+
+def _gate_tmp() -> str:
+    """This process's ``qs_gate_`` temp dir, made on first use and
+    removed at exit, so two processes never share, or delete, each
+    other's gate files."""
+    import atexit
+    import shutil
+    import tempfile
+
+    global _GATE_TMP
+    with _STAGE_LOCKS_GUARD:
+        if _GATE_TMP is None:
+            _GATE_TMP = tempfile.mkdtemp(prefix="qs_gate_")
+            atexit.register(shutil.rmtree, _GATE_TMP, True)
+    return _GATE_TMP
 
 
 def _staged(kind: str, sf_dir: str, build):
     """Memoized staging: ``build(root) -> value`` runs once per
-    (kind, sf_dir); the root is keyed by sf_dir so two scale factors
-    never clobber each other's files. Thread-safe: ``_run_legs``
-    builds a composite's legs on one pool, and two legs sharing a
-    staged artifact must not double-build it (the rmtree of a
-    duplicate build would race a concurrent reader) — per-key
-    double-checked locks serialize exactly the first build."""
+    (kind, sf_dir); ``root`` is ``<_gate_tmp()>/<kind>_<sf tag>``, not
+    yet made. Thread-safe: ``_run_legs`` builds a composite's legs on
+    one pool, and two legs sharing a staged artifact must not
+    double-build it — per-key double-checked locks serialize exactly
+    the first build."""
     import os
-    import shutil
-    import tempfile
 
-    key = (kind, sf_dir)
+    key = (kind, _sf_tag(sf_dir))
     if key in _STAGE_MEMO:
         return _STAGE_MEMO[key]
     with _STAGE_LOCKS_GUARD:
         lock = _STAGE_LOCKS.setdefault(key, __import__("threading").Lock())
     with lock:
         if key not in _STAGE_MEMO:
-            tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-            root = os.path.join(
-                tempfile.gettempdir(), f"qs_{kind}_gate_{tag}"
-            )
-            shutil.rmtree(root, ignore_errors=True)
-            _STAGE_MEMO[key] = build(root)
+            _STAGE_MEMO[key] = build(os.path.join(_gate_tmp(), f"{kind}_{key[1]}"))
     return _STAGE_MEMO[key]
 
 
@@ -703,8 +719,6 @@ def _shared_streams(spark: SparkSession, sf_dir: str) -> dict:
 def _shared_streams_build(
     spark: SparkSession, sf_dir: str, key: tuple
 ) -> dict:
-    import os
-    import shutil
     import tempfile
 
     # the streams run on a CLONED session with few shuffle partitions:
@@ -729,8 +743,6 @@ def _shared_streams_build(
         windowed_rule_stats,
     )
 
-    sftag = os.path.basename(sf_dir.rstrip("/")) or "default"
-
     # -- staged inputs (memoized independently; build-once per sf) --
     def build_events(root):
         batch = read_parquet_compat(spark, f"{sf_dir}/events.parquet")
@@ -749,8 +761,11 @@ def _shared_streams_build(
         ).parquet(root)
         return root
 
-    out_root = os.path.join(tempfile.gettempdir(), f"qs_shared_out_{sftag}")
-    shutil.rmtree(out_root, ignore_errors=True)
+    # a fresh dir per build: the memo is per session, and a second
+    # session's streams must not resume the first one's checkpoints
+    out_root = tempfile.mkdtemp(
+        dir=_gate_tmp(), prefix=f"shared_{_sf_tag(sf_dir)}_"
+    )
 
     def _overwrite_sink(path):
         # complete-mode availableNow: the final micro-batch carries the
@@ -864,13 +879,12 @@ def _shared_streams_build(
     # micro-batch to the three store modes (fresh stores every shared
     # run; 2 micro-batches via maxFilesPerTrigger=1 so batch 2 probes
     # the store batch 1 populated — the cross-batch path)
-    store_root = os.path.join(tempfile.gettempdir(), f"qs_dedup_store_gate_{sftag}")
-    btable = f"qs_gate_dstore_b_{sftag}".replace(".", "_")
+    store_root = f"{out_root}/dedup_store"
+    btable = f"qs_gate_dstore_b_{_sf_tag(sf_dir)}"
 
     def chain_store():
         store_in = _staged("dsin", sf_dir, build_store_in)
         store_schema = spark.read.parquet(store_in).schema
-        shutil.rmtree(store_root, ignore_errors=True)
         handlers = {}
         for tag, hash_only in (("store_hash", True), ("store_exact", False)):
             def sink(df, epoch_id, _p=f"{store_root}/{tag}/sink"):
@@ -4011,9 +4025,6 @@ def q_bigbloom_file_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, reload from disk, probe customers. Determinism: no false
     negatives + left-semi removes false positives (same argument as
     bloom_semi_filter)."""
-    import shutil
-    import tempfile
-
     from quality_spark.sources.bigbloom import (
         big_bloom_from,
         load_big_bloom,
@@ -4021,22 +4032,15 @@ def q_bigbloom_file_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from quality_spark.sources.lookups import probability_in
 
-    import os
-
-    # tmpdir, not the repo tree: the files must outlive this function
-    # (the returned DataFrame probes them lazily). The root is keyed by
-    # sf_dir — a shared fixed path would let a second sf_dir's rebuild
-    # rmtree the files backing the FIRST sf_dir's still-memoized
-    # file-backed bloom (mmap probes would hit deleted files)
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    root = os.path.join(tempfile.gettempdir(), f"qs_bigbloom_gate_{tag}")
     orders = _read(spark, sf_dir, "orders")
-    key = ("bigbloom", sf_dir)
-    if key not in _BLOOM_MEMO:
-        shutil.rmtree(root, ignore_errors=True)
+
+    # the files must outlive this function: the returned DataFrame
+    # probes them lazily
+    def build(root):
         big_bloom_from(orders, "o_custkey", expected=20_000, root_dir=root, fpp=0.001)
-        _BLOOM_MEMO[key] = load_big_bloom(root)  # exercise the file readback path
-    bb = _BLOOM_MEMO[key]
+        return load_big_bloom(root)  # exercise the file readback path
+
+    bb = _staged("bigbloom", sf_dir, build)
     register_big_bloom(spark, "bb_file_custkeys", bb)
     cust = _read(spark, sf_dir, "customer")
     passed = cust.filter(probability_in(F.col("c_custkey"), "bb_file_custkeys") > 0)
@@ -7224,15 +7228,13 @@ def q_bucketed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py::test_bucketed_join_no_exchange) and aggregated
     per lang — proving the bucketed write/read/join round-trips the
     data exactly."""
-    import os
-
     from quality_spark.sources.corpus import bucketed_join, write_bucketed_corpus
 
-    # Catalog table names are sf-suffixed like the staging root: the
-    # memo is keyed (kind, sf_dir) but the catalog is shared, so an
-    # unsuffixed name would let a second sf's build clobber the tables
-    # while the first sf's memo skips its rebuild (ADVICE r04 medium).
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "default").replace(".", "_")
+    # Catalog table names carry the staging root's sf tag: the memo is
+    # keyed (kind, sf) but the catalog is shared, so an unsuffixed name
+    # would let a second sf's build clobber the tables while the first
+    # sf's memo skips its rebuild (ADVICE r04 medium).
+    tag = _sf_tag(sf_dir)
     t_docs, t_scores = f"qs_gate_docs_b_{tag}", f"qs_gate_scores_b_{tag}"
 
     def build(root):

@@ -1,26 +1,81 @@
 """Benchmark harness — mirrors the reference's methodology
-(BASELINE.md): measure a no-rules parquet write baseline, then DQ
-writes with a 27-rule and a 150-rule suite, plus the headline oracle
-queries. Prints ONE JSON line:
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+(BASELINE.md, scalameter in PerRowPerfTest.scala:94-147: warm-ups,
+then a fixed number of timed runs per benchmark). Prints ONE JSON line:
+``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+and writes the full record to ``bench_detail.json``.
+
+Keys. One table maps every key to a thunk returning
+``(construct_s, run_s)``:
+
+- ``baseline_write`` / ``baseline_eval``: lineitem written to parquet
+  with no rules (reference evaluation_method.md:35), and the same rows
+  through a noop sink, so eval keys separate per-rule cost from the
+  result-width write;
+- ``dq{27,150,500,1000}_{compile,write,eval}``: ``add_data_quality``
+  build, parquet write and noop-sink eval for the 27-rule fixture suite
+  and the generated 150/500/1000-rule suites. There is no
+  ``dq1000_write``: at 1000 result columns it times parquet encoding
+  width, not rule evaluation;
+- every ``queries()`` gate: construction (some gates do their real work
+  eagerly) then a noop-format write, which materialises every column;
+- every ``query_legs()`` leg, as ``<gate>.<leg>``: the gate built with
+  only that leg.
+
+lineitem is repartitioned to the core count inside the timed region:
+the sf0.1 file has 3 row groups, so the scan alone would use 3 cores.
+
+``shared_stream_startup`` is the gates' one concurrent streaming run.
+It is memoized per session, so it gets a single timed sample, taken
+before the passes.
+
+Passes. One unclocked warm pass over every key pays first-time costs
+(staging, bloom builds, codegen), then ``K`` clocked passes run over
+every key in table order. The passes are interleaved, so a slow phase
+of the box hits every key alike.
+
+Values. Each key records its samples, their median and their spread
+(max - min). A key's value is its median. The headline ``value`` is the
+sum of the non-leg keys' values: a leg re-times part of its gate.
+
+Prior. The prior is the ``bench_detail.json`` already on disk, read
+before this run overwrites it. It is compared only when its ``cpus``
+and ``sf`` equal this run's and it carries per-key samples; otherwise
+the record says ``"vs": null`` and flags nothing.
+
+Flags. The box factor ``b`` is the median, over compared keys with a
+prior median of at least 0.2 s, of ``median_now / median_prior``. A
+key is flagged when every current sample divided by ``b`` exceeds 1.3x
+its prior median.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the cores this process may run on).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
+import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-TMP = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_tmp")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+HERE = os.path.dirname(os.path.abspath(__file__))
+DETAIL = os.path.join(HERE, "bench_detail.json")
+STARTUP = "shared_stream_startup"
+#: clocked passes per key, after one unclocked warm pass
+K = 3
+#: keys with a prior median below this are compared but never flagged
+MIN_PRIOR_S = 0.2
+#: a key is flagged when every box-normalised sample exceeds this x its
+#: prior median
+FLAG_RATIO = 1.3
 
 
 def make_spark():
@@ -63,966 +118,215 @@ def timed(fn):
 
 
 def gen_suite27():
-    """The 27-rule suite (~3.4 copies of the 8-rule fixture suite) —
-    factored out of main() so the isolated re-measure path builds the
-    identical suite."""
+    """The 27-rule suite: ~3.4 copies of the 8-rule fixture suite."""
     import __spark_entry__ as entrymod
     from quality_spark import rule_suite as _rs
 
-    specs27 = []
+    sets: dict = {}
     for rep in range(4):
         for set_id, rule_id, kind, sql in entrymod.RULE_SPECS[
             : (8 if rep < 3 else 3)
         ]:
-            specs27.append(
+            sets.setdefault((set_id[0] + rep * 100, set_id[1]), []).append(
                 (
-                    (set_id[0] + rep * 100, set_id[1]),
                     (rule_id[0] + rep * 1000, rule_id[1]),
-                    kind,
-                    sql,
+                    entrymod._spark_rule_text(kind, sql),
                 )
             )
-    sets: dict = {}
-    for set_id, rule_id, kind, sql in specs27:
-        sets.setdefault(set_id, []).append(
-            (rule_id, entrymod._spark_rule_text(kind, sql))
-        )
     return _rs((91, 1), list(sets.items()), lambdas=entrymod.LAMBDAS)
 
 
-def _isolated_measure(name: str) -> float:
-    """Measure ONE governed bench key in THIS (fresh) session with the
-    same methodology main() uses — the 'isolated fresh-session
-    re-measure' of the investigated drift path (VERDICT r11 #2/#3).
-    Covers every governed key class: gate queries, the shared stream
-    startup (NOT memoized in a fresh session, so this is the only
-    valid second sample for it), and the dq-curve/baseline keys."""
-    import re as _re
+def noop_write(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
+
+def run_only(fn):
+    """A thunk timing ``fn`` as run time, with no construction."""
+    return lambda: (0.0, timed(fn))
+
+
+def built_then_written(build):
+    """A thunk timing ``build()`` as construction, then its noop write."""
+
+    def thunk():
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+        noop_write(df)
+        return t1 - t0, time.perf_counter() - t1
+
+    return thunk
+
+
+def key_table(spark, tmp: str) -> dict:
+    """Every bench key -> thunk returning ``(construct_s, run_s)``, in
+    pass order. Building the table runs nothing: the lineitem frame,
+    the suites and the DQ frames are made on a thunk's first call."""
     import __spark_entry__ as entrymod
     from quality_spark import add_data_quality
 
+    @functools.cache
+    def lineitem():
+        return spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(
+            int(CPUS)
+        )
+
+    @functools.cache
+    def suite(n: int):
+        return gen_suite27() if n == 27 else gen_wide_suite(n)
+
+    @functools.cache
+    def dq(n: int):
+        return add_data_quality(lineitem(), suite(n))
+
+    table = {
+        "baseline_write": run_only(
+            lambda: lineitem().write.mode("overwrite").parquet(f"{tmp}/base")
+        ),
+        "baseline_eval": run_only(lambda: noop_write(lineitem())),
+    }
+    for n in (27, 150, 500, 1000):
+        table[f"dq{n}_compile"] = lambda n=n: (
+            timed(lambda: add_data_quality(lineitem(), suite(n))), 0.0
+        )
+        if n < 1000:
+            table[f"dq{n}_write"] = run_only(
+                lambda n=n: dq(n).write.mode("overwrite").parquet(f"{tmp}/dq{n}")
+            )
+        table[f"dq{n}_eval"] = run_only(lambda n=n: noop_write(dq(n)))
+    for name, q in entrymod.queries().items():
+        table[name] = built_then_written(functools.partial(q, spark, SF_DIR))
+    for gate, legs in entrymod.query_legs().items():
+        for leg, q in legs.items():
+            table[f"{gate}.{leg}"] = built_then_written(
+                functools.partial(q, spark, SF_DIR)
+            )
+    return table
+
+
+def sample(table: dict, k: int = K) -> dict:
+    """One unclocked warm pass, then ``k`` clocked passes over every
+    key in table order: ``{key: [(construct_s, run_s), ...]}``."""
+    for thunk in table.values():
+        thunk()
+    out: dict = {name: [] for name in table}
+    for _ in range(k):
+        for name, thunk in table.items():
+            out[name].append(thunk())
+    return out
+
+
+def summarize(samples: list) -> dict:
+    """Per-key record from ``[(construct_s, run_s), ...]``."""
+    totals = [c + r for c, r in samples]
+    return {
+        "samples": [round(t, 4) for t in totals],
+        "median": round(statistics.median(totals), 4),
+        "spread": round(max(totals) - min(totals), 4),
+        "construct": round(statistics.median(c for c, _ in samples), 4),
+    }
+
+
+def compare(keys: dict, prior, cpus: int, sf: float) -> dict:
+    """Judge this run's per-key records against a prior record.
+
+    Returns ``{"vs", "b", "flags"}``. The prior counts only when its
+    ``cpus`` and ``sf`` match and it carries per-key samples; otherwise
+    ``vs`` is None and nothing is flagged."""
+    prior_keys = (prior or {}).get("keys") or {}
+    if (
+        not prior_keys
+        or prior.get("cpus") != cpus
+        or prior.get("sf") != sf
+        or not all(p.get("samples") for p in prior_keys.values())
+    ):
+        return {"vs": None, "b": None, "flags": []}
+    common = [
+        k for k in keys
+        if k in prior_keys and prior_keys[k]["median"] >= MIN_PRIOR_S
+    ]
+    vs = {f: prior.get(f) for f in ("git_head", "measured_at")}
+    if not common:
+        return {"vs": vs, "b": None, "flags": []}
+    b = statistics.median(
+        keys[k]["median"] / prior_keys[k]["median"] for k in common
+    )
+    flags = [
+        k for k in common
+        if all(
+            s / b > FLAG_RATIO * prior_keys[k]["median"]
+            for s in keys[k]["samples"]
+        )
+    ]
+    return {"vs": vs, "b": round(b, 4), "flags": flags}
+
+
+def _isolated_measure(name: str) -> float:
+    """The median of ONE bench key, measured in this process's own
+    session with the same table and sampler as ``main``."""
+    import __spark_entry__ as entrymod
+
     spark = make_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    if name == "shared_stream_startup":
+    if name == STARTUP:
         return timed(lambda: entrymod._shared_streams(spark, SF_DIR))
-    qs = entrymod.queries()
-    leg_m = _re.match(r"(.+)\.leg:(.+)$", name)
-    if name in qs or (
-        leg_m
-        and leg_m.group(2)
-        in getattr(entrymod, "query_legs", dict)().get(leg_m.group(1), {})
-    ):
-        q = (
-            qs[name]
-            if name in qs
-            else entrymod.query_legs()[leg_m.group(1)][leg_m.group(2)]
-        )
-
-        def run():
-            df = q(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-
-        if leg_m and name not in qs:
-            # legs: one unclocked warm run (pays staging/shared-stream
-            # startup and first-time codegen the in-run measurement
-            # never sees — legs run after their gates in a warm
-            # session), then min-of-3. Sub-second legs converge over
-            # ~3 runs (measured: store 1.11 -> 1.02 -> 0.90), and a
-            # budget bar has no 1.3x slack to absorb warm tail.
-            run()
-            return min(timed(run) for _ in range(3))
-        # gates: min-of-2, the established drift-evidence methodology
-        # (gate bars are 1.3x priors, wide enough for the warm tail).
-        return min(timed(run), timed(run))
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").repartition(
-        int(CPUS)
-    )
-    li.count()
-    iso_tmp = TMP + "_iso"
-    os.makedirs(iso_tmp, exist_ok=True)
-
-    def noop_write(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def warm_min2(fn):
-        fn()
-        return min(timed(fn), timed(fn))
-
+    tmp = tempfile.mkdtemp(prefix="qs_bench_")
     try:
-        if name == "baseline_write":
-            return warm_min2(
-                lambda: li.write.mode("overwrite").parquet(f"{iso_tmp}/b")
-            )
-        if name == "baseline_eval":
-            return warm_min2(lambda: noop_write(li))
-        m = _re.match(r"dq(\d+)_(compile|write|eval)$", name)
-        if not m:
-            raise ValueError(f"not a governed bench key: {name!r}")
-        n_rules, leg = int(m.group(1)), m.group(2)
-        suite = gen_suite27() if n_rules == 27 else gen_wide_suite(n_rules)
-        dq = add_data_quality(li, suite)
-        if leg == "compile":
-            return min(
-                timed(lambda: add_data_quality(li, suite))
-                for _ in range(3)
-            )
-        if leg == "write":
-            return warm_min2(
-                lambda: dq.write.mode("overwrite").parquet(f"{iso_tmp}/dq")
-            )
-        return warm_min2(lambda: noop_write(dq))
+        thunk = key_table(spark, tmp)[name]
+        return summarize(sample({name: thunk})[name])["median"]
     finally:
-        shutil.rmtree(iso_tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def isolated_fresh_session_sample(name: str, timeout: int = 1800):
-    """Run `_isolated_measure(name)` in a SUBPROCESS (own python, own
-    SparkSession/JVM — no shared-session block or GC pressure), return
-    the seconds or None on failure. This is the evidence source for
-    'investigated' drift notes; it is never min'd into the recorded
-    result."""
+def git_head():
     import subprocess
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    code = (
-        "import sys, json; sys.path.insert(0, sys.argv[2]); "
-        "import bench; "
-        "print('ISOLATED_SAMPLE='"
-        "+json.dumps(bench._isolated_measure(sys.argv[1])))"
-    )
     try:
-        out = subprocess.run(
-            [sys.executable, "-c", code, name, here],
-            capture_output=True,
-            text=True,
-            timeout=timeout,
-            cwd=here,
-        )
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=HERE, capture_output=True, text=True, timeout=10,
+        ).stdout.strip() or None
     except Exception:
         return None
-    for ln in out.stdout.splitlines():
-        if "ISOLATED_SAMPLE=" in ln:
-            try:
-                return float(ln.split("ISOLATED_SAMPLE=", 1)[1])
-            except ValueError:
-                return None
-    return None
-
-
-def investigate_solo_drifters(
-    drift_retries: dict,
-    sampler,
-    max_samples: int = 3,
-    threshold: float = 1.3,
-):
-    """Solo-drifter governance (VERDICT r12 'what's wrong' #1), pure so
-    tests can pin it: a drifter with NO co-drift context (fewer than
-    ``min_codrifters`` unresolved drifters this run, so
-    ``attribute_environment_codrift`` returned None and the dispersion
-    -outlier path never fired) previously fell through EVERY evidence
-    path — it could be neither amnestied nor investigated, so the
-    record shipped with a non-empty ``unexplained`` even when the
-    cause was the documented VM factor (r12: event_suite at 1.31x,
-    code path untouched). Route each such drifter through the SAME
-    isolated fresh-session re-measure the dispersion outliers get
-    (``sampler`` = ``isolated_fresh_session_sample``; injected so unit
-    tests pin the logic without a subprocess): back within
-    ``threshold`` x prior => ``investigated`` environment note; still
-    elevated => stays unexplained as a REAL-regression candidate, with
-    the isolated sample recorded as evidence either way.
-
-    ``leg_budget`` entries (round 13) take the same evidence path with
-    the bar they actually answer to: for a leg, ``prior`` IS the
-    budget (an allowance, not a measurement), so the isolated sample
-    clears the breach only when it lands back INSIDE the budget — leg
-    timings run at the end of the session under accumulated pressure
-    and show ~2x dispersion, so a fresh-session within-budget reading
-    is exactly the "session pressure, not regression" proof. A leg
-    key ``gate.leg:name`` is runnable: ``_isolated_measure`` resolves
-    it through ``query_legs()``. Gate-level drifters are sampled
-    before leg breaches under the shared ``max_samples`` bound (a
-    gate total is the stronger signal). Returns the names
-    investigated-clean."""
-    pending = sorted(
-        (
-            n
-            for n, e in drift_retries.items()
-            if not e["resolved"]
-            and not e.get("attributed")
-            and not e.get("investigated")
-            and e.get("isolated_sample") is None
-        ),
-        key=lambda n: (drift_retries[n].get("kind") == "leg_budget", n),
-    )
-    cleared = []
-    for n in pending[:max_samples]:
-        e = drift_retries[n]
-        iso = sampler(n)
-        e["isolated_sample"] = round(iso, 4) if iso is not None else None
-        if e.get("kind") == "leg_budget":
-            # the evidence bar gets the SAME 1.3x cross-context slack
-            # as gate keys: the isolated sample is itself one
-            # fresh-session measurement subject to the dispersion the
-            # threshold exists for, and requiring it to land strictly
-            # inside an allowance calibrated on a different box state
-            # would make the evidence path vacuous exactly in the
-            # slow-box phases where it's needed. The in-run ledger
-            # bar stays the budget itself (breaches always surface).
-            if iso is not None and iso <= threshold * e["prior"]:
-                e["investigated"] = (
-                    "leg-budget breach did not reproduce: isolated "
-                    f"fresh-session re-measure {iso:.2f}s is within "
-                    f"{threshold}x of the {e['prior']}s budget (vs "
-                    f"{e['final']}s in-run) — session/box pressure on "
-                    "this leg's in-run sample, not a regression"
-                )
-                cleared.append(n)
-        elif iso is not None and iso <= threshold * e["prior"]:
-            e["investigated"] = (
-                "solo drifter (no co-drift context): isolated "
-                f"fresh-session re-measure {iso:.2f}s is back within "
-                f"{threshold}x of the {e['prior']}s prior — shared-"
-                "session/environment effect confirmed for this key "
-                "individually"
-            )
-            cleared.append(n)
-    return cleared
-
-
-def attribute_environment_codrift(
-    drift_retries: dict,
-    results: dict,
-    prior_q: dict,
-    min_codrifters: int = 3,
-    dispersion_band: float = 1.5,
-):
-    """Environment co-drift auto-attribution (VERDICT r10 #2), pure so
-    tests can pin it: when >= ``min_codrifters`` still-unresolved,
-    unattributed, uninvestigated drifters remain after retries — the
-    noisy-box signature no per-query retry can clear (r10: five
-    byte-identical queries 1.3-3.6x slower on the driver's box) —
-    attribute them to the environment machine-readably instead of
-    leaving ``attributed: null``. Mutates the co-drifters' entries
-    (attributed + attribution_kind='environment') and returns the
-    evidence note (or None): co-drifter set, their median drift
-    ratio, and the run-wide median ratio over ALL keys with priors
-    (~1.0 under transient stalls, elevated under uniform slowdown).
-    The attribution asserts CO-DRIFT, not code identity — the
-    record's git_head plus the prior round's stamp let an auditor
-    diff the actual code paths.
-
-    DISPERSION GUARD (VERDICT r11 #2): the amnesty only covers
-    drifters whose ratio is within ``dispersion_band`` (default
-    1.5×) of the co-drift median — a blanket attribution would let a
-    REAL 4× regression hide inside a noisy run (r11: ratios up to
-    4.39× were auto-attributed under a 1.489 co-drift median; the
-    attribution happened to be correct, but the machinery accepted it
-    without evidence). Outliers above the band are LEFT unattributed
-    (listed in the note's ``outliers``) and must take the
-    ``investigated`` path: an isolated fresh-session re-measure."""
-    codrifters = sorted(
-        n
-        for n, e in drift_retries.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-        # direct isolated-session evidence outranks the statistical
-        # amnesty: an entry that ALREADY re-measured elevated in a
-        # fresh session is a real-regression candidate and must not
-        # be swept into the environment attribution
-        and e.get("isolated_sample") is None
-    )
-    if len(codrifters) < int(min_codrifters):
-        return None
-    ratios_all = sorted(
-        results[k] / prior_q[k]
-        for k in prior_q
-        if k in results and prior_q[k] > 0.2
-    )
-    run_median = ratios_all[len(ratios_all) // 2] if ratios_all else None
-    co_ratio_of = {
-        n: drift_retries[n]["final"] / drift_retries[n]["prior"]
-        for n in codrifters
-    }
-    co_ratios = sorted(co_ratio_of.values())
-    co_median = co_ratios[len(co_ratios) // 2]
-    in_band = [
-        n for n in codrifters
-        if co_ratio_of[n] <= float(dispersion_band) * co_median
-    ]
-    outliers = sorted(set(codrifters) - set(in_band))
-    note = {
-        "kind": "codrift",
-        "codrifters": in_band,
-        "outliers": outliers,
-        "dispersion_band": float(dispersion_band),
-        "codrift_median_ratio": round(co_median, 3),
-        "run_median_ratio": (
-            round(run_median, 3) if run_median is not None else None
-        ),
-        "n_keys_compared": len(ratios_all),
-    }
-    for n in in_band:
-        drift_retries[n]["attributed"] = (
-            f"environment: co-drift with {len(in_band) - 1} other "
-            "unchanged keys this run (median ratio "
-            f"{note['codrift_median_ratio']}; run-wide median "
-            f"{note['run_median_ratio']}) — see drift_retries.environment"
-        )
-        drift_retries[n]["attribution_kind"] = "environment"
-    return note
-
-
-# Per-leg budgets (VERDICT r11 #4): the fixed 10 s aggregate target
-# for expr_runner_agg was the wrong contract for a 12-part composite —
-# it conflated live operator work with staging debt. Each leg has a
-# NAMED budget (~1.5x its r11 driver-box time); any leg over 2 s names
-# its live work. A breach fails the DRIFT LEDGER (flows into
-# unexplained), never the gate, and is applied AFTER the environment
-# attribution so a breach cannot be amnestied.
-# Round-13 final-session recalibration: the sandbox VM INSTANCE changed
-# mid-round (uptime reset; all prior r13 records came from the previous
-# instance) and the new instance runs a uniformly slower, degrading-
-# under-sustained-load profile (same-HEAD run-wide median ratios 1.03
-# then 1.25 vs the r12 priors within two hours, gate keys and legs
-# inflated alike, isolated fresh-session re-measures equally elevated —
-# i.e. environment, not session pressure and not code: every gate key
-# stayed oracle-green and the composite totals tracked the r12 priors).
-# Budgets are ALLOWANCES for catching a single leg regressing inside a
-# stable composite, and the old values (~1.5x one box's fast-phase
-# reading) breached en masse on any slower box — including, potentially,
-# the driver's. Recalibrated values = max(previous budget, 1.3x the
-# worst same-HEAD observation across this instance's runs) — the same
-# standard 1.3x cross-context slack the gate drift guard uses, applied
-# to the most pessimistic oracle-green observation. The gate-level
-# cross-round drift guard (1.3x prior + codrift + isolated evidence)
-# remains the primary regression detector; these per-leg nets catch
-# large (~>=2x from a median phase) single-leg regressions without
-# false-alarming on documented box variance.
-LEG_BUDGETS: dict = {
-    "ann_suite": {
-        "brute": (1.4, None),
-        "ivf": (3.8, None),
-        "kmeans": (1.7, None),
-        "l2": (1.0, None),
-        "quant": (1.1, None),
-        "topk": (1.4, None),
-    },
-    "bloom_suite": {
-        "bigfile": (1.7, None),
-        "semi": (1.6, None),
-        "sql_agg": (1.1, None),
-    },
-    "corpus_io": {
-        "bucketed": (0.8, None),
-        "jsonl": (0.8, None),
-        "partitioned": (0.8, None),
-        "zorder": (0.8, None),
-    },
-    "dedup_exact": {
-        "fuzzy": (2.5, None),
-        "groups": (0.8, None),
-        "keep_best": (1.0, None),
-        "substr": (2.7, None),
-    },
-    "digest_documents": {
-        "winnow": (1.3, None),
-    },
-    "doc_ingest_suite": {
-        "clf": (2.8, None),
-        "clf_multi": (0.8, None),
-        "clf_train": (0.8, None),
-        "csv": (0.8, None),
-        "html": (1.1, None),
-        "zlib": (1.1, None),
-    },
-    "embedding_reduce": {
-        "doctor": (
-            2.5,
-            "store-health checks over the five staged stores "
-            "(metadata-priced sidecar/listing/header reads; stores "
-            "already staged by the main gate run)"
-        ),
-        "ivfpq": (2.6, None),
-        "ivfpq_idx": (1.2, None),
-        "ivfpq_idx_rr": (1.5, None),
-        "ivfpq_res": (2.4, None),
-        "ivfpq_rr": (2.5, None),
-        "pq": (0.8, None),
-        "pq_adc": (0.8, None),
-        "pq_append": (1.1, None),
-        "proj": (1.5, None),
-        "sem": (3.6, None),
-    },
-    "event_rollups": {
-        "rollup": (0.8, None),
-        "sessionize": (0.9, None),
-    },
-    "event_suite": {
-        "anom": (0.8, None),
-        "cohort": (0.8, None),
-        "funnel": (1.1, None),
-        "rollups": (1.0, None),
-        "stream_session": (0.8, None),
-    },
-    "expr_runner_agg": {
-        "approx_shard_q": (2.0, None),
-        "drift": (
-            6.0,
-            "drift report: two profile runs + shard compare"
-        ),
-        "er": (1.5, None),
-        "profile": (
-            9.0,
-            "exact full-table profiler: compact-table scan + per-column "
-            "aggregates (the flagship operator itself)"
-        ),
-        "profile_approx": (
-            5.0,
-            "approx (KLL/HLL) profiler scan"
-        ),
-        "profile_by": (
-            3.5,
-            "grouped (per-key) profiler aggregate"
-        ),
-        "profile_cat": (2.0, None),
-        "profile_shard": (
-            7.5,
-            "per-shard exact profile aggregates + mergeable-shard combine"
-        ),
-        "profile_shard_approx": (
-            3.0,
-            "sharded approx profile over the staged shards"
-        ),
-        "psi": (2.0, None),
-        "psi_cat": (
-            3.5,
-            "categorical PSI: two grouped scans + distribution join"
-        ),
-        "suggest": (
-            9.0,
-            "rule suggestion: profile pass + candidate scoring scans"
-        ),
-        "suggest_cat": (
-            2.5,
-            "categorical suggestion scoring scan"
-        ),
-    },
-    "lambda_suite": {
-        "margin": (0.8, None),
-        "subq": (0.8, None),
-    },
-    "media_features": {
-        "bmp": (2.1, None),
-        "gif": (2.0, None),
-        "imghash": (3.2, None),
-        "jpeg": (2.5, None),
-        "jpeg_prog": (3.0, None),
-        "jpeg_rst": (2.7, None),
-        "png": (2.2, None),
-        "ppm": (2.2, None),
-        "scene": (1.7, None),
-        "sniff": (1.6, None),
-        "text": (1.9, None),
-        "tiff": (2.1, None),
-        "wav": (1.6, None),
-        "wav_spec": (
-            1.8,
-            "WAV spectral features (FFT kernel over Arrow batches); "
-            "round-13 recalibration: fresh-session floors 0.93-1.15s "
-            "across clean sessions — the r12 single-observation 1.0 "
-            "budget sat inside this leg's ~1.9x cross-session decode "
-            "dispersion"
-        ),
-        "y4m": (
-            1.8,
-            "Y4M frame sampling (raw-video decode kernel); round-13 "
-            "recalibration: fresh-session floor 1.05s — same dispersion "
-            "evidence as wav_spec"
-        ),
-    },
-    "minhash_pipeline": {
-        "ingest": (1.7, None),
-        "jacc": (0.8, None),
-        "jpre": (1.2, None),
-        "pair": (
-            4.9,
-            "LSH band-bucket self-join producing candidate pairs + "
-            "exact-Jaccard verify"
-        ),
-        "sig": (2.0, None),
-    },
-    "sampling_splits": {
-        "budget_kept": (1.2, None),
-        "budget_plan": (1.3, None),
-        "cap": (0.9, None),
-        "hash_split": (0.8, None),
-        "hh": (1.1, None),
-        "hhg": (1.2, None),
-        "mix": (0.8, None),
-        "pctile": (0.9, None),
-        "stratified": (0.8, None),
-        "temperature": (0.8, None),
-        "topfrac": (1.2, None),
-        "wsample": (0.8, None),
-        "wsample_g": (0.8, None),
-    },
-    "simhash_pipeline": {
-        "pair": (1.9, None),
-        "sig": (2.4, None),
-    },
-    "skew_ops": {
-        "hits": (
-            8.8,
-            "HITS fixed-iteration: one hub+auth contribution shuffle per "
-            "round over the edge table"
-        ),
-        "joinstats": (2.2, None),
-        "pagerank": (
-            6.2,
-            "PageRank fixed-iteration: one contribution shuffle per "
-            "round, |V|-row checkpoints released"
-        ),
-        "rel": (
-            5.0,
-            "relationship profile: grouped multiplicity aggregates both "
-            "directions + orphan anti-joins"
-        ),
-        "salted_agg": (0.8, None),
-        "skew_join": (0.8, None),
-        "snapdiff": (1.3, None),
-    },
-    "stats_suite": {
-        "assoc": (1.4, None),
-        "benford": (0.8, None),
-        "colloc": (1.7, None),
-        "corr": (
-            3.9,
-            "pairwise Pearson corr matrix: one aggregate scan over "
-            "numeric column pairs"
-        ),
-        "csample": (1.5, None),
-        "entropy": (1.0, None),
-        "g3": (0.8, None),
-        "gcorr": (
-            5.9,
-            "grouped corr: per-group covariance aggregates + combine"
-        ),
-        "ldiv": (1.0, None),
-        "mad": (
-            6.4,
-            "exact MAD: compact-table scan + per-column "
-            "median-of-deviations with driver-side literals"
-        ),
-        "markov": (0.9, None),
-        "nullpat": (0.8, None),
-        "reg": (1.9, None),
-        "vocab": (0.8, None),
-    },
-    "streaming_first_seen": {
-        "first_seen": (0.8, None),
-        "store": (
-            2.1,
-            "3-mode store sinks + compaction check + (round 13, the "
-            "budget's recalibration trigger) the NEW doctor_keystore row: "
-            "check_key_store catalog/sentinel probes on the "
-            "just-compacted bucketed store — the 0.8 budget predated this "
-            "leg growth; fresh-session floor 0.90s"
-        ),
-    },
-    "temporal_joins": {
-        "asof": (0.9, None),
-        "interval": (0.8, None),
-        "range": (1.5, None),
-        "scd2": (2.1, None),
-    },
-    "text_curation2": {
-        "bpe": (2.0, None),
-        "dsir": (4.1, None),
-        "enc": (0.8, None),
-        "knlm": (5.3, None),
-        "lm": (3.6, None),
-        "pdedup": (1.5, None),
-        "win": (1.7, None),
-    },
-    "tfidf_scores": {
-        "bm25": (2.7, None),
-        "bm25_idx": (2.4, None),
-        "bm25_topk": (3.1, None),
-        "rrf": (2.3, None),
-        "tfidf": (1.1, None),
-    },
-    "windowed_dq": {
-        "batch": (0.8, None),
-        "stream": (0.8, None),
-    },
-}
-
-
-def apply_leg_budgets(
-    legs_detail: dict, drift_retries: dict, budgets_table: dict = None
-) -> dict:
-    """Pure leg-budget check (unit-tested): returns the per-leg budget
-    status for bench_detail.json and mutates ``drift_retries`` with a
-    ``kind='leg_budget'`` entry per breach — the ledger-not-gate
-    failure mode VERDICT r11 #4 asked for. A leg present in the run
-    but missing a budget is listed under ``_unbudgeted`` (new legs are
-    visible, never silently free)."""
-    table = LEG_BUDGETS if budgets_table is None else budgets_table
-    status: dict = {}
-    # union: a gate that RAN with legs but has no table entry still
-    # surfaces (all its legs under _unbudgeted) — "every gate that has
-    # legs is covered" is structural, not a hand-maintained list
-    # (VERDICT r12 #3).
-    for qname in sorted(set(table) | set(legs_detail)):
-        budgets = table.get(qname) or {}
-        got = legs_detail.get(qname) or {}
-        st: dict = {}
-        for lname, (budget, live) in budgets.items():
-            t = got.get(lname)
-            ok = t is not None and t <= budget
-            st[lname] = {"time": t, "budget": budget, "ok": bool(ok)}
-            if live:
-                st[lname]["live_work"] = live
-            if t is not None and not ok:
-                drift_retries[f"{qname}.leg:{lname}"] = {
-                    "prior": budget,
-                    "samples": [t],
-                    "final": t,
-                    "resolved": False,
-                    "kind": "leg_budget",
-                }
-        unbudgeted = sorted(set(got) - set(budgets))
-        if unbudgeted:
-            st["_unbudgeted"] = unbudgeted
-        status[qname] = st
-    return status
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from quality_spark import add_data_quality
+
+    try:
+        with open(DETAIL) as fh:
+            prior = json.load(fh)
+    except (OSError, ValueError):
+        prior = None
+    try:
+        sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        # a dir name without an sf<number> suffix must not discard the
+        # whole run's measurements at the final print
+        sf = 0.0
 
     spark = make_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    shutil.rmtree(TMP, ignore_errors=True)
-    os.makedirs(TMP, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix="qs_bench_")
+    try:
+        n_rows = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
+        t_startup = timed(lambda: entrymod._shared_streams(spark, SF_DIR))
+        table = key_table(spark, tmp)
+        sampled = sample(table)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    keys = {STARTUP: summarize([(0.0, t_startup)])}
+    keys.update((name, summarize(s)) for name, s in sampled.items())
 
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    n_rows = li.count()  # warms the scan
-
-    # The sf0.1 lineitem file is ~11 MB in 3 row groups, so the scan
-    # yields only 3 splits and per-row DQ eval runs on 3 of 32 cores.
-    # At the target scale the scan produces thousands of row-group
-    # splits naturally; the explicit repartition stands in for that and
-    # its shuffle cost is INCLUDED in the timed region — for the
-    # baseline and the DQ writes alike, so the overhead subtraction
-    # stays apples-to-apples. (Measured: dq150 write 19s -> 3-5s.)
-    li = li.repartition(int(CPUS))
-
-    results: dict[str, float] = {}
-
-    # Cross-round drift guard state — loaded BEFORE any measurement so
-    # the dq-curve/baseline keys (the BASELINE.md headline metrics) are
-    # governed too, not only the gate queries (VERDICT r10 #2: dq500_write
-    # read 2.4x its prior in the judged record, unflagged, because the
-    # guard looped entrymod.queries() only).
-    def load_prior_queries():
-        import glob
-        import re as _re
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        best, best_n = {}, -1
-        for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-            m = _re.search(r"BENCH_r(\d+)\.json$", p)
-            if not m or int(m.group(1)) <= best_n:
-                continue
-            try:
-                with open(p) as fh:
-                    d = json.load(fh)
-            except (OSError, ValueError):
-                continue
-            q = (d.get("parsed") or {}).get("queries") or {}
-            if q:
-                best, best_n = q, int(m.group(1))
-        return best, best_n
-
-    prior_q, prior_round = load_prior_queries()
-    drift_retries: dict[str, dict] = {}
-
-    def record_guarded(key: str, measure):
-        """Measure a non-gate bench key (dq curve / baselines) under
-        the SAME cross-round drift policy as the gate queries: if the
-        measurement lands >1.3x the prior round's recorded value, take
-        up to 2 more full measurements (each is itself warmup+min-of-N)
-        and keep the min, recording every sample so a surviving delta
-        is attributable."""
-        tot = measure()
-        prior = prior_q.get(key)
-        if prior and prior > 0.2 and tot > 1.3 * prior:
-            samples = [tot]
-            for _ in range(2):
-                s = measure()
-                samples.append(s)
-                tot = min(tot, s)
-                if tot <= 1.3 * prior:
-                    break
-            drift_retries[key] = {
-                "prior": round(prior, 4),
-                "samples": [round(s, 4) for s in samples],
-                "final": round(tot, 4),
-                "resolved": tot <= 1.3 * prior,
-            }
-        results[key] = tot
-
-    def timed_warm_min2(fn):
-        """One warmup run, then min of two timed runs — mirrors the
-        reference's scalameter methodology (PerRowPerfTest.scala:96-102:
-        2-4 warmups before 4 bench runs), so the per-row overheads
-        compare steady-state to steady-state; rule-compile cost is
-        reported separately below. min-of-2 because the overheads are
-        DIFFERENCES of two measurements and this VM shows transient
-        multi-second stalls (same query 1.1 s vs 19 s, idle machine)."""
-        fn()
-        return min(timed(fn), timed(fn))
-
-    def noop_write(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    # 1. no-rules write baseline (reference evaluation_method.md:35),
-    # plus a no-write EVAL baseline (noop sink: rows fully computed,
-    # nothing encoded/written) — the eval legs isolate per-rule eval
-    # cost from result-width write cost (VERDICT r05 'what's wrong' #3:
-    # dq500_write ≈ dq150_write showed the parquet write dominating
-    # past 150 rules, muddying the per-rule-eval trend).
-    record_guarded(
-        "baseline_write",
-        lambda: timed_warm_min2(
-            lambda: li.write.mode("overwrite").parquet(f"{TMP}/base")
-        ),
-    )
-    record_guarded(
-        "baseline_eval", lambda: timed_warm_min2(lambda: noop_write(li))
-    )
-
-    # 2. 27-rule DQ write — ~3.4 copies of the 8-rule fixture suite
-    suite27 = gen_suite27()
-    # compile is timed min-of-2 like everything else: the first compile
-    # of a session pays one-time Spark analysis warmup (~2 s measured,
-    # vs 0.3 s steady-state) that is session startup, not suite cost
-    dq27 = add_data_quality(li, suite27)
-    record_guarded(
-        "dq27_compile",
-        lambda: min(
-            timed(lambda: add_data_quality(li, suite27)),
-            timed(lambda: add_data_quality(li, suite27)),
-        ),
-    )
-    record_guarded(
-        "dq27_write",
-        lambda: timed_warm_min2(
-            lambda: dq27.write.mode("overwrite").parquet(f"{TMP}/dq27")
-        ),
-    )
-    record_guarded(
-        "dq27_eval", lambda: timed_warm_min2(lambda: noop_write(dq27))
-    )
-
-    # 3. 150-rule generated suite write (reference evaluation_method.md:41)
-    # + a 500-rule point so the compile/write trend over suite size is
-    # pinned per-round (VERDICT r04 #4: the dq150 overhead drifted
-    # 2x r3->r4 with no compile/write split to attribute it).
-    # Compile keys are min-of-3: compile is driver-side Spark analysis,
-    # cheap to repeat and the most stall-prone measurement here.
-    # dq1000 (round 7, VERDICT r06 next #7): one more point on the
-    # per-rule-eval curve — dq500_eval showed mild superlinearity
-    # (plan-size overhead); 1000 rules is the regime where the
-    # reference hit its 64k-method codegen cliff. Eval+compile only:
-    # the write leg at 1000 result columns times parquet encoding
-    # width, not rule evaluation, and the 150/500 writes already pin
-    # that trend.
-    for n_rules in (150, 500, 1000):
-        suite_n = gen_wide_suite(n_rules)
-        dq_n = add_data_quality(li, suite_n)
-        record_guarded(
-            f"dq{n_rules}_compile",
-            lambda suite_n=suite_n: min(
-                timed(lambda: add_data_quality(li, suite_n)),
-                timed(lambda: add_data_quality(li, suite_n)),
-                timed(lambda: add_data_quality(li, suite_n)),
-            ),
-        )
-        if n_rules <= 500:
-            record_guarded(
-                f"dq{n_rules}_write",
-                lambda dq_n=dq_n, n_rules=n_rules: timed_warm_min2(
-                    lambda: dq_n.write.mode("overwrite").parquet(
-                        f"{TMP}/dq{n_rules}"
-                    )
-                ),
-            )
-        record_guarded(
-            f"dq{n_rules}_eval",
-            lambda dq_n=dq_n: timed_warm_min2(lambda: noop_write(dq_n)),
-        )
-
-    # 4. headline oracle queries — noop-format write as the action:
-    # count() would let Catalyst prune every computed column and time
-    # only the scan; noop materializes all output columns and discards
-    # the bytes.
-    # Noise guard: this VM shows transient multi-second stalls (the
-    # same query measured 1.1 s and 19 s minutes apart on an idle
-    # machine). A query whose first timing exceeds RETRY_OVER re-times
-    # once and reports the MIN — standard noisy-host practice, bounded
-    # extra cost.
-    # Construction time is INCLUDED: a handful of gate queries do their
-    # real work eagerly while building the DataFrame (running a stream,
-    # staging JSONL/corpus files, DuckDB scoring) — timing only the
-    # noop write of their small result table would near-zero them.
-    # VERDICT r06 'what's wrong' #4: temporal_joins/skew_ops drifted
-    # +39%/+52% with zero code change because they sat UNDER the old
-    # 1.5 s threshold and never got a second sample. 0.5 s covers
-    # every query whose drift a grader would notice; the sub-0.5 s
-    # queries are construct-dominated and stable.
-    RETRY_OVER = 0.5
-
-    def run_query(q):
-        t0 = time.perf_counter()
-        df = q(spark, SF_DIR)
-        t_construct = time.perf_counter() - t0
-        t_write = timed(
-            lambda: df.write.format("noop").mode("overwrite").save()
-        )
-        return t_construct, t_write
-
-    # the construct/exec split is reported separately (VERDICT r03 #8)
-    # so round-over-round regressions can be attributed: plan changes
-    # move the exec leg, included-construction changes (stream runs,
-    # bloom builds, staging writes) move the construct leg
-    def run_query_min(q):
-        """Retry policy (VERDICT r05 'what's wrong' #2: an unexplained
-        +50% run-side drift survived the single retry): queries over
-        RETRY_OVER get a second sample; if the two samples still
-        disagree by >30% a THIRD breaks the tie — min of all. Bounded:
-        at most 3 runs, and only for the already-slow queries."""
-        t_c, t_w = run_query(q)
-        # the guard must cover the CONSTRUCT leg too — for the eager
-        # gate queries (streams, staging writes, DuckDB scoring) that
-        # is where the work is, and a transient stall there would land
-        # in the judged number unchecked
-        if t_c + t_w > RETRY_OVER:
-            t_c2, t_w2 = run_query(q)
-            lo, hi = sorted((t_c + t_w, t_c2 + t_w2))
-            if hi > 1.3 * lo:
-                t_c3, t_w3 = run_query(q)
-                if t_c3 + t_w3 < t_c2 + t_w2:
-                    t_c2, t_w2 = t_c3, t_w3
-            if t_c2 + t_w2 < t_c + t_w:
-                t_c, t_w = t_c2, t_w2
-        return t_c, t_w
-
-    # Cross-round drift guard (VERDICT r07 #1): three queries moved
-    # +55-177% between r6 and r7 with ZERO code change while another
-    # reverted its prior drift — the same-run stall retry demonstrably
-    # can't see cross-round VM noise. Compare each gate query against
-    # the PREVIOUS round's recorded value (BENCH_r{N-1}.json) and
-    # re-time (up to min-of-3 overall) any query >30% slower than its
-    # prior; record every retried sample so the judge can attribute
-    # any surviving delta to a code/gate change, not a stall.
-    # (prior_q/drift_retries are loaded at the top of main() so the
-    # dq-curve/baseline keys above run under the same guard.)
-
-    # The gate's streaming queries share ONE concurrent startup window
-    # (memoized per session). Time that run EXPLICITLY as its own key:
-    # otherwise the first stream-consuming query pays it, its stall
-    # retry reads the memoized result near-free, and min-of-samples
-    # erases the real cost from every reported number. In-session
-    # retries stay OFF for this key (a re-run reads the memoized
-    # result near-free — a retry could only fabricate a low number),
-    # but it is no longer ungoverned (VERDICT r11 #3): when it moves
-    # >1.3x vs prior, ONE isolated fresh-session startup sample (a
-    # subprocess session, where the memoization is cold) is taken and
-    # recorded; if that sample is back within threshold the entry is
-    # investigated-environment, otherwise it stays unexplained as a
-    # real startup regression.
-    if hasattr(entrymod, "_shared_streams"):
-        t_ss = timed(lambda: entrymod._shared_streams(spark, SF_DIR))
-        results["shared_stream_startup"] = t_ss
-        prior_ss = prior_q.get("shared_stream_startup")
-        if prior_ss and prior_ss > 0.2 and t_ss > 1.3 * prior_ss:
-            iso = isolated_fresh_session_sample("shared_stream_startup")
-            entry = {
-                "prior": round(prior_ss, 4),
-                "samples": [round(t_ss, 4)],
-                "final": round(t_ss, 4),
-                "resolved": False,
-                "retry_policy": "no in-session retry (memoized path); "
-                "governed by isolated fresh-session sample",
-                "isolated_sample": (
-                    round(iso, 4) if iso is not None else None
-                ),
-            }
-            if iso is not None and iso <= 1.3 * prior_ss:
-                entry["investigated"] = (
-                    "isolated fresh-session startup sample "
-                    f"{iso:.2f}s is within 1.3x of the {prior_ss:.2f}s "
-                    "prior — the in-run number carried shared-session "
-                    "pressure, not a startup regression"
-                )
-            drift_retries["shared_stream_startup"] = entry
-
-    construct: dict[str, float] = {}
-    for name, q in entrymod.queries().items():
-        t_c, t_w = run_query_min(q)
-        tot = t_c + t_w
-        prior = prior_q.get(name)
-        if prior and prior > 0.2 and tot > 1.3 * prior:
-            samples = [tot]
-            for _ in range(2):
-                c2, w2 = run_query(q)
-                samples.append(c2 + w2)
-                if c2 + w2 < tot:
-                    t_c, t_w, tot = c2, w2, c2 + w2
-                if tot <= 1.3 * prior:
-                    break
-            drift_retries[name] = {
-                "prior": round(prior, 4),
-                "samples": [round(s, 4) for s in samples],
-                "final": round(tot, 4),
-                "resolved": tot <= 1.3 * prior,
-            }
-        results[name] = tot
-        construct[name] = t_c
-
-    # per-leg attribution for the composite gates (VERDICT r05 #1/#3):
-    # each leg timed through the same construct+noop path, single
-    # sample with the same stall retry — leg times live ONLY in
-    # bench_detail.json (not the stdout line, not the headline total)
-    legs_detail: dict[str, dict[str, float]] = {}
-    for qname, legs in getattr(entrymod, "query_legs", dict)().items():
-        legs_detail[qname] = {}
-        for lname, lfn in legs.items():
-            t_c, t_w = run_query(lfn)
-            if t_c + t_w > RETRY_OVER:
-                t_c2, t_w2 = run_query(lfn)
-                if t_c2 + t_w2 < t_c + t_w:
-                    t_c, t_w = t_c2, t_w2
-            # budget-aware third sample (the query-level stall policy,
-            # applied to legs): leg timings run at the END of the
-            # session and show ~2x dispersion across same-HEAD runs
-            # under accumulated session pressure — a budget breach
-            # gets one more chance before it fails the drift ledger
-            budget = LEG_BUDGETS.get(qname, {}).get(lname)
-            if budget is not None and t_c + t_w > budget[0]:
-                t_c3, t_w3 = run_query(lfn)
-                if t_c3 + t_w3 < t_c + t_w:
-                    t_c, t_w = t_c3, t_w3
-            legs_detail[qname][lname] = round(t_c + t_w, 4)
-
+    legs = {
+        gate: {leg: keys[f"{gate}.{leg}"]["median"] for leg in by_leg}
+        for gate, by_leg in entrymod.query_legs().items()
+    }
+    leg_keys = {f"{gate}.{leg}" for gate, by_leg in legs.items() for leg in by_leg}
+    results = {k: v["median"] for k, v in keys.items() if k not in leg_keys}
+    total = round(sum(results.values()), 3)
     # derived per-row overheads in ms, reference style; the _eval
-    # variants subtract the no-write noop baseline, isolating rule
-    # EVAL cost from result-width write cost
+    # variants subtract the no-write noop baseline
     for n in (27, 150, 500, 1000):
         if f"dq{n}_write" in results:
             results[f"dq{n}_overhead_ms_per_row"] = (
@@ -1033,164 +337,30 @@ def main() -> None:
             (results[f"dq{n}_eval"] - results["baseline_eval"])
             * 1000.0 / n_rows
         )
-
-    shutil.rmtree(TMP, ignore_errors=True)
-
-    try:
-        sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        # a dir name without an sf<number> suffix must not discard the
-        # whole run's measurements at the final print
-        sf = 0.0
-
-    total = round(
-        sum(v for k, v in results.items() if not k.endswith("per_row")), 3
-    )
-    # Full-precision detail (incl. the construct split) goes to a FILE:
-    # the driver's stdout capture keeps only the last ~4 KB, and in
-    # r03/r04 the single ~5 KB JSON line was head-truncated, leaving
-    # "parsed": null in BENCH_r{N}.json (VERDICT r04 #1). Stdout gets
-    # ONE compact line, printed LAST, that fits the tail with room to
-    # spare: headline metric + all per-query totals at 3 decimals.
-    # intentional gate-shape changes THIS round — a slower number for
-    # these queries is new coverage, not regression; update each round
-    # alongside gate edits
-    gate_changes: dict[str, str] = {
-        # round-12 notes pruned (the r12 record is this round's
-        # comparison baseline, so its gate growth is already absorbed
-        # by the prior itself); stale notes must never absorb NEW
-        # drift (VERDICT r10)
-        "rng_parity": "round 13: 2 NEW columns (sfc64 lo+hi) — SFC_64 "
-        "joins the bit-exact set, pinned against numpy's bundled SFC64 "
-        "oracle (VERDICT r12 next #5); the gate gains the stream plus "
-        "its independent pure-python driver-side oracle rows",
-        "streaming_first_seen": "round 13: NEW 'doctor_keystore' row — "
-        "check_key_store runs on the gate's just-compacted bucketed "
-        "store (metadata probes only, +1 oracle-pinned row); with it "
-        "all six persisted-artifact health checks are driver-gated",
-        "embedding_reduce": "round 13: NEW 'doctor' part (VERDICT r12 "
-        "next #2) — the store-health surface runs on five staged "
-        "stores inside the gate; first call additionally stages the "
-        "near-dup store (two foreachBatch folds) and a small "
-        "big-bloom, so construct grows by the staging cost and the "
-        "gate output by 5 oracle-pinned rows",
-    }
-    # VERDICT r08 #5: join the two records — a retried query whose
-    # final time is still >threshold x prior reads 'attributed' when
-    # this round's gate_changes explains it; the judge-facing
-    # machine check is simply unexplained_drift == []
-    for name, entry in drift_retries.items():
-        entry["attributed"] = gate_changes.get(name)
-    # investigated non-gate drift: queries whose slowdown was chased to
-    # a cause OUTSIDE this round's code (recorded separately from
-    # gate_changes so a gate edit can't be confused with an
-    # environment note — the judge sees WHICH kind each entry is).
-    # Update alongside each investigation; stale notes are worse than
-    # an unexplained flag.
-    investigated: dict[str, str] = {
-        # r11 notes pruned: the r11 record (this round's comparison
-        # baseline) already carries those elevated values, so their
-        # drift is absorbed by the prior itself. Hand entries are now
-        # mostly superseded by the AUTOMATED isolated fresh-session
-        # re-measure below (VERDICT r11 #2/#3).
-    }
-    for n, e in drift_retries.items():
-        if n in investigated and not e["resolved"] and not e.get("attributed"):
-            e["investigated"] = investigated[n]
-
-    environment_note = attribute_environment_codrift(
-        drift_retries, results, prior_q
-    )
-    # Dispersion outliers (VERDICT r11 #2): drifters too far above the
-    # co-drift median for the statistical amnesty get the evidence the
-    # investigated path requires — ONE isolated fresh-session
-    # re-measure each (bounded at 3 per run; the rest stay flagged).
-    # Back-within-threshold => investigated-environment; still
-    # elevated => stays unexplained as a real-regression candidate.
-    if environment_note:
-        for n in environment_note.get("outliers", [])[:3]:
-            e = drift_retries[n]
-            iso = isolated_fresh_session_sample(n)
-            e["isolated_sample"] = round(iso, 4) if iso is not None else None
-            if iso is not None and iso <= 1.3 * e["prior"]:
-                e["investigated"] = (
-                    "dispersion outlier: isolated fresh-session "
-                    f"re-measure {iso:.2f}s is back within 1.3x of the "
-                    f"{e['prior']}s prior — shared-session/environment "
-                    "effect confirmed for this key individually"
-                )
-
-    # Leg budgets BEFORE the solo-drifter pass so budget breaches are
-    # in the ledger when it runs (round 13: they take the same
-    # evidence path, with the budget itself as the bar).
-    leg_budgets_status = apply_leg_budgets(legs_detail, drift_retries)
-
-    # Solo drifters (VERDICT r12 #1) + leg-budget breaches (round 13):
-    # anything unresolved with no co-drift context (environment_note
-    # is None, or it was already handled above) gets the same isolated
-    # fresh-session evidence pass — within its bar (1.3x prior for
-    # gate keys, the budget itself for leg keys) => investigated,
-    # still-elevated => legitimately unexplained (a real-regression
-    # candidate with the isolated sample on record). Bound 6: worst
-    # case ~3 min of subprocess re-measures, paid only on a run whose
-    # record would otherwise ship unexplained entries.
-    investigate_solo_drifters(
-        drift_retries, isolated_fresh_session_sample, max_samples=6
-    )
-
-    unexplained = sorted(
-        n
-        for n, e in drift_retries.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-    )
-    # Provenance (VERDICT r10 #5 / next #8): stamp the record with the
-    # exact commit it measured so composite/cross-round audits are
-    # self-describing rather than prose-dependent.
-    def git_head():
-        import subprocess
-
-        try:
-            return subprocess.run(
-                ["git", "rev-parse", "HEAD"],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                capture_output=True, text=True, timeout=10,
-            ).stdout.strip() or None
-        except Exception:
-            return None
+    gates = entrymod.queries()
 
     detail = {
         "metric": "quality_spark_bench_total",
         "value": total,
         "unit": "sec",
         "queries": {k: round(v, 4) for k, v in results.items()},
-        "construct": {k: round(v, 4) for k, v in construct.items()},
-        "legs": legs_detail,
-        "leg_budgets": leg_budgets_status,
-        "drift_retries": {
-            "vs_round": prior_round,
-            "threshold": 1.3,
-            "queries": drift_retries,
-            "environment": environment_note,
-            "unexplained": unexplained,
-        },
-        "gate_changes": gate_changes,
+        "construct": {k: keys[k]["construct"] for k in gates},
+        "legs": legs,
+        "passes": K,
+        "keys": keys,
+        **compare(keys, prior, int(CPUS), sf),
         "sf": sf,
         "rows": n_rows,
         "cpus": int(CPUS),
         "git_head": git_head(),
-        "measured_at": time.strftime(
-            "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-        ),
+        "measured_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_detail.json"),
-        "w",
-    ) as fh:
+    with open(DETAIL, "w") as fh:
         json.dump(detail, fh, indent=1)
         fh.write("\n")
 
+    # Stdout gets ONE compact line, printed LAST: the captured tail
+    # keeps only the last ~4 KB, so the full record goes to the file
     compact = {
         "metric": "quality_spark_bench_total",
         "value": total,
@@ -1200,15 +370,13 @@ def main() -> None:
         "rows": n_rows,
     }
     line = json.dumps(compact, separators=(",", ":"))
-    # hard guarantee against a future-coverage-growth repeat of the
-    # truncation: if the line ever outgrows a conservative tail budget,
-    # drop to headline keys only (full detail is in bench_detail.json)
+    # if the line ever outgrows a conservative tail budget, drop to the
+    # headline keys (full detail is in bench_detail.json)
     if len(line) > 3500:
-        head_keys = [
-            k for k in results
+        compact["queries"] = {
+            k: round(v, 3) for k, v in results.items()
             if k.startswith(("baseline", "dq27", "dq150", "dq500", "dq1000"))
-        ]
-        compact["queries"] = {k: round(results[k], 3) for k in head_keys}
+        }
         compact["queries_truncated_see"] = "bench_detail.json"
         line = json.dumps(compact, separators=(",", ":"))
     print(line)

@@ -1,326 +1,125 @@
-"""The judged bench-record machinery (bench.py): environment
-co-drift auto-attribution — pure-python, no Spark session."""
+"""The bench record's comparison rule, key table and sampler
+(bench.py) — pure-python, no Spark session."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import attribute_environment_codrift
+import bench
+from bench import compare, summarize
 
 
-def _entry(prior, final, resolved=False, **extra):
-    e = {
-        "prior": prior,
-        "samples": [final],
-        "final": final,
-        "resolved": resolved,
+def _record(medians: dict, cpus=4, sf=0.1, scale=1.0):
+    """A detail record whose keys each took three samples around
+    ``median * scale``."""
+    keys = {
+        k: summarize([(0.0, m * scale * f) for f in (0.98, 1.0, 1.02)])
+        for k, m in medians.items()
     }
-    e.update(extra)
-    return e
+    return {"keys": keys, "cpus": cpus, "sf": sf, "git_head": "abc"}
 
 
-def test_codrift_attributes_r10_signature():
-    """Five code-unchanged drifters (the r10 judged-record case) must
-    all read attributed with machine-readable evidence, leaving
-    unexplained empty."""
-    dr = {
-        "agg_expr_totals": _entry(0.4, 0.9),
-        "bloom_suite": _entry(1.0, 1.6),
-        "folder_customer": _entry(0.3, 0.75),
-        "folder_flatten": _entry(0.3, 0.8),
-        "soft_fail_detail": _entry(0.3, 0.6),
-        "gate_changed": _entry(1.0, 2.0, attributed="round N: new leg"),
-        "retried_ok": _entry(1.0, 1.1, resolved=True),
-    }
-    results = {k: v["final"] for k, v in dr.items()}
-    prior = {k: v["prior"] for k, v in dr.items()}
-    # plus stable keys — the run-wide median must reflect them
-    for i in range(20):
-        results[f"stable{i}"] = 1.0
-        prior[f"stable{i}"] = 1.0
-    note = attribute_environment_codrift(dr, results, prior)
-    assert note is not None and note["kind"] == "codrift"
-    assert note["codrifters"] == sorted(
-        [
-            "agg_expr_totals", "bloom_suite", "folder_customer",
-            "folder_flatten", "soft_fail_detail",
-        ]
-    )
-    assert note["codrift_median_ratio"] > 1.3
-    # transient-stall signature: most keys flat -> run median ~1.0
-    assert note["run_median_ratio"] == 1.0
-    for n in note["codrifters"]:
-        assert dr[n]["attribution_kind"] == "environment"
-        assert "co-drift" in dr[n]["attributed"]
-    # gate-changed and resolved entries untouched
-    assert dr["gate_changed"]["attributed"] == "round N: new leg"
-    assert "attribution_kind" not in dr["retried_ok"]
-    unexplained = [
-        n
-        for n, e in dr.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-    ]
-    assert unexplained == []
+MEDIANS = {f"k{i}": 0.5 + 0.25 * i for i in range(12)}
 
 
-def test_codrift_below_threshold_stays_unexplained():
-    """One or two isolated drifters are NOT an environment signature —
-    they must stay unexplained (forcing a per-query investigation),
-    and investigated entries don't count toward the threshold."""
-    dr = {
-        "a": _entry(1.0, 2.0),
-        "b": _entry(1.0, 1.9),
-        "c": _entry(1.0, 1.8, investigated="chased: intrinsic"),
-    }
-    results = {k: v["final"] for k, v in dr.items()}
-    prior = {k: v["prior"] for k, v in dr.items()}
-    assert attribute_environment_codrift(dr, results, prior) is None
-    assert "attribution_kind" not in dr["a"]
-    assert "attribution_kind" not in dr["b"]
+def test_identical_samples_flag_nothing():
+    prior = _record(MEDIANS)
+    out = compare(prior["keys"], prior, 4, 0.1)
+    assert out["vs"] == {"git_head": "abc", "measured_at": None}
+    assert out["b"] == 1.0
+    assert out["flags"] == []
 
 
-def test_codrift_uniform_slowdown_signature():
-    """Uniform box slowdown: run-wide median itself is elevated and
-    the note records it (the second environment signature)."""
-    dr = {k: _entry(1.0, 1.5) for k in ("a", "b", "c")}
-    results = {k: 1.5 for k in dr}
-    prior = {k: 1.0 for k in dr}
-    for i in range(10):
-        results[f"s{i}"] = 1.4
-        prior[f"s{i}"] = 1.0
-    note = attribute_environment_codrift(dr, results, prior)
-    assert note is not None
-    assert note["run_median_ratio"] >= 1.4
-    assert note["n_keys_compared"] == 13
+def test_single_key_slowdown_is_the_only_flag():
+    prior = _record(MEDIANS)
+    now = _record(MEDIANS)["keys"]
+    now["k5"] = _record({"k5": MEDIANS["k5"]}, scale=1.5)["keys"]["k5"]
+    out = compare(now, prior, 4, 0.1)
+    assert out["b"] == 1.0
+    assert out["flags"] == ["k5"]
 
 
-def test_codrift_dispersion_guard_excludes_outlier():
-    """VERDICT r11 #2: one 4x outlier among uniform ~1.4x co-drifters
-    must NOT be auto-attributed — it lands in the note's outliers and
-    stays unexplained until an isolated investigation covers it. The
-    in-band drifters are still attributed (unexplained == [] for them
-    without hand-editing)."""
-    dr = {f"q{i}": _entry(1.0, 1.35 + 0.02 * i) for i in range(5)}
-    dr["agg_map_counts"] = _entry(1.0, 4.39)  # the r11 near-miss
-    results = {k: v["final"] for k, v in dr.items()}
-    prior = {k: v["prior"] for k, v in dr.items()}
-    for i in range(20):
-        results[f"stable{i}"] = 1.0
-        prior[f"stable{i}"] = 1.0
-    note = attribute_environment_codrift(dr, results, prior)
-    assert note is not None
-    assert note["outliers"] == ["agg_map_counts"]
-    assert "agg_map_counts" not in note["codrifters"]
-    assert "attributed" not in dr["agg_map_counts"] or not dr[
-        "agg_map_counts"
-    ].get("attributed")
-    for i in range(5):
-        assert dr[f"q{i}"]["attribution_kind"] == "environment"
-    unexplained = [
-        n
-        for n, e in dr.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-    ]
-    assert unexplained == ["agg_map_counts"]
-    # the investigated path (fresh-session re-measure) then clears it
-    dr["agg_map_counts"]["investigated"] = "isolated re-measure: 1.0 s"
-    unexplained = [
-        n
-        for n, e in dr.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-    ]
-    assert unexplained == []
+def test_uniform_box_slowdown_flags_nothing():
+    prior = _record(MEDIANS)
+    now = _record(MEDIANS, scale=1.4)["keys"]
+    out = compare(now, prior, 4, 0.1)
+    assert out["b"] == pytest.approx(1.4, rel=1e-3)
+    assert out["flags"] == []
 
 
-def test_codrift_band_is_relative_to_median():
-    """The band scales with the median: under a genuine 2x uniform
-    slowdown a 2.6x drifter is in-band (2.6 <= 1.5 * 2.0), while a
-    4x one is not."""
-    dr = {f"q{i}": _entry(1.0, 2.0) for i in range(4)}
-    dr["ok_high"] = _entry(1.0, 2.6)
-    dr["bad"] = _entry(1.0, 4.0)
-    results = {k: v["final"] for k, v in dr.items()}
-    prior = {k: v["prior"] for k, v in dr.items()}
-    note = attribute_environment_codrift(dr, results, prior)
-    assert "ok_high" in note["codrifters"]
-    assert note["outliers"] == ["bad"]
+@pytest.mark.parametrize(
+    "prior",
+    [
+        _record(MEDIANS, cpus=8),
+        _record(MEDIANS, sf=0.01),
+        {"queries": MEDIANS, "cpus": 4, "sf": 0.1},
+        None,
+    ],
+    ids=["other_cpus", "other_sf", "no_samples", "no_prior"],
+)
+def test_prior_from_another_setup_is_not_compared(prior):
+    now = _record(MEDIANS, scale=2.0)["keys"]
+    assert compare(now, prior, 4, 0.1) == {"vs": None, "b": None, "flags": []}
 
 
-def test_leg_budgets_breach_fails_ledger_not_gate():
-    """VERDICT r11 #4: a leg over its named budget lands in the drift
-    ledger (kind=leg_budget, unresolved -> unexplained unless
-    attributed); in-budget legs read ok; legs with no budget are
-    listed, never silently free."""
-    from bench import apply_leg_budgets
+def test_flag_needs_every_sample_over_the_bar():
+    prior = _record(MEDIANS)
+    prior["keys"]["k5"] = summarize([(0.0, 2.0)] * 3)
+    now = _record(MEDIANS)["keys"]
+    now["k5"] = summarize([(0.0, 3.0), (0.0, 3.0), (0.0, 2.5)])  # 2.5 < 1.3 x 2
+    assert compare(now, prior, 4, 0.1)["flags"] == []
+    now["k5"] = summarize([(0.0, 3.0), (0.0, 3.0), (0.0, 2.7)])
+    assert compare(now, prior, 4, 0.1)["flags"] == ["k5"]
 
+
+def test_prior_under_min_is_never_flagged():
+    medians = dict(MEDIANS, tiny=0.15)
+    prior = _record(medians)
+    now = _record(medians)["keys"]
+    now["tiny"] = _record({"tiny": 0.15}, scale=3.0)["keys"]["tiny"]
+    out = compare(now, prior, 4, 0.1)
+    assert out["flags"] == []
+    assert out["b"] == 1.0
+
+
+def test_key_table_covers_every_gate_and_leg():
+    """Every gate and every leg is a key, and building the table touches
+    no Spark object, so it starts no Spark job."""
+    import __spark_entry__ as entrymod
+
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError(f"key table touched spark.{name}")
+
+    table = bench.key_table(NoSpark(), "/nonexistent")
     legs = {
-        "expr_runner_agg": {
-            "er": 0.5,
-            "profile": 12.0,  # breach (budget 9.0)
-            "profile_approx": 3.0,
-            "brand_new_leg": 1.0,  # no budget yet
-        }
+        f"{gate}.{leg}"
+        for gate, by_leg in entrymod.query_legs().items()
+        for leg in by_leg
     }
-    dr: dict = {}
-    status = apply_leg_budgets(legs, dr)
-    st = status["expr_runner_agg"]
-    assert st["er"]["ok"] and st["profile_approx"]["ok"]
-    assert not st["profile"]["ok"]
-    assert "live_work" in st["profile"]  # >2s legs name their work
-    assert st["_unbudgeted"] == ["brand_new_leg"]
-    assert dr["expr_runner_agg.leg:profile"]["kind"] == "leg_budget"
-    assert not dr["expr_runner_agg.leg:profile"]["resolved"]
-    # a leg that didn't run reads not-ok with time None (visible gap)
-    assert st["psi"]["time"] is None and not st["psi"]["ok"]
-    assert "expr_runner_agg.leg:psi" not in dr  # absent leg: no breach
+    assert set(entrymod.queries()) <= set(table)
+    assert legs <= set(table)
+    dq = {
+        f"dq{n}_{part}"
+        for n in (27, 150, 500, 1000)
+        for part in ("compile", "write", "eval")
+    } - {"dq1000_write"}
+    assert set(table) == (
+        {"baseline_write", "baseline_eval"} | dq | set(entrymod.queries()) | legs
+    )
 
 
-def test_leg_budgets_cover_every_legged_gate():
-    """VERDICT r12 #3: every gate that recorded legs in the shipped r12
-    record has a budget table entry, and a future legged gate missing
-    from the table still surfaces structurally (all legs unbudgeted)
-    instead of being silently free."""
-    import json
-
-    from bench import LEG_BUDGETS, apply_leg_budgets
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(here, "bench_detail.json")) as fh:
-        legs = json.load(fh)["legs"]
-    assert set(legs) <= set(LEG_BUDGETS)
-    # structural union: an unknown legged gate appears in the status
-    dr: dict = {}
-    status = apply_leg_budgets({"brand_new_gate": {"x": 1.0}}, dr)
-    assert status["brand_new_gate"]["_unbudgeted"] == ["x"]
-    assert dr == {}  # unbudgeted legs are visible, never breaches
-
-
-def test_solo_drifter_cleared_by_isolated_sample():
-    """VERDICT r12 #1: a drifter with no co-drift context must be
-    routed through the isolated fresh-session re-measure; back within
-    1.3x prior => investigated (unexplained empties), and the sample
-    is recorded as evidence."""
-    from bench import investigate_solo_drifters
-
-    dr = {"event_suite": _entry(1.98, 2.60)}
-    cleared = investigate_solo_drifters(dr, sampler=lambda n: 2.0)
-    assert cleared == ["event_suite"]
-    e = dr["event_suite"]
-    assert e["isolated_sample"] == 2.0
-    assert "solo drifter" in e["investigated"]
-    unexplained = [
-        n
-        for n, e in dr.items()
-        if not e["resolved"]
-        and not e.get("attributed")
-        and not e.get("investigated")
-    ]
-    assert unexplained == []
-
-
-def test_solo_drifter_still_elevated_stays_unexplained():
-    """A solo drifter whose isolated re-measure is STILL elevated is a
-    real-regression candidate: no investigated note, but the sample is
-    on record so the flag carries its evidence."""
-    from bench import investigate_solo_drifters
-
-    dr = {"event_suite": _entry(1.98, 2.60)}
-    cleared = investigate_solo_drifters(dr, sampler=lambda n: 2.61)
-    assert cleared == []
-    assert dr["event_suite"]["isolated_sample"] == 2.61
-    assert "investigated" not in dr["event_suite"]
-
-
-def test_solo_drifter_skips_handled_entries_and_respects_bound():
-    """The solo pass must not re-sample entries that already carry
-    isolated evidence (outlier path / stream-startup governance), nor
-    touch attributed/investigated/resolved ones; gate-level drifters
-    are sampled before leg breaches under the shared bound (a gate
-    total is the stronger signal); the per-run bound caps subprocess
-    cost."""
-    from bench import investigate_solo_drifters
-
+def test_sampler_warms_once_then_interleaves_passes():
     calls = []
 
-    def sampler(n):
-        calls.append(n)
-        return 1.0
+    def thunk(name):
+        return lambda: calls.append(name) or (0.0, 1.0)
 
-    dr = {
-        "already_sampled": _entry(1.0, 2.0, isolated_sample=1.9),
-        "attributed": _entry(1.0, 2.0, attributed="round N: new leg"),
-        "resolved": _entry(1.0, 1.1, resolved=True),
-        "a_gate.leg:x": {
-            "prior": 0.8, "samples": [3.0], "final": 3.0,
-            "resolved": False, "kind": "leg_budget",
-        },
-        "solo_a": _entry(1.0, 2.0),
-        "solo_b": _entry(1.0, 2.0),
-        "solo_c": _entry(1.0, 2.0),
-        "solo_d": _entry(1.0, 2.0),
-    }
-    cleared = investigate_solo_drifters(dr, sampler, max_samples=3)
-    # gates first despite 'a_gate.leg:x' sorting alphabetically ahead
-    assert calls == ["solo_a", "solo_b", "solo_c"]  # bound respected
-    assert cleared == ["solo_a", "solo_b", "solo_c"]
-    assert "isolated_sample" not in dr["a_gate.leg:x"]
-    assert dr["already_sampled"]["isolated_sample"] == 1.9
-    assert "investigated" not in dr["solo_d"]  # over the bound: flagged
-
-
-def test_leg_budget_breach_cleared_by_within_budget_isolated_sample():
-    """Round 13: a leg-budget breach takes the isolated evidence path
-    with the BUDGET as the bar — a fresh-session sample back inside
-    the budget proves end-of-session pressure, clearing the entry; a
-    sample still over budget leaves it unexplained with the evidence
-    recorded."""
-    from bench import investigate_solo_drifters
-
-    dr = {
-        "media_features.leg:y4m": {
-            "prior": 1.0, "samples": [1.27], "final": 1.27,
-            "resolved": False, "kind": "leg_budget",
-        },
-        "media_features.leg:wav_spec": {
-            "prior": 1.0, "samples": [1.15], "final": 1.15,
-            "resolved": False, "kind": "leg_budget",
-        },
-    }
-    samples = {"media_features.leg:y4m": 0.72,
-               "media_features.leg:wav_spec": 1.45}
-    cleared = investigate_solo_drifters(dr, lambda n: samples[n])
-    # the evidence bar is threshold x budget (the same 1.3x
-    # cross-context slack gate keys get), so 0.72 clears outright and
-    # 1.45 > 1.3 stays flagged with the evidence recorded
-    assert cleared == ["media_features.leg:y4m"]
-    y4m = dr["media_features.leg:y4m"]
-    assert y4m["isolated_sample"] == 0.72
-    assert "did not reproduce" in y4m["investigated"]
-    ws = dr["media_features.leg:wav_spec"]
-    assert ws["isolated_sample"] == 1.45  # evidence recorded
-    assert "investigated" not in ws  # over threshold x budget: flagged
-
-
-def test_codrift_skips_entries_with_isolated_evidence():
-    """An entry that already re-measured in an isolated fresh session
-    (e.g. shared_stream_startup governance) must not be swept into the
-    statistical environment amnesty — direct evidence outranks it."""
-    dr = {f"q{i}": _entry(1.0, 1.4) for i in range(3)}
-    dr["shared_stream_startup"] = _entry(
-        6.5, 14.1, isolated_sample=13.9
-    )
-    results = {k: v["final"] for k, v in dr.items()}
-    prior = {k: v["prior"] for k, v in dr.items()}
-    note = attribute_environment_codrift(dr, results, prior)
-    assert note is not None
-    assert "shared_stream_startup" not in note["codrifters"]
-    assert "attribution_kind" not in dr["shared_stream_startup"]
+    out = bench.sample({"a": thunk("a"), "b": thunk("b")}, k=3)
+    assert calls == ["a", "b"] * 4
+    assert out == {"a": [(0.0, 1.0)] * 3, "b": [(0.0, 1.0)] * 3}

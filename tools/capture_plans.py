@@ -4,7 +4,8 @@ can read without running Spark).
 
 Usage: python tools/capture_plans.py [--suffix after] [--only q1,q2]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32) — same session shape as bench.py.
+SPARK_GRAFT_CPUS (default: the cores this process may run on) — same
+session shape as bench.py.
 """
 
 from __future__ import annotations

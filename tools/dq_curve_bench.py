@@ -3,11 +3,11 @@
 VERDICT r07 #2: SURVEY/SCALE/BENCH quoted three different per-rule
 eval numbers (flat ~9 ns vs 17 ns at 1000 rules) because they came
 from different sessions/methodologies. This tool measures the
-150/500/1000/2000-rule eval curve with EXACTLY bench.py's methodology
-— same session config, same repartition(CPUS), same one-warmup
-min-of-2 noop-sink eval, same baseline subtraction — and prints one
-JSON table. SCALE.md and SURVEY.md quote THIS table; BENCH_r{N}'s
-dq{150,500,1000}_eval keys are the same measurement run by the driver.
+150/500/1000/2000-rule eval curve with bench.py's own session, key
+thunks and sampler (one warm pass, then the median of ``bench.K``
+interleaved noop-sink passes, with baseline subtraction) and prints
+one JSON table. SCALE.md and SURVEY.md quote THIS table; the bench's
+dq{150,500,1000}_eval keys are the same measurement.
 
 It also decomposes the biggest point: the STAGE-ONLY projection
 (encoded rules -> INT columns, no struct assembly) is timed next to
@@ -15,7 +15,7 @@ the full staged pipeline, attributing any superlinear term to either
 rule evaluation or the assemble-from-references step.
 
 Run: python tools/dq_curve_bench.py   (env: SPARK_GRAFT_SF_DIR,
-SPARK_GRAFT_CPUS — defaults sf0.1 / 32)
+SPARK_GRAFT_CPUS — defaults sf0.1 / the cores this process may use)
 """
 
 from __future__ import annotations
@@ -23,77 +23,59 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
-def timed(fn):
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
+RULES = (150, 500, 1000, 2000)
 
 
 def main() -> None:
-    from bench import gen_wide_suite, make_spark
+    import bench
+    from pyspark.sql import functions as F
 
     from quality_spark import add_data_quality
     from quality_spark.operators.runner import _encoded_sqls
 
-    spark = make_spark()
+    spark = bench.make_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    li = spark.read.parquet(f"{bench.SF_DIR}/lineitem.parquet")
     n_rows = li.count()
-    li = li.repartition(int(CPUS))
+    li = li.repartition(int(bench.CPUS))
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def eval_min2(df):
-        noop(df)  # warmup
-        return min(timed(lambda: noop(df)), timed(lambda: noop(df)))
-
-    base = eval_min2(li)
-    out = {
-        "sf_dir": SF_DIR,
-        "cpus": int(CPUS),
-        "rows": n_rows,
-        "baseline_eval_sec": round(base, 3),
-        "points": [],
-    }
-    for n_rules in (150, 500, 1000, 2000):
-        suite = gen_wide_suite(n_rules)
-        dq = add_data_quality(li, suite)
-        sec = eval_min2(dq)
-        ns = (sec - base) * 1e9 / n_rows / n_rules
-        out["points"].append(
-            {
-                "rules": n_rules,
-                "eval_sec": round(sec, 3),
-                "ns_per_row_rule": round(ns, 2),
-            }
-        )
-        print(
-            f"POINT rules={n_rules} eval={sec:.3f}s "
-            f"ns/row/rule={ns:.2f}",
-            file=sys.stderr,
-        )
+    def evals(df):
+        return bench.run_only(lambda: bench.noop_write(df))
 
     # decomposition at the top point: stage-only vs full staged
-    suite = gen_wide_suite(2000)
-    enc = _encoded_sqls(suite, li)
-    from pyspark.sql import functions as F
-
-    flat = [s for ss in enc for s in ss]
+    flat = [s for ss in _encoded_sqls(bench.gen_wide_suite(RULES[-1]), li) for s in ss]
     stage_only = li.select(
         "*",
         *[F.expr(s).cast("int").alias(f"__c{i}") for i, s in enumerate(flat)],
     )
-    so = eval_min2(stage_only)
-    full = eval_min2(add_data_quality(li, suite))
+    table = {"baseline": evals(li)}
+    table.update(
+        (n, evals(add_data_quality(li, bench.gen_wide_suite(n)))) for n in RULES
+    )
+    table["stage_only"] = evals(stage_only)
+    sec = {
+        k: bench.summarize(v)["median"] for k, v in bench.sample(table).items()
+    }
+    base = sec["baseline"]
+    out = {
+        "sf_dir": bench.SF_DIR,
+        "cpus": int(bench.CPUS),
+        "rows": n_rows,
+        "passes": bench.K,
+        "baseline_eval_sec": round(base, 3),
+        "points": [
+            {
+                "rules": n,
+                "eval_sec": round(sec[n], 3),
+                "ns_per_row_rule": round((sec[n] - base) * 1e9 / n_rows / n, 2),
+            }
+            for n in RULES
+        ],
+    }
+    so, full = sec["stage_only"], sec[RULES[-1]]
     out["decomposition_2000"] = {
         "stage_only_sec": round(so, 3),
         "full_sec": round(full, 3),
