@@ -539,19 +539,39 @@ def _sf_tag(sf_dir: str) -> str:
 
 
 def _gate_tmp() -> str:
-    """This process's ``qs_gate_`` temp dir, made on first use and
+    """This process's ``qs_gate_<pid>_`` temp dir, made on first use and
     removed at exit, so two processes never share, or delete, each
-    other's gate files."""
+    other's gate files. A killed process cannot remove its own, so the
+    first call also removes the sibling dirs whose pid is not running."""
     import atexit
+    import os
+    import re
     import shutil
     import tempfile
 
     global _GATE_TMP
     with _STAGE_LOCKS_GUARD:
         if _GATE_TMP is None:
-            _GATE_TMP = tempfile.mkdtemp(prefix="qs_gate_")
+            tmp = tempfile.gettempdir()
+            for name in os.listdir(tmp):
+                m = re.match(r"qs_gate_(\d+)_", name)
+                if m and not _pid_running(int(m.group(1))):
+                    shutil.rmtree(os.path.join(tmp, name), True)
+            _GATE_TMP = tempfile.mkdtemp(prefix=f"qs_gate_{os.getpid()}_")
             atexit.register(shutil.rmtree, _GATE_TMP, True)
     return _GATE_TMP
+
+
+def _pid_running(pid: int) -> bool:
+    import os
+
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # another user's process
+    return True
 
 
 def _staged(kind: str, sf_dir: str, build):
@@ -1347,14 +1367,8 @@ def q_embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quality_spark.llm.similarity import embedding_near_dup_pairs
 
     emb = _read(spark, sf_dir, "embeddings")
-    # mode='arrow': one vectorized pandas UDF computes all table
-    # signatures, BIT-IDENTICAL to the SQL fold the oracle replays
-    # (fold-order accumulation — similarity._signatures_arrow_udf);
-    # measured 3.8s -> 1.7s at sf0.1. dims passed explicitly: skips
-    # the one-row inference job (VERDICT r03 #4)
-    return embedding_near_dup_pairs(
-        emb, threshold=0.25, planes=8, mode="arrow", dims=64
-    )
+    # dims passed explicitly: skips the one-row inference job
+    return embedding_near_dup_pairs(emb, threshold=0.25, planes=8, dims=64)
 
 
 def _oracle_embedding_lsh_near_dup() -> str:
@@ -1435,11 +1449,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % 50 == 0)
-    # mode='arrow': numpy fold-order cell assignment, bit-identical to
-    # the SQL argmax the oracle replays (_ivf_cell_arrow_udf contract,
-    # same as the IVF gate) — the interpreted SQL fold costs ~3x here
-    # because the plan evaluates assignment once per self-join side
-    out = semantic_dedup(emb, cents, threshold=0.2, mode="arrow")
+    out = semantic_dedup(emb, cents, threshold=0.2)
     # dup_of gated with a -1 sentinel for kept rows: a nullable int64
     # column round-trips as float in some arrow/pandas paths and would
     # hash differently between engines
@@ -1500,12 +1510,11 @@ def q_embedding_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived plane_weights matrix, inlined as literals in BOTH
     engines, ascending-dim fold — so every projected double is
     bit-equal and the floor(x*1e6+0.5) scaled-int gate is exact. One
-    row per (vec_id, dim). Mode 'sql' keeps the whole projection
-    inside whole-stage codegen."""
+    row per (vec_id, dim)."""
     from quality_spark.llm.similarity import project_embeddings
 
     emb = _read(spark, sf_dir, "embeddings")
-    proj = project_embeddings(emb, out_dims=16, seed=11, dims=64, mode="sql")
+    proj = project_embeddings(emb, out_dims=16, seed=11, dims=64)
     return proj.select(
         "vec_id", F.posexplode("proj").alias("dim", "comp")
     ).select(
@@ -1580,14 +1589,11 @@ def q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic stand-in weights, mean weight per document as a pure
     projection. Margins are gated as floor(x*1e9+0.5) scaled ints —
     the arithmetic is +,*,/ with identical fold order in both engines,
-    so the doubles are bit-equal and the rounding is exact.
-    mode='arrow': the bit-identical hashlib kernel (the SQL HOF fold
-    is the oracle-replayable spec but interprets md5 per feature —
-    measured 11.4 s vs 0.8 s at sf0.1; tests pin arrow == sql)."""
+    so the doubles are bit-equal and the rounding is exact."""
     from quality_spark.llm.classifier import with_classifier_margin
 
     docs = _read(spark, sf_dir, "documents")
-    out = with_classifier_margin(docs, "text", out="m", buckets=4096, mode="arrow")
+    out = with_classifier_margin(docs, "text", out="m", buckets=4096)
     return out.select(
         "doc_id",
         F.expr(f"CAST(floor(m * {_CLF_SCALE} + 0.5) AS BIGINT)").alias(
@@ -3490,10 +3496,8 @@ def q_ivf_flat_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    # mode='arrow': numpy fold-order cell assignment, bit-identical to
-    # the SQL argmax the oracle replays (similarity._ivf_cell_arrow_udf)
     return ivf_flat_topk(
-        emb, queries, k=5, nprobe=2, centroid_stride=50, mode="arrow"
+        emb, queries, k=5, nprobe=2, centroid_stride=50
     ).select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
 
 
@@ -3518,7 +3522,7 @@ def q_kmeans_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quality_spark.llm.similarity import kmeans_centroids
 
     emb = _read(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 64)
-    cents = kmeans_centroids(emb, k=4, iters=1, mode="sql")
+    cents = kmeans_centroids(emb, k=4, iters=1)
     rows = [
         (int(cid), int(d), int(math.floor(float(x) * _KMEANS_SCALE + 0.5)))
         for cid, vec in cents
@@ -8492,13 +8496,13 @@ def _pq_books_qs():
 
 
 def q_pq_encode_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ encode (round 8) — mode='arrow': the numpy encode twin runs
-    in the gate; the oracle replays the SQL fold — their bit-identity
-    is part of the pin."""
+    """PQ encode (round 8): the gate runs the numpy encode kernel and
+    the oracle replays the SQL fold, so their bit-identity is part of
+    the pin."""
     from quality_spark.llm.pq import pq_encode
 
     books, _ = _pq_books_qs()
-    return pq_encode(_read(spark, sf_dir, "embeddings"), books, mode="arrow")
+    return pq_encode(_read(spark, sf_dir, "embeddings"), books)
 
 
 #: id anchor for the gate's IVF-PQ centroid pool: vec_id < 3200 with
@@ -8528,7 +8532,7 @@ def q_ivfpq_leg(
     from quality_spark.llm.pq import ivf_pq_topk
 
     books, qs = _pq_books_qs()
-    kw = dict(encode_mode="arrow", cell_mode="arrow")
+    kw = {}
     if rerank:
         kw["rerank"] = rerank
     else:
@@ -8565,7 +8569,6 @@ def _staged_pq_index(spark: SparkSession, sf_dir: str) -> str:
         write_pq_index(
             _read(spark, sf_dir, "embeddings"), books, root,
             centroids=_ivfpq_centroids(spark, sf_dir),
-            encode_mode="arrow", cell_mode="arrow",
         )
         return root
 
@@ -8600,12 +8603,8 @@ def _staged_pq_append_store(spark: SparkSession, sf_dir: str) -> str:
         write_pq_index(
             emb.filter(F.col("vec_id") % 2 == 0), books, root,
             centroids=_ivfpq_centroids(spark, sf_dir),
-            encode_mode="arrow", cell_mode="arrow",
         )
-        append_pq_index(
-            emb.filter(F.col("vec_id") % 2 == 1), root,
-            encode_mode="arrow", cell_mode="arrow",
-        )
+        append_pq_index(emb.filter(F.col("vec_id") % 2 == 1), root)
         return root
 
     return _staged("pqappend", sf_dir, build)
@@ -9274,7 +9273,7 @@ def q_g3_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_csample_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced sampling (sampling.cluster_balanced_sample):
-    nearest-centroid cells (the pinned ivf_cell_expr argmax,
+    nearest-centroid cells (the pinned ivf_cell_sql argmax,
     stride-50 centroids) + a deterministic portable-hash top-5 per
     cell — the diversity-preserving subset pass."""
     from quality_spark.llm.sampling import cluster_balanced_sample

@@ -8,11 +8,15 @@ the part that must be Spark-native and fast.  Training is out of
 scope (no labeled data ships with this repo); the model is whatever
 (bucket → weight) assignment the caller provides:
 
-- ``weight_sql_fn`` — a procedural weight as SQL over the bucket id
-  (used by the gate/tests as a deterministic stand-in, and usable for
-  random-feature baselines).  The whole score is then ONE pure Column
-  projection: tokenize → hash → weight → mean — fully inside
-  whole-stage codegen, NO shuffle, streaming-safe.
+- procedural weights — :func:`default_weight_sql`, or a caller's
+  ``weight_sql_fn`` as SQL over the bucket id (a deterministic
+  stand-in used by the gate and tests, and usable for random-feature
+  baselines). The score is ONE projection: tokenize → hash → weight →
+  mean, NO shuffle, streaming-safe. Its spec is :func:`margin_sql`;
+  with the default weight Spark runs the hashlib kernel of
+  :func:`_margin_arrow_udf`, which tests check against ``F.expr`` of
+  the Spark text and against the DuckDB text row for row. A custom
+  ``weight_sql_fn`` has no Python kernel, so it runs the SQL fold.
 - ``weight_table`` — a real trained model as a (bucket, weight)
   DataFrame. Scoring explodes tokens, hashes, broadcast-joins the
   weight table (a model with 2M buckets is ~30 MB — always
@@ -110,8 +114,8 @@ def margin_sql(
 
 
 def _margin_arrow_udf(buckets: int):
-    """Arrow twin of :func:`margin_sql` with the DEFAULT weight —
-    BIT-IDENTICAL: tokens split on the Java-regex ``\\s+`` class
+    """The Spark kernel of :func:`margin_sql` with the DEFAULT weight:
+    tokens split on the Java-regex ``\\s+`` class
     (ASCII — Python's bare str.split would also eat unicode
     whitespace), features ordered unigrams-then-bigrams, md5 bucket
     per feature (C-speed hashlib vs the interpreted SQL HOF fold that
@@ -153,20 +157,13 @@ def with_classifier_margin(
     out: str = "clf_margin",
     buckets: int = 1 << 20,
     weight_sql_fn: Optional[Callable[[str, str], str]] = None,
-    mode: str = "auto",
 ) -> DataFrame:
-    """Procedural-weights scoring path — no shuffle either way.
-    ``mode='sql'`` is the oracle-replayable pure Column projection
-    (md5 inside a HOF fold — interpreted, so ~20× slower; it is the
-    SPEC). ``mode='arrow'`` is the bit-identical fast twin (default
-    via 'auto' when the weight function is the default; a custom
-    ``weight_sql_fn`` forces 'sql' since arbitrary SQL weights have
-    no Python twin)."""
-    if mode == "auto":
-        mode = "arrow" if weight_sql_fn is None else "sql"
-    if mode == "arrow":
-        if weight_sql_fn is not None:
-            raise ValueError("mode='arrow' supports only the default weight")
+    """Adds the procedural-weights margin of :func:`margin_sql` — no
+    shuffle. The default weight runs the hashlib kernel (the SQL HOF
+    fold interprets md5 per feature, ~20× slower); a custom
+    ``weight_sql_fn`` runs the SQL fold, since arbitrary SQL weights
+    have no Python kernel."""
+    if weight_sql_fn is None:
         return df.withColumn(out, _margin_arrow_udf(buckets)(F.col(text_col)))
     return df.select(
         "*",

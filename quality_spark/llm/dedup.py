@@ -212,33 +212,6 @@ def minhash_sqls(hashes: str, num_perm: int, dialect: str, mode: str = "portable
     return out
 
 
-def minhash_array_sql(hashes: str, num_perm: int, empty_check: Optional[str] = None) -> str:
-    """All ``num_perm`` min-hashes in ONE ``aggregate`` pass over the
-    hash array (Spark dialect only).
-
-    Emitting one ``array_min(transform(hv, ...))`` per permutation makes
-    the hash-array column referenced N times; Catalyst's projection
-    collapse then inlines the (expensive) md5 shingle hashing into every
-    permutation — observed 16x recompute, 61s -> 4s at sf0.1.  A single
-    ``aggregate`` references the array once, so the base hashes are
-    computed once regardless of num_perm."""
-    # shiftright(), not the '>>' operator: '>>' fails to parse in the same
-    # expression as an ARRAY<BIGINT> type literal (generic-bracket clash).
-    mixes = ", ".join(
-        f"least(acc[{i}], (shiftright(h, 30) * {a}L + (h & 1073741823) * {b}L + {c}L) % {_MERSENNE61}L)"
-        for i, (a, b, c) in enumerate(_perm_coeffs(num_perm))
-    )
-    init = "array(" + ", ".join(f"{_MERSENNE61}L" for _ in range(num_perm)) + ")"
-    # The empty guard must test a CHEAP expression: size(hashes) would
-    # clone the full hash transform into the plan a second time.  Pass
-    # the pre-hash array column via empty_check when hashes is expensive.
-    guard = empty_check or hashes
-    return (
-        f"CASE WHEN size({guard}) = 0 THEN CAST(NULL AS ARRAY<BIGINT>) "
-        f"ELSE aggregate({hashes}, {init}, (acc, h) -> array({mixes})) END"
-    )
-
-
 def band_sqls(
     minhash_cols: List[str], bands: int, dialect: str, mode: str = "portable"
 ) -> List[str]:

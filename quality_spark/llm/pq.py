@@ -16,12 +16,15 @@ distance is ``m`` table lookups + adds.
 
 Spark-first shapes:
 
-- **Encode** is a PURE PROJECTION — the codebooks are inlined
-  literals (like `similarity.ivf_cell_expr`), so the corpus scan
-  emits codes at full scan speed with NO shuffle, NO join, NO UDF in
-  'sql' mode; 'arrow' mode is a bit-identical numpy twin (fold-order
-  accumulation, first-min ties) for wide codebooks where interpreted
-  HOFs would dominate.
+- **Encode** is a PURE PROJECTION — no shuffle, no join. Its spec is
+  :func:`pq_code_expr` (codebooks inlined as literals, like
+  `similarity.ivf_cell_sql`), replayed in DuckDB by
+  :func:`pq_codes_oracle_sql`; Spark runs the numpy kernel of
+  :func:`_pq_encode_arrow_udf` (fold-order accumulation, first-min
+  ties), which tests check against both texts row for row. A
+  subspace codes -1 unless its best distance is below 1e308, so a
+  NULL, NaN or ±Inf element, or a slice the row is too short for,
+  codes -1 (the NaN rule of `similarity`: NaN is handled as NULL).
 - **ADC scoring** is another pure projection: the per-query distance
   tables are embedded as array literals and summed IN SUBSPACE ORDER
   (left-to-right adds), so a DuckDB oracle replays every double
@@ -48,6 +51,8 @@ from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .similarity import _d
 
 Codebooks = List[List[List[float]]]  # [m][ksub][dsub]
 
@@ -119,7 +124,9 @@ def pq_code_expr(vec_col: str, codebooks: Codebooks) -> Column:
     Catalyst expression. Per subspace: squared-L2 to every codeword
     via a zip_with fold over the vector SLICE (dims accumulate in
     ascending order), argmin keeps the FIRST minimum (strict ``<``) so
-    ties break to the lowest code on every engine."""
+    ties break to the lowest code on every engine. A subspace codes -1
+    when no distance is below the fold's 1e308 start: NULL (missing or
+    NULL element), NaN and +Inf distances never win."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     codes = []
@@ -146,16 +153,14 @@ def pq_code_expr(vec_col: str, codebooks: Codebooks) -> Column:
 
 
 def _pq_encode_arrow_udf(codebooks: Codebooks, dims: int):
-    """Bit-identical numpy twin of :func:`pq_code_expr`: per-codeword
-    distances accumulate dim-by-dim in fold order (vectorized across
-    rows), argmin keeps the first minimum (strict ``<`` fold ==
-    np.argmin first-max). Validity is PER SUBSPACE, matching the SQL
-    fold exactly: subspace ``mi`` encodes iff ``slice(vec, mi·dsub+1,
-    dsub)`` is complete (row length ≥ (mi+1)·dsub) and NaN/NULL-free —
-    a short row still encodes its complete leading subspaces, a long
-    row ignores its tail, and any incomplete/NULL-tainted slice yields
-    -1 (zip_with pads the shorter side with NULL → NULL dist → the
-    CASE keeps the -1 init)."""
+    """The Spark kernel of :func:`pq_code_expr`: per-codeword distances
+    accumulate dim-by-dim in fold order (vectorized across rows), and
+    argmin keeps the first minimum (strict ``<`` fold == np.argmin's
+    first minimum) if it is below the fold's 1e308 start. Validity is
+    per subspace, as in the SQL: a short row still encodes its complete
+    leading subspaces and a long row ignores its tail. Missing and NULL
+    elements are NaN here, so their distances are NaN and fail the
+    1e308 test, as the SQL's NULL distances do."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -167,21 +172,14 @@ def _pq_encode_arrow_udf(codebooks: Codebooks, dims: int):
     @pandas_udf("array<int>")
     def enc(v):  # type: ignore[no-untyped-def]
         n = len(v)
-        lens = np.zeros(n, dtype=np.int64)
         mat = np.full((n, dims), np.nan, dtype=np.float64)
         for i, a in enumerate(v):
-            if a is None:
-                continue
-            arr = np.asarray(a, dtype=np.float64)
-            lens[i] = arr.shape[0]
-            take = min(arr.shape[0], dims)
-            mat[i, :take] = arr[:take]
+            if a is not None:
+                take = min(len(a), dims)
+                mat[i, :take] = a[:take]
         out = np.full((n, m), -1, dtype=np.int32)
         for mi in range(m):
             sub = mat[:, mi * dsub : (mi + 1) * dsub]
-            ok = (lens >= (mi + 1) * dsub) & ~np.isnan(sub).any(axis=1)
-            if not ok.any():
-                continue
             book = books[mi]
             ksub = book.shape[0]
             dists = np.zeros((n, ksub), dtype=np.float64)
@@ -191,7 +189,9 @@ def _pq_encode_arrow_udf(codebooks: Codebooks, dims: int):
                     diff = book[ki, d] - sub[:, d]
                     acc = acc + diff * diff
                 dists[:, ki] = acc
-            out[ok, mi] = np.argmin(dists[ok], axis=1).astype(np.int32)
+            best = np.argmin(dists, axis=1)
+            ok = dists[np.arange(n), best] < 1.0e308
+            out[ok, mi] = best[ok].astype(np.int32)
         return pd.Series([r.tolist() for r in out])
 
     return enc
@@ -202,14 +202,12 @@ def pq_encode(
     codebooks: Codebooks,
     vec_col: str = "embedding",
     out_col: str = "pq_code",
-    mode: str = "sql",
 ) -> DataFrame:
+    """Adds the ``array<int>`` PQ code of :func:`pq_code_expr`."""
     dims = len(codebooks) * len(codebooks[0][0])
-    if mode == "arrow":
-        col = _pq_encode_arrow_udf(codebooks, dims)(F.col(vec_col))
-    else:
-        col = pq_code_expr(vec_col, codebooks)
-    return df.withColumn(out_col, col)
+    return df.withColumn(
+        out_col, _pq_encode_arrow_udf(codebooks, dims)(F.col(vec_col))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -308,7 +306,6 @@ def pq_train(
     vec_col: str = "embedding",
     dims: int = 64,
     seed: int = 0,
-    mode: str = "arrow",
 ) -> Codebooks:
     """Per-subspace Lloyd's k-means from the procedural init. Each
     iteration: assign codes with the inlined-codebook projection (no
@@ -320,7 +317,7 @@ def pq_train(
     dsub = dims // m
     books = pq_codebooks_procedural(m, ksub, dsub, seed)
     for _ in range(iters):
-        enc = pq_encode(df, books, vec_col, "_code", mode=mode)
+        enc = pq_encode(df, books, vec_col, "_code")
         means = (
             enc.select("_code", F.posexplode(vec_col).alias("d", "x"))
             .filter(F.element_at("_code", (F.col("d") / dsub).cast("int") + 1) >= 0)
@@ -357,13 +354,12 @@ def quantization_error(
     df: DataFrame,
     codebooks: Codebooks,
     vec_col: str = "embedding",
-    mode: str = "sql",
 ) -> float:
     """Mean squared reconstruction error — the training objective;
     test invariant: trained ≤ procedural."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-    enc = pq_encode(df, codebooks, vec_col, "_code", mode=mode)
+    enc = pq_encode(df, codebooks, vec_col, "_code")
     err_terms = []
     for mi in range(m):
         lit = _codeword_array_literal(codebooks[mi])
@@ -390,11 +386,6 @@ def quantization_error(
 # ---------------------------------------------------------------------------
 
 
-def _d(x: float) -> str:
-    """A DOUBLE literal DuckDB parses to the EXACT double `x`."""
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
 def pq_codes_oracle_sql(
     codebooks: Codebooks, table: str = "embeddings",
     vec_col: str = "embedding", id_col: str = "vec_id",
@@ -402,7 +393,10 @@ def pq_codes_oracle_sql(
     """DuckDB replay of :func:`pq_code_expr` → one row per
     (id, m, code). Codewords go through the same VALUES-literal +
     row_number(argmin) shape the IVF oracle uses; distances accumulate
-    with the same ascending-dim sequential list_sum."""
+    with the same ascending-dim sequential list_sum. list_sum skips
+    NULL terms, so a slice with a missing or NULL element gets a NULL
+    distance explicitly, as zip_with's NULL padding gives in Spark; a
+    subspace whose best distance is not below 1e308 codes -1."""
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     rows = []
@@ -415,22 +409,28 @@ def pq_codes_oracle_sql(
             arr = ", ".join(_d(x) for x in vec)
             rows.append(f"({mi}, {code}, [{arr}]::DOUBLE[])")
     values = ", ".join(rows)
-    dist = (
-        f"list_sum(list_transform(range(1, {dsub} + 1), i -> "
+    terms = (
+        f"list_transform(range(1, {dsub} + 1), i -> "
         f"(cb.v[i] - CAST(e.{vec_col}[cb.mi * {dsub} + i] AS DOUBLE)) "
-        f"* (cb.v[i] - CAST(e.{vec_col}[cb.mi * {dsub} + i] AS DOUBLE))))"
+        f"* (cb.v[i] - CAST(e.{vec_col}[cb.mi * {dsub} + i] AS DOUBLE)))"
     )
     return f"""
 WITH cb(mi, code, v) AS (VALUES {values}),
+dists AS (
+  SELECT {id_col}, mi, code,
+         CASE WHEN list_count(t) = {dsub} THEN list_sum(t) END AS d
+  FROM (SELECT e.{id_col}, cb.mi, cb.code, {terms} AS t
+        FROM {table} e CROSS JOIN cb)
+),
 scored AS (
-  SELECT e.{id_col}, cb.mi, cb.code,
+  SELECT {id_col}, mi, code, d,
          row_number() OVER (
-           PARTITION BY e.{id_col}, cb.mi
-           ORDER BY {dist} ASC, cb.code
+           PARTITION BY {id_col}, mi ORDER BY d ASC NULLS LAST, code
          ) AS rn
-  FROM {table} e CROSS JOIN cb
+  FROM dists
 )
-SELECT {id_col}, mi, code FROM scored WHERE rn = 1
+SELECT {id_col}, mi, CASE WHEN d < {_d(1.0e308)} THEN code ELSE -1 END AS code
+FROM scored WHERE rn = 1
 """
 
 
@@ -530,25 +530,19 @@ def _corpus_codes(
     raw: list,
     id_col: str,
     vec_col: str,
-    encode_mode: str,
-    cell_mode: str,
     by_residual: bool,
 ) -> DataFrame:
     """The IVF-PQ corpus pass — ONE pure projection producing
-    (id, cell, __code): cell via the inlined normalized-centroid
-    argmax (or its bit-identical Arrow twin), code via the inlined
-    codebook fold over the raw vector (or the cell-centered residual
-    when ``by_residual``). Shared by the inline ``ivf_pq_topk`` path
-    and ``write_pq_index`` so a persisted index holds exactly the
-    codes the inline path would compute."""
-    from .similarity import _ivf_cell_arrow_udf, ivf_cell_expr
+    (id, cell, __code): the IVF cell (`similarity.ivf_cell_sql`) and
+    the PQ code (:func:`pq_code_expr`) of the raw vector, or of the
+    cell-centered residual when ``by_residual``. Shared by the inline
+    ``ivf_pq_topk`` path and ``write_pq_index`` so a persisted index
+    holds exactly the codes the inline path would compute."""
+    from .similarity import _ivf_cell_col
 
     dims = len(codebooks) * len(codebooks[0][0])
-    cell_col = (
-        _ivf_cell_arrow_udf(cents, dims)(F.col(vec_col))
-        if cell_mode == "arrow" and cents
-        else ivf_cell_expr(vec_col, cents)
-    )
+    encode = _pq_encode_arrow_udf(codebooks, dims)
+    cell_col = _ivf_cell_col(vec_col, cents)
     if by_residual:
         map_lit = "map(" + ", ".join(
             f"{cid}L, array({', '.join(f'{x!r}D' for x in vec)})"
@@ -563,19 +557,12 @@ def _corpus_codes(
             cell_col.alias("cell"),
             F.col(vec_col),
         ).select(F.col(id_col), "cell", resid.alias("__resid"))
-        code = (
-            _pq_encode_arrow_udf(codebooks, dims)(F.col("__resid"))
-            if encode_mode == "arrow"
-            else pq_code_expr("__resid", codebooks)
+        return base.select(
+            F.col(id_col), "cell", encode(F.col("__resid")).alias("__code")
         )
-        return base.select(F.col(id_col), "cell", code.alias("__code"))
-    code = (
-        _pq_encode_arrow_udf(codebooks, dims)(F.col(vec_col))
-        if encode_mode == "arrow"
-        else pq_code_expr(vec_col, codebooks)
-    )
     return df.select(
-        F.col(id_col), cell_col.alias("cell"), code.alias("__code")
+        F.col(id_col), cell_col.alias("cell"),
+        encode(F.col(vec_col)).alias("__code"),
     )
 
 
@@ -645,8 +632,6 @@ def write_pq_index(
     centroid_stride: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode_mode: str = "sql",
-    cell_mode: str = "sql",
     by_residual: bool = False,
     record_stats: bool = False,
 ) -> None:
@@ -709,8 +694,7 @@ def write_pq_index(
     raw = _raw_centroids(centroids, id_col, vec_col)
     cents = _normalize_cents(raw)
     corpus = _corpus_codes(
-        df, codebooks, cents, raw, id_col, vec_col, encode_mode,
-        cell_mode, by_residual,
+        df, codebooks, cents, raw, id_col, vec_col, by_residual
     )
     (
         corpus.select(
@@ -731,10 +715,7 @@ def write_pq_index(
         ],
     }
     if record_stats:
-        meta["build_qe"] = quantization_error(
-            df, codebooks, vec_col,
-            mode="arrow" if encode_mode == "arrow" else "sql",
-        )
+        meta["build_qe"] = quantization_error(df, codebooks, vec_col)
         meta["n_vecs"] = df.count()
     fsio.write_json(fsio.join(path, "meta.json"), meta)
     fsio.delete(pending)
@@ -744,8 +725,6 @@ def append_pq_index(
     df: DataFrame,
     path: str,
     vec_col: str = "embedding",
-    encode_mode: str = "sql",
-    cell_mode: str = "sql",
     epoch: Optional[int] = None,
     record_stats: bool = False,
 ) -> bool:
@@ -803,7 +782,7 @@ def append_pq_index(
     cents = _normalize_cents(raw)
     corpus = _corpus_codes(
         df, meta["codebooks"], cents, raw, meta["id_col"], vec_col,
-        encode_mode, cell_mode, meta["by_residual"],
+        meta["by_residual"],
     )
     (
         corpus.select(
@@ -825,10 +804,7 @@ def append_pq_index(
             # per-epoch drift evidence for pq_drift_report: batch MSE
             # under the FROZEN codebooks + batch size
             led["stats"][str(int(epoch))] = {
-                "qe": quantization_error(
-                    df, meta["codebooks"], vec_col,
-                    mode="arrow" if encode_mode == "arrow" else "sql",
-                ),
+                "qe": quantization_error(df, meta["codebooks"], vec_col),
                 "n": df.count(),
             }
         fsio.write_json(ledger, led)
@@ -1028,9 +1004,7 @@ def ivf_pq_topk(
     centroid_stride: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode_mode: str = "sql",
     by_residual: bool = False,
-    cell_mode: str = "sql",
     rerank: int = 0,
 ) -> DataFrame:
     """IVF-PQ: coarse cell pruning + ADC rescoring over the surviving
@@ -1042,9 +1016,8 @@ def ivf_pq_topk(
     ``ivf_pq_topk`` scans ~``nprobe/nlist`` of them.
 
     Plan shape (100 TB): the corpus pass is ONE pure projection —
-    cell id via the inlined normalized-centroid argmax
-    (`similarity.ivf_cell_expr`) and the PQ code via the inlined
-    codebook fold — then one broadcast semi-join against the
+    the IVF cell (`similarity.ivf_cell_sql`) and the PQ code
+    (:func:`pq_code_expr`) — then one broadcast semi-join against the
     (query, probed-cell) table (|queries| × nprobe rows) keeps only
     candidates in probed cells, and a single CASE-over-query_id ADC
     expression scores them (distance tables are literals; no explode,
@@ -1077,14 +1050,7 @@ def ivf_pq_topk(
     doubles — metadata) selected by a CASE over (query_id, cell), and
     probe cells are picked driver-side with the identical
     ascending-dim dot the in-engine fold computes (the DuckDB oracle
-    recomputes them in SQL and must agree bit-for-bit — pinned).
-
-    ``cell_mode='arrow'`` assigns cells with the bit-identical numpy
-    twin (`similarity._ivf_cell_arrow_udf`) — the right choice when
-    nlist is large (the interpreted SQL argmax fold costs
-    nlist × dims per row; the ivf gate measured ~3× on 1000 cells);
-    the SQL fold remains the oracle-replayable spec, equality pinned
-    by the existing ivf tests."""
+    recomputes them in SQL and must agree bit-for-bit — pinned)."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -1096,8 +1062,7 @@ def ivf_pq_topk(
     if by_residual:
         rawmap = dict(raw)
         corpus = _corpus_codes(
-            df, codebooks, cents, raw, id_col, vec_col, encode_mode,
-            cell_mode, by_residual=True,
+            df, codebooks, cents, raw, id_col, vec_col, by_residual=True
         )
         # probe cells driver-side (cents are already collected
         # metadata); ascending-dim sequential dot == the engine fold
@@ -1120,8 +1085,7 @@ def ivf_pq_topk(
         )
     else:
         corpus = _corpus_codes(
-            df, codebooks, cents, raw, id_col, vec_col, encode_mode,
-            cell_mode, by_residual=False,
+            df, codebooks, cents, raw, id_col, vec_col, by_residual=False
         )
 
         cent_df = F.broadcast(

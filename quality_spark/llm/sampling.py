@@ -951,7 +951,6 @@ def cluster_balanced_sample(
     vec_col: str = "embedding",
     seed: int = 0,
     salted: bool = False,
-    mode: str = "auto",
     cell_col: str = "cell",
 ) -> DataFrame:
     """Diversity-preserving subset over an embedding table: assign
@@ -967,8 +966,7 @@ def cluster_balanced_sample(
     impossible below ~2^30 rows per cell and broken by id — so the
     subset is stable across runs, partitionings, and engines.
 
-    Plan: one projection for the cell argmax (or the bit-identical
-    Arrow kernel at large nlist), then `cap_per_group`'s window —
+    Plan: one projection for the cell argmax, then `cap_per_group`'s window —
     ``salted=True`` for the two-phase skew-proof cut when one cell
     may exceed a task's sort budget. Returns the kept rows with
     ``cell_col`` attached."""
@@ -977,8 +975,7 @@ def cluster_balanced_sample(
     if int(per_cell) < 1:
         raise ValueError("per_cell must be >= 1")
     assigned = ivf_assign(
-        df, centroids, id_col=id_col, vec_col=vec_col, out=cell_col,
-        mode=mode,
+        df, centroids, id_col=id_col, vec_col=vec_col, out=cell_col
     )
     key = (
         f"concat('{int(seed)}', ':', "
@@ -1004,7 +1001,7 @@ def cluster_balanced_sample_oracle_sql(
     """DuckDB replay of :func:`cluster_balanced_sample` (projected to
     (cell, id)): the ivf-gate cell assignment (normalized-centroid
     argmax, dot folded in ascending dimension order — the pinned
-    `ivf_cell_expr` arithmetic) + the portable-hash ranked per-cell
+    `ivf_cell_sql` arithmetic) + the portable-hash ranked per-cell
     cut."""
     nrm = (
         f"sqrt(list_sum(list_transform({vec_col}, "

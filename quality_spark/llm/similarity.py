@@ -10,6 +10,22 @@
   (hash-partitioned join), then exact cosine re-ranks.
 - ``embedding_near_dup_pairs``: cosine ≥ τ near-duplicate detection via
   the same LSH bucketing (used for embedding-based dedup).
+
+Vector kernels — LSH signatures, IVF cell, JL projection — have ONE
+Spark path each: a numpy kernel behind an Arrow pandas UDF. Their SQL
+text generators (:func:`signature_sql`, :func:`ivf_cell_sql`,
+:func:`projection_array_sql`) are the spec: the DuckDB oracles are built
+from them, and the tests check the kernels against ``F.expr`` of the
+Spark text and against the DuckDB text row for row. The kernels
+accumulate over dims in the SQL fold's order, so every double (and
+every sign bit or argmax) is the same on all three.
+
+NaN rule, shared by all three: a NaN element is handled exactly as a
+NULL element, and a NaN dot product or projection as a NULL one. Arrow
+hands a NULL array element to numpy as NaN, so no kernel needs to tell
+the two apart; the SQL texts map NaN to NULL with
+``nullif(x, CAST('NaN' AS DOUBLE))`` (NaN = NaN is true in Spark and
+DuckDB), because both engines sort NaN above every number.
 """
 
 from __future__ import annotations
@@ -207,7 +223,10 @@ def signature_sql(
 ) -> str:
     """LSH bit-signature SQL: sign of projection onto pseudo-random ±1
     hyperplanes, weights inlined as literals (see ``plane_weights``) —
-    portable by construction across Spark and DuckDB dialects."""
+    portable by construction across Spark and DuckDB dialects. A plane's
+    bit is 1 iff its projection is > 0; a NULL projection (NULL vector,
+    row shorter than ``dims``, NULL element) and a NaN one (NaN element,
+    or +Inf meeting -Inf) give bit 0."""
     ws = plane_weights(planes, seed, dims)
     bits = []
     for p in range(planes):
@@ -235,12 +254,11 @@ def signature_sql(
                 f"THEN {raw} ELSE NULL END)"
             )
             one = f"CAST({1 << p} AS BIGINT)"
-        bits.append(f"(CASE WHEN ({proj}) > 0 THEN {one} ELSE 0 END)")
+        bits.append(
+            f"(CASE WHEN nullif({proj}, CAST('NaN' AS DOUBLE)) > 0 "
+            f"THEN {one} ELSE 0 END)"
+        )
     return "(" + " + ".join(bits) + ")"
-
-
-def _signature(vec_col: str, planes: int, seed: int, dims: int = 64) -> Column:
-    return F.expr(signature_sql(vec_col, planes, seed, "spark", dims))
 
 
 def _infer_dims(df: DataFrame, vec_col: str) -> int:
@@ -256,41 +274,29 @@ def with_lsh_bucket(
     planes: int = 8,
     seed: int = 7,
     out: str = "lsh_bucket",
-    mode: str = "fast",
     dims: Optional[int] = None,
 ) -> DataFrame:
+    """Adds the one-table LSH signature of :func:`signature_sql`."""
     dims = dims or _infer_dims(df, vec_col)
-    if mode == "arrow":
-        # single-table arrow kernel (tables=1) — same bit-exactness
-        # contract as _with_lsh_tables; without this branch the mode
-        # would silently fall through to the interpreted SQL fold
-        sig = _signatures_arrow_udf(planes, 1, seed, dims)(F.col(vec_col))[0]
-        return df.select("*", sig.alias(out))
-    return df.select("*", _signature(vec_col, planes, seed, dims).alias(out))
+    sig = _signatures_arrow_udf(planes, 1, seed, dims)(F.col(vec_col))[0]
+    return df.select("*", sig.alias(out))
 
 
 def _signatures_arrow_udf(planes: int, tables: int, seed: int, dims: int):
-    """All per-table signatures in ONE Arrow-vectorized pandas UDF.
+    """All per-table signatures in ONE Arrow-vectorized pandas UDF —
+    table ``t`` is :func:`signature_sql` with seed ``seed + 1000·t``.
 
-    BIT-IDENTICAL to the SQL fold in :func:`signature_sql`: float32
-    components widen to float64 exactly, ±1 weights multiply exactly,
-    and the accumulation loops over dims IN FOLD ORDER (vectorized over
-    rows), so every partial double sum — and therefore every sign bit —
-    matches the JVM/DuckDB evaluation exactly.  numpy's pairwise
+    float32 components widen to float64 exactly, ±1 weights multiply
+    exactly, and the accumulation loops over dims IN FOLD ORDER
+    (vectorized over rows), so every partial double sum — and therefore
+    every sign bit — equals the Spark and DuckDB folds. numpy's pairwise
     reduction (np.dot / .sum()) would round differently and could flip
-    a near-zero projection's sign, silently changing buckets.
+    a near-zero projection's sign. A NaN sum fails ``> 0``, which is
+    the module's NaN rule for a bit.
 
-    ~100× faster than the interpreted HOF lambda path: tables×planes
+    ~100× faster than the interpreted HOF lambda fold: tables×planes
     projections per row become dims×(tables·planes) fused row-batch
-    FMAs per Arrow batch.
-
-    NaN caveat — OUT of the bit-exactness contract: for a genuine NaN
-    element Spark SQL's ``NaN > 0`` is TRUE (NaN sorts greatest) so
-    the fold sets that plane's bit, while numpy's ``nan > 0`` is False
-    (bit 0); Arrow also cannot distinguish a NULL array element from
-    NaN. Vectors containing NaN/NULL elements may therefore bucket
-    differently across modes — pre-filter them (one
-    ``exists(v, isnan)`` projection) if they can occur."""
+    FMAs per Arrow batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -306,23 +312,15 @@ def _signatures_arrow_udf(planes: int, tables: int, seed: int, dims: int):
         out = np.empty(len(v), dtype=object)
         full_idx, full_rows = [], []
         for i, x in enumerate(v):
-            if x is None:
-                # SQL path: slice(NULL)->NULL projection -> every bit 0
-                # -> signature 0 (NOT a NULL array, which posexplode
-                # would silently drop from every table)
-                out[i] = zero_sig
-                continue
-            a = np.asarray(x, dtype=np.float64)
-            if a.shape[0] < dims:
-                # truncated vectors: zip_with null-pads → NULL
-                # projection → every bit 0 → signature 0 in every
-                # table. Match that instead of crashing np.stack on
-                # ragged rows. (LONGER vectors truncate to dims on
-                # both paths — signature_sql slices first.)
+            # a NULL or short vector has a NULL projection: every bit 0,
+            # so signature 0 in every table (NOT a NULL array, which
+            # posexplode would silently drop from every table); a long
+            # one is sliced to dims like the SQL
+            if x is None or len(x) < dims:
                 out[i] = zero_sig
             else:
                 full_idx.append(i)
-                full_rows.append(a[:dims])
+                full_rows.append(np.asarray(x[:dims], dtype=np.float64))
         if full_rows:
             M = np.stack(full_rows)  # n × dims
             acc = np.zeros((M.shape[0], W.shape[0]))
@@ -342,25 +340,13 @@ def _signatures_arrow_udf(planes: int, tables: int, seed: int, dims: int):
 
 def _with_lsh_tables(
     df: DataFrame, vec_col: str, planes: int, tables: int, seed: int,
-    mode: str = "fast", dims: Optional[int] = None,
+    dims: Optional[int] = None,
 ) -> DataFrame:
     """Multi-table SRP-LSH (OR-amplification): one signature per table;
     a pair is a candidate if ANY table agrees. Output exploded to
-    (table_idx, sig) so the join shuffles on small keys.
-
-    ``mode='arrow'`` computes all signatures in one vectorized pandas
-    UDF (bit-identical to the SQL fold — see
-    :func:`_signatures_arrow_udf`); 'fast'/'portable' stay pure-SQL."""
+    (table_idx, sig) so the join shuffles on small keys."""
     dims = dims or _infer_dims(df, vec_col)
-    if mode == "arrow":
-        sigs = _signatures_arrow_udf(planes, tables, seed, dims)(F.col(vec_col))
-    else:
-        sigs = F.array(
-            *[
-                _signature(vec_col, planes, seed + 1000 * t, dims)
-                for t in range(tables)
-            ]
-        )
+    sigs = _signatures_arrow_udf(planes, tables, seed, dims)(F.col(vec_col))
     return df.select("*", F.posexplode(sigs).alias("table_idx", "sig"))
 
 
@@ -373,7 +359,6 @@ def lsh_bucket_topk(
     planes: int = 4,
     tables: int = 8,
     seed: int = 7,
-    mode: str = "fast",
     dims: Optional[int] = None,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to rows sharing an LSH
@@ -385,10 +370,10 @@ def lsh_bucket_topk(
     the one-row inference job (and its full-scan risk on filtered
     views)."""
     dims = dims or _infer_dims(df, vec_col)
-    corpus = _with_lsh_tables(df, vec_col, planes, tables, seed, mode, dims).select(
+    corpus = _with_lsh_tables(df, vec_col, planes, tables, seed, dims).select(
         F.col(id_col).alias("neighbor_id"), "table_idx", "sig"
     )
-    qs = _with_lsh_tables(queries, vec_col, planes, tables, seed, mode, dims).select(
+    qs = _with_lsh_tables(queries, vec_col, planes, tables, seed, dims).select(
         F.col(id_col).alias("query_id"), "table_idx", "sig"
     )
     cand = (
@@ -424,7 +409,6 @@ def embedding_near_dup_pairs(
     planes: int = 4,
     tables: int = 8,
     seed: int = 7,
-    mode: str = "fast",
     dims: Optional[int] = None,
     max_bucket_size: Optional[int] = None,
 ) -> DataFrame:
@@ -439,7 +423,7 @@ def embedding_near_dup_pairs(
     from .dedup import bucket_candidate_pairs
 
     dims = dims or _infer_dims(df, vec_col)
-    sig = _with_lsh_tables(df, vec_col, planes, tables, seed, mode, dims).select(
+    sig = _with_lsh_tables(df, vec_col, planes, tables, seed, dims).select(
         F.col(id_col).alias("id"), "table_idx", "sig"
     )
     # one shuffle on (table, sig), pairs expanded within each bucket —
@@ -515,59 +499,83 @@ def _normalized_centroids(centroids: DataFrame, id_col: str, vec_col: str) -> li
     return out
 
 
-def _centroid_array_literal(cents: list) -> str:
-    parts = []
-    for cid, vec in cents:
-        arr = ", ".join(f"{x!r}D" for x in vec)
-        # cid as BIGINT: corpus ids routinely exceed int32 at scale
-        parts.append(f"named_struct('cid', {cid}L, 'v', array({arr}))")
-    return "array(" + ", ".join(parts) + ")"
+def _d(x: float) -> str:
+    """A DOUBLE literal DuckDB parses to the EXACT double ``x`` (a bare
+    decimal literal goes through DECIMAL and can be a last ulp off)."""
+    return f"CAST('{x!r}' AS DOUBLE)"
 
 
-def ivf_cell_expr(vec_col: str, cents: list) -> Column:
+def ivf_cell_sql(vec: str, cents: list, dialect: str = "spark") -> str:
     """Cell assignment as a PURE PROJECTION: argmax over an inlined
     normalized-centroid literal of dot(vec, c_hat) (vec's own norm is
     constant across centroids, so dot with normalized centroids ranks
-    identically to cosine). No join, no shuffle — on a 1000-executor
-    cluster the corpus scan assigns cells at full scan speed, the IVF
-    build's one shuffle is the (id, cell) output partitioning if the
-    caller wants it. Ties keep the lowest cid (strict >)."""
-    lit = _centroid_array_literal(cents)
+    identically to cosine). No join, no shuffle.
+
+    The fold starts from (cid -1, score -1e308) and takes a centroid
+    only when its dot is strictly greater, so ties keep the lowest cid
+    (centroids are cid-sorted). A NULL dot never wins, and a NaN dot is
+    NULL (module NaN rule), so a NULL vector, a row whose length is not
+    the centroid dims (zip_with pads the shorter side with NULL), and a
+    NULL or NaN element all give cell -1."""
+    if not cents:
+        return "CAST(-1 AS BIGINT)"
+    nan = "CAST('NaN' AS DOUBLE)"
+    if dialect == "spark":
+        lit = "array(" + ", ".join(
+            f"named_struct('cid', {cid}L, 'v', array("
+            + ", ".join(f"{x!r}D" for x in v) + "))"
+            for cid, v in cents
+        ) + ")"
+        dot = (
+            f"aggregate(zip_with(CAST(__qs_c.v AS ARRAY<DOUBLE>), {vec}, "
+            f"(w, x) -> w * CAST(x AS DOUBLE)), 0.0D, (acc, t) -> acc + t)"
+        )
+        # score every centroid ONCE in a transform, then fold for the
+        # argmax — the single-fold form evaluates the dot twice per
+        # centroid (both CASE branches)
+        scored = (
+            f"transform({lit}, __qs_c -> named_struct("
+            f"'cid', __qs_c.cid, 's', nullif({dot}, {nan})))"
+        )
+        return (
+            f"aggregate({scored}, named_struct('cid', -1L, 's', "
+            f"CAST(-1.0e308 AS DOUBLE)), (__qs_acc, __qs_x) -> "
+            f"CASE WHEN __qs_x.s > __qs_acc.s THEN __qs_x "
+            f"ELSE __qs_acc END).cid"
+        )
+    dims = len(cents[0][1])
+    lit = "[" + ", ".join(
+        f"{{'cid': CAST({cid} AS BIGINT), 'v': ["
+        + ", ".join(_d(x) for x in v) + "]}"
+        for cid, v in cents
+    ) + "]"
+    # DuckDB's list_sum skips NULL terms, so the NULL-element and
+    # length cases are guarded explicitly to match zip_with's NULL dot
     dot = (
-        f"aggregate(zip_with(CAST(__qs_c.v AS ARRAY<DOUBLE>), {vec_col}, "
-        f"(w, x) -> w * CAST(x AS DOUBLE)), 0.0D, (acc, t) -> acc + t)"
+        f"(CASE WHEN len({vec}) = {dims} AND "
+        f"len(list_filter({vec}, x -> x IS NULL)) = 0 THEN "
+        f"list_sum(list_transform(range(1, {dims} + 1), "
+        f"i -> c.v[i] * CAST({vec}[i] AS DOUBLE))) END)"
     )
-    # score every centroid ONCE in a transform, then fold for the
-    # argmax — the single-fold form evaluates the dot twice per
-    # centroid (both CASE branches), doubling the per-row cost
-    scored = f"transform({lit}, __qs_c -> named_struct('cid', __qs_c.cid, 's', ({dot})))"
-    fold = (
-        f"aggregate({scored}, named_struct('cid', -1L, 's', CAST(-1.0e308 AS DOUBLE)), "
-        f"(__qs_acc, __qs_x) -> CASE WHEN __qs_x.s > __qs_acc.s "
-        f"THEN __qs_x ELSE __qs_acc END).cid"
+    scored = (
+        f"list_transform({lit}, c -> "
+        f"{{'cid': c.cid, 's': nullif({dot}, {nan})}})"
     )
-    return F.expr(fold)
+    init = f"[{{'cid': CAST(-1 AS BIGINT), 's': {_d(-1.0e308)}}}]"
+    return (
+        f"list_reduce(list_concat({init}, {scored}), (a, b) -> "
+        f"CASE WHEN b.s > a.s THEN b ELSE a END).cid"
+    )
 
 
 def _ivf_cell_arrow_udf(cents: list, dims: int):
-    """Arrow/numpy twin of :func:`ivf_cell_expr` — BIT-IDENTICAL cell
-    assignment: float32 components widen exactly, the per-centroid dot
-    accumulates over dims IN FOLD ORDER (vectorized over rows), and
-    argmax keeps the FIRST maximum (strict ``>`` fold == np.argmax
-    first-max; centroids are cid-sorted, so ties break to the lowest
-    cid on both paths). Rows whose length differs from ``dims`` in
-    EITHER direction assign cell -1, matching the SQL fold's NULL-dot
-    behavior (zip_with null-pads the SHORTER side — for a long row the
-    centroid side pads — so the dot is NULL and the init struct
-    survives).
-
-    NaN caveat — OUT of the bit-exactness contract: a genuine NaN
-    element makes every SQL dot NaN, and ``NaN > init`` is TRUE under
-    Spark's NaN-sorts-greatest semantics, so the SQL fold assigns the
-    FIRST centroid; this kernel returns cell -1 instead (Arrow can't
-    distinguish NULL elements from NaN, and -1 is the only safe
-    answer for both). Pre-filter NaN-bearing vectors if they can
-    occur."""
+    """The Spark kernel of :func:`ivf_cell_sql`: float32 components
+    widen exactly, the per-centroid dot accumulates over dims IN FOLD
+    ORDER (vectorized over rows), NaN dots drop to -inf, and argmax
+    keeps the FIRST maximum (== the strict ``>`` fold over cid-sorted
+    centroids) if it beats the fold's -1e308 start. Rows whose length
+    differs from ``dims`` in either direction, and NULL vectors, get
+    cell -1; a NULL element arrives as NaN and so gets -1 too."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -580,44 +588,28 @@ def _ivf_cell_arrow_udf(cents: list, dims: int):
         out = np.full(len(v), -1, dtype=np.int64)
         full_idx, full_rows = [], []
         for i, x in enumerate(v):
-            if x is None:
-                continue
-            a = np.asarray(x, dtype=np.float64)
-            # NaN elements (Arrow's encoding of NULL array entries)
-            # must also yield -1: the SQL dot is NULL for every
-            # centroid, and np.argmax over an all-NaN row would
-            # otherwise pick index 0
-            if a.shape[0] == dims and not np.isnan(a).any():
+            if x is not None and len(x) == dims:
                 full_idx.append(i)
-                full_rows.append(a)
+                full_rows.append(np.asarray(x, dtype=np.float64))
         if full_rows:
             M = np.stack(full_rows)  # n × dims
             acc = np.zeros((M.shape[0], C.shape[0]))
             for d in range(dims):
                 acc += M[:, d : d + 1] * C[:, d]
-            out[np.array(full_idx)] = cids[np.argmax(acc, axis=1)]
+            acc[np.isnan(acc)] = -np.inf
+            best = np.argmax(acc, axis=1)
+            ok = acc[np.arange(len(best)), best] > -1.0e308
+            out[np.array(full_idx)[ok]] = cids[best[ok]]
         return pd.Series(out)
 
     return cell
 
 
-#: above this many inlined doubles (nlist × dims) the centroid SQL
-#: literal stops being a reasonable expression tree — at real-corpus
-#: nlist (≈ √corpus) it reaches multi-MB of parsed text per query —
-#: and mode='auto' switches to the bit-identical Arrow kernel
-IVF_LITERAL_MAX = 10_000
-
-
-def _resolve_ivf_mode(mode: str, cents: list) -> str:
-    """'auto' -> 'arrow' when the centroid literal would exceed
-    IVF_LITERAL_MAX inlined doubles, else 'sql'. Explicit modes pass
-    through (VERDICT r03 "Next round" #4)."""
-    if mode != "auto":
-        return mode
+def _ivf_cell_col(vec_col: str, cents: list) -> Column:
+    """The IVF cell column of ``vec_col`` (see :func:`ivf_cell_sql`)."""
     if not cents:
-        return "sql"
-    nlist, dims = len(cents), len(cents[0][1])
-    return "arrow" if nlist * dims > IVF_LITERAL_MAX else "sql"
+        return F.lit(-1).cast("bigint")
+    return _ivf_cell_arrow_udf(cents, len(cents[0][1]))(F.col(vec_col))
 
 
 def ivf_assign(
@@ -626,20 +618,10 @@ def ivf_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out: str = "cell",
-    mode: str = "auto",
 ) -> DataFrame:
-    """Adds the IVF cell id column (see :func:`ivf_cell_expr`;
-    ``mode='arrow'`` uses the vectorized numpy kernel — bit-identical
-    assignment, ~10-100× faster per row at large nlist; the default
-    'auto' picks it whenever the centroid literal would exceed
-    IVF_LITERAL_MAX inlined doubles)."""
+    """Adds the IVF cell id column (see :func:`ivf_cell_sql`)."""
     cents = _normalized_centroids(centroids, id_col, vec_col)
-    if _resolve_ivf_mode(mode, cents) == "arrow":
-        dims = len(cents[0][1]) if cents else 0
-        return df.select(
-            "*", _ivf_cell_arrow_udf(cents, dims)(F.col(vec_col)).alias(out)
-        )
-    return df.select("*", ivf_cell_expr(vec_col, cents).alias(out))
+    return df.select("*", _ivf_cell_col(vec_col, cents).alias(out))
 
 
 def ivf_flat_topk(
@@ -651,7 +633,6 @@ def ivf_flat_topk(
     centroid_stride: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
 ) -> DataFrame:
     """IVF-Flat ANN: corpus rows are inverted-listed by nearest
     centroid (pure projection, no shuffle); each query probes its
@@ -667,17 +648,11 @@ def ivf_flat_topk(
     if centroids is None:
         centroids = df.filter(F.col(id_col) % centroid_stride == 0)
     cents = _normalized_centroids(centroids, id_col, vec_col)
-
-    cell_col = (
-        _ivf_cell_arrow_udf(cents, len(cents[0][1]))(F.col(vec_col))
-        if _resolve_ivf_mode(mode, cents) == "arrow" and cents
-        else ivf_cell_expr(vec_col, cents)
-    )
     corpus = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cv"),
         _norm(vec_col).alias("__cn"),
-        cell_col.alias("cell"),
+        _ivf_cell_col(vec_col, cents).alias("cell"),
     )
     # query side is small: score all centroids and keep nprobe per
     # query via a window (same ordering as the corpus argmax:
@@ -730,11 +705,10 @@ def kmeans_centroids(
     iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "arrow",
 ) -> list:
     """Lloyd's k-means for IVF centroid tables, DataFrame-native:
-    each iteration assigns cells with the inlined-centroid projection
-    (:func:`ivf_cell_expr` / arrow kernel — no shuffle on the corpus)
+    each iteration assigns cells with the IVF cell kernel
+    (:func:`ivf_cell_sql` — no shuffle on the corpus)
     and recomputes means with ONE posexplode → groupBy(cell, dim)
     aggregation (map-side combined; shuffle carries k × dims partial
     rows per task). Only the k × dims centroid matrix ever reaches the
@@ -742,7 +716,7 @@ def kmeans_centroids(
     runs are reproducible modulo float-sum merge order.
 
     Returns the centroid list usable as ``ivf_flat_topk``'s
-    ``centroids`` input (via a DataFrame) or :func:`ivf_cell_expr`.
+    ``centroids`` input (via a DataFrame) or :func:`ivf_cell_sql`.
     Iterative and order-sensitive in its float sums — deliberately NOT
     oracle-gated; invariants are pinned in tests instead."""
     import math
@@ -760,16 +734,10 @@ def kmeans_centroids(
         cents.append((i, [x / n for x in v]))
     if not cents:
         return []
-    dims = len(cents[0][1])
 
     for _ in range(iters):
-        cell = (
-            _ivf_cell_arrow_udf(cents, dims)(F.col(vec_col))
-            if mode == "arrow"
-            else ivf_cell_expr(vec_col, cents)
-        )
         assigned = df.select(
-            cell.alias("cell"),
+            _ivf_cell_col(vec_col, cents).alias("cell"),
             F.col(vec_col).alias("v"),
             _norm(vec_col).alias("_vn"),
         )
@@ -777,9 +745,11 @@ def kmeans_centroids(
         # (x / row_norm), not the raw ones — assignment maximizes
         # cosine, so the update must too; a raw mean lets one
         # large-norm outlier drag the centroid and the cosine
-        # objective can regress
+        # objective can regress. Unassigned rows (cell -1) form a group
+        # no centroid reads: a filter on the cell would be pushed below
+        # the projection and run the kernel a second time
         means = (
-            assigned.filter((F.col("cell") >= 0) & (F.col("_vn") > 0))
+            assigned.filter(F.col("_vn") > 0)
             .select("cell", "_vn", F.posexplode("v").alias("dim", "x"))
             .groupBy("cell", "dim")
             .agg(F.avg(F.col("x").cast("double") / F.col("_vn")).alias("m"))
@@ -812,13 +782,12 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
     max_cluster_size: Optional[int] = None,
 ) -> DataFrame:
     """Semantic near-duplicate removal in the SemDeDup shape (Abbas et
     al. 2023, arXiv:2303.09540 — public): every embedding is assigned
-    to its nearest centroid as a PURE PROJECTION (:func:`ivf_cell_expr`
-    / the bit-identical Arrow kernel — no shuffle on the corpus scan),
+    to its nearest centroid as a PURE PROJECTION (:func:`ivf_cell_sql`
+    — no shuffle on the corpus scan),
     and within each cluster an item is marked a duplicate when some
     smaller-id member has cosine >= threshold with it. Deterministic
     keep policy: smallest id in a duplicate neighborhood always
@@ -848,7 +817,7 @@ def semantic_dedup(
     surface the build brief adds on top of SURVEY §2.
     """
     assigned = ivf_assign(
-        df, centroids, id_col=id_col, vec_col=vec_col, out="__sd_cell", mode=mode
+        df, centroids, id_col=id_col, vec_col=vec_col, out="__sd_cell"
     )
     sides = assigned.select(
         F.col(id_col).alias("id"),
@@ -903,6 +872,20 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
+def _projectable_sql(vec: str, dims: int, dialect: str) -> str:
+    """TRUE iff the first ``dims`` elements of ``vec`` exist and are
+    neither NULL nor NaN — the rows the JL projection projects."""
+    if dialect == "spark":
+        return (
+            f"size({vec}) >= {dims} AND NOT exists(slice({vec}, 1, {dims}), "
+            f"x -> x IS NULL OR isnan(x))"
+        )
+    return (
+        f"len({vec}) >= {dims} AND len(list_filter({vec}[1:{dims}], "
+        f"x -> x IS NULL OR isnan(x))) = 0"
+    )
+
+
 def projection_sql(
     vec: str,
     out_dims: int,
@@ -916,7 +899,10 @@ def projection_sql(
     inline as literals, so a DuckDB oracle replays the projection
     EXACTLY: same literals, same ascending-dim fold order, bit-equal
     doubles). Achlioptas 2003 (public) shows ±1 entries satisfy the JL
-    lemma with the same distortion guarantees as Gaussians."""
+    lemma with the same distortion guarantees as Gaussians. The DuckDB
+    terms are NULL for an unprojectable row (see
+    :func:`projection_array_sql`), because its list_sum would skip NULL
+    elements instead."""
     import math
 
     ws = plane_weights(out_dims, seed, dims)
@@ -935,22 +921,43 @@ def projection_sql(
                 f"list_sum(list_transform(range(1, {dims} + 1), "
                 f"i -> CAST({vec}[i] AS DOUBLE) * ({lit})[i]))"
             )
-            # NULL parity with the Spark fold (see signature_sql)
             proj = (
-                f"(CASE WHEN len({vec}) >= {dims} AND "
-                f"len(list_filter({vec}[1:{dims}], x -> x IS NULL)) = 0 "
+                f"(CASE WHEN {_projectable_sql(vec, dims, dialect)} "
                 f"THEN {raw} ELSE NULL END)"
             )
-        out.append(f"(({proj}) * {scale!r})")
+        # a NaN component (+Inf meeting -Inf) is NULL, as Arrow hands
+        # the kernel's NaN back to Spark
+        out.append(f"nullif(({proj}) * {scale!r}, CAST('NaN' AS DOUBLE))")
     return out
 
 
+def projection_array_sql(
+    vec: str,
+    out_dims: int,
+    seed: int,
+    dialect: str = "spark",
+    dims: int = 64,
+) -> str:
+    """The whole projected vector: :func:`projection_sql`'s terms as one
+    array, or NULL (not an array of NULLs) for a NULL vector, a row
+    shorter than ``dims``, or a NULL or NaN element among the first
+    ``dims``. ±Inf elements project to ±Inf, or to a NULL component
+    where +Inf meets -Inf."""
+    terms = ", ".join(projection_sql(vec, out_dims, seed, dialect, dims))
+    arr = f"array({terms})" if dialect == "spark" else f"[{terms}]"
+    return (
+        f"(CASE WHEN {_projectable_sql(vec, dims, dialect)} "
+        f"THEN {arr} ELSE NULL END)"
+    )
+
+
 def _projection_arrow_udf(out_dims: int, seed: int, dims: int):
-    """Arrow twin of :func:`projection_sql` — BIT-IDENTICAL: float32
-    inputs widen exactly, each output dim accumulates over input dims
-    in ascending fold order (vectorized over rows), and the 1/sqrt(k)
-    scale multiplies once at the end, exactly like the SQL form. Rows
-    with wrong length or NULL elements project to NULL."""
+    """The Spark kernel of :func:`projection_array_sql`: float32 inputs
+    widen exactly, each output dim accumulates over input dims in
+    ascending fold order (vectorized over rows), and the 1/sqrt(k)
+    scale multiplies once at the end, exactly like the SQL form. A NULL
+    element arrives as NaN, so one isnan check covers both; a NaN
+    component goes back to Spark as NULL."""
     import math
 
     import numpy as np
@@ -965,12 +972,12 @@ def _projection_arrow_udf(out_dims: int, seed: int, dims: int):
         out = [None] * len(v)
         full_idx, full_rows = [], []
         for i, x in enumerate(v):
-            if x is None:
+            if x is None or len(x) < dims:
                 continue
-            a = np.asarray(x, dtype=np.float64)
-            if a.shape[0] >= dims and not np.isnan(a[:dims]).any():
+            a = np.asarray(x[:dims], dtype=np.float64)
+            if not np.isnan(a).any():
                 full_idx.append(i)
-                full_rows.append(a[:dims])
+                full_rows.append(a)
         if full_rows:
             M = np.stack(full_rows)  # n × dims
             acc = np.zeros((M.shape[0], out_dims))
@@ -984,12 +991,6 @@ def _projection_arrow_udf(out_dims: int, seed: int, dims: int):
     return proj
 
 
-#: above this many inlined weight doubles (out_dims × dims) the
-#: projection literal stops being a reasonable expression tree and
-#: mode='auto' switches to the bit-identical Arrow kernel
-PROJECTION_LITERAL_MAX = 10_000
-
-
 def project_embeddings(
     df: DataFrame,
     out_dims: int = 16,
@@ -997,32 +998,17 @@ def project_embeddings(
     vec_col: str = "embedding",
     out: str = "proj",
     dims: Optional[int] = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """Adds a JL random-projection column (array<double>, length
-    ``out_dims``): the standard embedding-compression step before
-    near-dup / ANN at corpus scale — 64→16 dims cuts every downstream
-    shuffle's vector payload 4× while pairwise distances distort by
-    only ~(1±ε) with ε ≈ sqrt(8·ln(n)/out_dims) (JL lemma).
+    ``out_dims``; see :func:`projection_array_sql`): the standard
+    embedding-compression step before near-dup / ANN at corpus scale —
+    64→16 dims cuts every downstream shuffle's vector payload 4× while
+    pairwise distances distort by only ~(1±ε) with
+    ε ≈ sqrt(8·ln(n)/out_dims) (JL lemma).
 
-    PURE PROJECTION: no shuffle, no join — on a 1000-executor cluster
-    this runs at full scan speed inside whole-stage codegen ('sql'
-    mode) or as one Arrow batch per partition ('arrow' mode,
-    bit-identical fold order)."""
+    PURE PROJECTION: no shuffle, no join — one Arrow batch per
+    partition."""
     dims = dims or _infer_dims(df, vec_col)
-    if mode == "auto":
-        mode = "arrow" if out_dims * dims > PROJECTION_LITERAL_MAX else "sql"
-    if mode == "arrow":
-        return df.select(
-            "*", _projection_arrow_udf(out_dims, seed, dims)(F.col(vec_col)).alias(out)
-        )
-    exprs = projection_sql(vec_col, out_dims, seed, "spark", dims)
-    # whole-array NULL for unprojectable rows (short, NULL element, or
-    # NULL vector) — matching the Arrow kernel's shape instead of an
-    # array of 16 NULL elements
-    arr = (
-        f"CASE WHEN size({vec_col}) >= {dims} AND NOT exists("
-        f"slice({vec_col}, 1, {dims}), x -> x IS NULL) "
-        f"THEN array({', '.join(exprs)}) ELSE NULL END"
+    return df.select(
+        "*", _projection_arrow_udf(out_dims, seed, dims)(F.col(vec_col)).alias(out)
     )
-    return df.select("*", F.expr(arr).alias(out))

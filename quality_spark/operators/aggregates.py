@@ -359,15 +359,3 @@ def bloom_agg_bytes(df: DataFrame, site: BloomAggSite) -> bytes:
             big_bloom_from(df, site.value_sql, expected, root, fpp)
         )
     return data
-
-
-def bloom_agg_column(df: DataFrame, site: BloomAggSite) -> DataFrame:
-    """:func:`bloom_agg_bytes` as a 1-row DataFrame (createDataFrame,
-    not F.lit: keeps the possibly-MB-scale bitset out of the plan
-    text). Callers combining SEVERAL sites should fuse the bytes into
-    one local relation instead — 1-row local crossJoins cost ~12 s each
-    (see operators/expression_runner.py)."""
-    return df.sparkSession.createDataFrame(
-        [(bytearray(bloom_agg_bytes(df, site)),)],
-        schema=f"{site.placeholder} binary",
-    )

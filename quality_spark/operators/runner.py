@@ -57,10 +57,6 @@ def _encoded_sqls(suite: RuleSuite, df: Optional[DataFrame]) -> List[List[str]]:
     return out
 
 
-def _empty_rule_map() -> Column:
-    return F.create_map().cast("map<bigint,int>")
-
-
 def _assemble(
     suite: RuleSuite,
     per_set_enc_sqls: Sequence[Sequence[str]],

@@ -121,8 +121,35 @@ def _id_struct_sql(arg: str, b64: str, op: str = "="):
     return f"({pair} OR {_null_guard(fields)})"
 
 
+def _sub_outside_literals(regex: "re.Pattern", repl, sql: str) -> str:
+    """``regex.sub(repl, sql)``, except that a match starting inside a
+    string literal or a comment stays as it is: ``"as_uuid(a, b) =
+    '…'"`` is text, not a comparison. The rule is tokenized only once
+    a match is found, so text without one costs no tokenizing."""
+    spans = None
+
+    def guarded(m: "re.Match") -> str:
+        nonlocal spans
+        if spans is None:
+            from ..expr import tokenize
+
+            spans, at = [], 0
+            for t in tokenize(sql):
+                if t.kind in ("string", "comment"):
+                    spans.append((at, at + len(t.text)))
+                at += len(t.text)
+        # strictly inside: a match may itself start with a literal
+        # ('uuid' = as_uuid(…)), and no match starts a comment
+        if any(a < m.start() < b for a, b in spans):
+            return m.group(0)
+        return repl(m)
+
+    return regex.sub(guarded, sql)
+
+
 def rewrite_encoded_filters(sql: str) -> str:
-    """Apply the pushdown rewrites to one SQL text (idempotent)."""
+    """Apply the pushdown rewrites to one SQL text (idempotent). Text
+    inside string literals and comments is left as it is."""
 
     def _eq_form(lower_arg: str, higher_arg: str, op: str, lit: str) -> str:
         if op == "<=>":
@@ -150,9 +177,10 @@ def rewrite_encoded_filters(sql: str) -> str:
         got = _id_struct_sql(m.group(3), m.group(1), m.group(2))
         return got if got is not None else m.group(0)
 
-    out = _IN_RE.sub(in_list, sql)
-    out = _EQ_RE.sub(eq, out)
-    out = _EQ_REV_RE.sub(eq_rev, out)
-    out = _B64_EQ_RE.sub(b64_eq, out)
-    out = _B64_EQ_REV_RE.sub(b64_eq_rev, out)
+    out = sql
+    for regex, repl in (
+        (_IN_RE, in_list), (_EQ_RE, eq), (_EQ_REV_RE, eq_rev),
+        (_B64_EQ_RE, b64_eq), (_B64_EQ_REV_RE, b64_eq_rev),
+    ):
+        out = _sub_outside_literals(regex, repl, out)
     return out

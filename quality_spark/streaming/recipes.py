@@ -1574,8 +1574,6 @@ def neardup_to_store(
 def pq_appends_to_store(
     store_path: str,
     vec_col: str = "embedding",
-    encode_mode: str = "sql",
-    cell_mode: str = "sql",
     monitor_qe: bool = False,
 ):
     """``foreachBatch`` handler folding VECTOR batches into an
@@ -1604,7 +1602,6 @@ def pq_appends_to_store(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         append_pq_index(
             batch_df, store_path, vec_col=vec_col,
-            encode_mode=encode_mode, cell_mode=cell_mode,
             epoch=int(epoch_id), record_stats=monitor_qe,
         )
 

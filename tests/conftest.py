@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import pytest
 
@@ -10,9 +12,13 @@ def spark():
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
+    # managed tables go to this session's own warehouse: the default
+    # ./spark-warehouse is shared by every test process in the checkout
+    warehouse = tempfile.mkdtemp(prefix="qs_test_warehouse_")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("quality-spark-tests")
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -23,6 +29,7 @@ def spark():
     )
     spark.sparkContext.setLogLevel("WARN")
     yield spark
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -65,3 +65,44 @@ def test_concurrent_processes_keep_their_staged_files(tmp_path):
     assert paths[0] != paths[1]
     # each process removed its own gate root at exit
     assert not [p for p in tmp_path.iterdir() if p.name.startswith("qs_gate_")]
+
+
+_HOLD_GATE_DIR = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+import __spark_entry__ as entrymod
+
+print(entrymod._gate_tmp(), flush=True)
+sys.stdin.read()  # hold the dir until stdin closes
+"""
+
+
+def test_dirs_of_killed_processes_are_removed(tmp_path):
+    """A SIGKILLed process cannot run its exit hook, so its gate dir
+    stays behind; the next process's first ``_gate_tmp()`` removes it
+    and keeps the dir of a process that is still running."""
+    import signal
+
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+
+    def hold():
+        p = subprocess.Popen(
+            [sys.executable, "-c", _HOLD_GATE_DIR, REPO],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env,
+        )
+        return p, p.stdout.readline().strip()
+
+    killed, killed_dir = hold()
+    live, live_dir = hold()
+    assert os.path.basename(killed_dir).startswith(f"qs_gate_{killed.pid}_")
+    killed.send_signal(signal.SIGKILL)
+    killed.wait(timeout=60)  # reaped: a zombie's pid still answers
+    assert os.path.isdir(killed_dir) and os.path.isdir(live_dir)
+
+    sweeper, sweeper_dir = hold()
+    sweeper.communicate("", timeout=120)
+    assert not os.path.exists(killed_dir)
+    assert os.path.isdir(live_dir)
+    assert not os.path.exists(sweeper_dir)  # removed at normal exit
+    live.communicate("", timeout=120)
+    assert not os.path.exists(live_dir)

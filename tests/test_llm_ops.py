@@ -362,18 +362,29 @@ def test_dedup_keep_list(spark, docs):
     assert len(out) == sub.count()
 
 
+def _lsh_tables_by_sql(df, planes, tables, seed, dims):
+    """``_with_lsh_tables`` spelled with ``F.expr`` of its SQL spec."""
+    from quality_spark.llm.similarity import signature_sql
+
+    sigs = F.array(*[
+        F.expr(signature_sql("embedding", planes, seed + 1000 * t, "spark", dims))
+        for t in range(tables)
+    ])
+    return df.select("*", F.posexplode(sigs).alias("table_idx", "sig"))
+
+
 def test_lsh_arrow_signatures_bit_identical(spark, sf_dir):
-    """mode='arrow' (vectorized numpy, fold-order accumulation) must
-    produce BIT-identical signatures to the pure-SQL fold — bucket
+    """The numpy signature kernel (fold-order accumulation) must give
+    BIT-identical signatures to ``F.expr`` of the SQL fold — bucket
     membership may not drift between the scale path and the oracle
     path."""
     from quality_spark.llm.similarity import _with_lsh_tables
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = _with_lsh_tables(emb, "embedding", 8, 4, 7, "arrow").select(
+    a = _with_lsh_tables(emb, "embedding", 8, 4, 7).select(
         "vec_id", "table_idx", "sig"
     )
-    p = _with_lsh_tables(emb, "embedding", 8, 4, 7, "portable").select(
+    p = _lsh_tables_by_sql(emb, 8, 4, 7, 64).select(
         "vec_id", "table_idx", "sig"
     )
     assert a.exceptAll(p).count() == 0 and p.exceptAll(a).count() == 0
@@ -393,23 +404,34 @@ def test_lsh_arrow_tolerates_short_vectors(spark):
         ],
         "vec_id int, embedding array<float>",
     )
-    a = _with_lsh_tables(df, "embedding", 4, 2, 7, "arrow", dims=64)
-    p = _with_lsh_tables(df, "embedding", 4, 2, 7, "portable", dims=64)
+    a = _with_lsh_tables(df, "embedding", 4, 2, 7, dims=64)
+    p = _lsh_tables_by_sql(df, 4, 2, 7, 64)
     ga = {(r["vec_id"], r["table_idx"]): r["sig"] for r in a.collect()}
     gp = {(r["vec_id"], r["table_idx"]): r["sig"] for r in p.collect()}
     assert ga == gp
     assert all(ga[(2, t)] == 0 and ga[(3, t)] == 0 for t in range(2))
 
 
+def _ivf_cells_by_sql(df, cents_df):
+    """``ivf_assign`` spelled with ``F.expr`` of its SQL spec."""
+    from quality_spark.llm.similarity import _normalized_centroids, ivf_cell_sql
+
+    cents = _normalized_centroids(cents_df, "vec_id", "embedding")
+    return df.select(
+        "vec_id", F.expr(ivf_cell_sql("embedding", cents)).alias("cell")
+    )
+
+
 def test_ivf_arrow_cells_bit_identical(spark, sf_dir):
-    """Arrow IVF cell assignment must agree with the SQL argmax fold on
-    every row — same fold-order sums, same first-max tie-break."""
+    """The numpy IVF cell kernel must agree with ``F.expr`` of the SQL
+    argmax fold on every row — same fold-order sums, same first-max
+    tie-break."""
     from quality_spark.llm.similarity import ivf_assign
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = emb.filter(F.col("vec_id") % 50 == 0)
-    a = ivf_assign(emb, cents, mode="arrow").select("vec_id", "cell")
-    s = ivf_assign(emb, cents, mode="sql").select("vec_id", "cell")
+    a = ivf_assign(emb, cents).select("vec_id", "cell")
+    s = _ivf_cells_by_sql(emb, cents)
     assert a.exceptAll(s).count() == 0 and s.exceptAll(a).count() == 0
     assert a.count() > 0
 
@@ -455,8 +477,8 @@ def test_lsh_arrow_null_embedding_gets_zero_sig(spark):
     df = spark.createDataFrame(
         [(1, [0.5] * 64), (2, None)], "vec_id int, embedding array<float>"
     )
-    a = _with_lsh_tables(df, "embedding", 4, 2, 7, "arrow", dims=64)
-    p = _with_lsh_tables(df, "embedding", 4, 2, 7, "portable", dims=64)
+    a = _with_lsh_tables(df, "embedding", 4, 2, 7, dims=64)
+    p = _lsh_tables_by_sql(df, 4, 2, 7, 64)
     ga = sorted((r["vec_id"], r["table_idx"], r["sig"]) for r in a.collect())
     gp = sorted((r["vec_id"], r["table_idx"], r["sig"]) for r in p.collect())
     assert ga == gp
@@ -471,8 +493,8 @@ def test_ivf_arrow_wrong_length_vector_is_cell_minus_one(spark):
         "vec_id int, embedding array<float>",
     )
     cents = df.filter(F.col("vec_id") % 50 == 0)
-    a = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents, mode="arrow").collect()}
-    s = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents, mode="sql").collect()}
+    a = {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents).collect()}
+    s = {r["vec_id"]: r["cell"] for r in _ivf_cells_by_sql(df, cents).collect()}
     assert a == s
     assert a[2] == -1 and a[3] == -1  # both too-long and too-short
 
@@ -507,7 +529,7 @@ def test_kmeans_centroids_improve_ivf(spark, sf_dir):
         cdf = spark.createDataFrame(
             [(cid, v) for cid, v in cents], "vec_id long, embedding array<double>"
         )
-        assigned = ivf_assign(emb, cdf, mode="arrow")
+        assigned = ivf_assign(emb, cdf)
         # cosine of each row to its assigned centroid
         rows = assigned.select("embedding", "cell").collect()
         cmap = dict(cents)
@@ -525,31 +547,6 @@ def test_kmeans_centroids_improve_ivf(spark, sf_dir):
     for _, v in k5:
         assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-9
     assert objective(k5) >= objective(k0) - 1e-9
-
-
-def test_ivf_auto_mode_switches_on_literal_size(spark, emb):
-    # mode='auto' must keep the pure-SQL projection for small centroid
-    # tables (codegen, zero python) but switch to the Arrow kernel
-    # before the inlined literal explodes (VERDICT r03 #4)
-    from quality_spark.llm.similarity import (
-        IVF_LITERAL_MAX,
-        _resolve_ivf_mode,
-        ivf_assign,
-    )
-
-    small = [(i, [0.0] * 64) for i in range(10)]       # 640 doubles
-    large = [(i, [0.0] * 64) for i in range(200)]      # 12_800 doubles
-    assert _resolve_ivf_mode("auto", small) == "sql"
-    assert _resolve_ivf_mode("auto", large) == "arrow"
-    assert _resolve_ivf_mode("sql", large) == "sql"    # explicit wins
-    assert 10 * 64 < IVF_LITERAL_MAX < 200 * 64
-
-    big_cents = emb.filter(F.col("vec_id") % 2 == 0).limit(200)
-    plan = ivf_assign(emb, big_cents)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # auto chose the kernel
-    small_cents = emb.filter(F.col("vec_id") % 50 == 0).limit(10)
-    plan2 = ivf_assign(emb, small_cents)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan2  # auto kept codegen SQL
 
 
 def test_lsh_dims_passthrough_skips_inference_job(spark, emb, monkeypatch):
@@ -1914,16 +1911,16 @@ def test_semantic_dedup_policy_and_skew_guard(spark):
 
 
 def test_random_projection_modes_and_distortion(spark, sf_dir):
-    """project_embeddings: (1) the Arrow kernel is BIT-identical to the
-    SQL fold (same ascending-dim accumulation) incl. NULL/short-row
-    parity; (2) the JL property holds on real testdata — median
-    pairwise-distance distortion under 64→16 projection stays within
-    the lemma's ballpark."""
+    """project_embeddings: (1) the numpy kernel is BIT-identical to
+    ``F.expr`` of the SQL fold (same ascending-dim accumulation) incl.
+    NULL/short-row parity; (2) the JL property holds on real testdata —
+    median pairwise-distance distortion under 64→16 projection stays
+    within the lemma's ballpark."""
     import math
 
     import numpy as np
 
-    from quality_spark.llm.similarity import project_embeddings
+    from quality_spark.llm.similarity import project_embeddings, projection_array_sql
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(100)
     bad = spark.createDataFrame(
@@ -1931,10 +1928,10 @@ def test_random_projection_modes_and_distortion(spark, sf_dir):
         "vec_id long, embedding array<float>",
     )
     both = emb.select("vec_id", "embedding").unionByName(bad)
-    a = {r["vec_id"]: r["p"] for r in project_embeddings(
-        both, out_dims=16, seed=11, dims=64, mode="sql", out="p").collect()}
+    a = {r["vec_id"]: r["p"] for r in both.select("vec_id", F.expr(
+        projection_array_sql("embedding", 16, 11, "spark", 64)).alias("p")).collect()}
     b = {r["vec_id"]: r["p"] for r in project_embeddings(
-        both, out_dims=16, seed=11, dims=64, mode="arrow", out="p").collect()}
+        both, out_dims=16, seed=11, dims=64, out="p").collect()}
     assert set(a) == set(b)
     for k in a:
         if a[k] is None:
@@ -2089,11 +2086,11 @@ def test_compression_ratio_values_and_nulls(spark):
 
 
 def test_classifier_arrow_matches_sql(spark, sf_dir):
-    """with_classifier_margin mode='arrow' must be BIT-identical to
-    the SQL fold (same token split, feature order, md5 bucket, and
-    left-to-right double accumulation), including whitespace-heavy
-    and empty docs."""
-    from quality_spark.llm.classifier import with_classifier_margin
+    """with_classifier_margin's hashlib kernel must be BIT-identical to
+    ``F.expr`` of the SQL fold (same token split, feature order, md5
+    bucket, and left-to-right double accumulation), including
+    whitespace-heavy and empty docs."""
+    from quality_spark.llm.classifier import margin_sql, with_classifier_margin
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(80)
     extra = spark.createDataFrame(
@@ -2101,10 +2098,10 @@ def test_classifier_arrow_matches_sql(spark, sf_dir):
         "doc_id long, text string",
     )
     both = docs.select("doc_id", "text").unionByName(extra)
-    s = {r["doc_id"]: r["m"] for r in with_classifier_margin(
-        both, "text", out="m", buckets=4096, mode="sql").collect()}
+    s = {r["doc_id"]: r["m"] for r in both.select("doc_id", F.expr(
+        margin_sql("text", "spark", buckets=4096)).alias("m")).collect()}
     a = {r["doc_id"]: r["m"] for r in with_classifier_margin(
-        both, "text", out="m", buckets=4096, mode="arrow").collect()}
+        both, "text", out="m", buckets=4096).collect()}
     assert set(s) == set(a)
     for k in s:
         assert s[k] == a[k], (k, s[k], a[k])  # bit-equal, not approx
@@ -2359,7 +2356,7 @@ def test_pq_adc_topk_matches_numpy_on_codes(spark, emb):
 
     books = pq_codebooks_procedural(8, 16, 8, seed=5)
     queries = pq_queries_procedural(1, 64, seed=6)
-    enc = pq_encode(emb, books, mode="sql")
+    enc = pq_encode(emb, books)
     codes = {r["vec_id"]: r["pq_code"] for r in enc.select("vec_id", "pq_code").collect()}
     dt = np.asarray(_distance_tables(books, queries[0][1]))
     scored = sorted(
@@ -2377,26 +2374,26 @@ def test_pq_adc_topk_matches_numpy_on_codes(spark, emb):
 
 
 def test_pq_encode_wrong_length_rows(spark):
-    from quality_spark.llm.pq import pq_codebooks_procedural, pq_encode
+    from quality_spark.llm.pq import pq_code_expr, pq_codebooks_procedural, pq_encode
 
     books = pq_codebooks_procedural(2, 4, 4, seed=1)  # dims=8
     df = spark.createDataFrame(
         [(0, [0.1] * 8), (1, [0.1] * 5), (2, None)],
         "vec_id bigint, embedding array<float>",
     )
-    by_mode = {}
-    for mode in ("sql", "arrow"):
-        rows = {
-            r["vec_id"]: r["pq_code"]
-            for r in pq_encode(df, books, mode=mode).collect()
-        }
+    by_path = {}
+    for path, enc in (
+        ("sql", df.withColumn("pq_code", pq_code_expr("embedding", books))),
+        ("kernel", pq_encode(df, books)),
+    ):
+        rows = {r["vec_id"]: r["pq_code"] for r in enc.collect()}
         # per-subspace validity: the 5-long row's first subspace
         # (slice 1..4) is complete and encodes; its second is short -> -1
-        assert rows[1][0] >= 0 and rows[1][1] == -1, mode
-        assert all(c >= 0 for c in rows[0]), mode
-        assert rows[2] == [-1, -1], mode
-        by_mode[mode] = rows
-    assert by_mode["sql"] == by_mode["arrow"]
+        assert rows[1][0] >= 0 and rows[1][1] == -1, path
+        assert all(c >= 0 for c in rows[0]), path
+        assert rows[2] == [-1, -1], path
+        by_path[path] = rows
+    assert by_path["sql"] == by_path["kernel"]
 
 
 def test_rrf_fuse_hand_check(spark):
@@ -2741,8 +2738,7 @@ def test_retrieve_hybrid_recipe_matches_manual_composition(spark, emb, sf_dir):
 def test_ivf_pq_residual_oracle_parity_and_modes(spark, emb, sf_dir):
     """by_residual=True (the FAISS default): DuckDB replays cells,
     python-selected probes, residual codes, in-SQL distance tables and
-    the subspace-ordered adds bit-for-bit; arrow cell/encode twins
-    equal the SQL folds."""
+    the subspace-ordered adds bit-for-bit."""
     import duckdb
 
     from quality_spark.llm.pq import (
@@ -2754,22 +2750,12 @@ def test_ivf_pq_residual_oracle_parity_and_modes(spark, emb, sf_dir):
 
     books = pq_codebooks_procedural(4, 8, 16, 7)
     qs = pq_queries_procedural(3, 64, seed=9)
-    sql_mode = sorted(
+    got = sorted(
         (int(r[0]), int(r[1]), r[2], int(r[3]))
         for r in ivf_pq_topk(emb, books, qs, k=4, nprobe=3, by_residual=True)
         .select("query_id", "vec_id", "adc", "rank")
         .collect()
     )
-    arrow_mode = sorted(
-        (int(r[0]), int(r[1]), r[2], int(r[3]))
-        for r in ivf_pq_topk(
-            emb, books, qs, k=4, nprobe=3, by_residual=True,
-            encode_mode="arrow", cell_mode="arrow",
-        )
-        .select("query_id", "vec_id", "adc", "rank")
-        .collect()
-    )
-    assert sql_mode == arrow_mode
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')"
@@ -2780,7 +2766,7 @@ def test_ivf_pq_residual_oracle_parity_and_modes(spark, emb, sf_dir):
             ivf_pq_oracle_sql(books, qs, k=4, nprobe=3, by_residual=True)
         ).fetchall()
     )
-    assert sql_mode == want and len(want) == 12
+    assert got == want and len(want) == 12
 
 
 def test_ivf_pq_residual_zero_centroid_equals_raw(spark, emb):

@@ -4,45 +4,15 @@ column names, and order-insensitive values."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-            )
-    return con
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    return v
-
-
-def _canon(rows, colnames):
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
+from tools.sf1_check import _canon, _duck
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))

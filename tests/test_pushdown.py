@@ -155,3 +155,31 @@ def test_id_base64_null_safe_eq_matches_source(spark):
     assert "<=>" in sql and "id_base64" not in sql
     kept = {r["row"] for r in df.filter(sql).collect()}
     assert kept == {2}  # NULL id: <=> is FALSE, NOT(FALSE) keeps it
+
+
+def test_rewrite_leaves_string_literals_and_comments_alone(spark):
+    """An as_uuid comparison written INSIDE a string literal is text:
+    the rule must compare against exactly that text. Before the fix the
+    literal was rewritten into the long-pair form, so the rule silently
+    compared against different text and failed every row."""
+    from quality_spark import add_data_quality, rule_suite
+    from quality_spark.model import FAILED_INT, PASSED_INT
+
+    u = _uuid_for(1, 0)
+    text = f"as_uuid(a, b) = '{u}'"
+    df = spark.createDataFrame(
+        [(text, 1, 0), ("other", 1, 0)], "note string, a long, b long"
+    )
+    suite = rule_suite(
+        (41, 1), [((1, 1), [((1, 1), f'note = "{text}"')])]
+    )
+    got = {
+        r["note"]: r["DQ"]["overallResult"]
+        for r in add_data_quality(df, suite).collect()
+    }
+    assert got == {text: PASSED_INT, "other": FAILED_INT}
+    assert rewrite_encoded_filters(f"/* {text} */ x") == f"/* {text} */ x"
+    # a real comparison next to the literal is still rewritten
+    assert "(a) = 1L AND (b) = 0L" in rewrite_encoded_filters(
+        f'{text} AND note = "{text}"'
+    )
