@@ -1460,16 +1460,14 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_semantic_dedup() -> str:
+    from quality_spark.llm.similarity import ivf_cell_oracle_sql
+
     def nrm(e: str) -> str:
         return (
             f"sqrt(list_sum(list_transform({e}, "
             f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
         )
 
-    dot_ch_e = (
-        "list_sum(list_transform(range(1, len(c.ch) + 1), "
-        "i -> c.ch[i] * CAST(e.embedding[i] AS DOUBLE)))"
-    )
     dot_ab = (
         "list_sum(list_transform(range(1, len(a.embedding) + 1), "
         "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
@@ -1480,13 +1478,10 @@ WITH cent AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE) / {nrm('embedding')}) AS ch
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY {dot_ch_e} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN cent c
+cellof AS (
+  SELECT vec_id, embedding, {ivf_cell_oracle_sql('embedding', 'cent')} AS cell
+  FROM embeddings
 ),
-cellof AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
 dropped AS (
   SELECT b.vec_id AS dup_id, min(a.vec_id) AS dup_of
   FROM cellof a JOIN cellof b
@@ -2463,9 +2458,7 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    # the gate runs the SCALE shape (one materialized shingle scan);
-    # the lazy-vs-materialized result identity is plan-pinned in tests
-    return jaccard_pairs(docs, k=3, threshold=0.25, materialize=True)
+    return jaccard_pairs(docs, k=3, threshold=0.25)
 
 
 def _oracle_jaccard_prefix() -> str:
@@ -3532,16 +3525,14 @@ def q_kmeans_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_kmeans_leg() -> str:
+    from quality_spark.llm.similarity import ivf_cell_oracle_sql
+
     def nrm(e: str) -> str:
         return (
             f"sqrt(list_sum(list_transform({e}, "
             f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
         )
 
-    dot_ch_e = (
-        "list_sum(list_transform(range(1, len(c.ch) + 1), "
-        "i -> c.ch[i] * CAST(s.embedding[i] AS DOUBLE)))"
-    )
     return f"""
 WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 64),
 init AS (
@@ -3550,15 +3541,9 @@ init AS (
                         x -> CAST(x AS DOUBLE) / {nrm('embedding')}) AS ch
   FROM sub ORDER BY vec_id LIMIT 4
 ),
-assign AS (
-  SELECT s.vec_id, s.embedding, c.cid,
-         row_number() OVER (PARTITION BY s.vec_id
-                            ORDER BY {dot_ch_e} DESC, c.cid) AS rn
-  FROM sub s CROSS JOIN init c
-),
 cellof AS (
-  SELECT vec_id, embedding, cid FROM assign
-  WHERE rn = 1 AND {nrm('embedding')} > 0
+  SELECT vec_id, embedding, {ivf_cell_oracle_sql('embedding', 'init')} AS cid
+  FROM sub WHERE {nrm('embedding')} > 0
 ),
 means AS (
   SELECT cid, CAST(t.d AS INT) - 1 AS dim,
@@ -3588,6 +3573,8 @@ FROM final
 
 
 def _oracle_ivf_topk() -> str:
+    from quality_spark.llm.similarity import ivf_cell_oracle_sql
+
     def nrm(e: str) -> str:
         return (
             f"sqrt(list_sum(list_transform({e}, "
@@ -3608,15 +3595,18 @@ WITH cent AS (
          list_transform(embedding, x -> CAST(x AS DOUBLE) / {nrm('embedding')}) AS ch
   FROM embeddings WHERE vec_id % 50 = 0
 ),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id ORDER BY {dot_ch_e} DESC, c.cid) AS rn
-  FROM embeddings e CROSS JOIN cent c
+cellof AS (
+  SELECT vec_id, embedding, {ivf_cell_oracle_sql('embedding', 'cent')} AS cell
+  FROM embeddings
 ),
-cellof AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
+-- probes: each query's 2 best cells (ivf_flat_topk's probe window)
 qprobe AS (
-  SELECT vec_id AS qid, embedding AS qv, cid AS cell
-  FROM assign WHERE vec_id < 10 AND rn <= 2
+  SELECT qid, qv, cell FROM (
+    SELECT e.vec_id AS qid, e.embedding AS qv, c.cid AS cell,
+           row_number() OVER (PARTITION BY e.vec_id
+                              ORDER BY {dot_ch_e} DESC, c.cid) AS rn
+    FROM embeddings e CROSS JOIN cent c WHERE e.vec_id < 10
+  ) WHERE rn <= 2
 ),
 scored AS (
   SELECT q.qid, t.vec_id AS nid,
@@ -4579,7 +4569,7 @@ def q_tfidf_scores(
         F.col("tfidf").alias("v_double"),
     )
     # scored once, localCheckpointed: the 'bm25' full-pairs leg and
-    # the 'bm25_topk' salted cut both read it — one scoring run, not
+    # the 'bm25_topk' cut both read it — one scoring run, not
     # two (the scores table is |matching pairs|, metadata-adjacent)
     def b_bm25_unit():
         bm25_scored = bm25_scores(
@@ -4593,16 +4583,13 @@ def q_tfidf_scores(
         F.lit(-1).cast("bigint").alias("n2"),
         F.col("score").alias("v_double"),
     )
-    # 'bm25_topk' part (round 9): the SALTED two-phase top-k shape
-    # (per-(query, partition-slice) local heap -> global re-rank,
-    # skew-safe for broad queries) gated against the PLAIN-window
-    # DuckDB oracle — pinning the construction's result-identity.
-    # Rank determinism across engines holds because the bm25 'part'
-    # above already hash-pins every score DOUBLE bit-for-bit, so the
-    # (score DESC, doc_id) order cannot diverge.
+    # 'bm25_topk' part (round 9): the per-query window top-k, gated
+    # against the DuckDB window oracle. Rank determinism across engines
+    # holds because the bm25 'part' above already hash-pins every score
+    # DOUBLE bit-for-bit, so the (score DESC, doc_id) order cannot
+    # diverge.
         topk = bm25_topk(
-            spark, docs, _BM25_QUERIES, k=10, salted=True,
-            scores=bm25_scored,
+            spark, docs, _BM25_QUERIES, k=10, scores=bm25_scored
         ).select(
         F.lit("bm25_topk").alias("part"),
         F.col("doc_id").cast("bigint").alias("ord"),
@@ -5593,14 +5580,11 @@ def q_temperature_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cap_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain cap (round 8, `llm/sampling.py:cap_per_group`):
     `source` plays the crawl domain; keep the 3 longest docs per
-    domain. The gate runs the SALTED two-phase shape — its result is
-    provably identical to the plain window, so one oracle covers
-    both."""
+    domain."""
     from quality_spark.llm.sampling import cap_per_group
 
     return cap_per_group(
-        _read(spark, sf_dir, "documents"),
-        "source", 3, "n_chars", "doc_id", salted=True,
+        _read(spark, sf_dir, "documents"), "source", 3, "n_chars", "doc_id"
     )
 
 
@@ -5643,14 +5627,13 @@ def q_wsample_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_wsample_g_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group ES cut, run in the SALTED shape against the
-    plain-window oracle (composition over cap_per_group inherits its
-    result-identity proof)."""
+    """Per-group ES cut (llm/sampling.py:weighted_sample_per_group, a
+    composition over cap_per_group)."""
     from quality_spark.llm.sampling import weighted_sample_per_group
 
     return weighted_sample_per_group(
         _read(spark, sf_dir, "documents"), "lang", "n_chars", 4,
-        "doc_id", seed=5, salted=True,
+        "doc_id", seed=5,
     )
 
 
@@ -9233,15 +9216,11 @@ def q_ldiv_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_colloc_leg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top PMI collocations (vocab.collocation_pmi) over documents —
-    min_count=3, top=15; runs the materialize=True scale shape (one
-    tokenize scan)."""
+    min_count=3, top=15 (one checkpointed tokenize scan)."""
     from quality_spark.llm.vocab import collocation_pmi
 
     return collocation_pmi(
-        _read(spark, sf_dir, "documents"),
-        min_count=3,
-        top=15,
-        materialize=True,
+        _read(spark, sf_dir, "documents"), min_count=3, top=15
     )
 
 

@@ -42,7 +42,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import hash60_sql, tokens_sql
+from .dedup import WS_RUN, hash60_sql, tokens_sql
 
 __all__ = [
     "ngram_features_sql",
@@ -115,19 +115,19 @@ def margin_sql(
 
 def _margin_arrow_udf(buckets: int):
     """The Spark kernel of :func:`margin_sql` with the DEFAULT weight:
-    tokens split on the Java-regex ``\\s+`` class
-    (ASCII — Python's bare str.split would also eat unicode
-    whitespace), features ordered unigrams-then-bigrams, md5 bucket
-    per feature (C-speed hashlib vs the interpreted SQL HOF fold that
-    measured 11 s at sf0.1), weights summed LEFT-TO-RIGHT in feature
-    order so the double result equals the SQL fold exactly."""
+    tokens split on the ASCII whitespace run ``dedup.WS_RUN``
+    (Python's bare str.split would also eat unicode whitespace),
+    features ordered unigrams-then-bigrams, md5 bucket per feature
+    (C-speed hashlib vs the interpreted SQL HOF fold that measured 11 s
+    at sf0.1), weights summed LEFT-TO-RIGHT in feature order so the
+    double result equals the SQL fold exactly."""
     import hashlib
     import re
 
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    ws = re.compile(r"\s+", re.ASCII)
+    ws = re.compile(WS_RUN)
 
     @pandas_udf("double")
     def margin(s):  # type: ignore[no-untyped-def]

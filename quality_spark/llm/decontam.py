@@ -5,7 +5,7 @@ The standard contamination check (GPT-3 appendix C; Dodge et al. 2021
 C4 analysis): a training document is contaminated if it shares at
 least one word n-gram (n=13 classically) with any benchmark document.
 
-Plan shape, built for a 100 TB corpus vs a benchmark of at most a few
+Plan shape, for a large corpus vs a benchmark of at most a few
 million grams:
 
 - benchmark side: explode distinct n-grams, ``distinct()`` — tiny by
@@ -16,9 +16,6 @@ million grams:
   ``groupBy(doc)`` count with map-side partial aggregation;
 - left-join the per-doc hit counts back onto the corpus keys (both
   sides keyed by doc id).
-
-If the benchmark outgrows broadcast size, pass ``broadcast_grams=False``
-to fall back to a hash-partitioned join keyed by the gram string.
 """
 
 from __future__ import annotations
@@ -37,7 +34,6 @@ def contamination_flags(
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_grams: bool = True,
 ) -> DataFrame:
     """Per-corpus-document contamination: ``contaminated_grams`` =
     number of DISTINCT word n-grams shared with the benchmark set, and
@@ -56,9 +52,7 @@ def contamination_flags(
         )
 
     c_grams = _grams(corpus, id_col)
-    b_grams = _grams(benchmark).distinct()
-    if broadcast_grams:
-        b_grams = F.broadcast(b_grams)
+    b_grams = F.broadcast(_grams(benchmark).distinct())
     hits = (
         c_grams.join(b_grams, "gram")
         .groupBy(id_col)

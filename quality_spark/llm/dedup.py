@@ -35,10 +35,17 @@ def hash60_sql(x: str, dialect: str, mode: str = "portable") -> str:
     return f"CAST(('0x' || substr(md5({x}), 1, 15)) AS BIGINT)"
 
 
+#: The whitespace run every tokenizer splits on: the ASCII ``\s`` of
+#: Java and Python, spelled out because DuckDB's ``\s`` (RE2) leaves
+#: out the vertical tab ``\x0B``.
+WS_RUN = r"[ \t\n\x0B\f\r]+"
+
+
 def tokens_sql(text: str, dialect: str) -> str:
     if dialect == "spark":
-        return f"filter(split({text}, '\\\\s+'), t -> t != '')"
-    return f"list_filter(string_split_regex({text}, '\\s+'), t -> t != '')"
+        ws = WS_RUN.replace("\\", "\\\\")  # Spark unescapes string literals
+        return f"filter(split({text}, '{ws}'), t -> t != '')"
+    return f"list_filter(string_split_regex({text}, '{WS_RUN}'), t -> t != '')"
 
 
 def shingles_sql(text: str, k: int, dialect: str) -> str:
@@ -585,7 +592,6 @@ def minhash_dedup_against_index(
     bands: int = 4,
     mode: str = "fast",
     within_batch: bool = True,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """(new_id, matched_id) candidate near-dup hits of a NEW batch:
     against the persisted corpus index, and (``within_batch``) among
@@ -595,12 +601,9 @@ def minhash_dedup_against_index(
     enough; band parameters must match the index build).
 
     Scale shape: the new batch is tiny next to the corpus, so its
-    exploded signatures BROADCAST to the index scan — the 100 TB index
+    exploded signatures are hinted as the BROADCAST side — the index
     is probed in place with NO shuffle of the corpus (the plan shows a
-    BroadcastHashJoin over the index scan). The broadcast HINT is
-    honored unconditionally, so for a batch too large to broadcast
-    pass ``broadcast_batch=False`` and Spark plans a sort-merge join
-    on the small (band_idx, band_hash) keys instead — still ids-only.
+    BroadcastHashJoin over the index scan).
     ``matched_id`` is NULL-free; within-batch hits keep id_a < id_b
     ordering convention in (new_id, matched_id)."""
     spark = new_df.sparkSession
@@ -613,12 +616,8 @@ def minhash_dedup_against_index(
         ).alias("band_idx", "band_hash"),
     ).filter(F.col("band_hash").isNotNull())
     index = spark.read.parquet(index_path)
-    probe = F.broadcast(new_sig) if broadcast_batch else new_sig
     vs_index = (
-        index.join(
-            probe,
-            ["band_idx", "band_hash"],
-        )
+        index.join(F.broadcast(new_sig), ["band_idx", "band_hash"])
         .filter(F.col("id") != F.col("new_id"))
         .select("new_id", F.col("id").alias("matched_id"))
     )
@@ -925,7 +924,7 @@ def dedup_near(
     ``score_col`` elects the best-scoring component member instead of
     the smallest id (keep the longest/highest-quality variant).
     Extra ``method_kw`` pass through to the pair operator
-    (threshold/bands/num_perm/max_hamming/materialize/...).
+    (threshold/bands/num_perm/max_hamming/...).
 
     100 TB: pair generation is the respective operator's documented
     one-shuffle shape; components iterate shuffle joins to cluster
@@ -1036,7 +1035,6 @@ def paragraph_dedup_global(
     id_col: str = "doc_id",
     sep: str = "\n\n",
     hash_fn=None,
-    materialize: bool = False,
 ) -> DataFrame:
     """GLOBAL paragraph-level exact dedup (the Dolma/CCNet boilerplate
     scrub): split every document into paragraphs, keep only the FIRST
@@ -1049,7 +1047,7 @@ def paragraph_dedup_global(
     n_kept). Documents reduced to zero paragraphs come back with
     empty text, not a dropped row.
 
-    100 TB design: exactly two shuffles — (1) first-occurrence
+    Plan: exactly two shuffles — (1) first-occurrence
     election as a map-side-combined groupBy(paragraph) min_by (NOT a
     window: the ubiquitous-boilerplate paragraph would otherwise sort
     millions of rows inside one window partition; min_by aggregates
@@ -1061,11 +1059,8 @@ def paragraph_dedup_global(
     Plan note (VERDICT r07 #3): the exploded paragraph frame feeds
     THREE consumers (election, kept-join probe side, per-doc stats),
     so the lazy plan scans the corpus three times — pinned in
-    tests/test_plans.py. ``materialize=True`` localCheckpoints the
-    exploded paragraphs first, collapsing the plan to ONE corpus scan
-    plus three reads of the checkpointed block (the semantic_dedup
-    contract); at real scale prefer that, or write the exploded table
-    to storage and feed it back.
+    tests/test_plans.py. A caller whose input is an expensive upstream
+    pipeline checkpoints (or writes out) ``df`` before the call.
 
     Collision safety (ADVICE r07): because this operator MUTATES
     corpus text, the election carries the winning paragraph's TEXT and
@@ -1083,8 +1078,6 @@ def paragraph_dedup_global(
             "__pd_idx", "__pd_text"
         ),
     ).withColumn("__pd_hash", hash_fn("__pd_text"))
-    if materialize:
-        paras = paras.localCheckpoint()
     firsts = paras.groupBy("__pd_hash").agg(
         F.min(F.struct("__pd_id", "__pd_idx", "__pd_text")).alias(
             "__pd_first"

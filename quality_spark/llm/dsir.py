@@ -120,7 +120,6 @@ def dsir_log_weights(
     raw_counts: DataFrame,
     buckets: int,
     id_col: str = "doc_id",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Per-doc importance diagnostics + log weight:
     ``(id_col, n_grams, n_buckets, dot_target, dot_raw, log_weight)``.
@@ -130,13 +129,13 @@ def dsir_log_weights(
     model totals are the only driver-side scalars (two 1-row aggs).
     dot_target / dot_raw are exact integer count dot-products against
     the model tables — they pin the feature/join pipeline for the
-    oracle gate independent of float log rounding."""
+    oracle gate independent of float log rounding. Both model tables
+    (<= ``buckets`` rows) are hinted as broadcast sides."""
     n_t = target_counts.agg(F.sum("total")).collect()[0][0] or 0
     n_r = raw_counts.agg(F.sum("total")).collect()[0][0] or 0
     t = target_counts.withColumnRenamed("total", "t_cnt")
     r = raw_counts.withColumnRenamed("total", "r_cnt")
-    if broadcast:
-        t, r = F.broadcast(t), F.broadcast(r)
+    t, r = F.broadcast(t), F.broadcast(r)
     joined = (
         corpus_feats.join(t, "bucket", "left")
         .join(r, "bucket", "left")
@@ -166,7 +165,6 @@ def dsir_pipeline(
     id_col: str = "doc_id",
     buckets: int = 10_000,
     max_n: int = 2,
-    materialize_features: bool = True,
     n_partitions: Optional[int] = None,
 ) -> DataFrame:
     """One-call DSIR scoring with the RIGHT materialization: the raw
@@ -174,12 +172,8 @@ def dsir_pipeline(
     scoring joins and the totals — left lazy, every reference
     re-explodes the corpus, so the tokenize+hash pass runs ~5x
     (measured 14.5 s -> ~2 s at sf0.1 once checkpointed). The model
-    tables (<= ``buckets`` rows, metadata-sized) are ALWAYS
-    localCheckpointed; the corpus feature frame is checkpointed by
-    default — pass ``materialize_features=False`` only when the
-    caller persists features to storage itself (the 100 TB pattern:
-    write the (id, bucket, cnt) table once, score from it many
-    times).
+    tables (<= ``buckets`` rows, metadata-sized) and the corpus
+    feature frame are all localCheckpointed.
 
     ``n_partitions`` repartitions the inputs before featurizing —
     the tokenize+hash pass is ~100x the scan cost, so a small input
@@ -190,8 +184,7 @@ def dsir_pipeline(
         corpus = corpus.repartition(n_partitions, F.col(id_col))
         target = target.repartition(n_partitions, F.col(id_col))
     feats = hashed_gram_features(corpus, text_col, id_col, buckets, max_n)
-    if materialize_features:
-        feats = feats.localCheckpoint()
+    feats = feats.localCheckpoint()
     tc = train_bucket_counts(
         hashed_gram_features(target, text_col, id_col, buckets, max_n)
     ).localCheckpoint()

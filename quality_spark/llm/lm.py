@@ -88,7 +88,6 @@ def score_with_bigram_lm(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: float = 0.5,
-    broadcast: bool = False,
 ) -> DataFrame:
     """Per-doc LM score: ``(id_col, n_bigrams, n_unseen, sum_pair,
     sum_ctx, avg_logprob, perplexity)``.
@@ -100,15 +99,9 @@ def score_with_bigram_lm(
     mean ln P over the doc's bigrams, perplexity = exp(-avg_logprob).
     Docs with <2 words keep a row with n_bigrams=0 and NULL scores.
 
-    ``broadcast=True`` hints both LM tables as broadcast sides
-    (VERDICT r07 #5): a min_count-pruned LM is typically well under a
-    few hundred MB, and broadcasting turns the two scoring joins into
-    map-side hash joins — the exploded 100 TB bigram stream never
-    shuffles on the gram key. Leave False to let AQE decide from
-    actual sizes (both paths plan-pinned in tests/test_plans.py)."""
-    if broadcast:
-        pair_counts = F.broadcast(pair_counts)
-        ctx_counts = F.broadcast(ctx_counts)
+    The two LM tables carry no broadcast hint: AQE picks the join
+    strategy from their actual sizes (plan-pinned in
+    tests/test_plans.py)."""
     grams = _doc_bigrams(docs.select(id_col, text_col), text_col)
     joined = (
         grams.join(pair_counts, ["w1", "w2"], "left")
@@ -192,7 +185,6 @@ def score_with_bigram_lm_kn(
     text_col: str = "text",
     id_col: str = "doc_id",
     discount: float = 0.75,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram score per doc:
     ``(id_col, n_bigrams, n_unseen, sum_cont, sum_fanout,
@@ -214,16 +206,14 @@ def score_with_bigram_lm_kn(
     four-table join pipeline exactly for the oracle; the float
     avg_logprob/perplexity are scalar maps of those pinned integers.
 
-    Four left joins against vocabulary-bounded tables (broadcast by
-    default) + one map-side-combined groupBy — the doc stream never
-    shuffles on a gram key."""
+    Four left joins against vocabulary-bounded tables, each hinted as
+    the broadcast side, + one map-side-combined groupBy — the doc
+    stream never shuffles on a gram key."""
     d = float(discount)
-    t = pair_counts
-    c = ctx_counts
-    n = cont_counts
-    fo = fanout_counts
-    if broadcast:
-        t, c, n, fo = (F.broadcast(x) for x in (t, c, n, fo))
+    t, c, n, fo = (
+        F.broadcast(x)
+        for x in (pair_counts, ctx_counts, cont_counts, fanout_counts)
+    )
     grams = _doc_bigrams(docs.select(id_col, text_col), text_col)
     joined = (
         grams.join(t, ["w1", "w2"], "left")

@@ -52,7 +52,7 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _d
+from .similarity import _d, ivf_cell_oracle_sql
 
 Codebooks = List[List[List[float]]]  # [m][ksub][dsub]
 
@@ -1193,8 +1193,8 @@ def ivf_pq_oracle_sql(
     centroid_table: str = None,
 ) -> str:
     """DuckDB replay of :func:`ivf_pq_topk`: centroid normalization +
-    corpus argmax recomputed from the table (same shape the IVF-Flat
-    oracle pins), probe selection from the same query-vector literals,
+    corpus cell (`similarity.ivf_cell_oracle_sql`) recomputed from the
+    table, probe selection from the same query-vector literals,
     PQ codes via :func:`pq_codes_oracle_sql`, ADC via the same
     Python-computed distance-table literals in subspace order.
     ``centroid_table`` (default: ``table``) bounds the centroid pool —
@@ -1220,10 +1220,6 @@ def ivf_pq_oracle_sql(
     nrm = (
         f"sqrt(list_sum(list_transform({vec_col}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
-    dot_ch_e = (
-        f"list_sum(list_transform(range(1, len(c.ch) + 1), "
-        f"i -> c.ch[i] * CAST(e.{vec_col}[i] AS DOUBLE)))"
     )
     qrows = ", ".join(
         f"({int(qid)}, [{', '.join(_d(float(x)) for x in qv)}]::DOUBLE[])"
@@ -1252,13 +1248,9 @@ WITH cent AS MATERIALIZED (
          list_transform({vec_col}, x -> CAST(x AS DOUBLE) / {nrm}) AS ch
   FROM {centroid_table} WHERE {id_col} % {int(centroid_stride)} = 0
 ),
-assign AS MATERIALIZED (
-  SELECT e.{id_col}, c.cid,
-         row_number() OVER (PARTITION BY e.{id_col}
-                            ORDER BY {dot_ch_e} DESC, c.cid) AS rn
-  FROM {table} e CROSS JOIN cent c
+cellof AS MATERIALIZED (
+  SELECT {id_col}, {ivf_cell_oracle_sql(vec_col, 'cent')} AS cell FROM {table}
 ),
-cellof AS MATERIALIZED (SELECT {id_col}, cid AS cell FROM assign WHERE rn = 1),
 qv(query_id, v) AS (VALUES {qrows}),
 qprobe AS MATERIALIZED (
   SELECT query_id, cid AS cell FROM (
@@ -1342,10 +1334,6 @@ def _ivf_pq_residual_oracle_sql(
         f"sqrt(list_sum(list_transform({vec_col}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
     )
-    dot_ch_e = (
-        f"list_sum(list_transform(range(1, len(c.ch) + 1), "
-        f"i -> c.ch[i] * CAST(e.{vec_col}[i] AS DOUBLE)))"
-    )
     qrows = ", ".join(
         f"({int(qid)}, [{', '.join(_d(float(x)) for x in qv)}]::DOUBLE[])"
         for qid, qv in queries
@@ -1395,13 +1383,9 @@ centraw AS MATERIALIZED (
   SELECT {id_col} AS cid, {vec_col} AS cv
   FROM {centroid_table} WHERE {id_col} % {int(centroid_stride)} = 0
 ),
-assign AS MATERIALIZED (
-  SELECT e.{id_col}, c.cid,
-         row_number() OVER (PARTITION BY e.{id_col}
-                            ORDER BY {dot_ch_e} DESC, c.cid) AS rn
-  FROM {table} e CROSS JOIN cent c
+cellof AS MATERIALIZED (
+  SELECT {id_col}, {ivf_cell_oracle_sql(vec_col, 'cent')} AS cell FROM {table}
 ),
-cellof AS MATERIALIZED (SELECT {id_col}, cid AS cell FROM assign WHERE rn = 1),
 qv(query_id, v) AS (VALUES {qrows}),
 qprobe AS MATERIALIZED (
   SELECT query_id, cid AS cell FROM (

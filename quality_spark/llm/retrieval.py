@@ -10,7 +10,7 @@ Scoring is Lucene-convention Okapi BM25 (public: Robertson & Zaragoza
     s(q, d) = sum_{t in q}  idf(t) * tf_td * (k1 + 1)
                             / (tf_td + k1 * (1 - b + b * dl_d / avgdl))
 
-Plan shape (engineered for 100 TB):
+Plan shape:
 
 - The query set is METADATA (a handful of strings) — it becomes a
   broadcast (query_id, token) table. The corpus-side explode is
@@ -30,10 +30,9 @@ Plan shape (engineered for 100 TB):
 - Final score: one groupBy (query_id, doc) over the joined postings.
 
 Net: the corpus is tokenized at most TWICE per scoring run (the
-1-row stats aggregate and the postings pass; ``materialize=True``
-localCheckpoints the staged token frame for exactly ONE scan) and
-two data-sized shuffles (tf groupBy, final score groupBy), both
-over broadcast-prefiltered postings. No all-pairs, no driver loops.
+1-row stats aggregate and the postings pass) and two data-sized
+shuffles (tf groupBy, final score groupBy), both over
+broadcast-prefiltered postings. No all-pairs, no driver loops.
 The reference engine has no retrieval operator; this extends the
 rebuilt surface for LLM-corpus workflows (SURVEY §2 'beyond-reference'
 block).
@@ -47,16 +46,13 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import tokens_sql
+from .dedup import WS_RUN, tokens_sql
 
-# Java-regex '\s' (the corpus tokenizer tokens_sql splits on '\s+'
-# WITHOUT UNICODE_CHARACTER_CLASS) matches exactly [ \t\n\x0B\f\r].
-# Python's re.ASCII '\s' is the identical set ([ \t\n\r\f\v], \v ==
-# \x0B), so query-side tokens can always match corpus-side tokens.
-# Plain str.split() would split on ALL Unicode whitespace (NBSP,
-# ideographic space, ...) and mint query terms the corpus tokenizer
-# can never produce.
-_ASCII_WS = re.compile(r"\s+", flags=re.ASCII)
+# The corpus tokenizer's whitespace run (tokens_sql), so query-side
+# tokens can always match corpus-side tokens. Plain str.split() would
+# split on ALL Unicode whitespace (NBSP, ideographic space, ...) and
+# mint query terms the corpus tokenizer can never produce.
+_ASCII_WS = re.compile(WS_RUN)
 
 
 def _split_query(qtext: str) -> list[str]:
@@ -88,7 +84,6 @@ def bm25_scores(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Score every matching document against every query.
 
@@ -103,10 +98,8 @@ def bm25_scores(
     come from the postings aggregate itself (one row per
     (doc, matching-token), so ``groupBy(token).count()`` IS df — the
     old third array_distinct-explode pass was provably redundant).
-    ``materialize=True`` localCheckpoints the staged (id, tokens, dl)
-    frame so BOTH consumers read one materialized scan — the right
-    mode when ``df`` is an expensive upstream pipeline rather than a
-    raw parquet read.
+    A caller whose ``df`` is an expensive upstream pipeline rather
+    than a raw parquet read checkpoints it before the call.
     """
     qterms = F.broadcast(_query_terms(spark, queries))
 
@@ -119,8 +112,6 @@ def bm25_scores(
         "_toks",
         F.size("_toks").cast("bigint").alias("dl"),
     )
-    if materialize:
-        staged = staged.localCheckpoint()
 
     # Corpus stats: 1-row aggregate, broadcast. (Catalyst prunes
     # _toks here; the tokenize itself remains because dl derives
@@ -215,26 +206,18 @@ def bm25_topk(
     df: DataFrame,
     queries: Sequence[tuple[int, str]],
     k: int = 10,
-    salted: bool = False,
     scores: DataFrame | None = None,
     **kw,
 ) -> DataFrame:
     """Top-k docs per query (score DESC, doc_id ASC tiebreak).
 
-    The plain per-query window is fine for most corpora: the
-    post-score table is one row per MATCHING (query, doc) pair and
-    the window key (query_id) has cardinality |queries|. But a broad
-    query against a 100 TB corpus can match enough of it that one
-    query's rows exceed a single task's sort budget — ``salted=True``
-    is the skew-proof two-phase shape (same construction as
-    ``sampling.cap_per_group(salted=True)``): phase 1 windows over
-    (query_id, spark_partition_id) — the physical partition id is a
-    free salt — keeping each slice's local top-k; phase 2 re-ranks
-    the <= k * n_partitions survivors per query. Results are
-    IDENTICAL to the plain window: a row's global rank is >= its rank
-    within any slice, so phase 1 can never evict a global top-k row.
-    The driver gate runs the SALTED shape against the plain-window
-    oracle to pin that equivalence.
+    One per-query window over the post-score table (one row per
+    MATCHING (query, doc) pair). A broad query can match much of the
+    corpus, but Spark's ``InferWindowGroupLimit`` plans a partial
+    ``WindowGroupLimit`` below the exchange (k ≤
+    ``spark.sql.optimizer.windowGroupLimitThreshold``), so each map
+    task ships at most k rows per query — the same shape as
+    ``sampling.cap_per_group``, plan-pinned in tests/test_plans.py.
 
     ``scores``: pass an already-built :func:`bm25_scores` frame to cut
     on (callers that need both the full scores AND the top-k should
@@ -247,16 +230,6 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col(id_col)
     )
-    if salted:
-        w1 = Window.partitionBy("query_id", "_salt").orderBy(
-            F.col("score").desc(), F.col(id_col)
-        )
-        scored = (
-            scored.withColumn("_salt", F.spark_partition_id())
-            .withColumn("_rk", F.row_number().over(w1))
-            .filter(F.col("_rk") <= k)
-            .drop("_rk", "_salt")
-        )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
@@ -601,7 +574,6 @@ def bm25_topk_indexed(
     path: str,
     queries: Sequence[tuple[int, str]],
     k: int = 10,
-    salted: bool = False,
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
@@ -613,7 +585,6 @@ def bm25_topk_indexed(
         None,
         queries,
         k=k,
-        salted=salted,
         scores=bm25_scores_indexed(spark, path, queries, k1=k1, b=b),
         id_col=meta["id_col"],
     )
@@ -863,8 +834,6 @@ def retrieve(
     id_col: str = "doc_id",
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
-    salted: bool = False,
-    materialize: bool = False,
     nprobe: int = 2,
     centroid_stride: int = 50,
     codebooks=None,
@@ -896,16 +865,15 @@ def retrieve(
     ``queries`` and ``query_vectors`` pair by query id: entry ``(qid,
     text)`` fuses with the vector row whose ``vec_id_col`` == qid.
 
-    Plan shape (100 TB): the lexical leg tokenizes the corpus at most
-    twice (``bm25_scores`` scan budget; ``materialize=True`` for one)
-    and shuffles only broadcast-prefiltered postings; the semantic leg
-    broadcasts the query vectors so the embedding scan is one pass;
-    both lists are top-``depth`` cut BEFORE fusion, so ``rrf_fuse``
-    touches |queries| x depth x 2 rows — metadata. ``salted=True``
-    applies the skew-proof two-phase top-k on the lexical side.
-    ``semantic='ivf'`` swaps the exact cosine scan for IVF-Flat ANN
-    (`similarity.ivf_flat_topk` — nprobe/centroid_stride tune the
-    recall/cost point): the 100 TB semantic path, same output shape.
+    Plan shape: the lexical leg tokenizes the corpus at most twice
+    (``bm25_scores`` scan budget) and shuffles only
+    broadcast-prefiltered postings; the semantic leg broadcasts the
+    query vectors so the embedding scan is one pass; both lists are
+    top-``depth`` cut BEFORE fusion, so ``rrf_fuse`` touches
+    |queries| x depth x 2 rows — metadata. ``semantic='ivf'`` swaps
+    the exact cosine scan for IVF-Flat ANN (`similarity.ivf_flat_topk`
+    — nprobe/centroid_stride tune the recall/cost point), same output
+    shape.
     ``semantic='ivfpq'`` goes one further — IVF cell pruning + PQ ADC
     over the surviving candidates (`pq.ivf_pq_topk`): the
     compressed-index path for corpora whose raw vectors don't fit
@@ -934,9 +902,7 @@ def retrieve(
             raise ValueError(
                 "lexical='bm25_idx' needs bm25_index_path= (write_bm25_index)"
             )
-        lex = bm25_topk_indexed(
-            spark, bm25_index_path, queries, k=depth, salted=salted
-        )
+        lex = bm25_topk_indexed(spark, bm25_index_path, queries, k=depth)
         id_idx = _read_bm25_meta(bm25_index_path)["id_col"]
         if id_idx != id_col:
             lex = lex.withColumnRenamed(id_idx, id_col)
@@ -946,10 +912,8 @@ def retrieve(
             docs,
             queries,
             k=depth,
-            salted=salted,
             text_col=text_col,
             id_col=id_col,
-            materialize=materialize,
         )
     if semantic == "ivfpq_idx":
         # PERSISTED-index semantic leg (round 10): `index_path` names

@@ -457,7 +457,6 @@ def cap_per_group(
     cap: int,
     score_col: str,
     id_col: str = "doc_id",
-    salted: bool = False,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group — the crawl-curation
     "per-domain cap" (a handful of hosts dominate any web crawl; caps
@@ -466,37 +465,18 @@ def cap_per_group(
     and oracle-replayable.
 
     Plan: one window (shuffle on ``group_col``) with ``row_number`` —
-    rank ≤ cap. With ``salted=True``, the skew-proof two-phase shape:
-    phase 1 windows over (group, spark_partition_id) — the physical
-    partition id acts as a free salt, so a mega-group (30%-of-corpus
-    domain) is ranked in parallel slices, each keeping its local
-    top-``cap`` — phase 2 re-ranks the ≤ cap × n_partitions survivors
-    per group. Two shuffles, but no task ever sorts more than
-    (group rows / n_partitions) + survivors; use it when a single
-    group may exceed one executor's sort budget. Results are
-    IDENTICAL: phase 1 can never evict a global top-``cap`` row
-    because a row's global rank is ≥ its rank within any slice.
+    rank ≤ cap. Spark's ``InferWindowGroupLimit`` rule (for
+    cap ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by
+    default) plans a partial ``WindowGroupLimit`` below the exchange,
+    so each map task ships at most ``cap`` rows per group and a
+    mega-group never reaches one reducer whole (plan-pinned in
+    tests/test_plans.py).
     """
     w = Window.partitionBy(group_col).orderBy(
         F.col(score_col).desc(), F.col(id_col)
     )
-    if not salted:
-        return (
-            df.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= cap)
-            .drop("_rk")
-        )
-    w1 = Window.partitionBy(group_col, "_salt").orderBy(
-        F.col(score_col).desc(), F.col(id_col)
-    )
-    local = (
-        df.withColumn("_salt", F.spark_partition_id())
-        .withColumn("_rk", F.row_number().over(w1))
-        .filter(F.col("_rk") <= cap)
-        .drop("_rk", "_salt")
-    )
     return (
-        local.withColumn("_rk", F.row_number().over(w))
+        df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= cap)
         .drop("_rk")
     )
@@ -506,8 +486,7 @@ def cap_per_group_oracle_sql(
     table: str, group_col: str, cap: int, score_col: str,
     id_col: str = "doc_id",
 ) -> str:
-    """DuckDB replay of :func:`cap_per_group` (either variant — the
-    salted shape is result-identical by construction)."""
+    """DuckDB replay of :func:`cap_per_group`."""
     return f"""
 SELECT * EXCLUDE (_rk) FROM (
   SELECT *, row_number() OVER (
@@ -607,22 +586,20 @@ def weighted_sample_per_group(
     n: int,
     key_col: str = "doc_id",
     seed: int = 0,
-    salted: bool = False,
 ) -> DataFrame:
     """Weighted sampling without replacement WITHIN each group —
     "n docs per language, odds by quality score": the same
     Efraimidis-Spirakis race as :func:`weighted_sample`, cut per
     group. Implemented as a composition over :func:`cap_per_group`
-    (negated race time, descending), so the skew-proof
-    ``salted=True`` two-phase shape and its result-identity proof
-    carry over unchanged. Rows with NULL/non-positive weight never
+    (negated race time, descending), so its partial-limit plan carries
+    over unchanged. Rows with NULL/non-positive weight never
     qualify."""
     score = F.expr(_es_score_sql(key_col, weight_col, seed, "spark"))
     eligible = df.filter(
         F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
     ).withColumn("__es_neg", -score)
     return cap_per_group(
-        eligible, group_col, int(n), "__es_neg", key_col, salted=salted
+        eligible, group_col, int(n), "__es_neg", key_col
     ).drop("__es_neg")
 
 
@@ -950,7 +927,6 @@ def cluster_balanced_sample(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 0,
-    salted: bool = False,
     cell_col: str = "cell",
 ) -> DataFrame:
     """Diversity-preserving subset over an embedding table: assign
@@ -966,10 +942,8 @@ def cluster_balanced_sample(
     impossible below ~2^30 rows per cell and broken by id — so the
     subset is stable across runs, partitionings, and engines.
 
-    Plan: one projection for the cell argmax, then `cap_per_group`'s window —
-    ``salted=True`` for the two-phase skew-proof cut when one cell
-    may exceed a task's sort budget. Returns the kept rows with
-    ``cell_col`` attached."""
+    Plan: one projection for the cell argmax, then `cap_per_group`'s
+    window. Returns the kept rows with ``cell_col`` attached."""
     from .similarity import ivf_assign
 
     if int(per_cell) < 1:
@@ -985,7 +959,7 @@ def cluster_balanced_sample(
         "_h", F.expr(hash60_sql(key, "spark", "portable"))
     )
     return cap_per_group(
-        scored, cell_col, int(per_cell), "_h", id_col=id_col, salted=salted
+        scored, cell_col, int(per_cell), "_h", id_col=id_col
     ).drop("_h")
 
 
@@ -999,17 +973,14 @@ def cluster_balanced_sample_oracle_sql(
     cell_col: str = "cell",
 ) -> str:
     """DuckDB replay of :func:`cluster_balanced_sample` (projected to
-    (cell, id)): the ivf-gate cell assignment (normalized-centroid
-    argmax, dot folded in ascending dimension order — the pinned
-    `ivf_cell_sql` arithmetic) + the portable-hash ranked per-cell
+    (cell, id)): the cell assignment of `similarity.ivf_cell_sql` over
+    the normalized centroids + the portable-hash ranked per-cell
     cut."""
+    from .similarity import ivf_cell_oracle_sql
+
     nrm = (
         f"sqrt(list_sum(list_transform({vec_col}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-    )
-    dot = (
-        "list_sum(list_transform(range(1, len(c.ch) + 1), "
-        f"i -> c.ch[i] * CAST(e.{vec_col}[i] AS DOUBLE)))"
     )
     key = (
         f"('{int(seed)}' || ':' || "
@@ -1022,14 +993,10 @@ WITH cent AS (
          list_transform({vec_col}, x -> CAST(x AS DOUBLE) / {nrm}) AS ch
   FROM {table} WHERE {centroid_filter}
 ),
-assign AS (
-  SELECT e.{id_col}, c.cid,
-         row_number() OVER (
-           PARTITION BY e.{id_col} ORDER BY {dot} DESC, c.cid
-         ) AS rn
-  FROM {table} e CROSS JOIN cent c
+cellof AS (
+  SELECT {id_col}, {ivf_cell_oracle_sql(vec_col, 'cent')} AS {cell_col}
+  FROM {table}
 ),
-cellof AS (SELECT {id_col}, cid AS {cell_col} FROM assign WHERE rn = 1),
 ranked AS (
   SELECT e2.{cell_col}, e2.{id_col},
          row_number() OVER (

@@ -543,29 +543,47 @@ def ivf_cell_sql(vec: str, cents: list, dialect: str = "spark") -> str:
             f"CASE WHEN __qs_x.s > __qs_acc.s THEN __qs_x "
             f"ELSE __qs_acc END).cid"
         )
-    dims = len(cents[0][1])
     lit = "[" + ", ".join(
         f"{{'cid': CAST({cid} AS BIGINT), 'v': ["
         + ", ".join(_d(x) for x in v) + "]}"
         for cid, v in cents
     ) + "]"
+    return _ivf_argmax_duckdb(vec, lit)
+
+
+def _ivf_argmax_duckdb(vec: str, cent_list: str) -> str:
+    """The DuckDB argmax fold of :func:`ivf_cell_sql` over
+    ``cent_list``, a list of {'cid', 'v'} structs in cid order."""
+    nan = "CAST('NaN' AS DOUBLE)"
     # DuckDB's list_sum skips NULL terms, so the NULL-element and
     # length cases are guarded explicitly to match zip_with's NULL dot
     dot = (
-        f"(CASE WHEN len({vec}) = {dims} AND "
+        f"(CASE WHEN len({vec}) = len(__qs_c.v) AND "
         f"len(list_filter({vec}, x -> x IS NULL)) = 0 THEN "
-        f"list_sum(list_transform(range(1, {dims} + 1), "
-        f"i -> c.v[i] * CAST({vec}[i] AS DOUBLE))) END)"
+        f"list_sum(list_transform(range(1, len(__qs_c.v) + 1), "
+        f"i -> __qs_c.v[i] * CAST({vec}[i] AS DOUBLE))) END)"
     )
     scored = (
-        f"list_transform({lit}, c -> "
-        f"{{'cid': c.cid, 's': nullif({dot}, {nan})}})"
+        f"list_transform({cent_list}, __qs_c -> "
+        f"{{'cid': __qs_c.cid, 's': nullif({dot}, {nan})}})"
     )
     init = f"[{{'cid': CAST(-1 AS BIGINT), 's': {_d(-1.0e308)}}}]"
     return (
-        f"list_reduce(list_concat({init}, {scored}), (a, b) -> "
-        f"CASE WHEN b.s > a.s THEN b ELSE a END).cid"
+        f"list_reduce(list_concat({init}, {scored}), (__qs_a, __qs_b) -> "
+        f"CASE WHEN __qs_b.s > __qs_a.s THEN __qs_b ELSE __qs_a END).cid"
     )
+
+
+def ivf_cell_oracle_sql(vec: str, cent_table: str) -> str:
+    """DuckDB :func:`ivf_cell_sql` over the centroids of a table (or
+    CTE) ``cent_table`` with columns (cid, ch), ``ch`` the normalized
+    DOUBLE vector — for oracles whose centroids come from the data
+    rather than a driver-side literal."""
+    cent_list = (
+        f"(SELECT list({{'cid': CAST(cid AS BIGINT), 'v': ch}} "
+        f"ORDER BY cid) FROM {cent_table})"
+    )
+    return _ivf_argmax_duckdb(vec, cent_list)
 
 
 def _ivf_cell_arrow_udf(cents: list, dims: int):

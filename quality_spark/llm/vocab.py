@@ -161,7 +161,6 @@ def collocation_pmi(
     min_count: int = 5,
     top: int = 20,
     text_col: str = "text",
-    materialize: bool = False,
 ) -> DataFrame:
     """Top collocations by pointwise mutual information (Church &
     Hanks 1990): adjacent token bigrams scored by
@@ -179,32 +178,35 @@ def collocation_pmi(
     DuckDB oracle, which may differ in the LAST ULP — parity holds at
     the driver gate's 9-dp rounding (counts and ranking are exact).
 
-    Plan shape: the corpus tokenizes at most twice (bigram pass +
-    unigram pass; ``materialize=True`` localCheckpoints the staged
-    token frame for exactly one scan — the right mode when ``df`` is
-    an expensive upstream pipeline); each pass is one combinable
-    groupBy (Zipf heavy-hitters collapse map-side). The bigram→count
-    joins run AFTER the min_count cut, and the final cut is
-    ``ORDER BY … LIMIT top`` → TakeOrderedAndProject, never a global
-    sort. The public call materializes through (the result is <= top
-    rows — metadata) and RELEASES the vocab-sized unigram cache before
-    returning a literal frame; `_collocation_pmi_lazy` exposes the
-    plan for callers that want to own the cache lifecycle. No driver
-    collect on any data-sized path.
+    Plan shape: the staged token frame is localCheckpointed, so the
+    corpus tokenizes exactly once for the bigram and unigram passes;
+    each pass is one combinable groupBy (Zipf heavy-hitters collapse
+    map-side). The bigram→count joins run AFTER the min_count cut, and
+    the final cut is ``ORDER BY … LIMIT top`` → TakeOrderedAndProject,
+    never a global sort. The public call materializes through (the
+    result is <= top rows — metadata) and RELEASES the vocab-sized
+    unigram cache and the token checkpoint before returning a literal
+    frame; `_collocation_pmi_lazy` exposes the plan for callers that
+    want to own their lifecycle. No driver collect on any data-sized
+    path.
 
     Exactness bound: counts enter the PMI as doubles, and the products
     ``c(w1,w2)*N`` / ``c(w1)*c(w2)`` are exact while < 2^53 (N up to
     ~94M tokens is always safe; beyond, the products round at 1 ulp —
     document-scale corpora hit this long after the ranking is stable).
     """
-    cut, uni = _collocation_pmi_lazy(df, min_count, top, text_col, materialize)
+    from ..plans.blocks import release_local_checkpoint
+
+    cut, uni, staged = _collocation_pmi_lazy(df, min_count, top, text_col)
     # The result is <= `top` rows (metadata) — collect it through so
-    # the vocab-sized `uni` cache can be released here instead of
-    # leaking for the session lifetime (ADVICE r10). The literal
-    # frame keeps the exact schema and row order.
+    # the vocab-sized `uni` cache and the token checkpoint can be
+    # released here instead of leaking for the session lifetime
+    # (ADVICE r10). The literal frame keeps the exact schema and row
+    # order.
     rows = cut.collect()
     schema = cut.schema
     uni.unpersist(blocking=True)
+    release_local_checkpoint(staged)
     return df.sparkSession.createDataFrame(rows, schema)
 
 
@@ -213,16 +215,14 @@ def _collocation_pmi_lazy(
     min_count: int = 5,
     top: int = 20,
     text_col: str = "text",
-    materialize: bool = False,
 ):
     """Lazy plan builder behind :func:`collocation_pmi` — returns
-    (top-k frame, persisted unigram frame). The caller owns the
-    unpersist; the public wrapper collects through and releases."""
+    (top-k frame, persisted unigram frame, checkpointed token frame).
+    The caller owns their release; the public wrapper collects through
+    and releases both."""
     staged = df.select(
         F.expr(tokens_sql(text_col, "spark")).alias("_toks")
-    )
-    if materialize:
-        staged = staged.localCheckpoint()
+    ).localCheckpoint()
     # uni has THREE consumers (w1 join, w2 join, the N total) and
     # Catalyst's per-branch pruning makes their subtrees canonically
     # different — without the persist the corpus tokenizes once PER
@@ -266,7 +266,7 @@ def _collocation_pmi_lazy(
     cut = scored.orderBy(
         F.col("pmi").desc(), F.col("w1"), F.col("w2")
     ).limit(int(top))
-    return cut, uni
+    return cut, uni, staged
 
 
 def collocation_pmi_oracle_sql(

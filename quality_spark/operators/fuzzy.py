@@ -170,7 +170,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     k: int = 3,
     threshold: float = 0.5,
-    materialize: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) — every pair with exact k-shingle Jaccard
     ``>= threshold`` WITHOUT the all-pairs join, via prefix filtering
@@ -204,7 +203,7 @@ def jaccard_pairs(
        ``|∩|/|∪|``; the emitted jaccard is the exact value, identical
        in both engines (one correctly-rounded int/int divide).
 
-    100 TB: one corpus-sized shuffle for the frequency join + rank
+    Plan: one corpus-sized shuffle for the frequency join + rank
     window, posting lists bounded by prefix length, candidate dedup
     shuffles candidate volume only; no cross join anywhere
     (plan-pinned). Skew guard: a shingle shared by f prefixes emits
@@ -212,11 +211,9 @@ def jaccard_pairs(
     raise ``k``; rarity ordering already makes such shingles the LAST
     to enter any prefix.
 
-    Scan budget: the lazy plan re-derives the shingle projection for
-    each consumer (frequency count, prefix ranking, and the two
-    verify sides — 4 tokenize passes); ``materialize=True``
-    localCheckpoints the (id, sh, n) frame so every consumer reads
-    ONE materialized scan — the right default for a 100 TB corpus,
+    Scan budget: the (id, sh, n) frame is localCheckpointed, so its
+    four consumers (frequency count, prefix ranking, and the two
+    verify sides) read ONE tokenize pass instead of re-deriving it —
     plan-pinned in tests."""
     from pyspark.sql import Window
 
@@ -237,8 +234,7 @@ def jaccard_pairs(
         .select("id", "sh", F.size("sh").cast("int").alias("n"))
         .filter(F.col("n") > 0)
     )
-    if materialize:
-        sets = sets.localCheckpoint(eager=True)
+    sets = sets.localCheckpoint(eager=True)
     toks = sets.select("id", "n", F.explode("sh").alias("tok"))
     freq = toks.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("freq")

@@ -12,11 +12,10 @@ All outputs are metadata-sized (one row per checked relation) and all
 arithmetic is integer counts — nothing here can diverge between
 engines.
 
-100 TB shapes:
+Plan shapes:
 - ``key_uniqueness``: one map-side-combinable groupBy on the key.
-- ``fk_orphan_stats``: LEFT ANTI join child→parent — broadcast when
-  the parent is a dimension (the common case), shuffle-hash otherwise;
-  the output is two counts.
+- ``fk_orphan_stats``: one left join child→parent with the deduped
+  parent keys broadcast; the output is three counts.
 - ``fd_violations``: one groupBy(lhs) with two aggregates
   (count + count(DISTINCT rhs) — a single column's distinct per group,
   so Spark's Expand rewrite is not in play).
@@ -69,7 +68,6 @@ def fk_orphan_stats(
     parent: DataFrame,
     child_keys: Sequence[str],
     parent_keys: Sequence[str],
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """(n_child_rows, n_orphans, n_null_keys): ``n_orphans`` = child
     rows whose (non-null) key tuple matches no parent row — the
@@ -79,9 +77,8 @@ def fk_orphan_stats(
     never match them, but "missing FK" and "dangling FK" are
     different data problems.
 
-    ``broadcast_parent=True`` (default) fits the common
-    fact→dimension case; pass False for fact→fact integrity so the
-    anti-join plans as a shuffle join on the keys."""
+    The deduped parent keys are hinted as the broadcast side (the
+    fact→dimension case)."""
     if not child_keys or not parent_keys:
         raise ValueError("child_keys/parent_keys must be non-empty")
     if len(child_keys) != len(parent_keys):
@@ -93,8 +90,7 @@ def fk_orphan_stats(
     pk = parent.select(
         *[F.col(p).alias(c) for c, p in zip(child_keys, parent_keys)]
     ).dropDuplicates(list(child_keys))
-    if broadcast_parent:
-        pk = F.broadcast(pk)
+    pk = F.broadcast(pk)
     # Round 13 (optimization): ONE lazy pass instead of three eager
     # counts (child scan, null-key scan, anti-join scan — three
     # sequential driver-blocking jobs). A left join against the deduped

@@ -300,18 +300,15 @@ def scd2_apply(
     order_cols: Optional[Sequence[str]] = None,
     valid_from: str = "valid_from",
     valid_to: str = "valid_to",
-    materialize: bool = True,
 ) -> DataFrame:
     """Slowly-changing-dimension type-2 merge: fold a batch of keyed
     updates into a versioned history table.
 
-    ``materialize=True`` (default) localCheckpoints the survivor
-    frame: three output branches consume it (close join, untouched
-    anti-join, new versions), and lazily each would RE-EXECUTE the
-    two window shuffles over cur ∪ updates — the checkpoint runs them
-    once (plan-pinned: the merged plan then contains zero Window
-    nodes). Pass False to stay fully lazy (e.g. under a planner that
-    reuses exchanges).
+    The survivor frame is localCheckpointed: three output branches
+    consume it (close join, untouched anti-join, new versions), and
+    lazily each would RE-EXECUTE the two window shuffles over
+    cur ∪ updates — the checkpoint runs them once (plan-pinned: the
+    merged plan contains zero Window nodes).
 
     ``dim`` is the existing SCD2 table (``keys… attrs… valid_from
     valid_to``, ``valid_to IS NULL`` marking each key's current row —
@@ -337,7 +334,7 @@ def scd2_apply(
     (the streaming-ingest contract); out-of-order history rewrites
     need a full rebuild, not a merge.
 
-    100 TB shape: ONE window shuffle on the keys over cur ∪ updates
+    Plan: ONE window shuffle on the keys over cur ∪ updates
     (change detection), a second over survivors (chain linking — same
     key partitioning, AQE-reusable), and one join of current rows
     against first-change keys. No driver data, no UDFs; batch shape is
@@ -395,8 +392,7 @@ def scd2_apply(
         F.lead("__ts").over(w2).alias(valid_to),
         F.row_number().over(w2).alias("__rn"),
     )
-    if materialize:
-        svo = svo.localCheckpoint()
+    svo = svo.localCheckpoint()
     fc = svo.filter(F.col("__rn") == 1).select(
         *keys, F.col(valid_from).alias("__fc")
     )

@@ -44,19 +44,13 @@ def test_indexed_scores_bit_equal_inline(spark, bm25_index):
     assert inline == indexed  # bit-equal score doubles (shared finisher)
 
 
-def test_indexed_topk_equal_inline_plain_and_salted(spark, bm25_index):
+def test_indexed_topk_equal_inline(spark, bm25_index):
     root, docs = bm25_index
     inline = sorted(map(tuple, bm25_topk(spark, docs, QS, k=7).collect()))
-    plain = sorted(
+    indexed = sorted(
         map(tuple, bm25_topk_indexed(spark, root, QS, k=7).collect())
     )
-    salted = sorted(
-        map(
-            tuple,
-            bm25_topk_indexed(spark, root, QS, k=7, salted=True).collect(),
-        )
-    )
-    assert inline == plain == salted
+    assert inline == indexed
 
 
 def test_indexed_scan_prunes_buckets(spark, bm25_index):

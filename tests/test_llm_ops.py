@@ -2524,26 +2524,6 @@ def test_remove_dup_substrings_oracle_replay(spark):
     assert got == [tuple(w) for w in want]
 
 
-def test_bm25_topk_salted_identical(spark):
-    """The two-phase per-slice-heap + re-rank shape (salted=True) must
-    return EXACTLY the plain window's rows: a row's global rank is >=
-    its rank within any partition slice, so phase 1 can never evict a
-    global top-k row."""
-    from quality_spark.llm.retrieval import bm25_topk
-
-    rows = [
-        (i, " ".join(["apple"] * (i % 5 + 1) + ["pad"] * (i % 7)))
-        for i in range(200)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string").repartition(8)
-    qs = [(1, "apple"), (2, "pad apple")]
-    plain = sorted(map(tuple, bm25_topk(spark, docs, qs, k=7).collect()))
-    salted = sorted(
-        map(tuple, bm25_topk(spark, docs, qs, k=7, salted=True).collect())
-    )
-    assert plain == salted and len(plain) == 14
-
-
 def test_query_tokenizer_matches_corpus_rule(spark):
     """ADVICE r08: the query-side tokenizer must use the corpus
     tokenizer's Java-regex '\\s' (ASCII) rule, NOT Python's Unicode
@@ -2714,7 +2694,7 @@ def test_retrieve_hybrid_recipe_matches_manual_composition(spark, emb, sf_dir):
             tuple,
             retrieve(
                 spark, docs, emb, qs, qvec, k=8, depth=20,
-                vec_id_col="vec_id", salted=True,
+                vec_id_col="vec_id",
             ).collect(),
         )
     )
@@ -3130,7 +3110,7 @@ def test_dedup_near_recipe_and_keep_best(spark, sf_dir):
     got = sorted(
         r["doc_id"]
         for r in dedup_near(
-            docs, method="jaccard", threshold=0.5, materialize=True
+            docs, method="jaccard", threshold=0.5
         ).collect()
     )
     pairs = jaccard_pairs(docs, threshold=0.5).select("id_a", "id_b")

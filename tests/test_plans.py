@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from quality_spark.model import Id, Rule, RuleSet, RuleSuite
 from quality_spark.operators.runner import add_data_quality
+from quality_spark.plans.blocks import release_local_checkpoint
 
 
 def _plan(df, mode="formatted") -> str:
@@ -382,14 +383,17 @@ def test_split_overall_filter_pushes_to_parquet(spark, sf_dir, tmp_path_factory)
     assert "EqualTo(DQ_overallResult,0)" in flat, plan[:2000]
 
 
-def test_bigram_lm_broadcast_opt_in(spark, sf_dir):
-    """VERDICT r07 #5: score_with_bigram_lm(broadcast=True) hints
-    both LM tables — the two scoring joins plan as BroadcastHashJoin
-    so the exploded bigram stream never shuffles on the gram key;
-    with the default broadcast=False the hint is absent and the
-    planner/AQE decides from sizes (both shapes pinned, results
-    identical)."""
-    from quality_spark.llm.lm import score_with_bigram_lm, train_bigram_lm
+def test_bigram_lm_broadcast_hints(spark, sf_dir):
+    """score_with_bigram_lm leaves the join strategy to the planner
+    and AQE (no broadcast hint on its two LM tables);
+    score_with_bigram_lm_kn hints all four of its vocabulary-bounded
+    tables as broadcast sides."""
+    from quality_spark.llm.lm import (
+        score_with_bigram_lm,
+        score_with_bigram_lm_kn,
+        train_bigram_lm,
+        train_bigram_lm_kn,
+    )
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -397,14 +401,12 @@ def test_bigram_lm_broadcast_opt_in(spark, sf_dir):
         .limit(300)
     )
     pc, cc, v = train_bigram_lm(docs, min_count=2)
-    pc, cc = pc.localCheckpoint(), cc.localCheckpoint()
-    hinted = score_with_bigram_lm(docs, pc, cc, v, broadcast=True)
-    plan = _plan(hinted)
-    assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    default = score_with_bigram_lm(docs, pc, cc, v)
-    rows_h = sorted(map(tuple, hinted.drop("avg_logprob", "perplexity").collect()))
-    rows_d = sorted(map(tuple, default.drop("avg_logprob", "perplexity").collect()))
-    assert rows_h == rows_d and len(rows_h) > 0
+    addk = score_with_bigram_lm(docs, pc, cc, v)
+    assert "ResolvedHint" not in addk._jdf.queryExecution().analyzed().toString()
+    assert addk.count() > 0
+    kn = score_with_bigram_lm_kn(docs, *train_bigram_lm_kn(docs))
+    analyzed = kn._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("strategy=broadcast") == 4, analyzed[:2000]
 
 
 def test_paragraph_dedup_global_scan_count(spark, sf_dir):
@@ -412,9 +414,8 @@ def test_paragraph_dedup_global_scan_count(spark, sf_dir):
     paragraph_dedup_global. Lazy plan: the exploded paragraphs feed
     three consumers -> exactly 3 parquet scans and 3 exchanges
     (election groupBy, reassembly groupBy, stats groupBy — the
-    hash-keyed join reuses the election exchange side). With
-    materialize=True the corpus is scanned ONCE (localCheckpoint) and
-    the checkpointed block feeds all three consumers."""
+    hash-keyed join reuses the election exchange side); nothing is
+    checkpointed."""
     from quality_spark.llm.dedup import paragraph_dedup_global
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -423,14 +424,8 @@ def test_paragraph_dedup_global_scan_count(spark, sf_dir):
     lazy = paragraph_dedup_global(docs, "text", "doc_id")
     plan = _plan(lazy, "simple")
     assert plan.count("FileScan parquet") == 3, plan[:1500]
-    mat = paragraph_dedup_global(docs, "text", "doc_id", materialize=True)
-    mplan = _plan(mat, "simple")
-    assert mplan.count("FileScan parquet") == 0  # checkpoint replaced them
-    assert "ExistingRDD" in mplan
-    # same answer both ways
-    a = sorted(map(tuple, lazy.collect()))
-    b = sorted(map(tuple, mat.collect()))
-    assert a == b and len(a) > 0
+    assert "ExistingRDD" not in plan, plan[:1500]
+    assert lazy.count() > 0
 
 
 def test_rrf_fuse_plan_one_groupby_shuffle(spark):
@@ -492,8 +487,8 @@ def test_bm25_scores_scan_count(spark, sf_dir):
     aggregate + the one cache build = 2 (the text shows 3 'FileScan
     parquet' because each InMemoryTableScan reprints the cached
     subtree's scan; a broken persist would drop the IMTS count to <2
-    and add a live third scan). materialize=True localCheckpoints the
-    staged token frame: ZERO FileScans, ONE tokenize."""
+    and add a live third scan). The staged token frame is not
+    checkpointed."""
     from quality_spark.llm.retrieval import bm25_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -504,15 +499,7 @@ def test_bm25_scores_scan_count(spark, sf_dir):
     plan = _plan(lazy, "simple")
     assert plan.count("InMemoryTableScan") == 2, plan[:2000]
     assert plan.count("FileScan parquet") == 3, plan[:2000]
-    mat = bm25_scores(spark, docs, qs, materialize=True)
-    mplan = _plan(mat, "simple")
-    assert mplan.count("FileScan parquet") == 0, mplan[:2000]
-    assert "ExistingRDD" in mplan
-    assert mplan.count("InMemoryTableScan") == 2
-    # same answer both ways
-    a = sorted((r[0], r[1], r[2], round(r[3], 9)) for r in lazy.collect())
-    b = sorted((r[0], r[1], r[2], round(r[3], 9)) for r in mat.collect())
-    assert a == b and len(a) > 0
+    assert lazy.count() > 0
 
 
 def test_ivf_pq_plan_one_scan_broadcast_probe(spark, sf_dir):
@@ -581,11 +568,9 @@ def test_jaccard_pairs_plan_no_cartesian(spark, sf_dir):
 
 def test_jaccard_pairs_scan_budget(spark, sf_dir):
     """jaccard_pairs scan budget (the bm25_scores lesson, VERDICT r08
-    #1): the lazy plan re-derives the shingle projection per consumer
-    — 6 parquet scans (freq + prefix on BOTH candidate sides, plus
-    the two verify sides); materialize=True collapses them to ONE
-    materialized scan feeding everything — and both ways return the
-    same pairs."""
+    #1): the shingle frame is localCheckpointed, so its consumers
+    (freq + prefix on BOTH candidate sides, plus the two verify sides
+    — 6 parquet scans if left lazy) read ONE materialized scan."""
     from quality_spark.operators.fuzzy import jaccard_pairs
 
     docs = (
@@ -593,16 +578,11 @@ def test_jaccard_pairs_scan_budget(spark, sf_dir):
         .select("doc_id", "text")
         .filter("doc_id < 120")
     )
-    lazy = jaccard_pairs(docs, k=3, threshold=0.2)
-    plan = _plan(lazy, "simple")
-    assert plan.count("FileScan parquet") == 6, plan[:1500]
-    mat = jaccard_pairs(docs, k=3, threshold=0.2, materialize=True)
-    mplan = _plan(mat, "simple")
-    assert mplan.count("FileScan parquet") == 0
-    assert "ExistingRDD" in mplan
-    a = sorted(map(tuple, lazy.collect()))
-    b = sorted(map(tuple, mat.collect()))
-    assert a == b and len(a) > 0
+    pairs = jaccard_pairs(docs, k=3, threshold=0.2)
+    plan = _plan(pairs, "simple")
+    assert plan.count("FileScan parquet") == 0, plan[:1500]
+    assert "ExistingRDD" in plan
+    assert pairs.count() > 0
 
 
 def test_snapshot_diff_plan_one_join_no_cartesian(spark, sf_dir):
@@ -658,11 +638,10 @@ def test_pagerank_iteration_plan_no_cartesian_beyond_one_row(spark):
 
 
 def test_scd2_plan_materialized_no_window_recompute(spark, sf_dir):
-    """scd2_apply(materialize=True): the survivor checkpoint runs the
-    two key-partitioned windows ONCE — the merged output plan must
+    """scd2_apply: the survivor checkpoint runs the two
+    key-partitioned windows ONCE — the merged output plan must
     contain ZERO Window nodes (lazily, all three output branches
-    would re-execute them) and no cartesian. The lazy variant keeps
-    the windows but still no cartesian."""
+    would re-execute them) and no cartesian."""
     from quality_spark.operators.temporal import scd2_apply
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -675,10 +654,6 @@ def test_scd2_plan_materialized_no_window_recompute(spark, sf_dir):
     plan = _plan(scd2_apply(*args, order_cols=["ts", "event_id"]))
     assert "Window" not in plan, plan[:1500]
     assert "CartesianProduct" not in plan, plan[:1500]
-    lazy = _plan(
-        scd2_apply(*args, order_cols=["ts", "event_id"], materialize=False)
-    )
-    assert "Window" in lazy and "CartesianProduct" not in lazy
 
 
 def test_funnel_plan_no_window_no_cartesian(spark, sf_dir):
@@ -781,30 +756,88 @@ def test_cluster_sample_no_cartesian(spark, sf_dir):
     assert plan.count("FileScan parquet") == 1, plan[:2000]
 
 
+def _topk_cases():
+    """One zero-argument builder per per-group top-k operator."""
+    from quality_spark.llm.retrieval import bm25_scores, bm25_topk
+    from quality_spark.llm.sampling import (
+        cap_per_group,
+        cluster_balanced_sample,
+        weighted_sample_per_group,
+    )
+
+    def cap(spark, sf_dir):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return cap_per_group(docs, "source", 3, "n_chars", "doc_id"), 3
+
+    def wsample_g(spark, sf_dir):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return weighted_sample_per_group(
+            docs, "lang", "n_chars", 4, "doc_id", seed=5
+        ), 4
+
+    def cluster(spark, sf_dir):
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        return cluster_balanced_sample(
+            emb, emb.filter("vec_id % 50 = 0"), per_cell=3
+        ), 3
+
+    def bm25(spark, sf_dir):
+        # the top-k cut alone: scores come in checkpointed, so the
+        # scoring shuffles are not part of the plan under test
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        qs = [(1, "data quality"), (2, "spark window shuffle")]
+        scores = bm25_scores(spark, docs, qs).localCheckpoint()
+        return bm25_topk(spark, docs, qs, k=5, scores=scores), 5
+
+    return {
+        "cap_per_group": cap,
+        "weighted_sample_per_group": wsample_g,
+        "cluster_balanced_sample": cluster,
+        "bm25_topk": bm25,
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_topk_cases()))
+def test_topk_one_exchange_partial_window_limit(spark, sf_dir, op):
+    """Each per-group top-k plans ONE Exchange, with Spark's inferred
+    WindowGroupLimit in its Partial mode below it (each map task ships
+    at most k rows per group) and in its Final mode above it — the
+    skew guard the plain row_number window gets from Catalyst's
+    InferWindowGroupLimit rule."""
+    df, k = _topk_cases()[op](spark, sf_dir)
+    assert df.count() > 0
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange " in ln]
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.endswith(f", {k}, Partial")
+    ]
+    finals = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.endswith(f", {k}, Final")
+    ]
+    assert len(exchanges) == 1 and "hashpartitioning" in lines[exchanges[0]], final
+    assert len(partial) == 1 and len(finals) == 1, final
+    assert finals[0] < exchanges[0] < partial[0], final
+
+
 def test_collocation_scan_budget(spark, sf_dir):
-    """<= 2 tokenize scans lazy; materialize=True -> ZERO FileScans
-    (one localCheckpointed tokenize), same rows (the bm25/jaccard
-    scan-budget contract)."""
+    """ZERO FileScans: the one tokenize is localCheckpointed, and the
+    persisted unigram table's 3 consumers read it as
+    InMemoryTableScans (the bm25/jaccard scan-budget contract)."""
     from quality_spark.llm.vocab import _collocation_pmi_lazy
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lazy, uni_l = _collocation_pmi_lazy(docs, min_count=2, top=10)
-    lplan = _plan(lazy, "simple")
-    # uni is persisted (3 consumers read the cache as
-    # InMemoryTableScans); the live scans are the cache build + the
-    # bigram pass = 2 (the text shows them via the IMTS reprint too)
-    assert lplan.count("InMemoryTableScan") == 3, lplan[:3000]
-    mat, uni_m = _collocation_pmi_lazy(
-        docs, min_count=2, top=10, materialize=True
-    )
-    mplan = _plan(mat, "simple")
-    assert mplan.count("FileScan parquet") == 0, mplan[:2000]
-    assert "ExistingRDD" in mplan
-    a = sorted(map(tuple, lazy.collect()))
-    b = sorted(map(tuple, mat.collect()))
-    assert a == b and len(a) > 0
-    uni_l.unpersist()
-    uni_m.unpersist()
+    cut, uni, staged = _collocation_pmi_lazy(docs, min_count=2, top=10)
+    plan = _plan(cut, "simple")
+    assert plan.count("InMemoryTableScan") == 3, plan[:3000]
+    assert plan.count("FileScan parquet") == 0, plan[:2000]
+    assert "ExistingRDD" in plan
+    assert cut.count() > 0
+    uni.unpersist()
+    release_local_checkpoint(staged)
 
 
 def test_collocation_releases_unigram_cache(spark, sf_dir):
@@ -831,9 +864,10 @@ def test_collocation_takeordered_cut(spark, sf_dir):
     from quality_spark.llm.vocab import _collocation_pmi_lazy
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    cut, uni = _collocation_pmi_lazy(docs, min_count=2, top=10)
+    cut, uni, staged = _collocation_pmi_lazy(docs, min_count=2, top=10)
     plan = _plan(cut, "simple")
     uni.unpersist()
+    release_local_checkpoint(staged)
     assert "TakeOrderedAndProject" in plan, plan[:2000]
 
 

@@ -319,24 +319,6 @@ GROUP BY 1
     assert got == want and len(got) > 100
 
 
-def test_cap_per_group_plain_vs_salted_identical(spark):
-    """The salted two-phase cap must return EXACTLY the plain-window
-    result (phase 1 can't evict a global top-cap row), including under
-    a hostile partition layout that splits every group."""
-    from quality_spark.llm.sampling import cap_per_group
-
-    rows = [(i, f"g{i % 3}", float((i * 7) % 11)) for i in range(60)]
-    df = spark.createDataFrame(
-        rows, "doc_id bigint, grp string, score double"
-    ).repartition(8)  # groups straddle partitions -> salt is exercised
-    plain = cap_per_group(df, "grp", 4, "score", "doc_id", salted=False)
-    salted = cap_per_group(df, "grp", 4, "score", "doc_id", salted=True)
-    key = lambda r: (r["grp"], r["doc_id"])
-    assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
-    got = salted.groupBy("grp").count().collect()
-    assert all(r["count"] == 4 for r in got)
-
-
 def test_cap_per_group_tie_break_by_id(spark):
     from quality_spark.llm.sampling import cap_per_group
 
@@ -398,9 +380,9 @@ def test_weighted_sample_es_properties(spark, sf_dir):
     assert all(i % 5 != 0 or i == 42 for i in ids)  # NULL-weight rows out
 
 
-def test_weighted_sample_per_group_salted_and_oracle(spark, sf_dir):
-    """Per-group ES sampling: exactly n per group, salted two-phase
-    identical to plain, DuckDB replay bit-equal."""
+def test_weighted_sample_per_group_oracle(spark, sf_dir):
+    """Per-group ES sampling: exactly n per group, DuckDB replay
+    bit-equal."""
     import duckdb
 
     from quality_spark.llm.sampling import (
@@ -415,13 +397,6 @@ def test_weighted_sample_per_group_salted_and_oracle(spark, sf_dir):
             docs, "lang", "n_chars", 4, "doc_id", seed=5
         ).collect()
     )
-    salted = sorted(
-        (r["lang"], r["doc_id"])
-        for r in weighted_sample_per_group(
-            docs, "lang", "n_chars", 4, "doc_id", seed=5, salted=True
-        ).collect()
-    )
-    assert plain == salted
     import collections
 
     per = collections.Counter(g for g, _ in plain)

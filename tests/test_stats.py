@@ -253,15 +253,13 @@ def test_collocation_known_values(spark):
     assert out[0]["w1"] == "a" and out[0]["w2"] == "b"
 
 
-def test_collocation_materialize_identity_and_empty_docs(spark):
+def test_collocation_empty_docs(spark):
     docs = spark.createDataFrame(
         [(1, "x y x y"), (2, ""), (3, "   "), (4, "solo")],
         "doc_id bigint, text string",
     )
     a = sorted(map(tuple, collocation_pmi(docs, 1, 10).collect()))
-    b = sorted(map(tuple, collocation_pmi(docs, 1, 10, materialize=True).collect()))
-    assert a == b
-    assert all(r[0] in ("x", "y") for r in a)
+    assert a and all(r[0] in ("x", "y") for r in a)
 
 
 def test_collocation_oracle_parity_real_data(spark, sf_dir):
@@ -425,17 +423,13 @@ def test_cluster_sample_caps_and_determinism(spark, sf_dir):
         per.setdefault(r["cell"], []).append(r["vec_id"])
     assert all(len(v) <= 3 for v in per.values())
     assert len(per) > 1
-    # partition-layout independence + salted identity
+    # partition-layout independence
     re = cluster_balanced_sample(
         emb.repartition(7), cents, per_cell=3, seed=7
     )
     assert sorted(map(tuple, re.select("cell", "vec_id").collect())) == sorted(
         map(tuple, rows)
     )
-    salted = cluster_balanced_sample(emb, cents, per_cell=3, seed=7, salted=True)
-    assert sorted(
-        map(tuple, salted.select("cell", "vec_id").collect())
-    ) == sorted(map(tuple, rows))
     # different seed -> (almost surely) different picks somewhere
     other = cluster_balanced_sample(emb, cents, per_cell=3, seed=8)
     assert sorted(

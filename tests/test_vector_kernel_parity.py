@@ -7,7 +7,7 @@ row: the public Spark function (the numpy kernel behind an Arrow UDF),
 the oracles are built from. The inputs are the edge cases: a NULL
 vector, short, long and empty rows, a NULL element, a NaN element, ±Inf
 elements (alone and together), and exact ties (for the classifier:
-NULL, empty and whitespace-only text)."""
+NULL, empty and whitespace-only text, and a vertical tab)."""
 
 from __future__ import annotations
 
@@ -78,6 +78,7 @@ TEXTS = [
     (5, "a b"),
     (6, "  the cat\tsat on the\nmat  the cat "),
     (7, "héllo wörld — ünïcode"),
+    (8, "a\x0bb c"),  # vertical tab: Java's \s, not DuckDB's
 ]
 
 
