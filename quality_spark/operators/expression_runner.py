@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import RuleSuite
-from ..plans.compiler import expand_rules, RuleCompilationError
+from ..plans.compiler import CompiledSuite, RuleCompilationError
 from .aggregates import (
     AggSite,
     MapAggSite,
@@ -59,15 +59,12 @@ def add_expression_runner(
     """df (per-row rules) or a 1-row aggregate frame (aggregate rules)
     with the expressionRunner result struct appended as ``name``."""
     spark = df.sparkSession
-    expanded = expand_rules(suite)
+    compiled = CompiledSuite(suite)
 
     rules: List[Tuple] = []  # (rs, r, sql)
     sites: List[AggSite] = []
-    from ..plans.compiler import registry_for
-
-    reg = registry_for(suite)
-    for rs, r, sql in expanded:
-        sql2, rule_sites = rewrite_agg_exprs(sql, reg)
+    for rs, r, sql in compiled.rules:
+        sql2, rule_sites = rewrite_agg_exprs(sql, compiled.registry)
         sites.extend(rule_sites)
         rules.append((rs, r, sql2))
 

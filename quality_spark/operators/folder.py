@@ -10,6 +10,11 @@ in the fold's CASE and in the ``any_passed`` guard. Text stays linear in the num
 (a naive nested CASE-WHEN rewrite would double the accumulator
 expression per step). Narrow projection; no shuffle; streaming-safe.
 
+The salience-ordered steps (trigger encoding plus expanded, parsed
+output) come from ``plans/compiler.py:CompiledSuite``, typed against
+the frame the column is selected on, which also fixes the accumulator
+type when ``use_type`` is not given.
+
 Not staged like the runner's ``add_*`` helpers (rule expressions
 projected into columns first): staging the engine and the folder
 through ``runner._add_staged`` was measured slower on the
@@ -19,83 +24,60 @@ through ``runner._add_staged`` was measured slower on the
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple, Union
+from typing import List, Optional, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.lambdas import expand_sql
+from ..expr import sql_of_column, substitute_identifiers
 from ..model import PASSED_INT, RuleSuite
-from ..plans.compiler import registry_for
-from ..plans.outputs import output_step_sql, parse_output
-from .engine import _salience_ordered, _trigger_encs
+from ..plans.compiler import CompiledSuite
+from ..plans.outputs import output_step_sql
 from .runner import _assemble
 
 __all__ = ["rule_folder_runner", "add_folder", "fold_and_replace_fields"]
 
 
-from ..expr import sql_of_column as _sql_of_column  # canonical bridge
-
-
 def rule_folder_runner(
     suite: RuleSuite,
     starting_struct: Union[Column, str],
-    df: Optional[DataFrame] = None,
+    df: DataFrame,
     debug_mode: bool = False,
     use_type: Optional[Union[str, T.DataType]] = None,
 ) -> Column:
-    """Column of STRUCT<ruleSuiteResults, result: T> where T is the
-    starting struct's type (debugMode → ARRAY<STRUCT<salience, result>>;
+    """Column of STRUCT<ruleSuiteResults, result: T>, to be selected on
+    ``df``, where T is the starting struct's type (``use_type``, else
+    probed on ``df``; debugMode → ARRAY<STRUCT<salience, result>>;
     reference schema impl/RuleFolderRunner.scala:95-98).
 
     ``starting_struct`` may be a Column (e.g. ``F.struct('a', 'b')``) or
     SQL text. Outputs are ``currentResult -> …`` lambdas or
     ``set(field = expr, …)`` sugar."""
     start_sql = (
-        starting_struct if isinstance(starting_struct, str) else _sql_of_column(starting_struct)
+        starting_struct if isinstance(starting_struct, str) else sql_of_column(starting_struct)
     )
-
-    # accumulator schema: explicit use_type, else probed from df
-    schema: Optional[T.StructType] = None
-    ddl: Optional[str] = None
     if use_type is not None:
-        dt = T._parse_datatype_string(use_type) if isinstance(use_type, str) else use_type
-        if not isinstance(dt, T.StructType):
+        schema = T._parse_datatype_string(use_type) if isinstance(use_type, str) else use_type
+        if not isinstance(schema, T.StructType):
             raise ValueError("use_type must be a struct type")
-        schema, ddl = dt, dt.simpleString()
-    elif df is not None:
-        probed = df.select(F.expr(start_sql).alias("_s")).schema.fields[0].dataType
-        if not isinstance(probed, T.StructType):
+    else:
+        schema = df.select(F.expr(start_sql).alias("_s")).schema.fields[0].dataType
+        if not isinstance(schema, T.StructType):
             raise ValueError("starting_struct must evaluate to a struct")
-        schema, ddl = probed, probed.simpleString()
-    elif debug_mode:
-        # the debug zero interpolates the accumulator DDL into a CAST;
-        # without it the SQL would contain the literal text 'None' and
-        # die in the parser with no hint at the real cause
-        raise ValueError(
-            "debug_mode needs the accumulator type: pass df= (to probe "
-            "it from starting_struct) or use_type="
-        )
+    ddl = schema.simpleString()
 
-    enc_by_set = _trigger_encs(suite, df)
+    compiled = CompiledSuite(suite)
+    enc_by_set = compiled.encode(df)
     dq = _assemble(suite, enc_by_set, with_suite_overall=True)
-
-    ordered = _salience_ordered(suite, enc_by_set)
-    reg = registry_for(suite)
-    steps: List[Tuple[int, str, str]] = []  # (salience, trigger_enc, out(acc) sql)
-    for rs, r, enc, sal in ordered:
-        if r.run_on_pass is None or r.run_on_pass.output is None:
-            raise ValueError(f"folder rule {r.id} has no output expression")
-        text = expand_sql(r.run_on_pass.output.rule, reg)
-        out = parse_output(text)
-        # "__qacc" placeholder is identifier-substituted below — a plain
-        # str.replace would corrupt identifiers that merely contain it
-        steps.append((sal, enc, output_step_sql(out, "__qacc", schema)))
-
-    start_cast = f"CAST(({start_sql}) AS {ddl})" if ddl else f"({start_sql})"
-
-    from ..expr import substitute_identifiers
+    # (salience, trigger_enc, out(acc) sql); the "__qacc" placeholder is
+    # identifier-substituted below — a plain str.replace would corrupt
+    # identifiers that merely contain it
+    steps = [
+        (st.salience, st.trigger, output_step_sql(st.output, "__qacc", schema))
+        for st in compiled.steps(enc_by_set)
+    ]
+    start_cast = f"CAST(({start_sql}) AS {ddl})"
 
     if not steps:
         result_sql = "NULL" if not debug_mode else "array()"

@@ -4,8 +4,10 @@ nested DQ result column.
 Reference behavior: impl/RuleRunner.scala:58-189 (custom codegen’d
 expression); here the same result is declared as a
 ``named_struct``/``map`` tree over per-rule encoded expressions, so
-Catalyst plans/codegens it like any user query. ``rule_runner`` returns
-that tree as one Column; the ``add_*`` helpers build it in two
+Catalyst plans/codegens it like any user query. Every builder takes the
+frame its result is selected on: ``plans/compiler.py:CompiledSuite``
+types each rule there and picks its result encoding. ``rule_runner``
+returns that tree as one Column; the ``add_*`` helpers build it in two
 projections (``_add_staged``) so each rule expression appears once. At
 scale this is a pure narrow map — no shuffle, no UDF, fully
 pushdown/AQE-friendly.
@@ -13,16 +15,15 @@ pushdown/AQE-friendly.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..expr import quote_identifier
 from ..model import RuleSuite, pack_id
-from ..plans.compiler import expand_rules, probe_types
-from ..results import encode_rule_sql, overall_result_sql
+from ..plans.compiler import CompiledSuite
+from ..results import overall_result_sql
 
 __all__ = [
     "rule_runner",
@@ -36,25 +37,6 @@ __all__ = [
 
 def _lit_packed(i) -> Column:
     return F.lit(pack_id(i)).cast("bigint")
-
-
-def _encoded_sqls(suite: RuleSuite, df: Optional[DataFrame]) -> List[List[str]]:
-    """Per ruleset, per rule: SQL of the int-encoded rule expression."""
-    expanded = expand_rules(suite)
-    if df is not None:
-        dtypes = probe_types(df, [s for _, _, s in expanded])
-        encoded = [encode_rule_sql(s, t) for (_, _, s), t in zip(expanded, dtypes)]
-    else:
-        # no frame to probe: route every rule through the double branch,
-        # exact for boolean/double/decimal rules; an integer result
-        # outside {0,1,-1,-2} differs from the reference (which fails it)
-        encoded = [encode_rule_sql(s, T.DoubleType()) for _, _, s in expanded]
-    out: List[List[str]] = []
-    i = 0
-    for rs in suite.rule_sets:
-        out.append(encoded[i : i + len(rs.rules)])
-        i += len(rs.rules)
-    return out
 
 
 def _assemble(
@@ -107,23 +89,19 @@ def _assemble(
     return F.expr(f"named_struct({', '.join(fields)})")
 
 
-def rule_runner(suite: RuleSuite, df: Optional[DataFrame] = None) -> Column:
+def rule_runner(suite: RuleSuite, df: DataFrame) -> Column:
     """Column producing ``ruleSuiteResultType``
-    (STRUCT<id BIGINT, overallResult INT, ruleSetResults MAP<…>>).
-
-    Pass ``df`` (the frame the column will be selected on) to get exact
-    type-directed result encoding — the ``add_*`` helpers do this for
-    you. Reference entry: impl/imports/RuleRunnerImports.scala:24.
+    (STRUCT<id BIGINT, overallResult INT, ruleSetResults MAP<…>>), to
+    be selected on ``df``: each rule's result encoding follows its type
+    there. Reference entry: impl/imports/RuleRunnerImports.scala:24.
     """
-    enc_sqls = _encoded_sqls(suite, df)
-    return _assemble(suite, enc_sqls, with_suite_overall=True)
+    return _assemble(suite, CompiledSuite(suite).encode(df), with_suite_overall=True)
 
 
-def rule_runner_details(suite: RuleSuite, df: Optional[DataFrame] = None) -> Column:
+def rule_runner_details(suite: RuleSuite, df: DataFrame) -> Column:
     """Details variant — no suite-level overallResult field
     (reference: impl/RuleSparkTypes.scala:26)."""
-    enc_sqls = _encoded_sqls(suite, df)
-    return _assemble(suite, enc_sqls, with_suite_overall=False)
+    return _assemble(suite, CompiledSuite(suite).encode(df), with_suite_overall=False)
 
 
 def _fresh_names(taken: Sequence[str], wanted: Sequence[str]) -> List[str]:
@@ -154,56 +132,60 @@ def add_flat_rule_results(
     ~N^2 rule expressions per row; staging keeps it at N. Use the
     generic ``flatten_results`` macro for DQ structs read back from
     storage. ``keep`` names are literal top-level column names."""
-    keep_cols = [
-        F.col(quote_identifier(c)) for c in (keep if keep is not None else df.columns)
-    ]
-    enc_sqls = _encoded_sqls(suite, df)
-    flat_ids = [
-        (rs, r) for rs, ss in zip(suite.rule_sets, enc_sqls) for r in rs.rules
-    ]
-    flat_sqls = [s for ss in enc_sqls for s in ss]
-    n = len(flat_sqls)
-    names = _fresh_names(
-        df.columns,
-        [f"__qs_enc{i}" for i in range(n)]
-        + ["__qs_ovs", "__qs_flat"]
-        + [f"__qs_ov{si}" for si in range(len(suite.rule_sets))],
-    )
-    enc_cols, ovs, flat_col, set_ovs = names[:n], names[n], names[n + 1], names[n + 2 :]
-    staged = df.select(
-        *keep_cols,
-        *[F.expr(s).cast("int").alias(nm) for s, nm in zip(flat_sqls, enc_cols)],
+    keep_names = [quote_identifier(c) for c in (keep if keep is not None else df.columns)]
+    keep_cols = [F.col(c) for c in keep_names]
+    staged, refs = _stage(df, CompiledSuite(suite).encode(df), keep_names)
+    enc_cols = [nm for set_refs in refs for nm in set_refs]
+    ovs, flat_col, *set_ovs = _fresh_names(
+        [*df.columns, *enc_cols],
+        ["__qs_ovs", "__qs_flat"] + [f"__qs_ov{si}" for si in range(len(refs))],
     )
     # stage the overalls as columns as well: structs made purely of
     # column references explode at generator speed, while embedding the
     # fold CASEs in all N structs re-evaluates them N times per row
-    suite_overall = overall_result_sql(enc_cols, suite.probable_pass)
-    set_ov_cols: List[str] = []
-    set_ov_exprs: List[Column] = []
-    i = 0
-    for ss, so in zip(enc_sqls, set_ovs):
-        cols = enc_cols[i : i + len(ss)]
-        set_ov_exprs.append(
-            F.expr(overall_result_sql(cols, suite.probable_pass)).alias(so)
-        )
-        set_ov_cols.extend([so] * len(ss))
-        i += len(ss)
     staged = staged.select(
-        "*", F.expr(suite_overall).alias(ovs), *set_ov_exprs
+        "*",
+        F.expr(overall_result_sql(enc_cols, suite.probable_pass)).alias(ovs),
+        *[
+            F.expr(overall_result_sql(cols, suite.probable_pass)).alias(so)
+            for cols, so in zip(refs, set_ovs)
+        ],
     )
-    structs = []
-    for (rs, r), enc_col, so_col in zip(flat_ids, enc_cols, set_ov_cols):
-        structs.append(
-            "named_struct("
-            f"'ruleSuiteId', {suite.id.id}, 'ruleSuiteVersion', {suite.id.version}, "
-            f"'ruleSuiteResult', {ovs}, 'ruleSetResult', {so_col}, "
-            f"'ruleSetId', {rs.id.id}, 'ruleSetVersion', {rs.id.version}, "
-            f"'ruleId', {r.id.id}, 'ruleVersion', {r.id.version}, "
-            f"'ruleResult', {enc_col})"
-        )
+    structs = [
+        "named_struct("
+        f"'ruleSuiteId', {suite.id.id}, 'ruleSuiteVersion', {suite.id.version}, "
+        f"'ruleSuiteResult', {ovs}, 'ruleSetResult', {so}, "
+        f"'ruleSetId', {rs.id.id}, 'ruleSetVersion', {rs.id.version}, "
+        f"'ruleId', {r.id.id}, 'ruleVersion', {r.id.version}, "
+        f"'ruleResult', {enc_col})"
+        for rs, cols, so in zip(suite.rule_sets, refs, set_ovs)
+        for r, enc_col in zip(rs.rules, cols)
+    ]
     arr = "array(" + ", ".join(structs) + ")"
     exploded = staged.select(*keep_cols, F.explode(F.expr(arr)).alias(flat_col))
     return exploded.select(*keep_cols, f"{flat_col}.*")
+
+
+def _stage(
+    df: DataFrame, enc_sqls: List[List[str]], keep: Sequence[str]
+) -> Tuple[DataFrame, List[List[str]]]:
+    """``keep`` plus every encoded rule expression projected into a real
+    INT column, and per set the names of those columns."""
+    flat = [s for ss in enc_sqls for s in ss]
+    names = _fresh_names(df.columns, [f"__qs_enc{i}" for i in range(len(flat))])
+    # ONE selectExpr call instead of a py4j F.expr/cast/alias round
+    # trip per rule — at 1000 rules that is ~3000 saved JVM calls
+    # (measured: the staging projection built 3x faster, identical
+    # schema/plan). The encoded SQL is embeddable text by the same
+    # invariant _assemble's single-string build already relies on.
+    staged = df.selectExpr(
+        *keep, *[f"CAST(({s}) AS INT) AS `{nm}`" for s, nm in zip(flat, names)]
+    )
+    refs: List[List[str]] = []
+    for ss in enc_sqls:
+        refs.append(names[: len(ss)])
+        names = names[len(ss) :]
+    return staged, refs
 
 
 def _add_staged(
@@ -222,22 +204,8 @@ def _add_staged(
     the one-shot struct falls to INTERPRETED projection past ~500 rules
     (SCALE.md). CollapseProject leaves the two projections alone because
     the staged columns are non-cheap and each is referenced 3x."""
-    flat = [s for ss in enc_sqls for s in ss]
-    names = _fresh_names(df.columns, [f"__qs_enc{i}" for i in range(len(flat))])
-    # ONE selectExpr call instead of a py4j F.expr/cast/alias round
-    # trip per rule — at 1000 rules that is ~3000 saved JVM calls
-    # (measured: the staging projection built 3x faster, identical
-    # schema/plan). The encoded SQL is embeddable text by the same
-    # invariant _assemble's single-string build already relies on.
-    staged = df.selectExpr(
-        "*",
-        *[f"CAST(({s}) AS INT) AS `{nm}`" for s, nm in zip(flat, names)],
-    )
-    refs: List[List[str]] = []
-    i = 0
-    for ss in enc_sqls:
-        refs.append(names[i : i + len(ss)])
-        i += len(ss)
+    staged, refs = _stage(df, enc_sqls, ["*"])
+    names = [nm for set_refs in refs for nm in set_refs]
     # "* EXCEPT", not select(*df.columns): input names with dots or
     # duplicates pass through untouched. One projection, where a
     # trailing drop() would analyse the whole plan once more (measured
@@ -262,7 +230,7 @@ def add_data_quality(
     the staged two-projection shape: the same values as
     ``df.select("*", rule_runner(suite, df))``, from a plan linear in the
     number of rules."""
-    return _add_dq(df, suite, _encoded_sqls(suite, df), name)
+    return _add_dq(df, suite, CompiledSuite(suite).encode(df), name)
 
 
 def add_overall_results_and_details(
@@ -287,7 +255,7 @@ def add_overall_results_and_details(
             ),
         ]
 
-    return _add_staged(df, _encoded_sqls(suite, df), build)
+    return _add_staged(df, CompiledSuite(suite).encode(df), build)
 
 
 def add_data_quality_f(suite: RuleSuite, name: str = "DQ"):

@@ -154,11 +154,9 @@ def set_to_struct_sql(
     return f"named_struct({', '.join(parts)})"
 
 
-def output_step_sql(out: Output, acc_sql: str, schema: Optional[T.StructType]) -> str:
+def output_step_sql(out: Output, acc_sql: str, schema: T.StructType) -> str:
     """SQL producing the new accumulator value from ``acc_sql``."""
     if isinstance(out, SetOutput):
-        if schema is None:
-            raise ValueError("set() output requires a known accumulator schema")
         return set_to_struct_sql(out.assignments, acc_sql, schema)
     if isinstance(out, LambdaOutput):
         return f"({substitute_identifiers(out.body, {out.param: acc_sql})})"

@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..expr import tokenize, _next_code
-from ..functions.lambdas import expand_sql
 from ..model import RuleSuite
-from .compiler import _batch, resolve
+from .compiler import _batch, expand_each, resolve
 
 SQL_KEYWORDS = {
     "and", "or", "not", "in", "is", "null", "case", "when", "then", "else",
@@ -105,28 +104,23 @@ def validate(
     # one issue slot per rule keeps the issues in rule order
     slots: List[Optional[ValidationIssue]] = []
     pending: List[Tuple[int, Tuple, str]] = []  # (slot, coords, expanded)
-    for rs in suite.rule_sets:
-        for r in rs.rules:
-            coords = (
-                (suite.id.id, suite.id.version),
-                (rs.id.id, rs.id.version),
-                (r.id.id, r.id.version),
+    for rs, r, expanded in expand_each(suite, reg):
+        coords = (
+            (suite.id.id, suite.id.version),
+            (rs.id.id, rs.id.version),
+            (r.id.id, r.id.version),
+        )
+        slots.append(None)
+        if isinstance(expanded, RecursionError):
+            slots[-1] = ValidationIssue("lambdaSOE", *coords, str(expanded))
+        elif isinstance(expanded, ValueError):
+            slots[-1] = ValidationIssue("lambdaError", *coords, str(expanded))
+        elif isinstance(expanded, KeyError):
+            # unregistered map/bloom lookups raise at macro expansion
+            slots[-1] = ValidationIssue(
+                "unknownLookup", *coords, _first_line(str(expanded).strip('"'))
             )
-            slots.append(None)
-            try:
-                expanded = expand_sql(r.expression.rule, reg)
-            except RecursionError as e:
-                slots[-1] = ValidationIssue("lambdaSOE", *coords, str(e))
-                continue
-            except ValueError as e:
-                slots[-1] = ValidationIssue("lambdaError", *coords, str(e))
-                continue
-            except KeyError as e:
-                # unregistered map/bloom lookups raise at macro expansion
-                slots[-1] = ValidationIssue(
-                    "unknownLookup", *coords, _first_line(str(e).strip('"'))
-                )
-                continue
+        else:
             pending.append((len(slots) - 1, coords, expanded))
 
     projection, resolved = resolve(empty, [s for _, _, s in pending])

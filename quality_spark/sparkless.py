@@ -9,8 +9,9 @@ Spark SQL), so the nearest idiom is compiling the suite ONCE against a
 declared schema and evaluating incoming batches through a reusable
 local plan:
 
-* the suite is type-probed and compiles to encoded per-rule SQL a
-  single time (``RowProcessor.__init__``), not per batch;
+* the suite compiles to encoded per-rule SQL a single time
+  (``RowProcessor.__init__``), not per batch, through the same compile
+  path as every Spark runner (``plans/compiler.py:CompiledSuite``);
 * ``process`` ships a batch into a local-relation plan and selects the
   staged runner over it (``operators/runner.py:_add_staged``) — no
   shuffle, no job scheduling beyond one collect. Spark still analyses
@@ -33,26 +34,10 @@ from pyspark.sql import Row, SparkSession
 from pyspark.sql import types as T
 
 from .model import RuleSuite
-from .operators.runner import _add_dq, _encoded_sqls
+from .operators.runner import _add_dq
+from .plans.compiler import CompiledSuite
 
 __all__ = ["RowProcessor", "DuckDBProcessor", "dq_factory"]
-
-# DuckDB type name of a probed rule -> the Spark type whose branch of
-# results.encode_rule_sql encodes it; any other type encodes as Failed
-_SPARK_TYPE_OF_DUCK = {
-    "BOOLEAN": T.BooleanType(),
-    "TINYINT": T.ByteType(),
-    "SMALLINT": T.ShortType(),
-    "INTEGER": T.IntegerType(),
-    "BIGINT": T.LongType(),
-    "HUGEINT": T.LongType(),
-    "FLOAT": T.FloatType(),
-    "REAL": T.FloatType(),
-    "DOUBLE": T.DoubleType(),
-    "DECIMAL": T.DecimalType(),
-    "VARCHAR": T.StringType(),
-}
-
 
 def _parse_scalar_ddl(schema: str) -> list:
     """[(name, normalized_type)] from a Spark-style scalar DDL string
@@ -114,8 +99,8 @@ class RowProcessor:
         self.name = name
         self.suite = suite
         probe = spark.createDataFrame([], self.schema)
-        # probe and encode once, not per batch
-        self._enc_sqls = _encoded_sqls(suite, probe)
+        # type and encode once, not per batch
+        self._enc_sqls = CompiledSuite(suite).encode(probe)
 
     def process(self, rows: Iterable[Union[Mapping, Sequence]]) -> List[Row]:
         batch = self.spark.createDataFrame(list(rows), self.schema)
@@ -139,16 +124,20 @@ class DuckDBProcessor:
     no JVM, no SparkSession, embeddable in any Python service. This is
     the closest Python analogue of the reference's sparkless
     MutableProjection path (sparkless/Processor.scala:13-42): compile
-    once, stream batches. Each probed rule type maps to its Spark type
-    and goes through the Spark runner's own encoder and fold
+    once, stream batches. The suite compiles through the Spark runners'
+    compile path (``plans/compiler.py:CompiledSuite.encode_duckdb``):
+    all rules are typed in one ``LIMIT 0`` statement, each DuckDB type
+    maps to its Spark type and goes through the Spark runner's own
+    encoder and fold
     (``results.encode_rule_sql`` / ``overall_result_sql``, dialect
     ``"duckdb"``), so both engines give the same integers.
 
     Scope: the dialect-portable subset of rule SQL (comparisons,
     arithmetic, CASE, IN, string/math functions, expanded lambdas).
     Rules using Spark-only functions fail at COMPILE time with the
-    offending rule named — same contract as the reference's sparkless,
-    which also rejects non-compilable expressions.
+    offending rule named (only then is each rule bound alone) — same
+    contract as the reference's sparkless, which also rejects
+    non-compilable expressions.
 
     Throughput: DuckDB parallelizes per ~122k-row morsel, so batches
     below that run single-threaded — feed LARGE batches for service
@@ -178,28 +167,18 @@ class DuckDBProcessor:
         silently select the wrong result encoding."""
         import duckdb
 
-        from .expr import strip_number_suffixes
-        from .plans.compiler import RuleCompilationError, expand_rules
-        from .results import encode_rule_sql, overall_result_sql
+        from .results import overall_result_sql
         from .model import pack_id
 
-        self.suite = suite
-        self._con = duckdb.connect()
-        self._con.execute("SET disabled_optimizers = 'in_clause'")
-        # our macro expansion emits Spark typed numeric literals
-        # (0.0D / 42L); DuckDB takes them without the suffix
-        expanded = [
-            (rs, r, strip_number_suffixes(sql))
-            for rs, r, sql in expand_rules(suite)
-        ]
-
-        # type-probe against a schema-shaped empty relation (LIMIT 0 —
-        # analysis only, mirrors runner.probe_types)
         if (sample_row is None) == (schema is None):
             raise ValueError(
                 "pass exactly one of sample_row (all values non-null) "
                 "or schema (Spark DDL string)"
             )
+        self.suite = suite
+        self._con = duckdb.connect()
+        self._con.execute("SET disabled_optimizers = 'in_clause'")
+        # the rules are typed against a schema-shaped empty relation
         if schema is not None:
             _DUCK = {
                 "boolean": "BOOLEAN", "byte": "TINYINT", "tinyint": "TINYINT",
@@ -242,21 +221,11 @@ class DuckDBProcessor:
                 )
             probe_df = pd.DataFrame([sample_row])
             self._con.register("__qs_probe", probe_df)
-        types: List[T.DataType] = []
-        for rs, r, sql in expanded:
-            try:
-                rel = self._con.sql(f"SELECT ({sql}) AS e FROM __qs_probe LIMIT 0")
-                duck_t = str(rel.types[0]).split("(")[0]
-                types.append(_SPARK_TYPE_OF_DUCK.get(duck_t, T.NullType()))
-            except Exception as e:
-                raise RuleCompilationError(
-                    f"rule {r.id} in set {rs.id} is not DuckDB-portable "
-                    f"(sparkless scope is the shared SQL subset): {e}"
-                ) from e
-
+        encoded = CompiledSuite(suite).encode_duckdb(self._con, "__qs_probe")
         self._rules = [
-            (pack_id(rs.id), pack_id(r.id), encode_rule_sql(sql, t, "duckdb"))
-            for (rs, r, sql), t in zip(expanded, types)
+            (pack_id(rs.id), pack_id(r.id), enc)
+            for rs, encs in zip(suite.rule_sets, encoded)
+            for r, enc in zip(rs.rules, encs)
         ]
         self._suite_id = pack_id(suite.id)
 

@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from quality_spark import (
+    DuckDBProcessor,
     Id,
+    RowProcessor,
+    add_data_quality,
+    add_expression_runner,
     add_folder,
     add_rule_engine,
     engine_rule,
@@ -14,6 +18,7 @@ from quality_spark import (
     fold_and_replace_fields,
     pack_id,
 )
+from quality_spark.plans.compiler import RuleCompilationError
 
 
 @pytest.fixture(scope="module")
@@ -315,3 +320,77 @@ def test_debug_mode_outputs_stay_trigger_guarded(spark):
     rows = {r["b"]: r["ruleEngine"]["result"] for r in out.collect()}
     assert [(e["salience"], e["result"]) for e in rows[2]] == [(10, 5)]
     assert [(e["salience"], e["result"]) for e in rows[0]] == [(20, -1)]
+
+
+def _lookup_suite(trigger: str, output: str):
+    return engine_suite(
+        (1, 1),
+        [((10, 1), [
+            engine_rule((100, 1), "s IS NOT NULL", 10, "s"),
+            engine_rule((101, 1), trigger, 20, output),
+        ])],
+    )
+
+
+_EVALUATORS = {
+    "add_data_quality": lambda spark, df, suite: add_data_quality(df, suite),
+    "add_rule_engine": lambda spark, df, suite: add_rule_engine(df, suite, "string"),
+    "add_folder": lambda spark, df, suite: add_folder(df, suite, "named_struct('s', s)"),
+    "RowProcessor": lambda spark, df, suite: RowProcessor(spark, suite, "s string"),
+    "DuckDBProcessor": lambda spark, df, suite: DuckDBProcessor(suite, schema="s string"),
+}
+
+
+@pytest.mark.parametrize("evaluator", sorted(_EVALUATORS))
+def test_unknown_lookup_names_its_rule(spark, evaluator):
+    """An unregistered map in a rule is a compile error that names the
+    suite, set and rule, from every evaluator."""
+    df = spark.createDataFrame([("a",)], "s string")
+    suite = _lookup_suite("map_contains('nope', s)", "s")
+    with pytest.raises(RuleCompilationError) as e:
+        _EVALUATORS[evaluator](spark, df, suite)
+    msg = str(e.value)
+    assert "rule Id(id=101, version=1) in set Id(id=10, version=1) of suite Id(id=1, version=1)" in msg
+    assert "map lookup 'nope' not registered" in msg
+
+
+@pytest.mark.parametrize("evaluator", ["add_rule_engine", "add_folder"])
+def test_unknown_lookup_in_output_names_its_rule(spark, evaluator):
+    df = spark.createDataFrame([("a",)], "s string")
+    output = {
+        "add_rule_engine": "map_lookup('nope', s)",
+        "add_folder": "set(s = map_lookup('nope', s))",
+    }[evaluator]
+    with pytest.raises(RuleCompilationError, match=r"rule Id\(id=101, version=1\) .* \(output\)"):
+        _EVALUATORS[evaluator](spark, df, _lookup_suite("s IS NOT NULL", output))
+
+
+def test_one_lambda_registry_per_compile(spark, monkeypatch):
+    """Each builder expands its rules and outputs with ONE registry."""
+    from quality_spark.functions.lambdas import LambdaRegistry
+
+    builds = []
+    orig = LambdaRegistry.__init__
+
+    def counted(self, *a, **k):
+        builds.append(1)
+        orig(self, *a, **k)
+
+    monkeypatch.setattr(LambdaRegistry, "__init__", counted)
+    df = spark.createDataFrame([(1,)], "x long")
+
+    def suite(output):
+        return engine_suite(
+            (1, 1),
+            [((10, 1), [engine_rule((100, 1), "big(x)", 10, output)])],
+            lambdas=[("big", "v -> v > 0", (900, 1))],
+        )
+
+    for build in (
+        lambda: add_rule_engine(df, suite("x + 1")),
+        lambda: add_folder(df, suite("set(x = x + 1)"), "named_struct('x', x)"),
+        lambda: add_expression_runner(df, suite("x")),
+    ):
+        builds.clear()
+        build()
+        assert len(builds) == 1

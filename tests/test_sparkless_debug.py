@@ -106,15 +106,20 @@ def test_duckdb_processor_rejects_spark_only_rules():
     from quality_spark.plans.compiler import RuleCompilationError
     from quality_spark.sparkless import DuckDBProcessor
 
-    suite = RuleSuite(
-        Id(1, 1),
-        (RuleSet(Id(10, 1), (Rule(Id(100, 1), ExpressionRule("xxhash64(x) > 0")),)),),
-    )
+    # the non-portable rule sits between two portable ones: the batched
+    # bind fails as a whole, and the error still names rule 101
+    rules = [
+        Rule(Id(100, 1), ExpressionRule("x = 'a'")),
+        Rule(Id(101, 1), ExpressionRule("xxhash64(x) > 0")),
+        Rule(Id(102, 1), ExpressionRule("length(x) > 0")),
+    ]
+    suite = RuleSuite(Id(1, 1), (RuleSet(Id(10, 1), tuple(rules)),))
     try:
         DuckDBProcessor(suite, {"x": "a"})
         assert False, "expected RuleCompilationError"
     except RuleCompilationError as e:
-        assert "100" in str(e) or "not DuckDB-portable" in str(e)
+        assert "rule Id(id=101, version=1) in set Id(id=10, version=1)" in str(e)
+        assert "not DuckDB-portable" in str(e)
 
 
 def test_duckdb_processor_truncates_probabilities_like_spark(spark):

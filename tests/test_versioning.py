@@ -122,7 +122,7 @@ def test_meta_rule_generated_rules_run(spark, sf_dir):
     base: RuleSuiteMap = {Id(7, 1): RuleSuite(Id(7, 1))}
     cols = sorted(f.name.lower() for f in li.schema.fields if f.dataType.simpleString() == "double")
     suite = integrate_meta_rule_sets(li, base, metas, cols.index)[Id(7, 1)]
-    out = li.select(rule_runner(suite).alias("dq")).limit(100).collect()
+    out = li.select(rule_runner(suite, li).alias("dq")).limit(100).collect()
     assert all(r["dq"]["overallResult"] == PASSED_INT for r in out)
 
 

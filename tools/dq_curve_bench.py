@@ -34,7 +34,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from quality_spark import add_data_quality
-    from quality_spark.operators.runner import _encoded_sqls
+    from quality_spark.plans.compiler import CompiledSuite
 
     spark = bench.make_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,7 +46,7 @@ def main() -> None:
         return bench.run_only(lambda: bench.noop_write(df))
 
     # decomposition at the top point: stage-only vs full staged
-    flat = [s for ss in _encoded_sqls(bench.gen_wide_suite(RULES[-1]), li) for s in ss]
+    flat = [s for ss in CompiledSuite(bench.gen_wide_suite(RULES[-1])).encode(li) for s in ss]
     stage_only = li.select(
         "*",
         *[F.expr(s).cast("int").alias(f"__c{i}") for i, s in enumerate(flat)],
