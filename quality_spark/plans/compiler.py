@@ -5,14 +5,15 @@ this module is the one place a suite is compiled. ``CompiledSuite``
 builds one lambda registry and macro-expands every rule text once
 (builtin quality functions + user lambdas); ``encode`` types all the
 rules against the target DataFrame in one batched analysis and encodes
-them to the integer result domain, ``encode_duckdb`` does the same in
-one DuckDB ``LIMIT 0`` statement, and ``steps`` orders the rules by
-salience with their expanded, parsed outputs for the rule engine and
-the folder. The runners hand the result to Spark as ordinary SQL
-columns; Catalyst then does analysis, optimisation (subexpression
-elimination across rules included — the reference goes out of its way
-to keep this working, impl/RuleRunner.scala:63-68) and whole-stage
-codegen exactly as it would for hand-written DataFrame code.
+them to the integer result domain, ``typed_duckdb`` types them in one
+DuckDB ``LIMIT 0`` statement (the caller encodes each rule's value),
+and ``steps`` orders the rules by salience with their expanded, parsed
+outputs for the rule engine and the folder. The runners hand the result
+to Spark as ordinary SQL columns; Catalyst then does analysis,
+optimisation (subexpression elimination across rules included — the
+reference goes out of its way to keep this working,
+impl/RuleRunner.scala:63-68) and whole-stage codegen exactly as it
+would for hand-written DataFrame code.
 
 ``resolve`` is the one place where rule SQL meets Spark's analyser:
 the runners' typing pass and ``validate`` both go through it. Every
@@ -192,36 +193,38 @@ class CompiledSuite:
         self.registry = LambdaRegistry().register_all(suite.lambda_functions)
         self.rules = _or_raise(suite, expand_each(suite, self.registry))
 
-    def _encode(self, sqls: List[str], types, what: str, dialect: str) -> List[List[str]]:
+    def _check(self, types, what: str) -> List[T.DataType]:
         for (rs, r, _), t in zip(self.rules, types):
             if isinstance(t, Exception):
                 raise _error(self.suite, rs, r, what, t) from t
-        flat = [encode_rule_sql(s, t, dialect) for s, t in zip(sqls, types)]
-        out: List[List[str]] = []
-        for rs in self.suite.rule_sets:
-            out.append(flat[: len(rs.rules)])
-            flat = flat[len(rs.rules) :]
-        return out
+        return types
 
     def encode(self, df: DataFrame) -> List[List[str]]:
         """Per set, per rule: the rule's int encoding, typed against
         ``df`` in one batched analysis."""
         sqls = [s for _, _, s in self.rules]
         _, types = resolve(df, sqls)
-        return self._encode(sqls, types, " failed to resolve against the DataFrame", "spark")
+        types = self._check(types, " failed to resolve against the DataFrame")
+        flat = [encode_rule_sql(s, t) for s, t in zip(sqls, types)]
+        out: List[List[str]] = []
+        for rs in self.suite.rule_sets:
+            out.append(flat[: len(rs.rules)])
+            flat = flat[len(rs.rules) :]
+        return out
 
-    def encode_duckdb(self, con, relation: str) -> List[List[str]]:
-        """``encode`` in the DuckDB dialect, typed against ``relation``
-        on ``con``."""
+    def typed_duckdb(self, con, relation: str) -> List[Tuple[str, T.DataType]]:
+        """Per rule, in declaration order: its expanded text in the
+        DuckDB dialect and the Spark type it encodes as
+        (``results.encode_rule_sql``), typed against ``relation`` on
+        ``con`` in one batched bind."""
         # our macro expansion emits Spark typed numeric literals
         # (0.0D / 42L); DuckDB takes them without the suffix
         sqls = [strip_number_suffixes(s) for _, _, s in self.rules]
-        return self._encode(
-            sqls,
+        types = self._check(
             resolve_duckdb(con, relation, sqls),
             " is not DuckDB-portable (sparkless scope is the shared SQL subset)",
-            "duckdb",
         )
+        return list(zip(sqls, types))
 
     def steps(self, encoded: Sequence[Sequence[str]]) -> List[Step]:
         """The rules sorted by salience, stable in declaration order

@@ -12,12 +12,12 @@ local plan:
 * the suite compiles to encoded per-rule SQL a single time
   (``RowProcessor.__init__``), not per batch, through the same compile
   path as every Spark runner (``plans/compiler.py:CompiledSuite``);
-* ``process`` ships a batch into a local-relation plan and selects the
-  staged runner over it (``operators/runner.py:_add_staged``) — no
-  shuffle, no job scheduling beyond one collect. Spark still analyses
-  and optimizes that plan on every call, but the plan is linear in the
-  number of rules (a 200-row call takes about 0.6-0.9 s at 30 rules
-  and 2 s at 150 rules on 4 cores);
+* ``process`` hands a batch to Spark as one ``pyarrow.Table``, which
+  Spark plans as a ``LocalRelation``, and collects the staged runner
+  over it (``operators/runner.py:_add_staged``): no shuffle and no Spark
+  job. Spark still analyses and optimizes that plan on every call, and
+  its optimizer evaluates the runner on the driver (the figures and the
+  break-even are in ``RowProcessor``'s docstring);
 * throughput intent mirrors the reference's MutableProjection path:
   amortize compile, stream rows.
 
@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Union
 
-from pyspark.sql import Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
 from .model import RuleSuite
@@ -83,7 +83,36 @@ def _parse_scalar_ddl(schema: str) -> list:
 
 
 class RowProcessor:
-    """Reusable evaluator: ``process(rows) -> [Row(...input, DQ=...)]``."""
+    """Reusable evaluator: ``process(rows) -> [Row(...input, DQ=...)]``.
+
+    Each call hands its rows to Spark as one ``pyarrow.Table``, which
+    Spark plans as a ``LocalRelation``: a call starts no Spark job, and
+    Catalyst's ``ConvertToLocalRelation`` evaluates the staged runner on
+    the driver with an interpreted projection, while optimizing the
+    plan. That is the right trade for small calls and the wrong one for
+    large batches, where the per-row work outgrows the job it saves.
+    Measured on a 4-core box (perfbench ``spark_conf`` and generator,
+    seed 1; medians of 10 warm calls, 4 at 20,000 rows; quartiles in
+    SCALE.md), a call took, list input → Arrow input:
+
+    ========  ===============  ===============  ================
+    rules     200 rows         2,000 rows       20,000 rows
+    ========  ===============  ===============  ================
+    30        1.04 → 0.31 s    1.04 → 0.50 s    2.95 → 3.19 s
+    150       1.91 → 0.66 s    2.34 → 2.28 s    8.0 → 23.0 s
+    ========  ===============  ===============  ================
+
+    So the break-even sits near 2,000 rows at 150 rules and below
+    20,000 rows at 30 rules: larger batches belong to
+    ``add_data_quality`` over a DataFrame, which runs the runner as a
+    code-generated Spark job.
+
+    Rows are Mappings (fields by name, a missing key is NULL) or
+    Sequences such as ``Row`` and tuples (fields by position), the same
+    reading as ``spark.createDataFrame(rows, schema)``. Timestamps go
+    through the schema type's own ``toInternal``, so a naive
+    ``datetime`` is the same instant as on that list path (this
+    process's local time zone, not the session's)."""
 
     def __init__(
         self,
@@ -92,18 +121,42 @@ class RowProcessor:
         schema: Union[str, T.StructType],
         name: str = "DQ",
     ) -> None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self.spark = spark
         self.schema = (
             T._parse_datatype_string(schema) if isinstance(schema, str) else schema
         )
+        self._arrow_schema = to_arrow_schema(self.schema)
         self.name = name
         self.suite = suite
-        probe = spark.createDataFrame([], self.schema)
-        # type and encode once, not per batch
-        self._enc_sqls = CompiledSuite(suite).encode(probe)
+        # type and encode once, not per batch, against the same input
+        # shape every call builds
+        self._enc_sqls = CompiledSuite(suite).encode(self._batch([]))
+
+    def _batch(self, rows: Iterable[Union[Mapping, Sequence]]) -> DataFrame:
+        import pyarrow as pa
+
+        names = self.schema.names
+        tuples = []
+        for r in rows:
+            t = tuple(r.get(n) for n in names) if isinstance(r, Mapping) else tuple(r)
+            if len(t) != len(names):
+                raise ValueError(
+                    f"row has {len(t)} fields, the schema {len(names)}: {r!r}"
+                )
+            tuples.append(t)
+        cols = list(zip(*tuples)) if tuples else [()] * len(names)
+        arrays = []
+        for col, f, af in zip(cols, self.schema.fields, self._arrow_schema):
+            if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
+                col = [f.dataType.toInternal(v) for v in col]
+            arrays.append(pa.array(col, type=af.type))
+        table = pa.Table.from_arrays(arrays, schema=self._arrow_schema)
+        return self.spark.createDataFrame(table, self.schema)
 
     def process(self, rows: Iterable[Union[Mapping, Sequence]]) -> List[Row]:
-        batch = self.spark.createDataFrame(list(rows), self.schema)
+        batch = self._batch(rows)
         return _add_dq(batch, self.suite, self._enc_sqls, self.name).collect()
 
     def process_one(self, row: Union[Mapping, Sequence]) -> Row:
@@ -125,10 +178,10 @@ class DuckDBProcessor:
     the closest Python analogue of the reference's sparkless
     MutableProjection path (sparkless/Processor.scala:13-42): compile
     once, stream batches. The suite compiles through the Spark runners'
-    compile path (``plans/compiler.py:CompiledSuite.encode_duckdb``):
+    compile path (``plans/compiler.py:CompiledSuite.typed_duckdb``):
     all rules are typed in one ``LIMIT 0`` statement, each DuckDB type
-    maps to its Spark type and goes through the Spark runner's own
-    encoder and fold
+    maps to its Spark type, and each rule's value goes through the Spark
+    runner's own encoder and fold
     (``results.encode_rule_sql`` / ``overall_result_sql``, dialect
     ``"duckdb"``), so both engines give the same integers.
 
@@ -146,12 +199,14 @@ class DuckDBProcessor:
     MutableProjection's published 0.1 ms/row —
     ProcessorThroughputBenchmark.scala:26; numbers in SCALE.md).
     Per-call overhead (register, parse, bind and plan the scoring
-    SELECT) grows with the suite: a one-row call takes about 0.15 s at
-    150 rules and 0.35 s at 264 rules (4 cores). It would take 1.1-2.3 s
-    with DuckDB's ``in_clause`` optimizer on, which turns every IN-list
-    of more than a few values into a hash join against a constant
-    table, one join per such list in every call's plan; the
-    processor's connection disables it (SCALE.md has the numbers).
+    SELECT) grows with the suite's SQL, which names each rule once: on
+    a 4-core box (perfbench generator, seed 1, 6 warm calls, quartiles)
+    a 2000-row call took 100-129 ms at 150 rules and a 1000-row call
+    155-204 ms at 264 rules. With DuckDB's ``in_clause`` optimizer on,
+    a one-row call at 150 rules took 1.1 s: it turns every IN-list of
+    more than a few values into a hash join against a constant table,
+    one join per such list in every call's plan, so the processor's
+    connection disables it (SCALE.md has the numbers).
     """
 
     def __init__(
@@ -167,8 +222,8 @@ class DuckDBProcessor:
         silently select the wrong result encoding."""
         import duckdb
 
-        from .results import overall_result_sql
         from .model import pack_id
+        from .results import encode_rule_sql, overall_result_sql
 
         if (sample_row is None) == (schema is None):
             raise ValueError(
@@ -221,30 +276,29 @@ class DuckDBProcessor:
                 )
             probe_df = pd.DataFrame([sample_row])
             self._con.register("__qs_probe", probe_df)
-        encoded = CompiledSuite(suite).encode_duckdb(self._con, "__qs_probe")
-        self._rules = [
-            (pack_id(rs.id), pack_id(r.id), enc)
-            for rs, encs in zip(suite.rule_sets, encoded)
-            for r, enc in zip(rs.rules, encs)
-        ]
+        typed = CompiledSuite(suite).typed_duckdb(self._con, "__qs_probe")
+        self._rules = [(pack_id(rs.id), pack_id(r.id)) for rs, r in suite.all_rules()]
         self._suite_id = pack_id(suite.id)
 
         per_set: Dict[int, List[int]] = {}
-        for i, (sid, _, _) in enumerate(self._rules):
+        for i, (sid, _) in enumerate(self._rules):
             per_set.setdefault(sid, []).append(i)
         pp = suite.probable_pass
-        # two-level select: the INNER level computes each encoded rule
-        # exactly once, over the batch columns only, under the alias
-        # __qs_r_<i>; the OUTER level reads only those aliases, folds
-        # them and re-exports them under the documented r_<i> names.
-        # Inlining the enc text into every fold repeated each rule's SQL
-        # ~7x (and each enc already repeats the raw rule ~4x in its CASE
-        # arms). Aliases are QUOTED: pack_id is signed, so a negative
-        # set id would otherwise emit `AS s_-N` — a parser error.
-        inner_select = ", ".join(
-            f"({enc}) AS __qs_r_{i}" for i, (_, _, enc) in enumerate(self._rules)
+        # three-level select, so each rule's SQL appears and evaluates
+        # once: the INNER level computes each rule's value over the batch
+        # columns only (__qs_v_<i>), the MIDDLE level encodes those values
+        # (__qs_r_<i>), and the OUTER level reads only the encodings,
+        # folds them and re-exports them under the documented r_<i>
+        # names. Inlined, a rule's SQL appeared ~4x in its encoding's
+        # CASE arms and each encoding ~3x in the folds. Aliases are
+        # QUOTED: pack_id is signed, so a negative set id would
+        # otherwise emit `AS s_-N` — a parser error.
+        values = ", ".join(f"({sql}) AS __qs_v_{i}" for i, (sql, _) in enumerate(typed))
+        encoded = ", ".join(
+            f"{encode_rule_sql(f'__qs_v_{i}', t, 'duckdb')} AS __qs_r_{i}"
+            for i, (_, t) in enumerate(typed)
         )
-        refs = [f"__qs_r_{i}" for i in range(len(self._rules))]
+        refs = [f"__qs_r_{i}" for i in range(len(typed))]
         outer = [f"{ref} AS r_{i}" for i, ref in enumerate(refs)]
         outer += [
             f'{overall_result_sql([refs[i] for i in idxs], pp, "duckdb")} AS "s_{sid}"'
@@ -264,8 +318,8 @@ class DuckDBProcessor:
             )
             batch = f"(SELECT {casts} FROM __qs_batch_raw)"
         self._sql = (
-            f"SELECT {', '.join(outer)} FROM "
-            f"(SELECT {inner_select} FROM {batch})"
+            f"SELECT {', '.join(outer)} FROM (SELECT {encoded} FROM "
+            f"(SELECT {values} FROM {batch}))"
         )
 
     def process_pandas(self, pdf) -> "object":
@@ -295,19 +349,23 @@ class DuckDBProcessor:
         if not rows:
             return []
         flat = self.process_pandas(pd.DataFrame(rows))
+        # column-wise: one list per result column, then index; a per-row
+        # ``iloc`` and per-cell lookup cost several times the scoring
+        col = {c: flat[c].to_numpy().tolist() for c in flat.columns}
+        rule_cols = [(sid, rid, col[f"r_{j}"]) for j, (sid, rid) in enumerate(self._rules)]
+        set_cols = [(sid, col[f"s_{sid}"]) for sid in self._set_ids]
         out: List[Dict] = []
-        for i in range(len(flat)):
-            row = flat.iloc[i]
+        for i, overall in enumerate(col["overall"]):
             set_results = {
-                sid: {"overallResult": int(row[f"s_{sid}"]), "ruleResults": {}}
-                for sid in self._set_ids
+                sid: {"overallResult": vals[i], "ruleResults": {}}
+                for sid, vals in set_cols
             }
-            for j, (sid, rid, _) in enumerate(self._rules):
-                set_results[sid]["ruleResults"][rid] = int(row[f"r_{j}"])
+            for sid, rid, vals in rule_cols:
+                set_results[sid]["ruleResults"][rid] = vals[i]
             out.append(
                 {
                     "id": self._suite_id,
-                    "overallResult": int(row["overall"]),
+                    "overallResult": overall,
                     "ruleSetResults": set_results,
                 }
             )

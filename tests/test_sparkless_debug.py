@@ -5,6 +5,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -364,3 +366,162 @@ def test_duckdb_processor_keeps_in_lists_out_of_joins():
     # control: with the optimizer back on, the same query joins per list
     proc._con.execute("RESET disabled_optimizers")
     assert hash_joins() == 2
+
+
+_MIXED_SCHEMA = "i int, d double, dec decimal(10,2), dt date, s string, ts timestamp"
+
+
+def _mixed_suite():
+    from quality_spark.model import ExpressionRule
+
+    texts = [
+        "i > 0",
+        "d / 3.0",  # double: probability encoding
+        "dec >= 1.5",
+        "dt >= DATE '2024-01-02'",
+        "s",  # string encoding
+        "i % 3 - 1",  # int encoding
+        "ts >= TIMESTAMP '2024-01-01 12:00:00'",
+        "hour(ts) = 12",
+        "i IS NULL",
+    ]
+    rules = tuple(Rule(Id(100 + k, 1), ExpressionRule(t)) for k, t in enumerate(texts))
+    return RuleSuite(
+        Id(1, 1), (RuleSet(Id(10, 1), rules[:5]), RuleSet(Id(11, 1), rules[5:]))
+    )
+
+
+def _mixed_rows():
+    import datetime as dt
+    from decimal import Decimal
+
+    return [
+        {"i": 1, "d": 0.5, "dec": Decimal("2.50"), "dt": dt.date(2024, 1, 3),
+         "s": "pass", "ts": dt.datetime(2024, 1, 1, 12, 30)},
+        {"i": None, "d": None, "dec": None, "dt": None, "s": None, "ts": None},
+        {"i": -4, "d": 2.0, "dec": Decimal("1.00"), "dt": dt.date(2023, 12, 31),
+         "s": "maybe", "ts": dt.datetime(2024, 1, 1, 11, 59, 59, 999)},
+        {"i": 3, "d": -3.0, "dec": Decimal("1.5"), "dt": dt.date(2024, 1, 2),
+         "s": "no", "ts": dt.datetime(2023, 6, 30, 23, 0, 0, 1)},
+    ]
+
+
+def _as_kind(rows, kind):
+    from pyspark.sql import Row
+
+    if kind == "mapping":
+        return rows
+    if kind == "row":
+        return [Row(**r) for r in rows]
+    return [tuple(r.values()) for r in rows]
+
+
+@pytest.mark.parametrize("kind", ["mapping", "row", "tuple"])
+def test_row_processor_matches_add_data_quality(spark, kind):
+    """The Arrow input gives the rows ``add_data_quality`` gives over
+    ``spark.createDataFrame(rows, schema)``, for Mapping, ``Row`` and
+    tuple rows with NULL, date, decimal, string and timestamp values."""
+    from quality_spark.operators.runner import add_data_quality
+
+    suite, rows = _mixed_suite(), _as_kind(_mixed_rows(), kind)
+    want = add_data_quality(spark.createDataFrame(rows, _MIXED_SCHEMA), suite).collect()
+    proc = dq_factory(spark, suite, _MIXED_SCHEMA)
+    assert proc.process(rows) == want
+    assert proc.process([]) == []
+
+
+def test_row_processor_naive_timestamp_is_the_list_paths_instant(spark, monkeypatch):
+    """A naive ``datetime`` means the same instant as on the list path
+    (Spark reads it in this process's local time zone), under a
+    session time zone and a process time zone that both differ from
+    UTC and from each other."""
+    import datetime as dt
+    import time
+
+    from quality_spark.operators.runner import add_data_quality
+
+    suite, rows = _mixed_suite(), _mixed_rows()
+    rows.append(dict(rows[0], ts=dt.datetime(2024, 1, 1, 12, 0, tzinfo=dt.timezone.utc)))
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        frame = spark.createDataFrame(rows, _MIXED_SCHEMA)
+        want = add_data_quality(frame, suite).collect()
+        assert dq_factory(spark, suite, _MIXED_SCHEMA).process(rows) == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_row_processor_call_starts_no_spark_job(spark):
+    """A ``process`` call is planned over a local relation: no job."""
+    proc = dq_factory(spark, _mixed_suite(), _MIXED_SCHEMA)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    out = proc.process(_mixed_rows())
+    assert store.jobsList(None).size() == before
+    assert len(out) == 4
+
+
+def test_duckdb_processor_evaluates_each_rule_once():
+    """Each rule's SQL text appears once in the scoring query: its
+    value is computed once and the encoding and folds read the value."""
+    from quality_spark.model import ExpressionRule
+    from quality_spark.sparkless import DuckDBProcessor
+
+    texts = ["d / 3.0", "lower(s) = 'zz'", "CAST(i AS BIGINT) % 2", "concat(s, 'q')"]
+    suite = RuleSuite(
+        Id(1, 1),
+        (RuleSet(Id(10, 1), tuple(Rule(Id(100 + k, 1), ExpressionRule(t))
+                                  for k, t in enumerate(texts))),),
+    )
+    proc = DuckDBProcessor(suite, schema="i int, d double, s string")
+    for t in texts:
+        assert proc._sql.count(t) == 1, t
+
+
+def test_duckdb_processor_nested_rows_match_flat_frame():
+    """``process`` builds the same nested dicts, of plain ints, as a
+    per-row read of the ``process_pandas`` frame."""
+    import pandas as pd
+
+    from quality_spark.model import ExpressionRule, pack_id
+    from quality_spark.sparkless import DuckDBProcessor
+
+    texts = ["d / 3.0", "s", "i % 3 - 1", "i > 0", "d IS NULL"]
+    rules = tuple(Rule(Id(100 + k, 1), ExpressionRule(t)) for k, t in enumerate(texts))
+    suite = RuleSuite(
+        Id(1, 1),
+        (RuleSet(Id(-10, 1), rules[:2]), RuleSet(Id(11, 1), rules[2:])),
+        probable_pass=0.5,
+    )
+    proc = DuckDBProcessor(suite, schema="i int, d double, s string")
+    rows = [
+        {"i": 1, "d": 2.0, "s": "pass"},
+        {"i": None, "d": None, "s": None},
+        {"i": -1, "d": 1.0, "s": "maybe"},
+        {"i": 5, "d": 3.0, "s": "disabled"},
+    ]
+    flat = proc.process_pandas(pd.DataFrame(rows))
+    want = []
+    for i in range(len(flat)):
+        row = flat.iloc[i]
+        sets = {
+            pack_id(rs.id): {"overallResult": int(row[f"s_{pack_id(rs.id)}"]), "ruleResults": {}}
+            for rs in suite.rule_sets
+        }
+        for j, (rs, r) in enumerate(suite.all_rules()):
+            sets[pack_id(rs.id)]["ruleResults"][pack_id(r.id)] = int(row[f"r_{j}"])
+        want.append({"id": pack_id(suite.id), "overallResult": int(row["overall"]),
+                     "ruleSetResults": sets})
+    got = proc.process(rows)
+    assert got == want
+    assert all(
+        type(v) is int
+        for g in got
+        for s in g["ruleSetResults"].values()
+        for v in [s["overallResult"], *s["ruleResults"].values()]
+    )
