@@ -19,10 +19,12 @@ Levels: ``error`` (readers refuse / data at risk — act), ``warn``
 (junk that costs nothing yet: orphaned staging dirs, stale markers),
 ``info`` (observations).
 
-All I/O goes through `sources.fsio` (any Hadoop filesystem) and reads
-only sidecars, directory listings, and catalog metadata — never data
-files (the POSIX-only big-bloom check mmaps npy HEADERS, not bits), so
-a check on a 100 TB store is metadata-priced.
+All I/O goes through `sources.fsio`, the filesystem layer of every
+store (any Hadoop filesystem), which also owns the sidecar names and
+the ``key=N`` listing the checks read. A check reads only sidecars,
+directory listings, and catalog metadata — never data files (the
+POSIX-only big-bloom check mmaps npy HEADERS, not bits), so a check on
+a 100 TB store is metadata-priced.
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ def _report(findings: List[dict]) -> Dict:
 
 
 def _check_ledger(path: str, findings: List[dict]) -> None:
-    ledger = fsio.join(path, "epochs.json")
+    ledger = fsio.join(path, fsio.LEDGER)
     if not fsio.exists(ledger):
         return
     try:
@@ -72,10 +74,11 @@ def _check_ledger(path: str, findings: List[dict]) -> None:
 
 
 def _check_index_store(path: str, kind: str, tables: tuple) -> Dict:
-    """Shared checks for the PQ / BM25 stores (same sidecar protocol)."""
+    """Shared checks for the PQ / BM25 stores (the index-store
+    protocol of `sources.fsio`)."""
     findings: List[dict] = []
-    pending = fsio.join(path, "meta.json.pending")
-    meta = fsio.join(path, "meta.json")
+    pending = fsio.join(path, fsio.PENDING)
+    meta = fsio.join(path, fsio.META)
     if fsio.exists(pending):
         try:
             op = fsio.read_json(pending).get("op", "?")
@@ -111,7 +114,7 @@ def _check_index_store(path: str, kind: str, tables: tuple) -> Dict:
                 f"{table}/ directory missing beside a committed "
                 "meta.json — data was deleted out-of-band",
             )
-        for suffix in (".compact", ".old"):
+        for suffix in fsio.LEFTOVERS:
             leftover = tdir + suffix
             if fsio.exists(leftover):
                 _finding(
@@ -374,13 +377,8 @@ def check_neardup_store(spark, path: str) -> Dict:
         return _report(findings)
     live = set(_neardup_live_dirs(spark, path, eps))
     # stale / in-flight markers
-    for name in fsio.list_names(fsio.join(path, "_inflight")):
-        if not name.startswith("epoch="):
-            continue
-        try:
-            ep = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
+    for ep in fsio.key_ids(fsio.join(path, "_inflight"), "epoch"):
+        name = f"epoch={ep}"
         if ep in eps:
             _finding(
                 findings, "warn", "stale_inflight_marker",
@@ -398,17 +396,11 @@ def check_neardup_store(spark, path: str) -> Dict:
             )
     # orphaned physical epoch dirs (crashed batches / compactions)
     for table in ("idmap", "sigs"):
-        for name in fsio.list_names(fsio.join(path, table)):
-            if not name.startswith("epoch="):
-                continue
-            try:
-                d = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
+        for d in fsio.key_ids(fsio.join(path, table), "epoch"):
             if d not in live:
                 _finding(
                     findings, "warn", "orphan_epoch_dir",
-                    f"{table}/{name} is referenced by no committed "
+                    f"{table}/epoch={d} is referenced by no committed "
                     "state (crashed batch or superseded compaction) — "
                     "invisible to readers, swept by the next "
                     "compaction",
@@ -416,9 +408,9 @@ def check_neardup_store(spark, path: str) -> Dict:
     # committed epochs whose physical dirs vanished = data loss
     gens = _neardup_compaction_gens(spark, path)
     for table in ("idmap", "sigs"):
-        names = set(fsio.list_names(fsio.join(path, table)))
+        on_disk = set(fsio.key_ids(fsio.join(path, table), "epoch"))
         for d in live:
-            if f"epoch={d}" not in names:
+            if d not in on_disk:
                 _finding(
                     findings, "error", "missing_live_dir",
                     f"{table}/epoch={d} is in the committed live set "

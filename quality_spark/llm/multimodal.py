@@ -12,9 +12,8 @@ Decode support is format-tiered (VERDICT r03 #6):
   YCbCr 4:4:4): real width/height, real pixel features, real
   nearest-neighbor resize, re-encoded in the same format.
 - Other compressed formats (gif/webp/audio/video codecs) still STUB
-  their kernels (deterministic fakes clearly marked, or
-  NotImplementedError in strict mode) — the container has no
-  codec libraries.  Everything
+  their kernels (deterministic fakes, clearly marked) — no codec
+  libraries are available.  Everything
   Spark-side is real and tested either way: the schema contract,
   Arrow batch shapes, partition-preserving mapInPandas plumbing, and
   metadata handling.  Swapping in PIL/librosa later touches only the
@@ -47,8 +46,6 @@ MEDIA_META_TYPE = T.StructType(
 )
 
 FEATURE_DIM = 8
-
-_STRICT = False  # strict mode raises instead of producing fake features
 
 #: decompression-bomb guard: every raster decoder refuses a stream
 #: whose DECLARED dimensions exceed this many pixels BEFORE allocating
@@ -96,11 +93,6 @@ def _fake_decode_features(payload: bytes, dim: int) -> np.ndarray:
     """STUB: deterministic fake 'decoded features' — md5-seeded uniform
     vector. Replace with a real decoder (PIL image embedding, audio
     spectral stats, frame sampling) when codecs are available."""
-    if _STRICT:
-        raise NotImplementedError(
-            "media decoding requires image/audio libraries not present "
-            "in this environment"
-        )
     seed = int.from_bytes(hashlib.md5(payload or b"").digest()[:8], "big")
     rng = np.random.default_rng(seed)
     return rng.uniform(-1.0, 1.0, dim).astype(np.float32)
@@ -2446,11 +2438,6 @@ def resize_media(
                     payload_out = codec[1](resized)
                 else:
                     w, h = _fit(m.get("width"), m.get("height"))
-                    if _STRICT:
-                        raise NotImplementedError(
-                            "no image codecs in this container: resize_media "
-                            "pixel transform is stubbed (strict mode)"
-                        )
                     # STUB pixel data: deterministic bytes sized ~w*h/64,
                     # derived from the original payload + target dims
                     seed = hashlib.md5(p + f"{w}x{h}".encode()).digest()

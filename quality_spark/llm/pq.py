@@ -52,6 +52,7 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import fsio
 from .similarity import _d, ivf_cell_oracle_sql
 
 Codebooks = List[List[List[float]]]  # [m][ksub][dsub]
@@ -654,41 +655,16 @@ def write_pq_index(
     per-query literals, but the corpus-sized work (cell assignment +
     encode) is paid once at build time.
 
-    FILESYSTEMS: the store works on any Hadoop filesystem the data
-    does — plain local paths, ``file://``, ``hdfs://``, ``s3a://``,
-    ``abfss://`` — because every sidecar (meta.json, epochs.json, the
-    pending sentinel) goes through `sources.fsio`, which resolves the
-    path with the active session's Hadoop configuration exactly like
-    the parquet writes do (VERDICT r11 next #1).
+    The store works on any Hadoop filesystem the data does, and a
+    rebuild in place is crash-safe: both through the index-store
+    protocol of `sources.fsio`.
 
     ``record_stats=True`` additionally stores the build-time corpus
     ``quantization_error`` and vector count in meta.json — the
     baseline `pq_drift_report` compares streamed batches against to
     decide when frozen centroids/codebooks need a re-train (one extra
     corpus aggregate at build time)."""
-    from ..sources import fsio
-
-    spark = df.sparkSession
-    # Rebuild-in-place crash safety (the BM25 store's fail-loud
-    # contract): the pending sentinel goes down BEFORE the codes
-    # overwrite and the stale meta.json is removed, so a crash
-    # mid-rebuild can never leave old centroids/codebooks beside new
-    # codes — a store readers would accept and silently mis-score.
-    # Sidecar I/O goes through fsio (Hadoop FileSystem of the active
-    # session) so the store works on any filesystem the data does —
-    # file://, hdfs://, s3a://, … (VERDICT r11 next #1).
-    fsio.makedirs(path)
-    pending = fsio.join(path, "meta.json.pending")
-    fsio.write_json(pending, {"op": "rebuild"})
-    fsio.delete(fsio.join(path, "meta.json"))
-    # ADVICE r11 (medium): a rebuild RESETS epoch history — a stale
-    # epochs.json would make a fresh stream's restarted epoch ids
-    # silently skip batches (exactly-once becoming silent data loss).
-    # Clear it, plus any crashed-compaction leftovers, inside the
-    # sentinel window.
-    fsio.delete(fsio.join(path, "epochs.json"))
-    fsio.delete(fsio.join(path, "codes.compact"), recursive=True)
-    fsio.delete(fsio.join(path, "codes.old"), recursive=True)
+    fsio.reset_index_store(path, ("codes",))
     if centroids is None:
         centroids = df.filter(F.col(id_col) % centroid_stride == 0)
     raw = _raw_centroids(centroids, id_col, vec_col)
@@ -717,8 +693,7 @@ def write_pq_index(
     if record_stats:
         meta["build_qe"] = quantization_error(df, codebooks, vec_col)
         meta["n_vecs"] = df.count()
-    fsio.write_json(fsio.join(path, "meta.json"), meta)
-    fsio.delete(pending)
+    fsio.commit_meta(path, meta)
 
 
 def append_pq_index(
@@ -752,31 +727,17 @@ def append_pq_index(
 
     Caller contract mirrors the BM25 store: batch ids disjoint from
     the store's (a re-ingested id would appear twice in every probed
-    cell's candidates); one writer at a time. Crash safety is
-    FAIL-LOUD: ``meta.json.pending`` goes down before the codes
-    append and is removed only after it completes, so an interrupted
-    append leaves a store every reader REFUSES (a half-appended cell
-    directory cannot be rolled forward — a re-run would double the
-    batch's rows). Recover from the previous snapshot or rebuild.
-
-    ``epoch`` makes the append EXACTLY-ONCE for streaming
-    (`streaming.recipes.pq_appends_to_store`): an epoch already in
-    the store's ledger (``epochs.json``) returns False without
-    touching the store, and the ledger entry is written INSIDE the
-    sentinel window — after the codes append, before the sentinel is
-    removed — so there is no crash point where a replay could
-    double-append (a crash between append and ledger leaves the
-    sentinel down and the store refused, the same restore-or-rebuild
-    contract as any interrupted append). Returns True when the batch
-    was applied."""
-    from ..sources import fsio
-
+    cell's candidates); one writer at a time. The append runs under
+    the pending sentinel of `sources.fsio` (an interrupted append
+    leaves a store every reader refuses: restore the previous snapshot
+    or rebuild). ``epoch`` makes it EXACTLY-ONCE for streaming
+    (`streaming.recipes.pq_appends_to_store`): an epoch already in the
+    store's ledger returns False without touching the store. Returns
+    True when the batch was applied."""
     meta = _read_pq_meta(path)
-    ledger = fsio.join(path, "epochs.json")
-    if epoch is not None and fsio.exists(ledger):
-        if int(epoch) in fsio.read_json(ledger)["applied"]:
-            return False  # replayed epoch: already committed
-    pending = fsio.join(path, "meta.json.pending")
+    if epoch is not None and fsio.epoch_applied(path, epoch):
+        return False  # replayed epoch: already committed
+    pending = fsio.join(path, fsio.PENDING)
     fsio.write_json(pending, {"op": "append", "epoch": epoch})
     raw = meta["centroids_raw"]
     cents = _normalize_cents(raw)
@@ -794,20 +755,15 @@ def append_pq_index(
         .parquet(fsio.join(path, "codes"))
     )
     if epoch is not None:
-        led = {"applied": [], "stats": {}}
-        if fsio.exists(ledger):
-            prev = fsio.read_json(ledger)
-            led["applied"] = prev.get("applied", [])
-            led["stats"] = prev.get("stats", {})
-        led["applied"] = sorted(led["applied"] + [int(epoch)])
+        stats = {}
         if record_stats:
             # per-epoch drift evidence for pq_drift_report: batch MSE
             # under the FROZEN codebooks + batch size
-            led["stats"][str(int(epoch))] = {
+            stats[str(int(epoch))] = {
                 "qe": quantization_error(df, meta["codebooks"], vec_col),
                 "n": df.count(),
             }
-        fsio.write_json(ledger, led)
+        fsio.record_epoch(path, epoch, stats)
     fsio.delete(pending)
     return True
 
@@ -823,16 +779,10 @@ def pq_drift_report(path: str):
     centroids/codebooks degrade RECALL silently, never correctness,
     so this report is the operational signal, not a gate. Reads only
     meta.json + the ledger (no data scan)."""
-    from ..sources import fsio
-
-    meta = _read_pq_meta(path)
-    build_qe = meta.get("build_qe")
-    ledger = fsio.join(path, "epochs.json")
-    if not fsio.exists(ledger):
-        return []
-    led = fsio.read_json(ledger)
+    build_qe = _read_pq_meta(path).get("build_qe")
+    led = fsio.read_ledger(path)
     out = []
-    for ep in led.get("applied", []):
+    for ep in led["applied"]:
         st = led.get("stats", {}).get(str(ep))
         if st is None:
             out.append(
@@ -859,51 +809,17 @@ def compact_pq_index(spark, path: str) -> None:
     appends mean thousands of tiny files per cell and a
     task-per-file scan). Codes rows are EXACTLY preserved (pinned by
     tests): compaction is a read + repartition(cell) + rewrite,
-    nothing is re-encoded. Crash safety: the new codes land in
-    ``codes.compact/`` first, then the swap window is protected by
-    the same fail-loud pending sentinel as appends — a crash
-    mid-swap leaves a store every reader refuses, recoverable by
-    restoring ``codes.compact``/``codes`` by hand (both halves are
-    complete on disk; nothing is lost). The epoch ledger is
-    untouched — replayed epochs stay skipped after compaction."""
-    from ..sources import fsio
-
-    meta = _read_pq_meta(path)  # refuses an already-broken store
-    codes = fsio.join(path, "codes")
-    tmp = fsio.join(path, "codes.compact")
-    fsio.delete(tmp, recursive=True)
-    (
-        spark.read.parquet(codes)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    pending = fsio.join(path, "meta.json.pending")
-    fsio.write_json(pending, {"op": "compact"})
-    old = fsio.join(path, "codes.old")
-    fsio.delete(old, recursive=True)
-    fsio.rename(codes, old)
-    fsio.rename(tmp, codes)
-    fsio.delete(old, recursive=True)
-    fsio.delete(pending)
-    _ = meta  # meta unchanged; read above only to refuse broken stores
+    nothing is re-encoded, swapped in by the staged compaction of
+    `sources.fsio`. The epoch ledger is untouched — replayed epochs
+    stay skipped after compaction."""
+    _read_pq_meta(path)  # refuses an already-broken store
+    fsio.swap_compacted(spark, path, "codes", "cell", {"op": "compact"})
 
 
 def _read_pq_meta(path: str) -> dict:
     """Load + normalize the store's meta.json, REFUSING a store with
-    an interrupted append/rebuild (meta.json.pending present).
-    Sidecars read through `sources.fsio` — any Hadoop filesystem."""
-    from ..sources import fsio
-
-    if fsio.exists(fsio.join(path, "meta.json.pending")):
-        raise ValueError(
-            f"pq index at {path} has an interrupted append or rebuild "
-            "(meta.json.pending present) — codes may be half-written; "
-            "restore the previous snapshot or rebuild with "
-            "write_pq_index"
-        )
-    meta = fsio.read_json(fsio.join(path, "meta.json"))
+    an interrupted append/rebuild (`fsio.read_index_meta`)."""
+    meta = fsio.read_index_meta(path, "pq", "codes")
     meta["centroids_raw"] = [
         (int(cid), [float(x) for x in v]) for cid, v in meta["centroids_raw"]
     ]
@@ -914,8 +830,6 @@ def read_pq_index(spark, path: str):
     """(codes DataFrame, meta dict) — codes read lazily (cell is the
     partition column, so filters on it prune directories). Refuses a
     store with an interrupted append/rebuild (`_read_pq_meta`)."""
-    from ..sources import fsio
-
     meta = _read_pq_meta(path)
     codes = spark.read.parquet(fsio.join(path, "codes"))
     return codes, meta

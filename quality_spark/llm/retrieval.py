@@ -46,6 +46,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import fsio
 from .dedup import WS_RUN, tokens_sql
 
 # The corpus tokenizer's whitespace run (tokens_sql), so query-side
@@ -273,61 +274,12 @@ def write_bm25_index(
     smaller than the corpus — and every downstream query is a pruned
     scan.
 
-    FILESYSTEMS: works on any Hadoop filesystem the data does (local,
-    ``file://``, ``hdfs://``, ``s3a://``, ``abfss://``) — sidecars
-    (meta.json, epochs.json, the pending sentinel) go through
-    `sources.fsio`, resolved with the active session's Hadoop conf
-    exactly like the parquet writes (VERDICT r11 next #1)."""
-    from ..sources import fsio
-
+    The store works on any Hadoop filesystem the data does, and a
+    rebuild in place is crash-safe: both through the index-store
+    protocol of `sources.fsio`."""
     spark = df.sparkSession
-    # Rebuild-in-place crash safety (same fail-loud contract as
-    # append_bm25_index): the pending sentinel goes down BEFORE the
-    # postings overwrite. A crash mid-rebuild would otherwise leave
-    # OLD meta.json + OLD tokens/ beside NEW postings/ — a store every
-    # reader accepts and silently mis-scores (stale df/n_docs). With
-    # the sentinel, _read_bm25_meta refuses the half-rebuilt store.
-    # Sidecars go through fsio (the active session's Hadoop
-    # FileSystem) so the store works wherever the data does —
-    # file://, hdfs://, s3a://, … (VERDICT r11 next #1).
-    fsio.makedirs(path)
-    pending = fsio.join(path, "meta.json.pending")
-    fsio.write_json(pending, {"op": "rebuild"})
-    fsio.delete(fsio.join(path, "meta.json"))
-    # ADVICE r11 (medium): a rebuild RESETS epoch history — a stale
-    # epochs.json would silently skip a fresh stream's restarted
-    # epoch ids (exactly-once becoming data loss). Clear it, plus any
-    # crashed-compaction leftovers, inside the sentinel window.
-    fsio.delete(fsio.join(path, "epochs.json"))
-    for leftover in ("postings.compact", "postings.old",
-                     "tokens.compact", "tokens.old"):
-        fsio.delete(fsio.join(path, leftover), recursive=True)
-    staged = df.select(
-        F.col(id_col),
-        F.expr(tokens_sql(text_col, "spark")).alias("_toks"),
-    ).select(
-        id_col, "_toks", F.size("_toks").cast("bigint").alias("dl")
-    )
-    stats_row = (
-        staged.select("dl")
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-        )
-        .collect()[0]
-    )
-    postings = (
-        staged.select(id_col, "dl", F.explode("_toks").alias("token"))
-        .groupBy(id_col, "token")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf"),
-            F.max("dl").alias("dl"),
-        )
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("token"), F.lit(int(buckets)))
-        )
-    )
+    fsio.reset_index_store(path, ("postings", "tokens"))
+    stats_row, postings = _bm25_postings(df, text_col, id_col, buckets)
     postings.write.mode("overwrite").partitionBy("bucket").parquet(
         fsio.join(path, "postings")
     )
@@ -356,8 +308,40 @@ def write_bm25_index(
         "n_docs": int(stats_row["n_docs"]),
         "sum_dl": int(stats_row["sum_dl"]),
     }
-    fsio.write_json(fsio.join(path, "meta.json"), meta)
-    fsio.delete(pending)
+    fsio.commit_meta(path, meta)
+
+
+def _bm25_postings(df: DataFrame, text_col: str, id_col: str, buckets: int):
+    """(corpus stats row, postings frame) of a batch — the one builder
+    of the staged tokens, the 1-row (n_docs, sum_dl) aggregate and the
+    bucketed per-(doc, token) postings, for builds and appends."""
+    staged = df.select(
+        F.col(id_col),
+        F.expr(tokens_sql(text_col, "spark")).alias("_toks"),
+    ).select(
+        id_col, "_toks", F.size("_toks").cast("bigint").alias("dl")
+    )
+    stats_row = (
+        staged.select("dl")
+        .groupBy()
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
+        )
+        .collect()[0]
+    )
+    postings = (
+        staged.select(id_col, "dl", F.explode("_toks").alias("token"))
+        .groupBy(id_col, "token")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("tf"),
+            F.max("dl").alias("dl"),
+        )
+        .withColumn(
+            "bucket", F.pmod(F.xxhash64("token"), F.lit(int(buckets)))
+        )
+    )
+    return stats_row, postings
 
 
 def append_bm25_index(
@@ -383,56 +367,20 @@ def append_bm25_index(
     upstream); appends are not concurrent-safe (one writer, like the
     corpus store).
 
-    Crash safety is FAIL-LOUD, not repair: a ``meta.json.pending``
-    sentinel is written before the postings append and removed only
-    after df/meta finalize, so an interrupted append leaves a store
-    that every reader REFUSES (silently stale df/N would mis-score
-    without any error). Recover by restoring the store from the
-    previous snapshot (or rebuilding with `write_bm25_index`) — a
-    half-appended postings dir cannot be rolled forward because a
-    re-run would double the batch's rows.
-
-    ``epoch`` makes the append EXACTLY-ONCE for streaming
-    (`streaming.recipes.bm25_appends_to_store`): an epoch already in
-    ``epochs.json`` returns False untouched, and the ledger entry is
-    written BEFORE the atomic meta commit — so no crash point lets a
-    replay double-append (a crash between ledger and commit leaves
-    the sentinel down and the store refused; restoring the previous
-    snapshot restores the matching ledger with it). Returns True when
+    The append runs under the pending sentinel of `sources.fsio`
+    (fail-loud: silently stale df/N would mis-score without any
+    error), which here holds the new meta and is renamed over
+    meta.json as the commit. ``epoch`` makes it EXACTLY-ONCE for
+    streaming (`streaming.recipes.bm25_appends_to_store`): an epoch
+    already in the ledger returns False untouched. Returns True when
     the batch was applied."""
-    from ..sources import fsio
-
     spark = df.sparkSession
     meta = _read_bm25_meta(path)
-    ledger = fsio.join(path, "epochs.json")
-    if epoch is not None and fsio.exists(ledger):
-        if int(epoch) in fsio.read_json(ledger)["applied"]:
-            return False  # replayed epoch: already committed
-    pending = fsio.join(path, "meta.json.pending")
-    id_col, buckets = meta["id_col"], int(meta["buckets"])
-    staged = df.select(
-        F.col(id_col),
-        F.expr(tokens_sql(text_col, "spark")).alias("_toks"),
-    ).select(
-        id_col, "_toks", F.size("_toks").cast("bigint").alias("dl")
-    )
-    stats_row = (
-        staged.select("dl")
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-        )
-        .collect()[0]
-    )
-    postings = (
-        staged.select(id_col, "dl", F.explode("_toks").alias("token"))
-        .groupBy(id_col, "token")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("tf"),
-            F.max("dl").alias("dl"),
-        )
-        .withColumn("bucket", F.pmod(F.xxhash64("token"), F.lit(buckets)))
+    if epoch is not None and fsio.epoch_applied(path, epoch):
+        return False  # replayed epoch: already committed
+    pending = fsio.join(path, fsio.PENDING)
+    stats_row, postings = _bm25_postings(
+        df, text_col, meta["id_col"], meta["buckets"]
     )
     meta["n_docs"] = int(meta["n_docs"]) + int(stats_row["n_docs"])
     meta["sum_dl"] = int(meta["sum_dl"]) + int(stats_row["sum_dl"])
@@ -452,11 +400,8 @@ def append_bm25_index(
         .parquet(fsio.join(path, "tokens"))
     )
     if epoch is not None:
-        applied = []
-        if fsio.exists(ledger):
-            applied = fsio.read_json(ledger)["applied"]
-        fsio.write_json(ledger, {"applied": sorted(applied + [int(epoch)])})
-    fsio.replace(pending, fsio.join(path, "meta.json"))
+        fsio.record_epoch(path, epoch)
+    fsio.replace(pending, fsio.join(path, fsio.META))
     return True
 
 
@@ -465,45 +410,17 @@ def compact_bm25_index(spark, path: str) -> None:
     — the small-files maintenance of `compact_pq_index`, for the
     lexical store (every `append_bm25_index` adds a file per touched
     bucket). Rows are EXACTLY preserved (pinned by tests); df/meta
-    are untouched, so scores are bit-equal before and after. The
-    swap window for each table is protected by the fail-loud pending
-    sentinel: a crash mid-swap leaves a refused store with both
-    halves complete on disk (restore by hand, nothing lost)."""
-    from ..sources import fsio
-
+    are untouched, so scores are bit-equal before and after. Each
+    table is swapped in by the staged compaction of `sources.fsio`."""
     _read_bm25_meta(path)  # refuses an already-broken store
     for table in ("postings", "tokens"):
-        src = fsio.join(path, table)
-        tmp = src + ".compact"
-        fsio.delete(tmp, recursive=True)
-        (
-            spark.read.parquet(src)
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
+        fsio.swap_compacted(
+            spark, path, table, "bucket", {"op": "compact", "table": table}
         )
-        pending = fsio.join(path, "meta.json.pending")
-        fsio.write_json(pending, {"op": "compact", "table": table})
-        old = src + ".old"
-        fsio.delete(old, recursive=True)
-        fsio.rename(src, old)
-        fsio.rename(tmp, src)
-        fsio.delete(old, recursive=True)
-        fsio.delete(pending)
 
 
 def _read_bm25_meta(path: str) -> dict:
-    from ..sources import fsio
-
-    if fsio.exists(fsio.join(path, "meta.json.pending")):
-        raise ValueError(
-            f"bm25 index at {path} has an interrupted append or "
-            "rebuild (meta.json.pending present) — postings may be "
-            "half-written; restore the previous snapshot or rebuild "
-            "with write_bm25_index"
-        )
-    return fsio.read_json(fsio.join(path, "meta.json"))
+    return fsio.read_index_meta(path, "bm25", "postings")
 
 
 def bm25_scores_indexed(
@@ -526,8 +443,6 @@ def bm25_scores_indexed(
     corpus tokenize, no full postings scan, no data-sized shuffle —
     the only shuffle is the final per-(query, doc) fold over matched
     postings."""
-    from ..sources import fsio
-
     meta = _read_bm25_meta(path)
     if meta["n_docs"] == 0:
         raise ValueError(f"bm25 index at {path} was built on 0 documents")
@@ -814,9 +729,7 @@ FROM (
 
 def _index_id_col(index_path: str) -> str:
     """The id column name a write_pq_index store was built with."""
-    from ..sources import fsio
-
-    return fsio.read_json(fsio.join(index_path, "meta.json"))["id_col"]
+    return fsio.read_json(fsio.join(index_path, fsio.META))["id_col"]
 
 
 def retrieve(

@@ -37,17 +37,22 @@ only the touched bits, which requires mmap, which requires a mount.
 from __future__ import annotations
 
 import json
-import math
 import os
 from dataclasses import dataclass
 from typing import Dict, Iterator, Tuple, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lookups import _BLOOM_REGISTRY, BloomFilter, _hash_cols
+from .lookups import (
+    BloomFilter,
+    _hash_cols,
+    _mark_registered,
+    _registered,
+    _sql_ident,
+)
 
 __all__ = [
     "BigBloom",
@@ -212,15 +217,8 @@ def _bucket_bits(root: str, b: int) -> np.ndarray:
 def register_big_bloom(spark: SparkSession, name: str, bb: BigBloom) -> None:
     """Register for ``probability_in(x, 'name')`` — same SQL surface as
     in-memory blooms."""
-    from .lookups import _BLOOM_PROBE_MODE, _BLOOM_REGISTERED
-
-    # idempotent, like register_bloom: same handle + name + session -> no-op
-    reg_key = (id(spark), name)
-    if _BLOOM_REGISTERED.get(reg_key) == (id(bb), "udf"):
+    if _registered(spark, name, bb):  # idempotent, like register_bloom
         return
-    _BLOOM_REGISTRY[name] = bb  # type: ignore[assignment]
-    _BLOOM_PROBE_MODE[name] = "udf"
-    _BLOOM_REGISTERED[reg_key] = (id(bb), "udf")
     root, buckets, m_bits, k, fpp = bb.root, bb.buckets, bb.m_bits, bb.k, bb.fpp
     hit = 1.0 - fpp
 
@@ -237,5 +235,5 @@ def register_big_bloom(spark: SparkSession, name: str, bb: BigBloom) -> None:
             out[mask] = np.where(ok, hit, 0.0)
         return pd.Series(out)
 
-    from .lookups import _sql_ident
     spark.udf.register(f"q_bloom_{_sql_ident(name)}", probe)
+    _mark_registered(spark, name, bb)

@@ -40,12 +40,10 @@ def write_partitioned_corpus(
     path: str,
     partition_cols: Sequence[str] = ("lang",),
     mode: str = "overwrite",
-    coalesce_shuffle: bool = True,
 ) -> None:
-    out = df
-    if coalesce_shuffle:
-        out = df.repartition(*[F.col(c) for c in partition_cols])
-    out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.repartition(*[F.col(c) for c in partition_cols]).write.mode(
+        mode
+    ).partitionBy(*partition_cols).parquet(path)
 
 
 def read_partitioned_corpus(

@@ -1,30 +1,42 @@
-"""Filesystem-portable sidecar I/O for the persisted index stores
-(VERDICT r11 next #1).
+"""The filesystem layer of every persisted store.
 
-The PQ / BM25 index stores write their DATA (codes/postings parquet)
-through Spark's Hadoop FileSystem but used to write their COMMIT
-sidecars (``meta.json``, ``epochs.json``, the ``meta.json.pending``
-fail-loud sentinel) with python ``open()``/``os`` calls — which only
-works when the store path is on the driver's local filesystem. On the
-deployment these stores exist for (object storage under a ~100 TB
-corpus), ``write_pq_index("s3a://…")`` would write the data and then
-fail — or silently drop the sidecar on a local path, evaporating the
-crash-window protocol.
+Each store (the PQ and BM25 index stores, the streaming near-dup,
+SCD2 and key stores, the small-bloom files) reaches its filesystem
+only through this module. Every helper resolves the path's filesystem
+through the ACTIVE SparkSession's Hadoop configuration — exactly how
+``df.write.parquet`` resolves it — so commit records, sentinels and
+sidecars always land on the SAME filesystem as the data (``file://``,
+``hdfs://``, ``s3a://``, ``abfss://``, …, including a schemeless path
+under a non-local ``fs.defaultFS``). When no session is active (the
+Spark-free processors, plain unit helpers) and the path is
+schemeless-local, plain python io is used; a scheme-qualified path with
+no session raises.
 
-Every helper here resolves the path's filesystem through the ACTIVE
-SparkSession's Hadoop configuration — exactly how ``df.write.parquet``
-resolves it — so the sidecars always land on the SAME filesystem as
-the data (``file://``, ``hdfs://``, ``s3a://``, ``abfss://``, …,
-including a schemeless path under a non-local ``fs.defaultFS``). When
-no session is active (the Spark-free processors, plain unit helpers)
-and the path is schemeless-local, plain python io is used; a
-scheme-qualified path with no session raises.
+The module also holds the commit steps the stores share, each written
+once: :func:`key_ids` lists a store's committed ``key=N`` children, and
+the index-store functions (:func:`read_index_meta`,
+:func:`reset_index_store`, :func:`epoch_applied`,
+:func:`record_epoch`, :func:`swap_compacted`) carry the PQ/BM25
+sidecar protocol:
+
+- ``meta.json.pending`` is posted before any data write and removed
+  only after the commit, so an interrupted write leaves a store every
+  reader REFUSES (fail-loud; a half-appended table cannot be rolled
+  forward, a re-run would double its rows).
+- ``epochs.json`` is the exactly-once ledger of applied stream epochs.
+  It is written inside the sentinel window, and a rebuild in place
+  clears it: a stale ledger would silently skip a fresh stream's
+  restarted epoch ids.
+- A compaction writes ``<table>.compact/`` first and swaps it in under
+  the sentinel through ``<table>.old/``; a crash mid-swap leaves a
+  refused store with both halves complete on disk. A rebuild sweeps
+  both leftovers.
 
 Semantics notes for the stores' crash protocols:
 
 - ``write_text`` is create-with-overwrite, not atomic. The stores
   never rely on atomic sidecar writes — ordering relative to the
-  pending sentinel carries the protocol (see each store's docstring).
+  pending sentinel carries the protocol.
 - ``replace`` emulates ``os.replace`` as delete-destination +
   rename. On object stores the rename itself may be copy+delete; the
   only crash window this opens is "destination deleted, source not
@@ -37,6 +49,14 @@ from __future__ import annotations
 import json as _json
 import os as _os
 from typing import List, Optional
+
+#: The index stores' sidecars: fail-loud sentinel, metadata, epoch
+#: ledger, and the suffixes of a table's compaction staging and
+#: pre-swap dirs.
+PENDING = "meta.json.pending"
+META = "meta.json"
+LEDGER = "epochs.json"
+LEFTOVERS = (".compact", ".old")
 
 
 def _alive(s) -> bool:
@@ -284,6 +304,25 @@ def list_names(path: str) -> List[str]:
     return sorted(st.getPath().getName() for st in fs.listStatus(p))
 
 
+def first_file(path: str, suffix: str):
+    """The Hadoop ``Path`` of ``path`` when it is a file, else of the
+    first file under it (recursive listing order) whose name ends with
+    ``suffix``, or None — the handle a JVM reader (parquet footers)
+    opens. Needs a session."""
+    fs, jvm = _resolve(path)
+    if fs is None:
+        raise RuntimeError(f"no active SparkSession to resolve {path!r}")
+    p = _jp(jvm, path)
+    if not fs.getFileStatus(p).isDirectory():
+        return p
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        f = it.next().getPath()
+        if f.getName().endswith(suffix):
+            return f
+    return None
+
+
 def join(base: str, *parts: str) -> str:
     """Path join that preserves URI schemes (os.path.join would
     mangle nothing here, but keep one spelling for store code)."""
@@ -291,3 +330,108 @@ def join(base: str, *parts: str) -> str:
     for p in parts:
         out = f"{out}/{p.strip('/')}"
     return out
+
+
+def key_ids(path: str, key: str, marker: Optional[str] = None) -> List[int]:
+    """Sorted integer ids N of the ``key=N`` children of directory
+    ``path`` ([] when it does not exist). Names whose N is not an
+    integer are skipped; with ``marker`` (a relative path such as
+    ``_SUCCESS`` or ``epochs/_SUCCESS``) only children holding that
+    file count — the commit record of a store's versions."""
+    out = []
+    for name in list_names(path):
+        k, eq, n = name.partition("=")
+        if k != key or not eq:
+            continue
+        try:
+            i = int(n)
+        except ValueError:
+            continue
+        if marker is None or exists(join(path, name, marker)):
+            out.append(i)
+    return sorted(out)
+
+
+def read_index_meta(path: str, kind: str, data: str) -> dict:
+    """An index store's meta.json, REFUSING a store whose pending
+    sentinel is present (an interrupted append, rebuild or compaction
+    swap). ``kind`` names the store (``pq``/``bm25``), ``data`` the
+    table a crash may have half-written."""
+    if exists(join(path, PENDING)):
+        raise ValueError(
+            f"{kind} index at {path} has an interrupted append or rebuild "
+            f"({PENDING} present) — {data} may be half-written; restore "
+            f"the previous snapshot or rebuild with write_{kind}_index"
+        )
+    return read_json(join(path, META))
+
+
+def reset_index_store(path: str, tables) -> None:
+    """Open a rebuild in place: post the pending sentinel BEFORE any
+    data is overwritten, then drop the old meta, the epoch ledger and
+    every table's compaction leftovers inside the sentinel window. A
+    crash mid-rebuild can then never leave old metadata beside new
+    data. Close with :func:`commit_meta`."""
+    makedirs(path)
+    write_json(join(path, PENDING), {"op": "rebuild"})
+    delete(join(path, META))
+    delete(join(path, LEDGER))
+    for table in tables:
+        for suffix in LEFTOVERS:
+            delete(join(path, table + suffix), recursive=True)
+
+
+def commit_meta(path: str, meta: dict) -> None:
+    """Write meta.json, then lift the pending sentinel."""
+    write_json(join(path, META), meta)
+    delete(join(path, PENDING))
+
+
+def read_ledger(path: str) -> dict:
+    """The store's epoch ledger; an empty one when none was written."""
+    ledger = join(path, LEDGER)
+    return read_json(ledger) if exists(ledger) else {"applied": []}
+
+
+def epoch_applied(path: str, epoch: int) -> bool:
+    return int(epoch) in read_ledger(path)["applied"]
+
+
+def record_epoch(path: str, epoch: int, stats: Optional[dict] = None) -> None:
+    """Add ``epoch`` to the ledger's sorted ``applied`` list. Called
+    inside the sentinel window, after the data write, so no crash
+    point lets a replay double-apply. ``stats`` (epoch -> entry)
+    merges into the ledger's ``stats`` map."""
+    led = read_ledger(path)
+    led["applied"] = sorted(led["applied"] + [int(epoch)])
+    if stats is not None:
+        led.setdefault("stats", {}).update(stats)
+    write_json(join(path, LEDGER), led)
+
+
+def swap_compacted(
+    spark, path: str, table: str, part_col: str, sentinel: dict
+) -> None:
+    """Compact one store table into one file per ``part_col`` value,
+    rows exactly preserved. The compacted copy is written to
+    ``<table>.compact/`` first; the swap through ``<table>.old/`` then
+    runs under the pending sentinel (content ``sentinel``), so a crash
+    mid-swap leaves a refused store with both halves complete on disk
+    (restore by hand, nothing lost)."""
+    src = join(path, table)
+    staged, old = (src + suffix for suffix in LEFTOVERS)
+    delete(staged, recursive=True)
+    (
+        spark.read.parquet(src)
+        .repartition(part_col)
+        .write.mode("overwrite")
+        .partitionBy(part_col)
+        .parquet(staged)
+    )
+    pending = join(path, PENDING)
+    write_json(pending, sentinel)
+    delete(old, recursive=True)
+    rename(src, old)
+    rename(staged, src)
+    delete(old, recursive=True)
+    delete(pending)

@@ -247,9 +247,7 @@ class BloomFilter:
 
         Overflow-free double hashing: g_j = (h1%m + j*(h2%m)) % m. Both
         operands are reduced mod m FIRST, so every intermediate stays
-        below k*m << 2^63 — which lets the pure-SQL JVM probe
-        (``_jvm_probe_sql``) reproduce the EXACT same bit positions with
-        signed bigint arithmetic (no mod-2^64 wraparound to emulate)."""
+        below k*m << 2^63."""
         m = np.uint64(self.m_bits)
         ks = np.arange(self.k, dtype=np.uint64)
         g = (h1 % m)[:, None] + ks[None, :] * (h2 % m)[:, None]
@@ -314,55 +312,34 @@ def bloom_from(
 
 _BLOOM_REGISTRY: Dict[str, BloomFilter] = {}
 
-# Hard cap for the pure-SQL probe mode: the bitset becomes a session-
-# variable array<bigint> literal bound into every probing plan, so it
-# must stay plan-sized. 2^26 bits = 8 MB = 1M longs.
-_JVM_PROBE_MAX_BITS = 1 << 26
-_BLOOM_PROBE_MODE: Dict[str, str] = {}  # name -> 'jvm' | 'udf'
-#: (session-id, name) -> (session weakref, bloom weakref, mode).  The
+#: (session-id, name) -> (session weakref, bloom weakref).  The
 #: weakrefs guard against CPython id() recycling: if the session (or
 #: bloom) that created an entry was garbage-collected and a NEW object
 #: reuses the same id(), the dead entry must not shadow it — the new
-#: session never received the UDF / session variable (ADVICE r5 low).
+#: session never received the UDF (ADVICE r5 low).
 _BLOOM_REGISTERED: Dict[tuple, tuple] = {}
 
 
-def register_bloom(
-    spark: SparkSession, name: str, bf: BloomFilter, probe: str = "udf"
-) -> None:
-    """Register for Column + SQL-text use: ``probability_in(x, 'name')``.
+def _registered(spark: SparkSession, name: str, handle) -> bool:
+    """Whether ``handle`` is already registered as ``name`` in this
+    live session (probe-many callers re-register defensively; UDF
+    creation + catalog write cost ~0.2 s)."""
+    prior = _BLOOM_REGISTERED.get((id(spark), name))
+    return prior is not None and prior[0]() is spark and prior[1]() is handle
 
-    ``probe='udf'`` (default): Arrow-vectorized pandas UDF over
-    JVM-computed xxhash64 pairs — fastest measured probe at bench scale
-    (the bitset test is one vectorized numpy gather per batch) and the
-    only mode for bitsets over ``_JVM_PROBE_MAX_BITS``.
 
-    ``probe='jvm'``: PURE Spark SQL probe — the packed-long bitset is
-    bound to a SQL session variable once here (constant-folded into
-    every probing plan: zero scalar subqueries, zero Python workers),
-    and ``probability_in_sql`` emits an element_at/shiftright bit-test
-    chain that runs entirely inside whole-stage codegen. Measured ~2x
-    the UDF probe's per-row cost at sf0.1 (the k-term chain recomputes
-    the hashes; codegen CSE does not fully collapse them), but removes
-    the Python-worker dependency entirely — the right trade on clusters
-    where executor Python memory or worker spin-up is the constraint.
-    The Arrow UDF is registered in both modes (direct ``q_bloom_<name>``
-    callers)."""
-    if probe not in ("udf", "jvm"):
-        raise ValueError(f"probe must be 'udf' or 'jvm', got {probe!r}")
-    # idempotent: re-registering the SAME bloom object under the same
-    # name/mode in the same session is a no-op (probe-many callers
-    # re-register defensively; UDF creation + catalog write cost ~0.2 s)
-    reg_key = (id(spark), name)
-    prior = _BLOOM_REGISTERED.get(reg_key)
-    if (
-        prior is not None
-        and prior[0]() is spark  # same LIVE session, not a recycled id
-        and prior[1]() is bf
-        and prior[2] == probe
-    ):
+def _mark_registered(spark: SparkSession, name: str, handle) -> None:
+    _BLOOM_REGISTRY[name] = handle
+    _BLOOM_REGISTERED[(id(spark), name)] = (weakref.ref(spark), weakref.ref(handle))
+
+
+def register_bloom(spark: SparkSession, name: str, bf: BloomFilter) -> None:
+    """Register for Column + SQL-text use: ``probability_in(x, 'name')``
+    probes through an Arrow-vectorized pandas UDF over JVM-computed
+    xxhash64 pairs (the bitset test is one vectorized numpy gather per
+    batch). Idempotent per session and bloom."""
+    if _registered(spark, name, bf):
         return
-    _BLOOM_REGISTRY[name] = bf
     bits, m_bits, k, fpp = bf.bits, bf.m_bits, bf.k, bf.fpp
     hit = 1.0 - fpp
 
@@ -375,30 +352,7 @@ def register_bloom(
         return pd.Series(np.where(ok, hit, 0.0))
 
     spark.udf.register(f"q_bloom_{_sql_ident(name)}", probe_udf)
-
-    if probe == "jvm" and m_bits <= _JVM_PROBE_MAX_BITS:
-        # pack the bitset little-endian into longs: bit position idx
-        # lives in word idx>>6 at in-word bit idx&63 — matching the
-        # uint8 layout (byte idx>>3, bit idx&7) under a LE int64 view
-        padded = bits
-        if len(padded) % 8:
-            padded = np.concatenate(
-                [padded, np.zeros(8 - len(padded) % 8, dtype=np.uint8)]
-            )
-        words = [int(w) for w in padded.view("<i8")]
-        ident = _sql_ident(name)
-        spark.createDataFrame([(words,)], "bits array<bigint>") \
-            .createOrReplaceTempView(f"q_bloom_bits_{ident}")
-        # SET VAR executes the 1-row read ONCE; afterwards the variable
-        # is a literal to the analyzer — probes carry no subqueries
-        spark.sql(f"DECLARE OR REPLACE VARIABLE qs_bloom_bits_{ident} ARRAY<BIGINT>")
-        spark.sql(
-            f"SET VAR qs_bloom_bits_{ident} = (SELECT bits FROM q_bloom_bits_{ident})"
-        )
-        _BLOOM_PROBE_MODE[name] = "jvm"
-    else:
-        _BLOOM_PROBE_MODE[name] = "udf"
-    _BLOOM_REGISTERED[reg_key] = (weakref.ref(spark), weakref.ref(bf), probe)
+    _mark_registered(spark, name, bf)
 
 
 def load_blooms(spark: SparkSession, configs: DataFrame | list) -> None:
@@ -434,44 +388,10 @@ def load_blooms(spark: SparkSession, configs: DataFrame | list) -> None:
 def probability_in_sql(expr_sql: str, name: str) -> str:
     if name not in _BLOOM_REGISTRY:
         raise KeyError(f"bloom {name!r} not registered; call register_bloom/load_blooms")
-    if _BLOOM_PROBE_MODE.get(name) == "jvm":
-        return _jvm_probe_sql(expr_sql, name, _BLOOM_REGISTRY[name])
     e = f"CAST(({expr_sql}) AS STRING)"
     return (
         f"q_bloom_{_sql_ident(name)}(xxhash64({e}, {_H1_SEED}), xxhash64({e}, {_H2_SEED}))"
     )
-
-
-def _jvm_probe_sql(expr_sql: str, name: str, bf: BloomFilter) -> str:
-    """Pure-SQL bloom probe, bit-identical to ``BloomFilter.might_contain``.
-
-    xxhash64 outputs are SIGNED bigints; the numpy side reduces their
-    uint64 view mod m. For signed x the unsigned residue is
-    ``pmod(pmod(x, m) + (x<0 ? 2^64 mod m : 0), m)``. With both hashes
-    reduced mod m first, every intermediate of g_j = h1m + j*h2m stays
-    below k*m << 2^63, so ANSI bigint arithmetic never overflows. Bit
-    test: word idx>>6 (1-based element_at), in-word bit idx&63 of the
-    little-endian packed longs bound to the ``qs_bloom_bits_<name>``
-    session variable by ``register_bloom`` — a plan-time literal, so
-    the probe carries NO subqueries and no per-query setup jobs."""
-    m, k = bf.m_bits, bf.k
-    c = (1 << 64) % m
-    var = f"qs_bloom_bits_{_sql_ident(name)}"
-    e = f"CAST(({expr_sql}) AS STRING)"
-    h1 = f"xxhash64({e}, {_H1_SEED})"
-    h2 = f"xxhash64({e}, {_H2_SEED})"
-    h1m = f"pmod(pmod({h1}, {m}) + IF({h1} < 0, {c}, 0), {m})"
-    h2m = f"pmod(pmod({h2}, {m}) + IF({h2} < 0, {c}, 0), {m})"
-    terms = []
-    for j in range(k):
-        idx = f"pmod({h1m} + {j} * {h2m}, {m})"
-        terms.append(
-            f"((shiftright(element_at({var}, "
-            f"CAST(({idx}) DIV 64 AS INT) + 1), "
-            f"CAST(({idx}) % 64 AS INT)) & 1) = 1)"
-        )
-    hit = repr(1.0 - bf.fpp)
-    return f"IF({' AND '.join(terms)}, CAST({hit} AS DOUBLE), CAST(0.0 AS DOUBLE))"
 
 
 def probability_in(expr: Union[Column, str], name: str) -> Column:

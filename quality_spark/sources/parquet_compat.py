@@ -18,31 +18,20 @@ from typing import List
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fsio
+
 
 def _nanos_columns_jvm(spark: SparkSession, path: str) -> List[str]:
     """Footer nanos detection through the JVM parquet reader — works on
     any Hadoop filesystem (round 12: the pyarrow path below needs a
     locally readable file, which an s3a://hdfs:// input is not). Still
     metadata-only: one footer of the first data file."""
+    target = fsio.first_file(path, ".parquet")
+    if target is None:
+        return []
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    st = fs.getFileStatus(hpath)
-    target = None
-    if st.isDirectory():
-        it = fs.listFiles(hpath, True)
-        while it.hasNext():
-            f = it.next().getPath()
-            if f.getName().endswith(".parquet"):
-                target = f
-                break
-        if target is None:
-            return []
-    else:
-        target = hpath
     inf = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        target, conf
+        target, spark._jsc.hadoopConfiguration()
     )
     rdr = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(inf)
     try:

@@ -16,13 +16,14 @@ has no built-in operator.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import RuleSuite
+from ..sources import fsio
 from ..operators.runner import add_data_quality
 
 
@@ -427,12 +428,6 @@ def _store_meta(spark, store_table: str) -> dict:
     return {r["col_name"].strip(): (r["data_type"] or "").strip() for r in rows}
 
 
-def _hadoop_fs(spark, loc: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(loc)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
 def _compaction_paths(loc: str):
     base = loc.rstrip("/")
     return base + "__compacting_stage", base + "__compacting_old"
@@ -463,11 +458,6 @@ def _sentinel_paths(loc: str):
       pre-swap copy."""
     base = loc.rstrip("/")
     return base + "__stage_ready", base + "__old_complete"
-
-
-def _touch(fs, jvm, path_str: str) -> None:
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), True)
-    out.close()
 
 
 def recover_key_store(spark, store_table: str) -> bool:
@@ -522,36 +512,30 @@ def recover_key_store(spark, store_table: str) -> bool:
         if meta.get("Type", "").upper() == "EXTERNAL" and loc:
             stage_loc, old_loc = _compaction_paths(loc)
             ready_sent, oldok_sent = _sentinel_paths(loc)
-            fs, jvm = _hadoop_fs(spark, loc)
-            P = jvm.org.apache.hadoop.fs.Path
-            stage_exists = fs.exists(P(stage_loc))
-            loc_exists = fs.exists(P(loc))
-            old_exists = fs.exists(P(old_loc))
-            ready = fs.exists(P(ready_sent))
-            oldok = fs.exists(P(oldok_sent))
+            stage_exists = fsio.exists(stage_loc)
+            loc_exists = fsio.exists(loc)
+            old_exists = fsio.exists(old_loc)
+            ready = fsio.exists(ready_sent)
+            oldok = fsio.exists(oldok_sent)
             if ready and not stage_exists:
                 # stray sentinel (manual tampering) — the protocol
                 # never deletes/moves the stage while it exists
-                fs.delete(P(ready_sent), False)
+                fsio.delete(ready_sent)
                 ready = False
                 acted = True
             if oldok and not old_exists:
-                fs.delete(P(oldok_sent), False)
+                fsio.delete(oldok_sent)
                 oldok = False
                 acted = True
             if ready:
                 # __stage_ready => the stage is complete AND untouched
                 # (the sentinel is removed before rename(stage->loc)
                 # ever starts); store/old may be partial remnants
-                if loc_exists:
-                    fs.delete(P(loc), True)
-                if old_exists:
-                    fs.delete(P(old_loc), True)
-                if not fs.rename(P(stage_loc), P(loc)):
-                    raise IOError(f"recovery rename failed: {stage_loc} -> {loc}")
-                fs.delete(P(ready_sent), False)
-                if oldok:
-                    fs.delete(P(oldok_sent), False)
+                fsio.delete(loc, recursive=True)
+                fsio.delete(old_loc, recursive=True)
+                fsio.rename(stage_loc, loc)
+                fsio.delete(ready_sent)
+                fsio.delete(oldok_sent)
                 spark.sql(f"REFRESH TABLE {store_table}")
                 return True
             if oldok:
@@ -559,56 +543,45 @@ def recover_key_store(spark, store_table: str) -> bool:
                 # stage->loc) may have started: stage and store are
                 # both untrusted; old is the complete pre-swap copy
                 # (never deleted while this sentinel exists)
-                if stage_exists:
-                    fs.delete(P(stage_loc), True)
-                if loc_exists:
-                    fs.delete(P(loc), True)
-                if not fs.rename(P(old_loc), P(loc)):
-                    raise IOError(f"recovery rename failed: {old_loc} -> {loc}")
-                fs.delete(P(oldok_sent), False)
+                fsio.delete(stage_loc, recursive=True)
+                fsio.delete(loc, recursive=True)
+                fsio.rename(old_loc, loc)
+                fsio.delete(oldok_sent)
                 spark.sql(f"REFRESH TABLE {store_table}")
                 return True
             # --- no sentinels: post-cleanup or legacy (pre-round-9)
             # protocol states ---
-            legacy_marked = stage_exists and fs.exists(
-                P(stage_loc + "/" + _STAGE_MARKER)
+            legacy_marked = stage_exists and fsio.exists(
+                fsio.join(stage_loc, _STAGE_MARKER)
             )
             if legacy_marked and (old_exists or not loc_exists):
                 # legacy rule: marked stage authoritative in-flight
-                if loc_exists:
-                    fs.delete(P(loc), True)
-                if old_exists:
-                    fs.delete(P(old_loc), True)
-                if not fs.rename(P(stage_loc), P(loc)):
-                    raise IOError(f"recovery rename failed: {stage_loc} -> {loc}")
-                fs.delete(P(loc + "/" + _STAGE_MARKER), False)
+                fsio.delete(loc, recursive=True)
+                fsio.delete(old_loc, recursive=True)
+                fsio.rename(stage_loc, loc)
+                fsio.delete(fsio.join(loc, _STAGE_MARKER))
                 spark.sql(f"REFRESH TABLE {store_table}")
                 acted = True
             elif stage_exists and not loc_exists and old_exists:
                 # unmarked stage, pre-swap store survives under old
-                fs.delete(P(stage_loc), True)
-                if not fs.rename(P(old_loc), P(loc)):
-                    raise IOError(f"recovery rename failed: {old_loc} -> {loc}")
+                fsio.delete(stage_loc, recursive=True)
+                fsio.rename(old_loc, loc)
                 spark.sql(f"REFRESH TABLE {store_table}")
                 acted = True
             elif stage_exists and not loc_exists:
                 # legacy pre-marker stage: staged fully before renames
-                if not fs.rename(P(stage_loc), P(loc)):
-                    raise IOError(f"recovery rename failed: {stage_loc} -> {loc}")
+                fsio.rename(stage_loc, loc)
                 spark.sql(f"REFRESH TABLE {store_table}")
                 acted = True
             elif stage_exists:
-                fs.delete(P(stage_loc), True)
+                fsio.delete(stage_loc, recursive=True)
                 acted = True
-            if fs.exists(P(old_loc)):
-                if not fs.exists(P(loc)):
-                    if not fs.rename(P(old_loc), P(loc)):
-                        raise IOError(
-                            f"recovery rename failed: {old_loc} -> {loc}"
-                        )
+            if fsio.exists(old_loc):
+                if not fsio.exists(loc):
+                    fsio.rename(old_loc, loc)
                     spark.sql(f"REFRESH TABLE {store_table}")
                 else:
-                    fs.delete(P(old_loc), True)
+                    fsio.delete(old_loc, recursive=True)
                 acted = True
         if spark.catalog.tableExists(tmp):
             spark.sql(f"DROP TABLE {tmp}")
@@ -688,21 +661,17 @@ def compact_key_store(spark, store_table: str) -> None:
         ready_sent, oldok_sent = _sentinel_paths(loc)
         bucketed_writer(compacted).option("path", stage_loc).saveAsTable(tmp)
         spark.sql(f"DROP TABLE {tmp}")  # metadata only: files stay staged
-        fs, jvm = _hadoop_fs(spark, loc)
-        P = jvm.org.apache.hadoop.fs.Path
         # sentinel choreography (see _sentinel_paths): each sentinel
         # is a sibling FILE, so directory renames can never tear it,
         # and every crash instant leaves exactly one sentinel naming a
         # provably-complete copy
-        _touch(fs, jvm, ready_sent)  # stage complete, untouched
-        if not fs.rename(P(loc), P(old_loc)):
-            raise IOError(f"compaction rename failed: {loc} -> {old_loc}")
-        _touch(fs, jvm, oldok_sent)  # old is the complete pre-swap copy
-        fs.delete(P(ready_sent), False)  # stage about to be touched
-        if not fs.rename(P(stage_loc), P(loc)):
-            raise IOError(f"compaction rename failed: {stage_loc} -> {loc}")
-        fs.delete(P(oldok_sent), False)  # loc complete; old expendable
-        fs.delete(P(old_loc), True)
+        fsio.write_text(ready_sent, "")  # stage complete, untouched
+        fsio.rename(loc, old_loc)
+        fsio.write_text(oldok_sent, "")  # old is the complete pre-swap copy
+        fsio.delete(ready_sent)  # stage about to be touched
+        fsio.rename(stage_loc, loc)
+        fsio.delete(oldok_sent)  # loc complete; old expendable
+        fsio.delete(old_loc, recursive=True)
         spark.sql(f"REFRESH TABLE {store_table}")
     else:
         bucketed_writer(compacted).saveAsTable(tmp)
@@ -755,28 +724,7 @@ def sessionized_stream_stats(
 def _scd2_versions(spark, store_path: str) -> List[int]:
     """Complete (_SUCCESS-marked) version ids in an SCD2 store,
     ascending."""
-    import os
-
-    fs, jvm = _hadoop_fs(spark, store_path)
-    base = jvm.org.apache.hadoop.fs.Path(store_path)
-    if not fs.exists(base):
-        return []
-    out = []
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if not name.startswith("version="):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(store_path, name, "_SUCCESS")
-            )
-        ):
-            out.append(v)
-    return sorted(out)
+    return fsio.key_ids(store_path, "version", "_SUCCESS")
 
 
 def read_scd2_store(spark, store_path: str) -> Optional[DataFrame]:
@@ -826,8 +774,6 @@ def scd2_to_store(
     attrs = list(attrs)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
         spark = batch_df.sparkSession
         done = _scd2_versions(spark, store_path)
         if int(epoch_id) in done:
@@ -848,14 +794,8 @@ def scd2_to_store(
             f"{store_path}/version={int(epoch_id)}"
         )
         vs = _scd2_versions(spark, store_path)
-        fs, jvm = _hadoop_fs(spark, store_path)
         for v in vs[: max(0, len(vs) - int(keep_versions))]:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(store_path, f"version={v}")
-                ),
-                True,
-            )
+            fsio.delete(fsio.join(store_path, f"version={v}"), recursive=True)
 
     return handle
 
@@ -906,29 +846,9 @@ def _neardup_versions(spark, store_path: str):
     _SUCCESS-complete (written LAST, so it is the commit record for
     the whole epoch: idmap/sigs/alias table are all on disk before
     it appears)."""
-    import os
-
-    aliases = os.path.join(store_path, "aliases")
-    fs, jvm = _hadoop_fs(spark, aliases)
-    base = jvm.org.apache.hadoop.fs.Path(aliases)
-    if not fs.exists(base):
-        return []
-    out = []
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if not name.startswith("version="):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(aliases, name, "epochs", "_SUCCESS")
-            )
-        ):
-            out.append(v)
-    return sorted(out)
+    return fsio.key_ids(
+        fsio.join(store_path, "aliases"), "version", "epochs/_SUCCESS"
+    )
 
 
 def _neardup_committed(spark, store_path: str):
@@ -955,8 +875,6 @@ def _neardup_live_dirs(spark, store_path: str, eps):
     epoch). Uncommitted epoch dirs (crashed batches) and orphaned
     consolidated dirs (crashed compactions) are excluded by
     construction — neither appears in the committed lists."""
-    import os
-
     live = set(int(e) for e in eps)
     gens = _neardup_compaction_gens(spark, store_path)
     if gens:
@@ -975,29 +893,7 @@ def _neardup_live_dirs(spark, store_path: str, eps):
 
 def _neardup_compaction_gens(spark, store_path: str):
     """Committed compaction generations, ascending (_SUCCESS-marked)."""
-    import os
-
-    comp_dir = os.path.join(store_path, "compactions")
-    fs, jvm = _hadoop_fs(spark, comp_dir)
-    base = jvm.org.apache.hadoop.fs.Path(comp_dir)
-    if not fs.exists(base):
-        return []
-    gens = []
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if not name.startswith("gen="):
-            continue
-        try:
-            g = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(comp_dir, name, "_SUCCESS")
-            )
-        ):
-            gens.append(g)
-    return sorted(gens)
+    return fsio.key_ids(fsio.join(store_path, "compactions"), "gen", "_SUCCESS")
 
 
 def compact_neardup_store(
@@ -1032,12 +928,8 @@ def compact_neardup_store(
     will never replay, pass ``force=True`` (safe then: the orphaned
     dirs are unreferenced by construction). A crashed compaction
     leaves the sentinel — delete the file and re-run."""
-    import os
     import uuid
 
-    from ..sources import fsio
-
-    fs, jvm = _hadoop_fs(spark, store_path)
     sentinel = fsio.join(store_path, "compactions", "_COMPACTING")
     # Sentinel BEFORE anything else — posting it first closes the
     # interleaving with neardup_to_store (which posts its marker
@@ -1075,11 +967,8 @@ def compact_neardup_store(
     try:
         if not force:
             markers = [
-                n
-                for n in fsio.list_names(
-                    fsio.join(store_path, "_inflight")
-                )
-                if n.startswith("epoch=")
+                f"epoch={e}"
+                for e in fsio.key_ids(fsio.join(store_path, "_inflight"), "epoch")
             ]
             if markers:
                 raise RuntimeError(
@@ -1099,31 +988,19 @@ def compact_neardup_store(
         dirs = _neardup_live_dirs(spark, store_path, eps)
         if len(dirs) <= 1:
             return
-        _compact_neardup_body(spark, store_path, eps, dirs, fs, jvm)
+        _compact_neardup_body(spark, store_path, dirs)
     finally:
         fsio.delete(sentinel)
 
 
-def _compact_neardup_body(spark, store_path, eps, dirs, fs, jvm):
-    import os
-
+def _compact_neardup_body(spark, store_path, dirs):
     # cleanup: physical epoch dirs no reader references (crashed
     # batches / crashed compactions) — safe to drop before we start
     for table in ("idmap", "sigs"):
-        tdir = os.path.join(store_path, table)
-        tbase = jvm.org.apache.hadoop.fs.Path(tdir)
-        if not fs.exists(tbase):
-            continue
-        for st in fs.listStatus(tbase):
-            name = st.getPath().getName()
-            if not name.startswith("epoch="):
-                continue
-            try:
-                d = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
+        tdir = fsio.join(store_path, table)
+        for d in fsio.key_ids(tdir, "epoch"):
             if d not in dirs:
-                fs.delete(st.getPath(), True)
+                fsio.delete(fsio.join(tdir, f"epoch={d}"), recursive=True)
     new_dir = -(max(abs(d) for d in dirs) + 1)
     for table, part in (("idmap", "idb"), ("sigs", "bb")):
         src = (
@@ -1154,18 +1031,12 @@ def _compact_neardup_body(spark, store_path, eps, dirs, fs, jvm):
     )
     for table in ("idmap", "sigs"):
         for d in dirs:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    os.path.join(store_path, table, f"epoch={d}")
-                ),
-                True,
+            fsio.delete(
+                fsio.join(store_path, table, f"epoch={d}"), recursive=True
             )
     for g in prev_gens:  # superseded by the cumulative map
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                os.path.join(store_path, "compactions", f"gen={g}")
-            ),
-            True,
+        fsio.delete(
+            fsio.join(store_path, "compactions", f"gen={g}"), recursive=True
         )
 
 
@@ -1309,10 +1180,6 @@ def neardup_to_store(
         return sig.join(sh, "id")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        import os
-
-        from ..sources import fsio
-
         spark = batch_df.sparkSession
         inflight = fsio.join(
             store_path, "_inflight", f"epoch={int(epoch_id)}"

@@ -304,3 +304,85 @@ def test_load_big_bloom_refuses_uri(spark):
 
     with pytest.raises(ValueError, match="FILESYSTEM CONTRACT"):
         load_big_bloom("s3a://bucket/blooms")
+
+
+def _key_dirs(base):
+    """version=1 and version=3 committed (marker), version=2 without
+    the marker, plus names the listing must skip."""
+    for name in ("version=1", "version=2", "version=3", "version=x", "other=4"):
+        fsio.makedirs(fsio.join(base, name))
+    for name in ("version=1", "version=3", "version=x"):
+        fsio.write_text(fsio.join(base, name, "_SUCCESS"), "")
+    fsio.write_text(fsio.join(base, "version=10"), "")  # a file child
+
+
+def test_key_ids_no_session_fallback(tmp_path, monkeypatch):
+    monkeypatch.setattr(fsio, "_active_spark", lambda: None)
+    base = str(tmp_path / "store")
+    _key_dirs(base)
+    assert fsio.key_ids(base, "version") == [1, 2, 3, 10]
+    assert fsio.key_ids(base, "version", "_SUCCESS") == [1, 3]
+    assert fsio.key_ids(base, "other") == [4]
+    assert fsio.key_ids(str(tmp_path / "missing"), "version") == []
+
+
+def test_key_ids_on_file_uri(spark, tmp_path):
+    base = f"file://{tmp_path}/store"
+    _key_dirs(base)
+    assert fsio.key_ids(base, "version") == [1, 2, 3, 10]
+    assert fsio.key_ids(base, "version", "_SUCCESS") == [1, 3]
+    fsio.makedirs(fsio.join(base, "version=1", "epochs"))
+    fsio.write_text(fsio.join(base, "version=1", "epochs", "_SUCCESS"), "")
+    assert fsio.key_ids(base, "version", "epochs/_SUCCESS") == [1]
+    assert fsio.key_ids(f"file://{tmp_path}/missing", "version") == []
+
+
+def test_scd2_store_on_file_uri(spark, sf_dir, tmp_path):
+    """The SCD2 store on a file:// URI: versions commit and prune
+    through fsio, a replayed epoch is skipped, and the store reads back
+    the newest committed version."""
+    from quality_spark.sources.parquet_compat import read_parquet_compat
+    from quality_spark.streaming.recipes import (
+        _scd2_versions,
+        read_scd2_store,
+        scd2_to_store,
+    )
+
+    ev = read_parquet_compat(spark, f"{sf_dir}/events.parquet").filter(
+        F.col("event_id") % 5 == 0
+    )
+    store = f"file://{tmp_path}/scd2"
+    handler = scd2_to_store(
+        store, ["user_id"], ["event_type", "value"],
+        order_cols=["ts", "event_id"], keep_versions=2,
+    )
+    for i in range(3):
+        handler(ev.filter(F.col("event_id") % 3 == i), i)
+    want = sorted(map(tuple, read_scd2_store(spark, store).collect()))
+    handler(ev, 2)  # replayed epoch: no-op
+    assert _scd2_versions(spark, store) == [1, 2]
+    assert sorted(os.listdir(tmp_path / "scd2")) == ["version=1", "version=2"]
+    got = read_scd2_store(spark, store)
+    assert sorted(map(tuple, got.collect())) == want and len(want) > 0
+    assert got.filter("valid_to IS NULL").groupBy("user_id").count().filter(
+        "count > 1"
+    ).count() == 0
+
+
+def test_hadoop_filesystem_reached_only_through_fsio():
+    """Every store reaches its filesystem through fsio: no other module
+    under quality_spark/ names the Hadoop FileSystem API."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "quality_spark",
+    )
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            src = open(path, encoding="utf-8").read()
+            if "org.apache.hadoop.fs" in src or "getFileSystem" in src:
+                hits.append(os.path.relpath(path, pkg))
+    assert hits == [os.path.join("sources", "fsio.py")], hits

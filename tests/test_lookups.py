@@ -240,52 +240,3 @@ def test_sql_literal_special_values(spark):
         map_lookup("date_vals", F.col("id")).alias("v")
     ).collect()[0]["v"]
     assert one == datetime.date(2024, 3, 1)
-
-
-def test_bloom_jvm_probe_plan_and_parity(spark, sf_dir):
-    """Small blooms must probe through PURE SQL (no Python eval node in
-    the plan), and the JVM probe must agree bit-for-bit with the Arrow
-    UDF probe over the same bitset (round-5 fast path)."""
-    from quality_spark.sources.lookups import (
-        _BLOOM_PROBE_MODE,
-        _H1_SEED,
-        _H2_SEED,
-        _sql_ident,
-        probability_in_sql,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    bf = bloom_from(orders, "o_custkey", expected=10000, fpp=0.01)
-    register_bloom(spark, "jvmprobe", bf, probe="jvm")
-    assert _BLOOM_PROBE_MODE["jvmprobe"] == "jvm"
-
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    probed = cust.select(
-        "c_custkey", probability_in(F.col("c_custkey"), "jvmprobe").alias("p")
-    )
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan, plan[:2000]  # no Arrow/Batch python node
-
-    # parity vs the always-registered Arrow UDF over the SAME bitset
-    e = "CAST((c_custkey) AS STRING)"
-    udf_sql = (
-        f"q_bloom_{_sql_ident('jvmprobe')}"
-        f"(xxhash64({e}, {_H1_SEED}), xxhash64({e}, {_H2_SEED}))"
-    )
-    both = cust.select(
-        F.expr(probability_in_sql("c_custkey", "jvmprobe")).alias("jvm"),
-        F.expr(udf_sql).alias("udf"),
-    )
-    assert both.filter("jvm <> udf").count() == 0
-
-    # negative-hash coverage: strings whose xxhash64 lands negative
-    rng = spark.range(0, 5000).select(F.col("id").cast("string").alias("s"))
-    both2 = rng.select(
-        F.expr(probability_in_sql("s", "jvmprobe")).alias("jvm"),
-        F.expr(
-            f"q_bloom_{_sql_ident('jvmprobe')}"
-            f"(xxhash64(CAST((s) AS STRING), {_H1_SEED}),"
-            f" xxhash64(CAST((s) AS STRING), {_H2_SEED}))"
-        ).alias("udf"),
-    )
-    assert both2.filter("jvm <> udf").count() == 0
